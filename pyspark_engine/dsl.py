@@ -560,9 +560,9 @@ class KStream:
                 df = df.filter(alive)
         out = KTable(df, self.key, self.ts)
         if self.df.isStreaming:
-            # streaming.suppress_buffered's keyed engine re-derives the
-            # latest-per-key fold per key inside applyInPandasWithState, so
-            # it needs the RAW changelog (a stateful operator cannot chain
+            # streaming.suppress_buffered's tws engine re-derives the
+            # latest-per-key fold per key inside transformWithState, so it
+            # needs the RAW changelog (a stateful operator cannot chain
             # downstream of this update-mode aggregate)
             out._source_stream = self
             out._source_tombstones = bool(tombstones)
@@ -1072,7 +1072,7 @@ class KTable:
         if df is self.df:
             # marker-only rewraps (suppress()) keep the raw-changelog link;
             # any df-changing operator (filter/map_values/...) invalidates it
-            # — the keyed suppress engine re-folds the RAW source, which
+            # — the tws suppress engine re-folds the RAW source, which
             # would silently skip such a transformation
             for attr in ("_source_stream", "_source_tombstones", "_source_order"):
                 if getattr(self, attr, None) is not None:

@@ -31,7 +31,7 @@ def vendor_dir() -> str:
 def ensure_protobuf(spark=None) -> bool:
     """Make ``google.protobuf`` importable driver- and worker-side.
     Returns False when neither the real wheel nor the vendored shim is
-    available (callers fall back to the pandas keyed engines)."""
+    available (engine auto-selection then falls back to ``exact``)."""
     try:
         import google.protobuf  # noqa: F401
     except ImportError:

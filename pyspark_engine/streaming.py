@@ -171,16 +171,9 @@ def _read_bind(path: str) -> str | None:
         return None
 
 
-# keyed-suppress state/sink schema version: bumped to "2" when integral
-# columns started riding the string tunnel (exact bigint round-trip); a
-# populated dir whose version differs is refused instead of letting Spark's
-# state-schema check fail opaquely mid-drain
-_KEYED_STATE_VERSION = "2"
-
-
 def _max_sink_batch(root: str) -> int:
     """Highest ``sink_batch=<id>`` partition under root or root/out (or -1)
-    — the delivered-batch cursor of the sink-partitioned loops (keyed
+    — the delivered-batch cursor of the sink-partitioned loops (tws
     suppress, as-of join), which keep no _GEN.  Used to cross-check legacy
     adoption: an emission cannot postdate its own checkpoint's commits by
     more than the one crash-replayed batch."""
@@ -201,7 +194,7 @@ def _max_sink_batch(root: str) -> int:
 
 def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> str:
     """Pair a parquet state dir with the ONE streaming checkpoint allowed to
-    drive it, and refuse every other combination (r9 verdict item 3).
+    drive it, and refuse every other combination.
 
     The foreachBatch state loops derive their replay-skip / delivery cursors
     from the checkpoint's batch ids, so a populated state dir paired with a
@@ -221,7 +214,7 @@ def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> 
         — adopted iff the offered checkpoint is also unbound and its commit
         cursor is consistent with the state dir's delivery cursor: committed
         ∈ {applied, applied−1} for _GEN loops, committed ∈ {max(sink_batch),
-        max(sink_batch)−1} for the sink-partitioned loops (keyed suppress /
+        max(sink_batch)−1} for the sink-partitioned loops (tws suppress /
         as-of keep no _GEN but their emissions name the batches that
         produced them); a fresh or inconsistent checkpoint is refused.  Two
         UNAUTHENTICATABLE legacy shapes — a dir with NEITHER cursor nor
@@ -229,8 +222,8 @@ def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> 
         run AHEAD of the emissions by more than the clean-stop window
         (legal when trailing batches emitted nothing, indistinguishable
         from a foreign run) — are REFUSED by default and adopt only under
-        the documented opt-in ``PSE_ADOPT_LEGACY=1`` (r10 review finding:
-        silent adoption of an arbitrarily-ahead checkpoint skips replays).
+        the documented opt-in ``PSE_ADOPT_LEGACY=1`` (silent adoption of
+        an arbitrarily-ahead checkpoint would skip replays).
         Adoption is one-time: the pair is bound on success, so only legacy
         dirs ever take this path;
       * checkpoint bound elsewhere, or unbound but already holding committed
@@ -258,7 +251,7 @@ def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> 
             if applied != -1:
                 consistent = committed in (applied, applied - 1)
             else:
-                # cursor-free loops (keyed suppress / as-of) still leave a
+                # cursor-free loops (tws suppress / as-of) still leave a
                 # delivered-batch trail in their sink_batch partitions: the
                 # original checkpoint's commits must line up with the
                 # highest emitted batch (equal after a clean stop, one less
@@ -322,7 +315,7 @@ def _check_no_pending_compaction(root: str) -> None:
     a half-swapped log would read a wrong snapshot.  Since compaction can now
     run AUTOMATICALLY at drain entry (_maybe_autocompact), a crashed pass must
     not wedge a previously fully-automatic pipeline behind a manual recovery
-    call (round-13 review finding 4) — the recovery is idempotent and provably
+    call — the recovery is idempotent and provably
     safe (it finishes forward only in unambiguous states, else rolls back), so
     HEAL here and raise only if markers somehow survive recovery."""
 
@@ -359,17 +352,14 @@ def _sink_partitions(out_dir: str) -> dict[int, str]:
     return parts
 
 
-# every engine stamps exactly one of these at the state-dir root before its
-# first batch, so the marker — not the output columns — identifies the log
-# kind (round-12 advice: a tt-join whose USER schema carries a column named
+# every tws engine stamps exactly one of these at the state-dir root before
+# its first batch, so the marker — not the output columns — identifies the
+# log kind (a tt-join whose USER schema carries a column named
 # '__emit_reason' would be misclassified as a suppress log by a column sniff
 # and have its committed emission history pruned outright)
 _LOG_KIND_MARKERS = (
-    ("_PSE_STATE_V", "suppress"),
     ("_PSE_TWS_SUPPRESS_V", "suppress"),
-    ("_PSE_TTJOIN_V", "tt"),
     ("_PSE_TWS_TTJOIN_V", "tt"),
-    ("_PSE_FKJOIN_V", "fk"),
     ("_PSE_TWS_FKJOIN_V", "fk"),
 )
 
@@ -399,9 +389,8 @@ def _recover_compaction(out_dir: str, root: str) -> None:
     the ones where the complete fold or the displaced base unambiguously
     exists; every ambiguous state rolls BACK (restore the old base, drop
     the fold) — a rolled-back compaction costs a re-run, a wrong
-    forward-finish costs committed emission history (round-12 review
-    findings 1-2: the first cut misread two pre-swap states as
-    post-install and pruned live partitions)."""
+    forward-finish costs committed emission history (misreading a
+    pre-swap state as post-install would prune live partitions)."""
     import shutil  # noqa: PLC0415
 
     tmp = os.path.join(root, _COMPACT_TMP)
@@ -426,7 +415,7 @@ def _recover_compaction(out_dir: str, root: str) -> None:
             except ValueError:
                 n = None
             if n is None:
-                # torn/empty _TARGET: only a non-atomic writer (pre-round-13
+                # torn/empty _TARGET: only a non-atomic writer (older
                 # code) crashing MID-WRITE can produce it, and that crash
                 # point provably precedes the dest→trash swap — roll back
                 # (drop the fold, out/ is intact, prune nothing)
@@ -472,8 +461,8 @@ def compact_emission_log(
     checkpoint: str,
     key: Sequence[str] = (),
 ) -> dict:
-    """Compact a per-key engine's unbounded emission log between drains
-    (r11 advice): per-microbatch I/O is O(changed keys), but the returned
+    """Compact a per-key engine's unbounded emission log between drains:
+    per-microbatch I/O is O(changed keys), but the returned
     snapshot is a latest-per-key fold over the ENTIRE ``out/sink_batch=*``
     history, so snapshot reconstruction degrades as O(total emissions
     ever) on long-lived state dirs.  This folds every partition up to the
@@ -481,8 +470,7 @@ def compact_emission_log(
     that batch id and prunes the replaced partitions; batches beyond the
     commit cursor are untouched (crash-replay rewrites them).
 
-    Works on the tt-join and fk-join logs of BOTH engine families (pandas
-    keyed and tws — same log layout) and on suppress logs:
+    Works on the tws engines' tt-join, fk-join and suppress logs:
 
       * tt join: base = latest-per-key rows (updates only — exact fold);
         pass the JOIN KEY columns via ``key``.
@@ -507,6 +495,7 @@ def compact_emission_log(
     import shutil  # noqa: PLC0415
 
     root = state_dir
+    _refuse_legacy_keyed_dir(root)
     is_fk = os.path.isdir(os.path.join(root, "sub"))
     out_dir = os.path.join(root, "out")
     _recover_compaction(out_dir, root)
@@ -629,9 +618,9 @@ def compact_emission_log(
 
 
 def _container_cols(schema, cols) -> set[str]:
-    """The container-typed (array/map/struct) members of ``cols`` — THE one
-    membership predicate shared by the keyed refusals, tws tunnel selection,
-    and engine auto-selection (round-13 review: three drifting copies)."""
+    """The container-typed (array/map/struct) members of ``cols`` — the one
+    membership predicate shared by the tws key/order refusals, tws tunnel
+    selection, and engine auto-selection."""
     from pyspark.sql.types import ArrayType, MapType
     from pyspark.sql.types import StructType as _St
 
@@ -647,16 +636,15 @@ _AUTOCOMPACT_DEFAULT = 32
 
 
 def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, key=()) -> None:
-    """Compact-every-N policy (r12 verdict task 5): called by every keyed/
-    tws drain at ENTRY — after binding and version stamping, before the
-    query starts.  Entry-time (never post-drain) because the returned
-    snapshot/emissions are LAZY reads over ``out/sink_batch=*``; a
-    post-drain compaction would prune partitions the caller is about to
-    scan.  When the committed partition count reaches ``PSE_COMPACT_EVERY``
-    (default 32; <= 0 disables), the log folds into one base partition,
-    bounding snapshot reconstruction at O(tail) instead of O(total
-    emissions ever) across long-lived resumed drains (r11 advice).  A crash
-    mid-compaction is covered by the existing recovery:
+    """Compact-every-N policy: called by every tws drain at ENTRY — after
+    binding and version stamping, before the query starts.  Entry-time
+    (never post-drain) because the returned snapshot/emissions are LAZY
+    reads over ``out/sink_batch=*``; a post-drain compaction would prune
+    partitions the caller is about to scan.  When the committed partition
+    count reaches ``PSE_COMPACT_EVERY`` (default 32; <= 0 disables), the
+    log folds into one base partition, bounding snapshot reconstruction at
+    O(tail) instead of O(total emissions ever) across long-lived resumed
+    drains.  A crash mid-compaction is covered by the existing recovery:
     _check_no_pending_compaction refuses the drain and the next
     compact_emission_log call finishes or rolls back the pass."""
     try:
@@ -673,60 +661,62 @@ def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, key
         compact_emission_log(spark, state_dir, checkpoint, key=tuple(key))
 
 
-def _check_container_columns(schema, cols, what: str) -> None:
-    """Container-typed (array/map/struct) VALUE columns are unsupported by
-    the PANDAS keyed engines: their Arrow slices deliver containers as
-    numpy arrays that fail the state normalization mid-drain (round-12
-    review follow-up — loud construction-time refusal beats that failure).
-    The tws engines tunnel container VALUE columns through pickled-binary
-    value state (tws._enc_c, r12 verdict task 2) and the exact snapshot
-    loops handle them as plain DataFrame data — point there."""
-    from pyspark.sql.types import ArrayType, MapType
-    from pyspark.sql.types import StructType as _St
+# markers stamped by the removed pandas keyed engines (formerly
+# ``engine='keyed'``); their state schemas are not readable by either
+# remaining engine
+_LEGACY_KEYED_MARKERS = (
+    ("_PSE_TTJOIN_V", "tt-join"),
+    ("_PSE_FKJOIN_V", "fk-join"),
+    ("_PSE_STATE_V", "suppress"),
+)
 
-    bad = [
-        f.name
-        for f in schema.fields
-        if f.name in set(cols) and isinstance(f.dataType, (ArrayType, MapType, _St))
-    ]
-    if bad:
+
+def _refuse_legacy_keyed_dir(root: str) -> None:
+    """Refuse a state dir written by the removed pandas keyed engines.  The
+    one check for those markers: engine auto-selection, the tws version
+    stamp and ``compact_emission_log`` all call it."""
+    for marker, what in _LEGACY_KEYED_MARKERS:
+        if os.path.exists(os.path.join(root, marker)):
+            raise ValueError(
+                f"state dir {root!r} holds {what} state written by the removed "
+                f"pandas keyed engine ({marker}); neither engine='tws' nor "
+                "engine='exact' can read it — start a fresh state_dir and "
+                "checkpoint and replay the source through engine='tws' or "
+                "engine='exact'"
+            )
+
+
+def _check_engine(engine: str, what: str) -> None:
+    if engine not in ("tws", "exact"):
         raise ValueError(
-            f"{what}: container-typed value columns {bad} are not supported by "
-            "the pandas keyed engine (its state fold rejects numpy array cells) "
-            "— use engine='tws' (binary-tunneled value state) or engine='exact'"
+            f"{what}: unknown engine {engine!r} — use engine='tws' (per-key state) "
+            "or engine='exact' (the snapshot loop); the pandas keyed engine "
+            "(formerly engine='keyed') was removed"
         )
 
 
-def _select_keyed_engine(state_dir: str | None, keyed_marker: str, schemas, hard=()) -> str:
-    """engine=None auto-selection between the per-key families (round-12
-    review finding: a bare default flip to tws would break previously
-    working calls).  Order of precedence:
+def _select_engine(state_dir: str | None, hard) -> str:
+    """engine=None auto-selection.  Order of precedence:
 
-      * no ``google.protobuf``: ``keyed`` (tws cannot run) — unless
-        container-typed VALUE columns are present (``schemas`` =
-        [(StructType, cols)]; the pandas engines refuse them, see
-        _check_container_columns) → ``exact``;
-      * ``state_dir`` stamped by the exact loop (``_GEN``) → ``exact``,
-        stamped by the pandas keyed engine → ``keyed`` (resume with the
-        family that wrote the dir instead of raising);
+      * a ``state_dir`` stamped by the removed pandas keyed engine is
+        refused (_refuse_legacy_keyed_dir);
+      * no ``google.protobuf`` (tws cannot run) → ``exact``;
+      * ``state_dir`` stamped by the exact loop (``_GEN``) → ``exact``, so
+        a dir resumes with the engine that wrote it;
       * container-typed columns in a position the tws binary tunnel cannot
         cover — keys, order columns, the fk column (``hard`` =
         [(StructType, cols)]) → ``exact``;
       * otherwise → ``tws`` (container VALUE columns ride tws's pickled
-        -binary value-state tunnel — r12 verdict task 2)."""
+        -binary value-state tunnel)."""
     from .protoshim import ensure_protobuf  # noqa: PLC0415
 
-    def _has_containers(pairs):
-        return any(_container_cols(schema, cols) for schema, cols in pairs)
-
-    if not ensure_protobuf():
-        return "exact" if _has_containers(schemas) else "keyed"
     if state_dir is not None:
-        if os.path.exists(os.path.join(state_dir, "_GEN")):
-            return "exact"
-        if os.path.exists(os.path.join(state_dir, keyed_marker)):
-            return "keyed"
-    if _has_containers(hard):
+        _refuse_legacy_keyed_dir(state_dir)
+    if not ensure_protobuf():
+        return "exact"
+    if state_dir is not None and os.path.exists(os.path.join(state_dir, "_GEN")):
+        return "exact"
+    if any(_container_cols(schema, cols) for schema, cols in hard):
         return "exact"
     return "tws"
 
@@ -869,7 +859,7 @@ class StreamingBuilder:
 # ---------------- sinks (SinkProcessor / To analogs) ----------------
 
 
-# sizing target for the bounded-drain state shuffle (r14, verdict item 4):
+# sizing target for the bounded-drain state shuffle:
 # one state/shuffle partition per ~64 MB of source data, capped at the
 # session's configured partition count.  Stateful-streaming cost is per
 # partition per micro-batch (state store open/commit/snapshot), NOT per row,
@@ -1174,36 +1164,31 @@ def join_tables_streaming(
     changelogs record-at-a-time against each other's state stores; output
     timestamp = max of the sides, :35).
 
-    Spark has no built-in update-stream⋈update-stream join; three engines,
+    Spark has no built-in update-stream⋈update-stream join; two engines,
     selected by ``engine`` (None = ``"tws"`` when transformWithState's
-    protobuf dependency is importable, else ``"keyed"`` — both are the
-    per-key scale architecture):
+    protobuf dependency is importable and the keys/order columns are
+    scalar, else ``"exact"`` — see _select_engine):
 
-      * ``"tws"`` — the Spark-4-native transformWithState port of the
-        keyed engine (tws.join_tables_tws): same union/fold/emission-log
-        design, native types end to end (no bigint string tunnel, NaN
-        preserved like the exact loop), RocksDB state store.  The default
-        wherever ``google.protobuf`` (wheel or the vendored shim) exists.
-      * ``"keyed"`` — ``applyInPandasWithState`` over the union of both
-        tagged changelogs, grouped by the JOIN KEY, per-key state = (latest
-        left row, latest right row) — exactly the reference's
-        record-at-a-time shape (KTableKTableJoinProcessor.cs:20-48 reads
-        the other side's store for each changelog record).  Each key whose
-        state changed emits its current joined row to an
-        ``out/sink_batch=<id>`` partition (overwritten on crash-replay —
-        exactly-once), so per-microbatch I/O is O(changed keys), never
-        O(table): the state lives in Spark's RocksDB/HDFS store, which
-        checkpoints per-batch DELTAS.  The returned snapshot is the
-        latest-per-key fold of the emission log.  Requires non-null order
-        values and equal key dtypes across sides (raises descriptively).
+      * ``"tws"`` — the per-key engine (tws.join_tables_tws): both tagged
+        changelogs union into ONE ``transformWithState`` grouped by the JOIN
+        KEY, per-key state = (latest left row, latest right row) — the
+        reference's record-at-a-time shape.  Each key whose state changed
+        emits its current joined row to an ``out/sink_batch=<id>``
+        partition (overwritten on crash-replay — exactly-once), so
+        per-microbatch I/O is O(changed keys), never O(table): the state
+        lives in Spark's RocksDB store, which checkpoints per-batch deltas.
+        The returned snapshot is the latest-per-key fold of the emission
+        log.  Native types end to end (bigints exact, NaN preserved).
+        Requires non-null order values and equal key dtypes across sides
+        (raises descriptively).
       * ``"exact"`` — the SURVEY §7.3.2 parquet ping-pong loop: each
         microbatch (a) upserts each side's latest-per-key snapshot —
         ``max_by`` over the declared order merged with the previous
         snapshot, associative, so snapshot ∪ batch ≡ full-changelog replay
         — and (b) recomputes the equi-join over the two materialized
         states.  Per-batch I/O is O(table) (bounded by key cardinality,
-        never stream length); kept for null-order changelogs and as the
-        differential oracle for the keyed engine.
+        never stream length); kept for null-order changelogs, container
+        keys/order columns, and as the differential oracle for tws.
 
     Emission cadence is per-microbatch instead of per-record (§7.3.3:
     coarser cadence, same final state — which is what the parity tests
@@ -1218,34 +1203,19 @@ def join_tables_streaming(
     if len(left.key) != len(right.key):
         raise ValueError("join key arity mismatch")
     if engine is None:
-        # default = tws when it can run AND nothing ties the call to the
-        # pandas family (existing keyed/exact state dir, container-typed
-        # value columns, absent protobuf) — see _select_keyed_engine
-        engine = _select_keyed_engine(
+        engine = _select_engine(
             state_dir,
-            "_PSE_TTJOIN_V",
-            [
-                (left.df.schema, [c for c in left.df.columns if c not in left.key]),
-                (right.df.schema, [c for c in right.df.columns if c not in right.key]),
-            ],
             hard=[
                 (left.df.schema, list(left.key) + list(l_order or ())),
                 (right.df.schema, list(right.key) + list(r_order or ())),
             ],
         )
+    _check_engine(engine, "join_tables_streaming")
     if engine == "tws":
         from .tws import join_tables_tws  # noqa: PLC0415 - optional protobuf dep
 
         return join_tables_tws(
             left, right, how, l_order, r_order, ts_alias, store_name, state_dir, checkpoint
-        )
-    if engine == "keyed":
-        return _join_tables_keyed(
-            left, right, how, l_order, r_order, ts_alias, store_name, state_dir, checkpoint
-        )
-    if engine != "exact":
-        raise ValueError(
-            f"unknown tt-join engine {engine!r}; expected 'keyed', 'tws' or 'exact'"
         )
 
     def combine(l_t: KTable, r_t: KTable) -> KTable:
@@ -1274,19 +1244,17 @@ def join_fk_streaming(
     SURVEY §2.5 note.  KS wires a subscription topic keyed by FK and a
     response topic keyed back by the left PK so FK *changes* re-subscribe).
 
-    Three engines, selected by ``engine`` (None = ``"tws"`` for a string fk
-    column when protobuf is importable, else ``"keyed"``; Column fks =
-    ``"exact"``):
+    Two engines, selected by ``engine`` (None = ``"tws"`` for a string fk
+    column when protobuf is importable and the key/fk/order columns are
+    scalar — see _select_engine; Column fks = ``"exact"``):
 
-      * ``"tws"`` — transformWithState port of the keyed engine
-        (tws.join_fk_tws): same two-stage subscription/response design,
-        native types (subscriber list in LIST state), RocksDB store.
-      * ``"keyed"`` — the literal KIP-213 two-stage architecture on per-key
-        Spark state: a PK-keyed subscription resolver emitting
-        unsubscribe/subscribe records into a durable subscription log, then
-        an FK-keyed join state holding (latest right row, subscriber list)
-        that fans out U/D emissions; per-microbatch I/O is
-        O(changed keys + affected subscribers) (see _join_fk_keyed).
+      * ``"tws"`` — the literal KIP-213 two-stage architecture on per-key
+        transformWithState state (tws.join_fk_tws): a PK-keyed subscription
+        resolver emitting unsubscribe/subscribe records into a durable
+        subscription log, then an FK-keyed join state holding (latest right
+        row, subscriber list in LIST state) that fans out U/D emissions;
+        per-microbatch I/O is O(changed keys + affected subscribers).
+        Requires a string fk column name.
       * ``"exact"`` — the shared changelog-state loop: each microbatch
         upserts both tables' latest-per-key snapshots, then recomputes the
         FK equi-join over the snapshots (O(table) per batch, bounded by key
@@ -1305,13 +1273,8 @@ def join_fk_streaming(
         raise ValueError("fk join requires single-column right key")
     if engine is None:
         if isinstance(fk, str):
-            engine = _select_keyed_engine(
+            engine = _select_engine(
                 state_dir,
-                "_PSE_FKJOIN_V",
-                [
-                    (left.df.schema, list(left.df.columns)),
-                    (right.df.schema, [c for c in right.df.columns if c != right.key[0]]),
-                ],
                 hard=[
                     (left.df.schema, list(left.key) + [fk] + list(l_order or ())),
                     (right.df.schema, list(r_order or ())),
@@ -1319,24 +1282,17 @@ def join_fk_streaming(
             )
         else:
             engine = "exact"
-    if engine in ("keyed", "tws"):
+    _check_engine(engine, "join_fk_streaming")
+    if engine == "tws":
         if not isinstance(fk, str):
             raise ValueError(
-                f"the {engine} fk-join engine requires a string fk column name (the fk "
+                "the tws fk-join engine requires a string fk column name (the fk "
                 "VALUE rides the subscription log); use engine='exact' for Column fks"
             )
-        if engine == "tws":
-            from .tws import join_fk_tws  # noqa: PLC0415 - optional protobuf dep
+        from .tws import join_fk_tws  # noqa: PLC0415 - optional protobuf dep
 
-            return join_fk_tws(
-                left, right, fk, how, l_order, r_order, store_name, state_dir, checkpoint
-            )
-        return _join_fk_keyed(
+        return join_fk_tws(
             left, right, fk, how, l_order, r_order, store_name, state_dir, checkpoint
-        )
-    if engine != "exact":
-        raise ValueError(
-            f"unknown fk-join engine {engine!r}; expected 'keyed', 'tws' or 'exact'"
         )
     # the canonical FK naming has the LEFT fk column named like the RIGHT
     # key (departments keyed dept_id, employees carrying dept_id) — batch
@@ -1368,40 +1324,11 @@ def join_fk_streaming(
     )
 
 
-def _clean_state_value(v):
-    """Normalize a value crossing the Arrow boundary of a keyed state fn
-    (incoming row cell, state tuple element, or grouping-key element) to a
-    plain Python value: pandas NaT/NaN → None, pd.Timestamp → datetime,
-    numpy scalars → .item().  ONE shared implementation for every keyed
-    engine (suppress / tt-join / fk-join) — workers unpickle it by module
-    reference, and a normalization fix here reaches all of them (r11 review:
-    four hand-rolled copies had already drifted one keyword apart).
-
-    KNOWN COERCION (r11 advice, pinned by the differential fuzz's NaN
-    column): a genuine float NaN in a double value column becomes null in
-    keyed-engine output, while the exact engines preserve NaN.  Largely
-    inherent to the Arrow/pandas boundary — union null-padding already makes
-    null and NaN indistinguishable inside a group's float64 slice, so the
-    keyed engines CANNOT tell them apart; null is the canonical spelling."""
-    import pandas as pd  # noqa: PLC0415 - worker-side import
-
-    if v is None or v is pd.NaT:
-        return None
-    if isinstance(v, float) and v != v:
-        return None
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    if type(v).__module__ == "numpy":
-        return v.item()
-    return v
-
-
 def _check_reserved_columns(cols, reserved: dict[str, str], what: str) -> None:
-    """Fail fast when user columns collide with a keyed engine's internal
-    schema fields or its sink partition column — the collision otherwise
-    surfaces as an opaque Arrow/parquet error MID-DRAIN, after state and
-    checkpoint are already written (r11 review finding).  ``reserved`` maps
-    name → why it is reserved."""
+    """Fail fast when user columns collide with an engine's internal schema
+    fields or its sink partition column — the collision otherwise surfaces
+    as an opaque Arrow/parquet error MID-DRAIN, after state and checkpoint
+    are already written.  ``reserved`` maps name → why it is reserved."""
     hit = {c: reserved[c] for c in cols if c in reserved}
     if hit:
         msgs = "; ".join(f"{c!r} ({why})" for c, why in hit.items())
@@ -1409,674 +1336,6 @@ def _check_reserved_columns(cols, reserved: dict[str, str], what: str) -> None:
             f"{what}: column names collide with engine-internal fields — {msgs}; "
             "rename them on the input"
         )
-
-
-# keyed tt-join state/sink schema version (same contract as
-# _KEYED_STATE_VERSION for suppress): bumped whenever the
-# applyInPandasWithState state schema or the out/sink_batch layout changes,
-# so a populated dir from an older engine is refused descriptively instead
-# of failing Spark's state-schema check mid-drain
-_TTJOIN_STATE_VERSION = "1"
-
-
-def _join_tables_keyed(
-    left: KStream,
-    right: KStream,
-    how: str,
-    l_order: Sequence[str] | None,
-    r_order: Sequence[str] | None,
-    ts_alias: str | None,
-    store_name: str | None,
-    state_dir: str | None,
-    checkpoint: str | None,
-) -> DataFrame:
-    """Keyed-state engine of ``join_tables_streaming`` (see its docstring
-    for the contract): the two tagged changelogs union into ONE
-    ``applyInPandasWithState`` grouped by the JOIN KEY, whose per-key state
-    is (latest left row, latest right row) under the declared per-side
-    orders — the record-at-a-time state-store shape of the reference's
-    KTableKTableJoinProcessor.cs:20-48, at per-microbatch emission cadence
-    (SURVEY §7.3.3).  A key whose state changed emits its CURRENT joined
-    row to an ``out/sink_batch=<id>`` partition (overwritten on
-    crash-replay — exactly-once), so per-microbatch I/O is O(changed keys),
-    never O(table): the fold state lives in Spark's RocksDB/HDFS store,
-    which checkpoints per-batch deltas.  The returned snapshot is the
-    latest-per-key fold of the emission log (a joined row only ever
-    UPDATES — this path has no tombstones — so the fold is exact).
-
-    Integral VALUE columns tunnel through the stateful operator as decimal
-    strings exactly like the keyed suppress engine (_suppress_keyed): the
-    other side's columns are null on every union row, and a null in a
-    group's Arrow slice coerces int64 to float64, which cannot represent
-    bigints past 2^53.  Join-key columns never ride the union null-padded —
-    both sides' keys map onto the shared non-null ``__jk*`` grouping
-    columns — so keys stay exactly typed.  NoTimeout and no watermark:
-    there is no time semantics here, just fold-and-emit-on-change, so late
-    data is admitted unconditionally (KTable upsert semantics).  Requires
-    non-null order values (raises in the state fn — loud beats a silently
-    wrong fold) and equal key/ts dtypes across sides; use engine='exact'
-    otherwise."""
-    spark0 = left.df.sparkSession
-    overlap = set(left.df.columns) & set(right.df.columns)
-    if overlap:
-        raise ValueError(f"sides must have disjoint column names; overlap: {sorted(overlap)}")
-    l_key, r_key = list(left.key), list(right.key)
-    _check_reserved_columns(
-        list(left.df.columns) + list(right.df.columns) + ([ts_alias] if ts_alias else []),
-        {
-            "sink_batch": "emission-log partition column",
-            "__side": "changelog union tag",
-            **{f"__jk{i}": "join-key grouping column" for i in range(len(l_key))},
-        },
-        "keyed tt-join engine",
-    )
-    l_ddl = {f.name: f.dataType.simpleString() for f in left.df.schema.fields}
-    r_ddl = {f.name: f.dataType.simpleString() for f in right.df.schema.fields}
-    for lk, rk in zip(l_key, r_key):
-        if l_ddl[lk] != r_ddl[rk]:
-            raise ValueError(
-                f"the keyed tt-join engine requires equal key dtypes across sides; "
-                f"{lk}:{l_ddl[lk]} vs {rk}:{r_ddl[rk]} — cast one side or use engine='exact'"
-            )
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
-    for oc, cols in ((lord, left.df.columns), (rord, right.df.columns)):
-        missing = [c for c in oc if c not in cols]
-        if missing:
-            raise ValueError(f"order columns {missing} not in the side's columns")
-    l_val = [c for c in left.df.columns if c not in l_key]
-    r_val = [c for c in right.df.columns if c not in r_key]
-    _check_container_columns(left.df.schema, l_val, "keyed tt-join engine")
-    _check_container_columns(right.df.schema, r_val, "keyed tt-join engine")
-    merge_ts = bool(ts_alias is not None and left.ts and right.ts)
-    if merge_ts and l_ddl[left.ts] != r_ddl[right.ts]:
-        raise ValueError(
-            "the keyed tt-join engine requires equal ts dtypes for ts_alias merging; "
-            f"{left.ts}:{l_ddl[left.ts]} vs {right.ts}:{r_ddl[right.ts]} — use engine='exact'"
-        )
-    out_l_val = [c for c in l_val if not (merge_ts and c == left.ts)]
-    out_r_val = [c for c in r_val if not (merge_ts and c == right.ts)]
-    # canonical output layout (names, order, dtypes) = the batch combine
-    empty_out = KTable(spark0.createDataFrame([], left.df.schema), left.key, left.ts).join(
-        KTable(spark0.createDataFrame([], right.df.schema), right.key, right.ts),
-        how=how,
-        ts_alias=ts_alias,
-    ).df
-
-    integral = {"tinyint", "smallint", "int", "bigint"}
-    tunnel = {c for c in l_val if l_ddl[c] in integral} | {
-        c for c in r_val if r_ddl[c] in integral
-    }
-    ts_integral = merge_ts and l_ddl[left.ts] in integral
-
-    def _ddl(c):
-        base = l_ddl.get(c) or r_ddl[c]
-        return "string" if c in tunnel else base
-
-    jk = [f"__jk{i}" for i in range(len(l_key))]
-    l_src, r_src = left.df, right.df
-    for k in l_key:
-        l_src = l_src.filter(F.col(k).isNotNull())  # to_table drops null keys
-    for k in r_key:
-        r_src = r_src.filter(F.col(k).isNotNull())
-
-    def _tcol(c):
-        return (F.col(c).cast("string") if c in tunnel else F.col(c)).alias(c)
-
-    def _ncol(c):
-        return F.lit(None).cast(_ddl(c)).alias(c)
-
-    tagged = l_src.select(
-        F.lit(1).alias("__side"),
-        *[F.col(k).alias(j) for k, j in zip(l_key, jk)],
-        *[_tcol(c) for c in l_val],
-        *[_ncol(c) for c in r_val],
-    ).unionByName(
-        r_src.select(
-            F.lit(0).alias("__side"),
-            *[F.col(k).alias(j) for k, j in zip(r_key, jk)],
-            *[_ncol(c) for c in l_val],
-            *[_tcol(c) for c in r_val],
-        )
-    )
-
-    state_schema = "__l_set boolean, __r_set boolean" + "".join(
-        f", `{c}` {_ddl(c)}" for c in l_val + r_val
-    )
-    out_cols = list(l_key) + out_l_val + out_r_val + ([ts_alias] if merge_ts else [])
-
-    def _out_ddl(c):
-        if merge_ts and c == ts_alias:
-            return "string" if ts_integral else l_ddl[left.ts]
-        if c in l_key:
-            return l_ddl[c]
-        return _ddl(c)
-
-    out_schema = ", ".join(f"`{c}` {_out_ddl(c)}" for c in out_cols)
-
-    n_l, n_r = len(l_val), len(r_val)
-    l_idx = {c: i for i, c in enumerate(l_val)}
-    r_idx = {c: i for i, c in enumerate(r_val)}
-    l_key_pos = {c: i for i, c in enumerate(l_key)}
-    r_key_pos = {c: i for i, c in enumerate(r_key)}
-    l_ts_name, r_ts_name = (left.ts, right.ts) if merge_ts else (None, None)
-
-    def fn(gkey, pdfs, state):
-        import pandas as pd  # noqa: PLC0415 - worker-side import
-
-        clean = _clean_state_value
-
-        def make_ord(order, key_pos, lookup):
-            vals = []
-            for c in order:
-                v = clean(gkey[key_pos[c]]) if c in key_pos else clean(lookup(c))
-                if v is None:
-                    raise ValueError(
-                        "null order value in the keyed tt-join engine — the fold "
-                        "needs a total order per key; use engine='exact'"
-                    )
-                if c in tunnel:
-                    v = int(v)
-                vals.append(v)
-            return tuple(vals)
-
-        if state.exists:
-            st = list(state.get)
-            l_set, r_set = bool(st[0]), bool(st[1])
-            l_vals, r_vals = list(st[2 : 2 + n_l]), list(st[2 + n_l :])
-        else:
-            l_set = r_set = False
-            l_vals, r_vals = [None] * n_l, [None] * n_r
-        l_ord = make_ord(lord, l_key_pos, lambda c: l_vals[l_idx[c]]) if l_set else None
-        r_ord = make_ord(rord, r_key_pos, lambda c: r_vals[r_idx[c]]) if r_set else None
-
-        changed = False
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for _, row in pdf.iterrows():
-                if int(row["__side"]) == 1:
-                    ov = make_ord(lord, l_key_pos, lambda c: row[c])
-                    if (not l_set) or ov >= l_ord:
-                        l_vals = [clean(row[c]) for c in l_val]
-                        l_ord, l_set, changed = ov, True, True
-                else:
-                    ov = make_ord(rord, r_key_pos, lambda c: row[c])
-                    if (not r_set) or ov >= r_ord:
-                        r_vals = [clean(row[c]) for c in r_val]
-                        r_ord, r_set, changed = ov, True, True
-        if not changed:
-            return
-        state.update((l_set, r_set, *l_vals, *r_vals))
-        emit = (l_set and r_set) if how == "inner" else (l_set if how == "left" else True)
-        if not emit:
-            return
-        out_row = [clean(k) for k in gkey]
-        out_row += [clean(l_vals[l_idx[c]]) if l_set else None for c in out_l_val]
-        out_row += [clean(r_vals[r_idx[c]]) if r_set else None for c in out_r_val]
-        if merge_ts:
-            # output ts = max of the sides (KTableKTableJoinProcessor.cs:35),
-            # skipping absent/null sides like F.greatest
-            def ts_of(is_set, key_pos, idx, vals, name):
-                if not is_set:
-                    return None
-                v = clean(gkey[key_pos[name]]) if name in key_pos else clean(vals[idx[name]])
-                if v is None:
-                    return None
-                return int(v) if ts_integral else v
-
-            cands = [
-                t
-                for t in (
-                    ts_of(l_set, l_key_pos, l_idx, l_vals, l_ts_name),
-                    ts_of(r_set, r_key_pos, r_idx, r_vals, r_ts_name),
-                )
-                if t is not None
-            ]
-            best = max(cands) if cands else None
-            out_row.append(str(best) if ts_integral and best is not None else best)
-        yield pd.DataFrame([tuple(out_row)], columns=out_cols)
-
-    root = state_dir or tempfile.mkdtemp(prefix="pse-ttjoin-")
-    os.makedirs(root, exist_ok=True)
-    _check_no_pending_compaction(root)
-    if os.path.exists(os.path.join(root, "_GEN")):
-        raise ValueError(
-            f"state dir {root!r} was written by the exact tt-join engine (ping-pong "
-            "generations); pass engine='exact' to resume it, or a fresh state_dir"
-        )
-    out_dir = os.path.join(root, "out")
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(out_dir), "prior tt-join emissions"
-    )
-    ver_path = os.path.join(root, "_PSE_TTJOIN_V")
-    ver = _read_bind(ver_path)
-    if (_has_emissions(out_dir) or _last_committed(ckpt) >= 0) and ver != _TTJOIN_STATE_VERSION:
-        raise ValueError(
-            f"state dir {root!r} holds keyed tt-join state with state-schema version "
-            f"{ver or 'unknown'}, but this engine writes version "
-            f"{_TTJOIN_STATE_VERSION} — resuming would fail Spark's state-schema "
-            "check or mix sink schemas; drain the old run with the code that wrote "
-            "it, or start a fresh state_dir"
-        )
-    if ver is None:
-        # only verifiably FRESH dirs (no emissions, no commits) reach here
-        with open(ver_path + ".tmp", "w") as f:
-            f.write(_TTJOIN_STATE_VERSION)
-        os.replace(ver_path + ".tmp", ver_path)
-    _maybe_autocompact(spark0, root, ckpt, key=l_key)
-
-    res = tagged.groupBy(*jk).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.write.mode("overwrite").parquet(os.path.join(out_dir, f"sink_batch={batch_id}"))
-
-    q = (
-        res.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not _has_emissions(out_dir):
-        return empty_out
-    emitted = spark0.read.parquet(out_dir)
-    snap = KStream(emitted, tuple(l_key), None).to_table(order=("sink_batch",)).df
-    snap = snap.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in empty_out.schema.fields]
-    )
-    if store_name is not None:
-        snap.createOrReplaceTempView(store_name)
-    return snap
-
-
-# keyed fk-join state/sink schema version: same contract as _TTJOIN_STATE_VERSION
-_FKJOIN_STATE_VERSION = "1"
-
-
-def _join_fk_keyed(
-    left: KStream,
-    right: KStream,
-    fk: str,
-    how: str,
-    l_order: Sequence[str] | None,
-    r_order: Sequence[str] | None,
-    store_name: str | None,
-    state_dir: str | None,
-    checkpoint: str | None,
-) -> DataFrame:
-    """Keyed-state engine of ``join_fk_streaming`` — the ACTUAL KIP-213
-    architecture, not a snapshot recompute: Kafka Streams realizes the FK
-    join as a subscription topic keyed by FK plus a response path keyed
-    back by the left PK, so an FK *change* unsubscribes from the old key
-    and subscribes to the new one.  Here the same two stages run as two
-    chained availableNow queries over per-key Spark state (Spark refuses
-    two flatMapGroups operators in ONE query, so the subscription changelog
-    is a durable parquet log between them — the subscription-topic analog):
-
-      stage A (keyed by LEFT PK): folds the left changelog latest-per-key;
-        a changed row emits ``U(new_fk, row)`` plus ``D(old_fk, pk)`` when
-        its fk moved — the unsubscribe/subscribe pair — into
-        ``sub/sink_batch=<id>`` partitions (overwritten on crash-replay);
-      stage B (keyed by FK VALUE): one query over the union of the
-        subscription log (a file stream, so resume skips consumed files)
-        and the right changelog; per-fk state = (latest right row, the
-        SUBSCRIBER LIST as an array<struct> of left rows).  A right-side
-        change re-emits every subscriber (the response-topic fan-out); a
-        left U/D re-emits/retracts just that pk.  Emissions land in
-        ``out/sink_batch=<id>`` with op U/D; the final snapshot is the
-        per-PK fold of the emission log, keeping keys whose LAST op is U.
-
-    Per-microbatch I/O is O(changed keys + affected subscribers), never
-    O(table) — the shape the exact loop's full-snapshot recompute
-    (engine='exact') cannot give.  Caveat, documented: a single fk value
-    with a huge subscriber list serializes its whole array per update
-    (Kafka Streams stores subscriptions as individual store entries, so it
-    pays O(1) there) — mega-fan-in dims belong on the exact loop or the
-    Delta MERGE path.  Ordering across the two stages is total: stage-A
-    batch ids ride the subscription records, ties inside one stage-B batch
-    resolve U over D, so a flip's retraction can never outlive its
-    re-subscription.  Integral columns string-tunnel exactly like the
-    keyed tt-join (artificial union nulls would float64-coerce them), and
-    the fk join value is canonicalized SQL-side (``cast(fk as string)``)
-    on BOTH stages so pandas repr differences can never split a group.
-    Requires a string fk column name, equal fk/right-key dtypes, and
-    non-null order values; ``engine='exact'`` otherwise."""
-    spark0 = left.df.sparkSession
-    l_key = list(left.key)
-    rk = right.key[0]
-    l_cols = list(left.df.columns)
-    r_val = [c for c in right.df.columns if c != rk]
-    overlap = set(l_cols) & set(r_val)
-    if overlap:
-        raise ValueError(
-            f"left columns and right value columns must be disjoint; overlap: {sorted(overlap)}"
-        )
-    _check_reserved_columns(
-        l_cols + list(right.df.columns),
-        {
-            "op": "subscription/emission op tag",
-            "__jfk": "fk grouping column",
-            "__jfk_in": "SQL-canonical fk string",
-            "__sub": "stage-A batch cursor",
-            "__op_rank": "final-fold tie-breaker",
-            "sink_batch": "emission-log partition column",
-        },
-        "keyed fk-join engine",
-    )
-    l_ddl = {f.name: f.dataType.simpleString() for f in left.df.schema.fields}
-    r_ddl = {f.name: f.dataType.simpleString() for f in right.df.schema.fields}
-    if fk not in l_ddl:
-        raise ValueError(f"fk column {fk!r} not in left columns")
-    if l_ddl[fk] != r_ddl[rk]:
-        raise ValueError(
-            f"the keyed fk-join engine requires equal fk/right-key dtypes; "
-            f"{fk}:{l_ddl[fk]} vs {rk}:{r_ddl[rk]} — cast one side or use engine='exact'"
-        )
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
-    for oc, cols in ((lord, l_cols), (rord, right.df.columns)):
-        missing = [c for c in oc if c not in cols]
-        if missing:
-            raise ValueError(f"order columns {missing} not in the side's columns")
-    l_val = [c for c in l_cols if c not in l_key]
-    _check_container_columns(left.df.schema, l_key + l_val, "keyed fk-join engine")
-    _check_container_columns(right.df.schema, r_val, "keyed fk-join engine")
-    empty_out = KTable(spark0.createDataFrame([], left.df.schema), left.key, left.ts).join_fk(
-        KTable(spark0.createDataFrame([], right.df.schema), right.key, right.ts), fk, how=how
-    ).df
-
-    integral = {"tinyint", "smallint", "int", "bigint"}
-    tun_l = {c for c in l_cols if l_ddl[c] in integral}
-    tun_r = {c for c in r_val if r_ddl[c] in integral}
-
-    def lddl(c):
-        return "string" if c in tun_l else l_ddl[c]
-
-    def rddl(c):
-        return "string" if c in tun_r else r_ddl[c]
-
-    # ---------------- state dirs, binding, versioning ----------------
-    root = state_dir or tempfile.mkdtemp(prefix="pse-fkjoin-")
-    os.makedirs(root, exist_ok=True)
-    _check_no_pending_compaction(root)
-    if os.path.exists(os.path.join(root, "_GEN")):
-        raise ValueError(
-            f"state dir {root!r} was written by the exact fk-join engine (ping-pong "
-            "generations); pass engine='exact' to resume it, or a fresh state_dir"
-        )
-    subdir = os.path.join(root, "sub")
-    outdir = os.path.join(root, "out")
-    os.makedirs(subdir, exist_ok=True)
-    ckpt_base = _checkpoint(checkpoint)
-    ckpt_a = _bind_state_checkpoint(
-        subdir,
-        os.path.join(ckpt_base, "sub"),
-        _has_emissions(subdir),
-        "prior fk-join subscription log",
-    )
-    ckpt_b = _bind_state_checkpoint(
-        outdir,
-        os.path.join(ckpt_base, "join"),
-        _has_emissions(outdir),
-        "prior fk-join emissions",
-    )
-    ver_path = os.path.join(root, "_PSE_FKJOIN_V")
-    ver = _read_bind(ver_path)
-    populated = (
-        _has_emissions(subdir)
-        or _has_emissions(outdir)
-        or _last_committed(ckpt_a) >= 0
-        or _last_committed(ckpt_b) >= 0
-    )
-    if populated and ver != _FKJOIN_STATE_VERSION:
-        raise ValueError(
-            f"state dir {root!r} holds keyed fk-join state with state-schema version "
-            f"{ver or 'unknown'}, but this engine writes version {_FKJOIN_STATE_VERSION} "
-            "— resuming would fail Spark's state-schema check or mix sink schemas; "
-            "drain the old run with the code that wrote it, or start a fresh state_dir"
-        )
-    if ver is None:
-        with open(ver_path + ".tmp", "w") as f:
-            f.write(_FKJOIN_STATE_VERSION)
-        os.replace(ver_path + ".tmp", ver_path)
-    _maybe_autocompact(spark0, root, ckpt_base, key=l_key)
-
-    # ---------------- stage A: subscription resolver (keyed by left PK) ----------------
-    a_src = left.df
-    for k in l_key:
-        a_src = a_src.filter(F.col(k).isNotNull())  # to_table drops null keys
-    a_in = a_src.select(
-        *[(F.col(c).cast("string") if c in tun_l else F.col(c)).alias(c) for c in l_cols],
-        F.col(fk).cast("string").alias("__jfk_in"),  # SQL-canonical join string
-    )
-    n_lv = len(l_val)
-    l_idx = {c: i for i, c in enumerate(l_val)}
-    l_key_pos = {c: i for i, c in enumerate(l_key)}
-    state_a = "__jfk string" + "".join(f", `{c}` {lddl(c)}" for c in l_val)
-    sub_cols = ["op", "__jfk", *l_key, *l_val]
-    sub_schema = "op string, __jfk string" + "".join(
-        f", `{c}` {lddl(c)}" for c in l_key + l_val
-    )
-
-    def fn_a(gkey, pdfs, state):
-        import pandas as pd  # noqa: PLC0415 - worker-side import
-
-        clean = _clean_state_value
-
-        def make_ord(lookup):
-            vals = []
-            for c in lord:
-                v = clean(gkey[l_key_pos[c]]) if c in l_key_pos else clean(lookup(c))
-                if v is None:
-                    raise ValueError(
-                        "null order value in the keyed fk-join engine — use engine='exact'"
-                    )
-                if c in tun_l:
-                    v = int(v)
-                vals.append(v)
-            return tuple(vals)
-
-        if state.exists:
-            st = list(state.get)
-            was_set, jfk, vals = True, st[0], list(st[1:])
-        else:
-            was_set, jfk, vals = False, None, [None] * n_lv
-        old_jfk = jfk
-        cur_ord = make_ord(lambda c: vals[l_idx[c]]) if was_set else None
-        changed = False
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for _, row in pdf.iterrows():
-                ov = make_ord(lambda c: row[c])
-                if (cur_ord is None) or ov >= cur_ord:
-                    vals = [clean(row[c]) for c in l_val]
-                    jfk = clean(row["__jfk_in"])
-                    cur_ord, changed = ov, True
-        if not changed:
-            return
-        state.update((jfk, *vals))
-        key_vals = [clean(k) for k in gkey]
-        rows = []
-        if was_set and old_jfk != jfk:
-            # the unsubscribe half of the KIP-213 re-key round-trip
-            rows.append(("D", old_jfk, *key_vals, *([None] * n_lv)))
-        rows.append(("U", jfk, *key_vals, *vals))
-        yield pd.DataFrame(rows, columns=sub_cols)
-
-    res_a = a_in.groupBy(*l_key).applyInPandasWithState(
-        fn_a, sub_schema, state_a, "append", "NoTimeout"
-    )
-
-    def _sink_a(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.write.mode("overwrite").parquet(os.path.join(subdir, f"sink_batch={batch_id}"))
-
-    qa = (
-        res_a.writeStream.foreachBatch(_sink_a)
-        .option("checkpointLocation", ckpt_a)
-        .trigger(availableNow=True)
-        .start()
-    )
-    qa.awaitTermination()
-
-    # ---------------- stage B: per-fk join state over sub-log ∪ right ----------------
-    n_rv = len(r_val)
-    r_idx = {c: i for i, c in enumerate(r_val)}
-    sub_stream = spark0.readStream.schema(sub_schema + ", sink_batch int").parquet(subdir)
-    b_l = sub_stream.select(
-        "op",
-        "__jfk",
-        F.col("sink_batch").alias("__sub"),
-        *l_key,
-        *l_val,
-        *[F.lit(None).cast(rddl(c)).alias(c) for c in r_val],
-    )
-    r_src = right.df.filter(F.col(rk).isNotNull())
-    b_r = r_src.select(
-        F.lit("R").alias("op"),
-        F.col(rk).cast("string").alias("__jfk"),
-        F.lit(None).cast("int").alias("__sub"),
-        *[F.lit(None).cast(lddl(c)).alias(c) for c in l_key + l_val],
-        *[(F.col(c).cast("string") if c in tun_r else F.col(c)).alias(c) for c in r_val],
-    )
-    b_in = b_l.unionByName(b_r)
-    state_b = (
-        "__r_set boolean"
-        + "".join(f", `{c}` {rddl(c)}" for c in r_val)
-        + ", __subs array<struct<__sub: int"
-        + "".join(f", `{c}`: {lddl(c)}" for c in l_key + l_val)
-        + ">>"
-    )
-    out_cols = ["op", *l_key, *l_val, *r_val]
-    out_schema = "op string" + "".join(f", `{c}` {lddl(c)}" for c in l_key + l_val) + "".join(
-        f", `{c}` {rddl(c)}" for c in r_val
-    )
-    n_lk = len(l_key)
-
-    def fn_b(gkey, pdfs, state):
-        import pandas as pd  # noqa: PLC0415 - worker-side import
-
-        clean = _clean_state_value
-
-        def r_ord_of(lookup):
-            vals = []
-            for c in rord:
-                v = clean(gkey[0]) if c == rk else clean(lookup(c))
-                if v is None:
-                    raise ValueError(
-                        "null order value in the keyed fk-join engine — use engine='exact'"
-                    )
-                if c in tun_r or (c == rk and rk in tun_r):
-                    v = int(v)
-                vals.append(v)
-            return tuple(vals)
-
-        if state.exists:
-            st = list(state.get)
-            r_set, r_vals = bool(st[0]), list(st[1 : 1 + n_rv])
-            subs = {}
-            for s in st[1 + n_rv] or []:
-                vals = [s[c] for c in ([*l_key, *l_val])]
-                subs[tuple(vals[:n_lk])] = {"sub": s["__sub"], "vals": vals}
-        else:
-            r_set, r_vals, subs = False, [None] * n_rv, {}
-        cur_rord = r_ord_of(lambda c: r_vals[r_idx[c]]) if r_set else None
-        right_changed = False
-        lops = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for _, row in pdf.iterrows():
-                op = row["op"]
-                if op == "R":
-                    ov = r_ord_of(lambda c: row[c])
-                    if (cur_rord is None) or ov >= cur_rord:
-                        r_vals = [clean(row[c]) for c in r_val]
-                        cur_rord, r_set, right_changed = ov, True, True
-                else:
-                    lops.append(
-                        (
-                            int(row["__sub"]),
-                            op,
-                            tuple(clean(row[c]) for c in l_key),
-                            [clean(row[c]) for c in l_key + l_val],
-                        )
-                    )
-        changed, removed = {}, {}
-        for sub, op, pkt, vals in sorted(lops, key=lambda t: t[0]):
-            cur = subs.get(pkt)
-            if op == "U":
-                if cur is None or cur["sub"] <= sub:
-                    subs[pkt] = {"sub": sub, "vals": vals}
-                    changed[pkt] = True
-                    removed.pop(pkt, None)
-            elif cur is None or cur["sub"] <= sub:
-                subs.pop(pkt, None)
-                removed[pkt] = True
-                changed.pop(pkt, None)
-        if not (right_changed or changed or removed):
-            return
-        state.update(
-            (
-                r_set,
-                *r_vals,
-                [
-                    {"__sub": e["sub"], **dict(zip(l_key + l_val, e["vals"]))}
-                    for e in subs.values()
-                ],
-            )
-        )
-        out_rows = []
-        if how == "left" or r_set:
-            ups = subs.keys() if right_changed else [p for p in changed if p in subs]
-            pad = r_vals if r_set else [None] * n_rv
-            for pkt in ups:
-                out_rows.append(("U", *subs[pkt]["vals"], *pad))
-        for pkt in removed:
-            out_rows.append(("D", *pkt, *([None] * (n_lv + n_rv))))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=out_cols)
-
-    res_b = b_in.groupBy("__jfk").applyInPandasWithState(
-        fn_b, out_schema, state_b, "append", "NoTimeout"
-    )
-
-    def _sink_b(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.write.mode("overwrite").parquet(os.path.join(outdir, f"sink_batch={batch_id}"))
-
-    qb = (
-        res_b.writeStream.foreachBatch(_sink_b)
-        .option("checkpointLocation", ckpt_b)
-        .trigger(availableNow=True)
-        .start()
-    )
-    qb.awaitTermination()
-
-    if not _has_emissions(outdir):
-        return empty_out
-    ranked = spark0.read.parquet(outdir).withColumn(
-        "__op_rank", (F.col("op") == "U").cast("int")
-    )
-    snap = KStream(ranked, tuple(l_key), None).to_table(order=("sink_batch", "__op_rank")).df
-    snap = snap.filter(F.col("op") == "U").select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in empty_out.schema.fields]
-    )
-    if store_name is not None:
-        snap.createOrReplaceTempView(store_name)
-    return snap
 
 
 def _changelog_join_loop(
@@ -2204,30 +1463,26 @@ def suppress_buffered(
       * emission cadence is per-microbatch (§7.3.3): time checks run when a
         batch closes, not per record.
 
-    Three engines, selected by ``engine`` (None = auto: ``"tws"`` when the
-    raw changelog is available, bounds are off and protobuf is importable;
-    ``"keyed"`` without protobuf; ``"exact"`` otherwise):
+    Two engines, selected by ``engine`` (None = auto: ``"tws"`` when the
+    raw changelog is available, bounds are off, the keys are scalar and
+    protobuf is importable; ``"exact"`` otherwise):
 
-      * ``"tws"`` — transformWithState port of the keyed engine
-        (tws.suppress_tws): identical decoupled clock-copy watermark and
-        due rule, per-key event-time TIMERS instead of GroupState
-        timeouts, native-typed state, RocksDB store.
-      * ``"keyed"`` — the scale engine: ``applyInPandasWithState`` over the
-        RAW changelog (threaded through ``KStream.to_table``), per-key
-        RocksDB/HDFS state in the streaming checkpoint, event-time timers
-        for emission.  Per-microbatch I/O is O(changed keys + newly due
-        keys), never O(buffered keys).  Emission batch ids match the KS
-        per-batch rule exactly: a timer set at ``entry+limit-1`` fires in
-        the microbatch AFTER the one whose stream time passed the deadline
-        (the watermark Spark hands a batch is the PREVIOUS batch's running
-        max), so timer emissions are renumbered ``batch_id - 1``; an entry
-        already due against the current watermark at creation emits in its
-        own batch untagged.  Arbitrarily LATE updates are admitted exactly
-        like KS: the watermark rides separate clock-copy rows, so Spark's
-        stateful late-row filter can never drop a data row (see
-        _suppress_keyed).  Requires an unbounded buffer (capacity bounds
-        are buffer-GLOBAL — see below) and a table built by plain
-        ``to_table`` (default ts order, no tombstones).
+      * ``"tws"`` — the per-key engine (tws.suppress_tws):
+        ``transformWithState`` over the RAW changelog (threaded through
+        ``KStream.to_table``), per-key buffer state in the checkpoint's
+        RocksDB store, per-key event-time timers for emission.
+        Per-microbatch I/O is O(changed keys + newly due keys), never
+        O(buffered keys).  Emission batch ids match the KS per-batch rule
+        exactly: a timer fires in the microbatch AFTER the one whose stream
+        time passed the deadline (the watermark Spark hands a batch is the
+        PREVIOUS batch's running max), so timer emissions are renumbered
+        ``batch_id - 1``; an entry already due at creation emits in its own
+        batch untagged.  Arbitrarily LATE updates are admitted exactly like
+        KS: the watermark rides separate clock-copy rows, so Spark's
+        stateful late-row filter can never drop a data row.  Requires an
+        unbounded buffer (capacity bounds are buffer-GLOBAL — see below),
+        a table built by plain ``to_table`` (default ts order, no
+        tombstones), and post-epoch event times.
       * ``"exact"`` — the bounded-buffer engine: one parquet ping-pong
         buffer folded per microbatch.  Capacity bounds (max_records /
         max_bytes) need a total time-order across ALL keys per batch, which
@@ -2274,49 +1529,39 @@ def suppress_buffered(
     bounded = max_records is not None or max_bytes is not None
 
     src = getattr(table, "_source_stream", None)
-    keyed_ok = (
+    tws_ok = (
         not bounded
         and src is not None
         and not getattr(table, "_source_tombstones", False)
         and tuple(getattr(table, "_source_order", ()) or ()) == (tcol,)
         and tcol in src.df.columns
-        # the keyed engine brings its OWN decoupled watermark (clock-copy
+        # the tws engine brings its OWN decoupled watermark (clock-copy
         # rows); a pre-watermarked source would re-introduce the stateful
         # late-row filter on the data copies
         and not _has_watermark(src.df)
     )
     if engine is None:
-        if keyed_ok:
-            engine = _select_keyed_engine(
-                state_dir,
-                "_PSE_STATE_V",
-                [(df.schema, [c for c in df.columns if c not in key])],
-                hard=[(df.schema, list(key))],
-            )
+        if tws_ok:
+            engine = _select_engine(state_dir, hard=[(df.schema, list(key))])
         else:
             engine = "exact"
-    if engine in ("keyed", "tws"):
+    _check_engine(engine, "suppress_buffered")
+    if engine == "tws":
         if bounded:
             raise ValueError(
-                f"the {engine} suppress engine cannot enforce max_records/max_bytes: "
+                "the tws suppress engine cannot enforce max_records/max_bytes: "
                 "capacity bounds are buffer-global (a total time-order across all "
                 "keys), invisible to per-key state — use engine='exact'"
             )
-        if not keyed_ok:
+        if not tws_ok:
             raise ValueError(
-                f"the {engine} suppress engine needs the raw changelog threaded by a "
+                "the tws suppress engine needs the raw changelog threaded by a "
                 "plain KStream.to_table() (default ts order, no tombstones, no "
                 "pre-existing watermark) whose ts column is the suppress time column"
             )
-        if engine == "tws":
-            from .tws import suppress_tws  # noqa: PLC0415 - optional protobuf dep
+        from .tws import suppress_tws  # noqa: PLC0415 - optional protobuf dep
 
-            return suppress_tws(table, src, tcol, limit_ms, state_dir, checkpoint, store_name)
-        return _suppress_keyed(table, src, tcol, limit_ms, state_dir, checkpoint, store_name)
-    if engine != "exact":
-        raise ValueError(
-            f"unknown suppress engine {engine!r}; expected 'keyed', 'tws' or 'exact'"
-        )
+        return suppress_tws(table, src, tcol, limit_ms, state_dir, checkpoint, store_name)
 
     cols = list(df.columns)
     root = state_dir or tempfile.mkdtemp(prefix="pse-suppress-")
@@ -2476,285 +1721,6 @@ def _empty_emissions(spark, schema, cols):
         *cols,
         F.lit(None).cast("string").alias("__emit_reason"),
         F.lit(None).cast("long").alias("__emit_batch"),
-    )
-
-
-def _suppress_keyed(
-    table: KTable,
-    src: KStream,
-    tcol: str,
-    limit_ms: int,
-    state_dir: str | None,
-    checkpoint: str | None,
-    store_name: str | None,
-) -> DataFrame:
-    """Keyed-state engine of ``suppress_buffered`` (see its docstring for
-    the contract): per-key buffer state in ``applyInPandasWithState``
-    (Spark's RocksDB/HDFS state store — the KS changelog-backed
-    InMemoryTimeOrderedKeyValueBuffer analog), EventTimeTimeout timers for
-    emission, and the latest-per-key fold of ``KStream.to_table`` re-derived
-    INSIDE the state function (a stateful operator cannot chain downstream
-    of the update-mode aggregate, so the engine consumes the raw changelog).
-
-    State per key = (buffer entry time | null, latest event time, latest
-    row); the latest-row half persists after emission so a late record
-    cannot resurrect an older value (exactly the update-mode aggregate's
-    memory).  Timers fire when the watermark STRICTLY exceeds the set
-    timestamp, so ``entry+limit-1`` fires at the first watermark >=
-    entry+limit — the KS due rule.  One boundary is documented rather than
-    closed: when Spark rejects that timestamp as not beyond the current
-    watermark (entry+limit == wm+1), the timer is floored to wm+1 and an
-    advance to EXACTLY wm+1 ms would not fire it until the next advance —
-    unreachable for ms-granularity event data unless stream time lands on
-    that exact millisecond with no later data.  Pre-epoch (< 1970) event
-    times cannot advance a Spark watermark at all (Spark floors it at 0),
-    so such changelogs must use ``engine="exact"`` — the state fn raises
-    loudly on the first pre-epoch data row instead of buffering it forever.
-    """
-    from .runtime import epoch_ms
-
-    spark0 = src.df.sparkSession
-    key = list(table.key)
-    cols = list(table.df.columns)
-    _check_reserved_columns(
-        cols,
-        {
-            "__ev_ms": "event-time projection",
-            "__clk": "clock-copy tag",
-            "__wm_ts": "watermark carrier",
-            "__entry_ms": "buffer-entry state field",
-            "__hist_ms": "latest-event state field",
-            "__fired": "timer-emission flag",
-            "__emit_reason": "emission metadata column",
-            "__emit_batch": "emission metadata column",
-            "sink_batch": "emission-log partition column",
-        },
-        "keyed suppress engine",
-    )
-    root = state_dir or tempfile.mkdtemp(prefix="pse-suppress-")
-    os.makedirs(root, exist_ok=True)
-    out_dir = os.path.join(root, "out")
-    # the buffer itself lives in the Spark checkpoint here; a fresh or
-    # foreign checkpoint would orphan it AND re-deliver old out/ emissions
-    # (prior_batch would restart at -1) — only the bound pair is accepted
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(out_dir), "prior suppress emissions"
-    )
-    # state-schema version gate: the string tunnel for integral columns
-    # changed BOTH the applyInPandasWithState state schema and the
-    # out/sink_batch parquet schema (v2).  A populated v1 dir cannot resume
-    # under v2 — Spark would fail its state-schema compatibility check with
-    # an opaque error, and new string-typed sink partitions next to v1
-    # int64 ones would break the final out/ read — so refuse descriptively
-    # instead; fresh dirs are stamped before the first batch runs.
-    ver_path = os.path.join(root, "_PSE_STATE_V")
-    ver = _read_bind(ver_path)
-    prior_batch = _last_committed(ckpt)
-    # "populated" for the version gate means EITHER emissions OR committed
-    # batches: suppress can buffer for many batches before its first
-    # emission, and such a run still holds v-old state in the checkpoint
-    # (r10 advice — gating on emissions alone would stamp the dir v-new
-    # and then hit the opaque Spark state-schema failure mid-drain)
-    if (_has_emissions(out_dir) or prior_batch >= 0) and ver != _KEYED_STATE_VERSION:
-        raise ValueError(
-            f"state dir {root!r} holds keyed-suppress state with state-schema "
-            f"version {ver or 'pre-versioning (v1)'}, but this engine writes "
-            f"version {_KEYED_STATE_VERSION} (integral columns string-tunneled "
-            "for exact bigint round-trip) — resuming would fail Spark's state-"
-            "schema check and mix sink schemas; drain the old run with the code "
-            "that wrote it, or start a fresh state_dir"
-        )
-    if ver is None:
-        # only verifiably FRESH dirs (no emissions, no commits) reach here
-        with open(ver_path + ".tmp", "w") as f:
-            f.write(_KEYED_STATE_VERSION)
-        os.replace(ver_path + ".tmp", ver_path)
-    _maybe_autocompact(spark0, root, ckpt)
-
-    sdf = src.df
-    for k in key:
-        sdf = sdf.filter(F.col(k).isNotNull())  # to_table drops null keys
-    # The watermark is DECOUPLED from the data rows: Spark's stateful
-    # operators filter input rows older than the late-events watermark
-    # (which lags the eviction watermark by one batch), but KS admits
-    # arbitrarily late updates into the suppress buffer.  So every row is
-    # shipped twice: a DATA copy whose event-time column (__wm_ts) is NULL
-    # — null event times are never late-filtered and don't contribute to
-    # the watermark — and a CLOCK copy carrying ts with all other value
-    # columns nulled (shuffle weight), which exists only to advance the
-    # watermark; a clock copy dropped as late is by definition one that
-    # would not have advanced the running max anyway.  The function folds
-    # only data copies; timers ride the clock-driven watermark.
-    value_cols = [c for c in cols if c not in key]
-    _check_container_columns(table.df.schema, value_cols, "keyed suppress engine")
-    ddl0 = {f.name: f.dataType.simpleString() for f in table.df.schema.fields}
-    integral = {"tinyint", "smallint", "int", "bigint"}
-    # Integral VALUE columns tunnel through the stateful operator as strings:
-    # any null in a group's Arrow column slice (a clock copy, or a real null
-    # in a data row) makes pandas deliver the slice as float64 BEFORE the
-    # state fn ever sees it, and float64 cannot represent bigints past 2^53
-    # — a decimal string round-trips exactly and null-safely.  Cast back in
-    # the returned emissions and the store view.  Key columns stay integral:
-    # they are null-filtered above, so their slices never leave int64.
-    tunnel = {c for c in value_cols if ddl0[c] in integral}
-    sdf = sdf.select(
-        *[F.col(c).cast("string").alias(c) if c in tunnel else F.col(c) for c in cols],
-        epoch_ms(tcol).alias("__ev_ms"),
-    ).select("*", F.explode(F.array(F.lit(0), F.lit(1))).alias("__clk"))
-
-    def _clock_fill(c):
-        # clock copies carry no payload — null fill keeps shuffle weight down
-        return F.when(F.col("__clk") == 0, F.col(c)).otherwise(F.lit(None)).alias(c)
-
-    sdf = sdf.select(
-        *key,
-        *[_clock_fill(c) for c in value_cols],
-        F.when(F.col("__clk") == 0, F.col("__ev_ms")).otherwise(F.lit(0)).alias("__ev_ms"),
-        "__clk",
-        F.when(F.col("__clk") == 1, F.col(tcol)).alias("__wm_ts"),
-    ).withWatermark("__wm_ts", "0 milliseconds")
-
-    ddl = {c: ("string" if c in tunnel else ddl0[c]) for c in cols}
-    state_schema = "__entry_ms long, __hist_ms long, " + ", ".join(
-        f"`{c}` {ddl[c]}" for c in cols
-    )
-    out_schema = ", ".join(f"`{c}` {ddl[c]}" for c in cols) + ", __fired boolean"
-    NEG = -(1 << 62)
-    # keys are never null, so their slices stay int64 — the coercion below
-    # is a guard (a Python float in a typed int state field nulls silently)
-    int_cols = {c for c in key if ddl0[c] in integral}
-
-    def _untunnel(c):
-        return F.col(c).cast(ddl0[c]).alias(c) if c in tunnel else F.col(c)
-
-    def fn(grp_key, pdfs, state):
-        import pandas as pd  # noqa: PLC0415 - worker-side import
-
-        def clean(v, c=None):
-            v = _clean_state_value(v)
-            if c in int_cols and isinstance(v, float):
-                return int(v)
-            return v
-
-        wm = state.getCurrentWatermarkMs()
-        # Spark initializes the watermark at 0 and only ratchets it UP, so
-        # 0 means "no watermark yet"; pre-epoch event times can never
-        # advance a Spark watermark at all (timers would never fire), so
-        # such data must use engine="exact" — documented limitation.
-        wm_eff = wm if wm > 0 else NEG
-        out_rows = []
-        if state.hasTimedOut:
-            st = list(state.get)
-            out_rows.append((*st[2:], True))
-            # buffer entry leaves; the latest-row memory stays (a late
-            # record must still lose to it, like the update-mode aggregate)
-            state.update((None, st[1], *st[2:]))
-        else:
-            if state.exists:
-                st = list(state.get)
-                entry, hist_ms, hist_vals = st[0], st[1], list(st[2:])
-            else:
-                entry, hist_ms, hist_vals = None, None, None
-            if entry is not None and entry + limit_ms <= wm_eff:
-                # due BEFORE this batch's data (KS emitted it last batch;
-                # this batch's arrival pre-empted the timer): emit the
-                # pre-merge value, renumbered like a timer firing
-                out_rows.append((*hist_vals, True))
-                entry = None
-            had_data = False
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                data = pdf[pdf["__clk"] == 0]  # clock copies only drive wm
-                evs = data["__ev_ms"].tolist()
-                for i, ev in enumerate(evs):
-                    if ev is None or (isinstance(ev, float) and ev != ev):
-                        continue
-                    had_data = True
-                    ev = int(ev)
-                    if ev <= 0:
-                        # ADVICE r9: engine=None auto-selects this engine,
-                        # which would buffer pre-epoch entries FOREVER
-                        # (Spark floors the watermark at 0 and this fn reads
-                        # wm == 0 as "none yet", so epoch-0 exactly is just
-                        # as undeliverable) — loud beats silently empty
-                        raise ValueError(
-                            "pre-epoch (<= 1970-01-01T00:00:00) event time "
-                            "in the keyed suppress engine: Spark watermarks "
-                            "cannot advance past it, so such entries would "
-                            "never emit — use engine='exact'"
-                        )
-                    if hist_ms is None or ev >= hist_ms:
-                        # later-wins on ties, in arrival order — the
-                        # max_by(ts) fold of to_table
-                        hist_ms = ev
-                        row = data.iloc[i]
-                        hist_vals = [clean(row[c], c) for c in cols]
-            if had_data and entry is None:
-                # (re-)enter the buffer: clock = the state row's event
-                # time (which a late record does NOT move backwards)
-                entry = hist_ms
-                if entry + limit_ms <= wm_eff:
-                    # already due vs the previous batch's stream time:
-                    # KS emits it in THIS batch — no renumbering
-                    out_rows.append((*hist_vals, False))
-                    entry = None
-            # else: value replaced via hist_vals, clock kept
-            if hist_ms is not None:
-                state.update((entry, hist_ms, *hist_vals))
-                if entry is not None:
-                    # invocations clear timers: re-arm whenever buffered
-                    state.setTimeoutTimestamp(max(entry + limit_ms - 1, wm + 1))
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=cols + ["__fired"])
-
-    res = sdf.groupBy(*key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "EventTimeTimeout"
-    )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        (
-            batch.select(
-                *cols,
-                F.lit("time").alias("__emit_reason"),
-                # timer-fired rows belong to the batch whose stream time
-                # passed the deadline — one earlier than the firing batch
-                (F.lit(int(batch_id)) - F.col("__fired").cast("long")).alias("__emit_batch"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"sink_batch={batch_id}"))
-        )
-
-    q = (
-        res.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    if store_name is not None:
-        try:
-            state_df = read_state_store(spark0, ckpt)
-            buf = state_df.filter(F.col("value.groupState.__entry_ms").isNotNull()).select(
-                *[
-                    F.col(f"value.groupState.`{c}`").cast(ddl0[c]).alias(c)
-                    if c in tunnel
-                    else F.col(f"value.groupState.`{c}`").alias(c)
-                    for c in cols
-                ]
-            )
-        except Exception:
-            buf = spark0.createDataFrame([], table.df.schema)  # no batch ever ran
-        buf.createOrReplaceTempView(store_name)
-    if not _has_emissions(out_dir):
-        return _empty_emissions(spark0, table.df.schema, cols)
-    return (
-        spark0.read.parquet(out_dir)
-        .filter(F.col("sink_batch") > F.lit(int(prior_batch)))
-        .select(*[_untunnel(c) for c in cols], "__emit_reason", "__emit_batch")
     )
 
 
@@ -3090,7 +2056,7 @@ def join_table_asof_streaming(
     if not stream.df.isStreaming:
         raise ValueError("join_table_asof_streaming requires a streaming stream side")
     if engine is None:
-        # same precedence as _select_keyed_engine: resume with the family
+        # same precedence as _select_engine: resume with the engine
         # that wrote the dir; otherwise tws when it can run (container/
         # non-timestamp-ts calls fall back to exact, which has no such
         # constraints)
@@ -3104,10 +2070,9 @@ def join_table_asof_streaming(
                 engine = "tws"
         if engine is None:
             # every tws-engine construction guard must be mirrored here, or
-            # the auto-default breaks previously working exact calls (the
-            # round-12 'bare default flip' regression class): timestamp ts,
-            # key arity AND dtype equality, no hard containers, no reserved
-            # -name collisions
+            # the auto-default breaks previously working exact calls:
+            # timestamp ts, key arity AND dtype equality, no hard
+            # containers, no reserved-name collisions
             s_types = dict(stream.df.dtypes)
             t_types = dict(table.df.dtypes)
             reserved = {"sink_batch", "__side", "__sts", "__hts"} | {

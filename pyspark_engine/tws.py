@@ -1,26 +1,28 @@
 """transformWithState (arbitrary-state-v2) engines for the continuous
-table operators — the Spark-4-native successors of the pandas keyed engines
-in ``streaming.py`` (VERDICT r11 task 1).
+table operators — the per-key engines behind ``engine='tws'`` in
+``streaming.py`` (the other engine, ``'exact'``, is the parquet snapshot
+loop that doubles as their differential oracle).
 
-Same architectures as ``_join_tables_keyed`` / ``_join_fk_keyed`` /
-``_suppress_keyed`` (tagged-union changelogs, per-key state, emissions
-appended to ``out/sink_batch=<id>`` partitions, latest-per-key snapshot
-fold), with the Arrow/pandas boundary replaced by the Row-based
-``transformWithState`` API:
+Shared architecture (tt join, fk join, suppress): the changelogs are
+tagged and unioned into one ``transformWithState`` grouped by the state
+key; per-key state lives in Spark's RocksDB store, which checkpoints
+per-batch deltas; each key whose state changed appends its emission to an
+``out/sink_batch=<id>`` partition (overwritten on crash-replay —
+exactly-once); the returned snapshot is the latest-per-key fold of that
+emission log.  Per-microbatch I/O is therefore O(changed keys), never
+O(table).  Each engine stamps a version marker at the state-dir root
+before its first batch (``_stamp_version``), which identifies the dir's
+owner for resume and for ``streaming.compact_emission_log``.
 
-* **No string tunnel.**  ``transformWithState`` hands the processor
+* **Native types.**  ``transformWithState`` hands the processor
   ``pyspark.sql.Row`` objects, where a nullable int64 column stays a Python
-  ``int`` (the pandas engines receive float64-coerced slices as soon as a
-  union null-pad or a real null appears in the group, losing bigints past
-  2^53 — hence their decimal-string tunnel).  Typed value state likewise
-  round-trips int64/decimal/timestamp exactly (pinned by
-  ``tests/test_tws.py``).
+  ``int`` even beside union null-padding or real nulls, and typed value
+  state round-trips int64/decimal/timestamp exactly (pinned by
+  ``tests/test_tws.py`` and the suppress type matrix).
 * **NaN is preserved.**  Rows and value state keep float NaN as NaN, so
-  these engines agree with the ``exact`` loops where the pandas engines
-  coerce NaN→null (see ``_clean_state_value``).
-* **Timers instead of GroupState timeouts** (suppress): per-key event-time
-  timers survive across invocations and are deleted/re-registered
-  explicitly.
+  these engines agree with the ``exact`` loops.
+* **Timers** (suppress): per-key event-time timers survive across
+  invocations and are deleted/re-registered explicitly.
 
 Known constraint (upstream): PySpark's value-state client cannot round
 -trip NESTED CONTAINER fields (an ``array<struct<...>>`` value state
@@ -72,13 +74,14 @@ from .streaming import (
     _last_committed,
     _maybe_autocompact,
     _read_bind,
+    _refuse_legacy_keyed_dir,
 )
 
 _TWS_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-# version stamps, same contract as streaming.py's _KEYED_STATE_VERSION: a
-# populated dir written by a different engine/version is refused
-# descriptively instead of failing Spark's state-schema check mid-drain
+# version stamps (_stamp_version): a populated dir written by a different
+# engine/version is refused descriptively instead of failing Spark's
+# state-schema check mid-drain
 _TWS_TTJOIN_VERSION = "1"
 _TWS_FKJOIN_VERSION = "1"
 _TWS_SUPPRESS_VERSION = "1"
@@ -90,7 +93,7 @@ def require_tws(spark) -> None:
         raise RuntimeError(
             "engine='tws' needs google.protobuf (transformWithState state "
             "client); neither the protobuf wheel nor the vendored shim "
-            "(vendor/google/protobuf) is importable — use engine='keyed'"
+            "(vendor/google/protobuf) is importable — use engine='exact'"
         )
 
 
@@ -98,14 +101,14 @@ def require_tws(spark) -> None:
 def _rocksdb_provider(spark):
     """transformWithState requires the RocksDB state-store provider (it is
     the only one with multi-column-family support).  Scope the conf to the
-    drain so concurrent/later queries in the same session — e.g. a resumed
-    pandas-keyed checkpoint on the default HDFS provider — keep their own
-    provider.
+    drain so concurrent/later queries in the same session — e.g. a
+    ``stateful_map`` or ``sessionize_streaming`` checkpoint on the default
+    HDFS provider — keep their own provider.
 
     Also pins ``spark.sql.session.timeZone=UTC`` for the drain: ``_norm``'s
     contract is that tz-aware input rows normalize to UTC-naive and the
     value-state round-trip reinterprets naive datetimes in the SESSION tz —
-    on an externally created non-UTC session (round-12 advice) order
+    on an externally created non-UTC session order
     comparisons and emitted timestamps would otherwise skew by the zone
     offset.  Scoping (rather than raising) keeps foreign sessions working;
     restored on exit."""
@@ -120,7 +123,7 @@ def _rocksdb_provider(spark):
     except Exception:
         prev = None
     # both sets INSIDE the protected region: an exception between them must
-    # still restore whatever was already flipped (round-13 review)
+    # still restore whatever was already flipped
     try:
         spark.conf.set(tz_key, "UTC")
         spark.conf.set(key, _TWS_PROVIDER)
@@ -154,7 +157,7 @@ def _enc_c(v):
     (tests/test_tws.py::test_upstream_nested_container_value_state_roundtrip,
     strict xfail), so container-typed user value columns ride the state as
     pickled ``binary`` — bytes round-trip exactly — and are decoded back to
-    their native Python form before every emission (r12 verdict task 2).
+    their native Python form before every emission.
     Input rows and emitted rows stay NATIVE containers end to end; only the
     state cell is opaque."""
     import pickle  # noqa: PLC0415
@@ -169,18 +172,15 @@ def _dec_c(v):
 
 
 def _stamp_version(root: str, marker: str, version: str, populated: bool, what: str) -> None:
-    """Engine/version gate for a tws state dir (mirrors streaming.py)."""
-    for other, owner in (
-        ("_GEN", "the exact ping-pong engine"),
-        ("_PSE_TTJOIN_V", "the pandas keyed tt-join engine"),
-        ("_PSE_FKJOIN_V", "the pandas keyed fk-join engine"),
-        ("_PSE_STATE_V", "the pandas keyed suppress engine"),
-    ):
-        if other != marker and os.path.exists(os.path.join(root, other)):
-            raise ValueError(
-                f"state dir {root!r} was written by {owner}; resume it with the "
-                "engine that wrote it, or start a fresh state_dir for engine='tws'"
-            )
+    """Engine/version gate for a tws state dir: refuse dirs owned by another
+    engine, refuse a populated dir stamped with a different version, and
+    stamp a fresh one."""
+    _refuse_legacy_keyed_dir(root)
+    if os.path.exists(os.path.join(root, "_GEN")):
+        raise ValueError(
+            f"state dir {root!r} was written by the exact ping-pong engine; resume it "
+            "with engine='exact', or start a fresh state_dir for engine='tws'"
+        )
     ver_path = os.path.join(root, marker)
     ver = _read_bind(ver_path)
     if populated and ver != version:
@@ -199,9 +199,8 @@ def _norm(v):
     """Normalize a Row/state value to a timezone-naive, plain-Python form
     for ORDER comparisons and state tuples: tz-aware datetimes → UTC-naive
     (input rows arrive session-tz-aware, value state returns naive — the
-    engines pin the session tz to UTC).  Unlike the pandas engines'
-    _clean_state_value, NaN is NOT coerced (Rows keep it, matching the
-    exact loops)."""
+    engines pin the session tz to UTC).  NaN is NOT coerced (Rows keep it,
+    matching the exact loops)."""
     import datetime as dt
 
     if isinstance(v, dt.datetime) and v.tzinfo is not None:
@@ -335,12 +334,28 @@ def join_tables_tws(
     state_dir: str | None,
     checkpoint: str | None,
 ) -> DataFrame:
-    """transformWithState engine of ``join_tables_streaming`` — the same
-    union/fold/emission-log architecture as ``_join_tables_keyed`` (see its
-    docstring for the contract and the reference citation), minus the
-    string tunnel: value columns ride the union and the typed value state
-    in their NATIVE types.  Parity with both older engines is pinned by the
-    engine-differential fuzz and the tws test family."""
+    """transformWithState engine of ``join_tables_streaming`` (see its
+    docstring for the contract): the two tagged changelogs union into ONE
+    ``transformWithState`` grouped by the JOIN KEY, whose per-key value
+    state is (latest left row, latest right row) under the declared
+    per-side orders — the record-at-a-time state-store shape of the
+    reference's KTableKTableJoinProcessor.cs:20-48, at per-microbatch
+    emission cadence (SURVEY §7.3.3).  A key whose state changed emits its
+    CURRENT joined row to an ``out/sink_batch=<id>`` partition (overwritten
+    on crash-replay — exactly-once), so per-microbatch I/O is O(changed
+    keys), never O(table).  The returned snapshot is the latest-per-key fold
+    of the emission log (a joined row only ever UPDATES — this path has no
+    tombstones — so the fold is exact).
+
+    Join-key columns never ride the union null-padded — both sides' keys
+    map onto the shared non-null ``__jk*`` grouping columns — and value
+    columns keep their NATIVE types in the union and the typed value state.
+    No timeout and no watermark: there is no time semantics here, just
+    fold-and-emit-on-change, so late data is admitted unconditionally
+    (KTable upsert semantics).  Requires non-null order values (raises in
+    the processor — loud beats a silently wrong fold) and equal key/ts
+    dtypes across sides; use engine='exact' otherwise.  Parity with the
+    exact loop is pinned by the engine-differential fuzz."""
     spark0 = left.df.sparkSession
     require_tws(spark0)
     overlap = set(left.df.columns) & set(right.df.columns)
@@ -528,11 +543,10 @@ def _make_suppress_processor(state_schema, cols, key, tcol, limit_ms, out_cols, 
             if entry is not None:
                 # entry+limit-1 fires at the first wm >= entry+limit (TWS
                 # fires timers with expiry STRICTLY below the watermark) —
-                # the KS due rule.  Unlike applyInPandasWithState, a
-                # below-watermark registration is legal (it would fire this
-                # very batch), so no wm+1 floor is needed; the inline
-                # already-due branches emit before this point and pass
-                # entry=None instead.
+                # the KS due rule.  A below-watermark registration is legal
+                # (it would fire this very batch), so no wm+1 floor is
+                # needed; the inline already-due branches emit before this
+                # point and pass entry=None instead.
                 self.h.registerTimer(entry + limit_ms - 1)
 
         def handleInputRows(self, key, rows, timerValues):
@@ -609,13 +623,27 @@ def suppress_tws(
     checkpoint: str | None,
     store_name: str | None,
 ) -> DataFrame:
-    """transformWithState engine of ``suppress_buffered`` — the same design
-    as ``_suppress_keyed`` (decoupled clock-copy watermark, per-key buffer
-    state, emission renumbering; see its docstring for the KS contract),
-    with native-typed state (no string tunnel) and explicit per-key
-    event-time timers.  The buffered view for ``store_name`` reads the
-    transformWithState column family through the state source
-    (``stateVarName``)."""
+    """transformWithState engine of ``suppress_buffered`` (see its
+    docstring for the contract): per-key buffer state in the checkpoint's
+    RocksDB store (the KS changelog-backed InMemoryTimeOrderedKeyValueBuffer
+    analog), per-key event-time timers for emission, and the latest-per-key
+    fold of ``KStream.to_table`` re-derived INSIDE the processor (a stateful
+    operator cannot chain downstream of the update-mode aggregate, so the
+    engine consumes the raw changelog).
+
+    State per key = (buffer entry time | null, latest event time, latest
+    row); the latest-row half persists after emission so a late record
+    cannot resurrect an older value (exactly the update-mode aggregate's
+    memory).  Timers fire when the watermark STRICTLY exceeds the
+    registered timestamp, so ``entry+limit-1`` fires at the first watermark
+    >= entry+limit — the KS due rule; timer emissions belong to the batch
+    whose stream time passed the deadline, one before the firing batch.
+    Pre-epoch (<= 1970) event times cannot advance a Spark watermark at all
+    (Spark floors it at 0, read here as "no watermark yet"), so the
+    processor raises on the first such data row instead of buffering it
+    forever — such changelogs use ``engine="exact"``.  The buffered view
+    for ``store_name`` reads the transformWithState column family through
+    the state source (``stateVarName``)."""
     from .runtime import epoch_ms
 
     spark0 = src.df.sparkSession
@@ -662,10 +690,15 @@ def suppress_tws(
     sdf = src.df
     for k in key:
         sdf = sdf.filter(F.col(k).isNotNull())  # to_table drops null keys
-    # Decoupled watermark: every row ships twice — a DATA copy with NULL
-    # event time (never late-filtered, does not move the watermark) and a
-    # CLOCK copy carrying ts with all value columns nulled (shuffle weight)
-    # that exists only to advance the watermark.  See _suppress_keyed.
+    # Decoupled watermark: Spark's stateful operators filter input rows
+    # older than the late-events watermark, but KS admits arbitrarily late
+    # updates into the suppress buffer.  So every row ships twice — a DATA
+    # copy with NULL event time (never late-filtered, does not move the
+    # watermark) and a CLOCK copy carrying ts with all value columns nulled
+    # (shuffle weight) that exists only to advance the watermark; a clock
+    # copy dropped as late is by definition one that would not have
+    # advanced the running max anyway.  The processor folds only data
+    # copies; timers ride the clock-driven watermark.
     sdf = sdf.select(*cols, epoch_ms(tcol).alias("__ev_ms")).select(
         "*", F.explode(F.array(F.lit(0), F.lit(1))).alias("__clk")
     )
@@ -719,7 +752,7 @@ def suppress_tws(
             # no batch ever committed ⇒ no state to read; anything else that
             # makes the statestore source fail (bad option, provider
             # mismatch, corrupted checkpoint) must surface, not be swallowed
-            # into a silently-empty view (round-12 advice)
+            # into a silently-empty view
             buf = spark0.createDataFrame([], table.df.schema)
         else:
             state_df = (
@@ -933,14 +966,45 @@ def join_fk_tws(
     state_dir: str | None,
     checkpoint: str | None,
 ) -> DataFrame:
-    """transformWithState engine of ``join_fk_streaming`` — the same KIP-213
-    two-stage architecture as ``_join_fk_keyed`` (see its docstring for the
-    full design): a PK-keyed subscription resolver feeding a durable parquet
-    sub-log, then an FK-keyed join state fanning out U/D emissions.  Native
-    types end to end (no string tunnel); the subscriber list lives in LIST
-    state, and container-typed user VALUE columns ride both states as
-    pickled binary (_enc_c — the upstream value-state client cannot round
-    -trip nested containers)."""
+    """transformWithState engine of ``join_fk_streaming`` — the ACTUAL
+    KIP-213 architecture, not a snapshot recompute: Kafka Streams realizes
+    the FK join as a subscription topic keyed by FK plus a response path
+    keyed back by the left PK, so an FK *change* unsubscribes from the old
+    key and subscribes to the new one.  Here the same two stages run as two
+    chained availableNow queries over per-key state (the subscription
+    changelog between them is a durable parquet log — the
+    subscription-topic analog):
+
+      stage A (keyed by LEFT PK): folds the left changelog latest-per-key;
+        a changed row emits ``U(new_fk, row)`` plus ``D(old_fk, pk)`` when
+        its fk moved — the unsubscribe/subscribe pair — into
+        ``sub/sink_batch=<id>`` partitions (overwritten on crash-replay);
+      stage B (keyed by FK VALUE): one query over the union of the
+        subscription log (a file stream, so resume skips consumed files)
+        and the right changelog; per-fk state = (latest right row in VALUE
+        state, the SUBSCRIBER LIST of left rows in LIST state).  A
+        right-side change re-emits every subscriber (the response-topic
+        fan-out); a left U/D re-emits/retracts just that pk.  Emissions
+        land in ``out/sink_batch=<id>`` with op U/D; the final snapshot is
+        the per-PK fold of the emission log, keeping keys whose LAST op is
+        U.
+
+    Per-microbatch I/O is O(changed keys + affected subscribers), never
+    O(table) — the shape the exact loop's full-snapshot recompute
+    (engine='exact') cannot give.  Caveat, documented: a single fk value
+    with a huge subscriber list rewrites its whole list per update (Kafka
+    Streams stores subscriptions as individual store entries, so it pays
+    O(1) there) — mega-fan-in dims belong on the exact loop or the Delta
+    MERGE path.  Ordering across the two stages is total: stage-A batch ids
+    ride the subscription records, ties inside one stage-B batch resolve U
+    over D, so a flip's retraction can never outlive its re-subscription.
+    The fk join value is canonicalized SQL-side (``cast(fk as string)``) on
+    BOTH stages so value-repr differences can never split a group.  Native
+    types end to end; container-typed user VALUE columns ride both states
+    as pickled binary (_enc_c — the upstream value-state client cannot
+    round-trip nested containers).  Requires a string fk column name, equal
+    fk/right-key dtypes, and non-null order values; ``engine='exact'``
+    otherwise."""
     spark0 = left.df.sparkSession
     require_tws(spark0)
     l_key = list(left.key)
@@ -1142,7 +1206,7 @@ _TWS_ASOF_VERSION = "1"
 
 
 def _make_asof_processor(hist_schema, r_vals, l_vals, n_key, how, tol_ms, out_cols, tun_r):
-    """Per-key as-of lookup (r12 verdict task 4): the key's version history
+    """Per-key as-of lookup: the key's version history
     lives in LIST state (append-only — history rows arrive once, in the
     first batch that reads the staged history file); each stream record
     binary-searches the sorted versions for the latest ``hts <= sts`` —
@@ -1204,7 +1268,6 @@ def _make_asof_processor(hist_schema, r_vals, l_vals, n_key, how, tol_ms, out_co
                     # a null-ts stream row sorts after ONLY the null-ts
                     # versions in the batch window (NULLS FIRST), so it
                     # matches the last null-ts version — same as dsl.join_asof
-                    # (round-13 review finding 3)
                     probe = (False, 0) if sts is None else (True, sts)
                     i = bisect.bisect_right(hts_keys, probe)
                     if i > 0:
@@ -1234,9 +1297,8 @@ def join_table_asof_tws(
     out_dir: str | None,
     checkpoint: str | None,
 ) -> DataFrame:
-    """transformWithState engine of ``join_table_asof_streaming`` (r12
-    verdict task 4 — the last continuous stateful loop without a per-key
-    realization).  The exact engine re-joins each microbatch against the
+    """transformWithState engine of ``join_table_asof_streaming``.  The
+    exact engine re-joins each microbatch against the
     FULL history (per-batch shuffle bounded by history size); here the
     history shuffles ONCE into per-key LIST state — staged as a parquet
     file-source unioned with the stream, fully delivered in the first batch
@@ -1329,7 +1391,7 @@ def join_table_asof_tws(
         # null keys dropped on both sides (KStreamKTableJoinProcessor.cs:31-35).
         # Written to a tmp dir + os.rename so a crash mid-write can never
         # leave a partial hist_dir that a resumed drain would silently join
-        # against (round-13 review finding 1)
+        # against
         tmp_hist = hist_dir + "-tmp"
         shutil.rmtree(tmp_hist, ignore_errors=True)
         h = table.df

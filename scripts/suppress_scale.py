@@ -1,11 +1,11 @@
-"""Suppress-buffer engine scaling evidence (r8 verdict, next-round item 1).
+"""Suppress-buffer engine scaling evidence.
 
-Measures the property the keyed engine exists for: with N keys sitting in the
-buffer (none due — long limit), the cost of draining B additional single-key
-microbatches should be FLAT in N for the keyed engine (applyInPandasWithState
-touches only changed/due keys) and GROW with N for the exact engine (the
-parquet ping-pong rewrites the whole buffer and full-outer-joins it against
-every batch).
+Measures the property the tws (transformWithState) engine exists for: with N
+keys sitting in the buffer (none due — long limit), the cost of draining B
+additional single-key microbatches should be FLAT in N for tws (the per-key
+processor touches only changed/due keys) and GROW with N for the exact
+engine (the parquet ping-pong rewrites the whole buffer and full-outer-joins
+it against every batch).
 
 Protocol: per (engine, N) — build the buffer with one N-key drain (untimed
 warmup that also warms the JVM paths), then write B single-row generations and
@@ -14,11 +14,9 @@ per-microbatch regime.  One session, idle box.
 
 Usage: python scripts/suppress_scale.py            # N = 20k, 100k; B = 10
        SUPPRESS_NS=1000,10000 SUPPRESS_B=5 python scripts/suppress_scale.py
-Prints one JSON line; merge the result into SCALE_STRESS.json.
-The tws (transformWithState) engines share the keyed measurement branch —
-their state also lives under the checkpoint's state store — so
-SUPPRESS_ENGINES=tws records the r12-verdict task-1 evidence (flat per-batch
-state I/O at both key counts) with the identical protocol.
+       SUPPRESS_ENGINES=tws python scripts/suppress_scale.py  # default: tws,exact
+Prints one JSON line; merge the result into SCALE_STRESS.json (its
+historical ``keyed`` blocks measured the removed pandas engine).
 """
 
 from __future__ import annotations
@@ -86,10 +84,10 @@ def measure(spark, engine: str, n_keys: int, n_batches: int) -> dict:
     # per-batch STATE I/O — the metric the engines actually differ on (at
     # local sizes the ~1s/microbatch scheduler cost hides the asymptotics):
     #   exact: every batch rewrites the whole buffer parquet (O(N) bytes)
-    #   keyed: the state store appends per-partition delta files written
+    #   tws:   the state store appends per-partition delta files written
     #          during the incremental drain (O(changed keys) bytes; the
     #          store's periodic snapshot files are counted too, which only
-    #          biases AGAINST the keyed engine)
+    #          biases AGAINST tws)
     if engine == "exact":
         bufs = [d for d in os.listdir(state) if d.startswith("buf-")]
         per_batch = max(
@@ -127,7 +125,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out: dict = {"metric": "suppress_engine_scaling", "batches": b, "buffered_keys": ns}
     engines = tuple(
-        e.strip() for e in os.environ.get("SUPPRESS_ENGINES", "keyed,exact").split(",") if e.strip()
+        e.strip() for e in os.environ.get("SUPPRESS_ENGINES", "tws,exact").split(",") if e.strip()
     )
     for engine in engines:
         out[engine] = {f"n{n}": measure(spark, engine, n, b) for n in ns}

@@ -1,11 +1,12 @@
-"""Streaming table-table join engine scaling evidence (r10 verdict, item 1).
+"""Streaming table-table join engine scaling evidence.
 
-Measures the property the keyed engine exists for: with N keys materialized in
-BOTH sides' join state, the cost of draining B additional single-key update
-microbatches should be FLAT in N for the keyed engine (applyInPandasWithState
-touches only changed keys; the state store checkpoints per-batch deltas) and
-GROW with N for the exact engine (the parquet ping-pong loop rewrites both
-full latest-per-key snapshots AND the full joined output every microbatch).
+Measures the property the tws (transformWithState) engine exists for: with N
+keys materialized in BOTH sides' join state, the cost of draining B
+additional single-key update microbatches should be FLAT in N for tws (the
+per-key processor touches only changed keys; the RocksDB state store
+checkpoints per-batch deltas) and GROW with N for the exact engine (the
+parquet ping-pong loop rewrites both full latest-per-key snapshots AND the
+full joined output every microbatch).
 
 Protocol (same shape as suppress_scale.py): per (engine, N) — load both sides
 with one N-key generation each (untimed warmup drain that also warms the JVM
@@ -16,18 +17,17 @@ different places:
 
   exact: bytes of the CURRENT l-/r- snapshot generations plus the joined out/
          parquet — exactly what each microbatch rewrites (O(N));
-  keyed: new bytes written during the timed drain under the checkpoint's
+  tws:   new bytes written during the timed drain under the checkpoint's
          state store (per-batch delta files; periodic snapshot files are
-         counted too, which only biases AGAINST the keyed engine) plus the
+         counted too, which only biases AGAINST tws) plus the
          out/sink_batch emission partitions, divided by B.
 
 Usage: python scripts/ttjoin_scale.py             # N = 100k, 1M; B = 10
        TTJOIN_NS=1000,10000 TTJOIN_B=5 python scripts/ttjoin_scale.py
-Prints one JSON line; merge the result into SCALE_STRESS.json.
-The tws (transformWithState) engines share the keyed measurement branch —
-their state also lives under the checkpoint's state store — so
-TTJOIN_ENGINES=tws records the r12-verdict task-1 evidence (flat per-batch
-state I/O at both key counts) with the identical protocol.
+       TTJOIN_ENGINES=tws python scripts/ttjoin_scale.py   # default: tws,exact
+       TTJOIN_KIND=fk / TTJOIN_KIND=asof measure the fk / as-of joins instead
+Prints one JSON line; merge the result into SCALE_STRESS.json (its
+historical ``keyed`` blocks measured the removed pandas engine).
 """
 
 from __future__ import annotations
@@ -136,7 +136,7 @@ def measure(spark, engine: str, n_keys: int, n_batches: int) -> dict:
 def measure_fk(spark, engine: str, n_keys: int, n_batches: int) -> dict:
     """Same protocol for join_fk_streaming: N left rows, each fk-pointing at
     one of N/10 right rows (fan-out 10), then B single-key left updates
-    (every other one an FK FLIP — the re-subscription path).  keyed =
+    (every other one an FK FLIP — the re-subscription path).  tws =
     two-stage subscription/response state, per-batch I/O O(changed keys +
     affected subscribers); exact = full-snapshot recompute, O(N)."""
     from pyspark_engine.streaming import join_fk_streaming
@@ -302,7 +302,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     which = os.environ.get("TTJOIN_KIND", "tt")
     engines = tuple(
-        e.strip() for e in os.environ.get("TTJOIN_ENGINES", "keyed,exact").split(",") if e.strip()
+        e.strip() for e in os.environ.get("TTJOIN_ENGINES", "tws,exact").split(",") if e.strip()
     )
     if which == "fk":
         out = {"metric": "fkjoin_engine_scaling", "batches": b, "state_keys": ns}

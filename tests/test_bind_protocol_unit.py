@@ -82,7 +82,7 @@ CASES = [
 @pytest.mark.parametrize(
     "commits,sink,sink_in_out,expect",
     [
-        # cursor-free loops (keyed suppress / tt-join / as-of) leave
+        # cursor-free loops (tws suppress / tt-join / as-of) leave
         # sink_batch=<id> partitions: the original checkpoint's commits must
         # LINE UP with the highest emitted batch — equal (clean stop) or one
         # less (crash between fold and checkpoint commit).  A checkpoint

@@ -813,13 +813,12 @@ def test_file_sink_roundtrip(spark, tmp_path):
     pd.testing.assert_frame_equal(_sorted_pdf(got, cols), _sorted_pdf(want, cols))
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_tt_join_streaming_parity(spark, tmp_path, engine):
     """Streaming KTable⋈KTable over multi-microbatch changelogs == batch
     KTable.join — the continuous analog of KTableKTableJoinProcessor.cs:
-    20-48 — from BOTH engines: the keyed applyInPandasWithState scale
-    engine (O(changed keys) per batch) and the exact ping-pong loop
-    (SURVEY §7.3.2)."""
+    20-48 — from BOTH engines: the tws per-key engine (O(changed keys)
+    per batch) and the exact ping-pong loop (SURVEY §7.3.2)."""
     from pyspark_engine.streaming import join_tables_streaming
 
     ev = (
@@ -871,7 +870,7 @@ def _write_source_file(spark, rows, schema, src_dir, seq):
     stage_generation_file(spark.createDataFrame(rows, schema), src_dir, seq)
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_until_time_limit_streaming(spark, tmp_path, engine):
     """KIP-328 Suppressed.untilTimeLimit over real microbatches: entries
     emit exactly when stream time passes entry_time + limit; an
@@ -879,8 +878,7 @@ def test_suppress_until_time_limit_streaming(spark, tmp_path, engine):
     (the update's own ts would not be due yet — only the preserved entry
     time makes it due); undelivered entries stay buffered at drain end.
     Identical emissions — values, reasons, AND batch ids — from BOTH
-    engines: the keyed applyInPandasWithState scale engine and the exact
-    ping-pong buffer."""
+    engines: the tws per-key engine and the exact ping-pong buffer."""
     import datetime as dt
 
     from pyspark_engine.streaming import suppress_buffered
@@ -913,13 +911,13 @@ def test_suppress_until_time_limit_streaming(spark, tmp_path, engine):
     assert [r["k"] for r in spark.table("sup_buf").collect()] == ["d"]
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_nullable_bigint_precision(spark, tmp_path, engine):
-    """r9 verdict item 2: a bigint value column containing REAL nulls in
-    data rows forces the whole Arrow column to float64 on the way into the
-    keyed engine's state fn, so int(float) silently corrupted values past
-    2^53.  Both engines must round-trip 2^53+1 exactly alongside null
-    values and null-bearing rows must emit with their nulls intact."""
+    """A bigint value column containing REAL nulls in data rows, beside
+    the clock-copy null padding, must survive the per-key state exactly:
+    any float64 hop would corrupt values past 2^53.  Both engines must
+    round-trip 2^53+1 exactly alongside null values and null-bearing rows
+    must emit with their nulls intact."""
     import datetime as dt
 
     from pyspark_engine.streaming import suppress_buffered
@@ -964,18 +962,18 @@ def test_suppress_nullable_bigint_precision(spark, tmp_path, engine):
     assert rows["e"]["v"] == big and rows["e"]["n"] == 2
     assert dict(got.dtypes)["v"] == "bigint" and dict(got.dtypes)["n"] == "int"
     # the interactive-query store view must round-trip types and values too
-    # (the keyed engine reads them back out of the string-tunneled state)
+    # (the tws engine reads them back out of its value state)
     buf = spark.table(f"bigint_buf_{engine}")
     assert dict(buf.dtypes)["v"] == "bigint"
     assert [(r["k"], r["v"]) for r in buf.collect()] == [("d", 1)]
 
 
 def test_suppress_keyed_rejects_pre_epoch_event_times(spark, tmp_path):
-    """ADVICE r9: engine=None auto-selects the keyed engine, whose Spark
+    """engine=None auto-selects the per-key tws engine, whose Spark
     watermark is floored at 0 — pre-epoch (< 1970) event times would sit
-    buffered forever and the drain returned silently empty.  The state fn
-    now raises loudly, pointing at engine='exact' (which handles them: its
-    stream-time fold is plain Python ints)."""
+    buffered forever and the drain would return silently empty.  The
+    processor raises loudly instead, pointing at engine='exact' (which
+    handles them: its stream-time fold is plain Python ints)."""
     import datetime as dt
 
     import pytest as _pytest
@@ -996,10 +994,10 @@ def test_suppress_keyed_rejects_pre_epoch_event_times(spark, tmp_path):
         )
 
     with _pytest.raises(Exception, match="pre-epoch"):
-        suppress_buffered(mk(), time_col="ts", engine="keyed")
+        suppress_buffered(mk(), time_col="ts", engine="tws")
 
-    # review finding (r10): epoch 0 EXACTLY is just as undeliverable (the
-    # engine reads watermark 0 as "none yet"), so the guard is <= 0
+    # epoch 0 EXACTLY is just as undeliverable (the engine reads watermark
+    # 0 as "none yet"), so the guard is <= 0
     src0 = str(tmp_path / "src0")
     _write_source_file(spark, [("z", 1, dt.datetime(1970, 1, 1))], schema, src0, 0)
     tbl0 = (
@@ -1008,7 +1006,7 @@ def test_suppress_keyed_rejects_pre_epoch_event_times(spark, tmp_path):
         .suppress(until_time_limit_ms=60_000)
     )
     with _pytest.raises(Exception, match="pre-epoch"):
-        suppress_buffered(tbl0, time_col="ts", engine="keyed")
+        suppress_buffered(tbl0, time_col="ts", engine="tws")
     # the exact engine handles the same changelog: both due at drain end?
     # no — nothing advances past entry+limit (only two pre-epoch points a
     # day apart, limit 60 s): 1960-01-02 stream time makes 'a' due
@@ -1074,14 +1072,14 @@ def test_suppress_buffer_bounds_emit_early_and_shutdown(spark, tmp_path):
         run_available_now(mk().suppress(until_time_limit_ms=60_000), output_mode="update")
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_fk_join_streaming_parity(spark, tmp_path, engine):
     """Streaming KTable.join_fk over multi-microbatch changelogs == batch
     KTable.join_fk — INCLUDING an FK-change step: customer 1 re-points its
     fk from 10 to 20 in a later changelog record, which must retract the
     old join row and emit the new one (the re-subscription round-trip
     KIP-213's subscription/response topics exist to provide) — from BOTH
-    engines: the keyed two-stage subscription/response realization and the
+    engines: the tws two-stage subscription/response realization and the
     exact changelog-state recompute loop."""
     import datetime as dt
 
@@ -1923,12 +1921,12 @@ def test_cogroup_streaming_restart_recovers_generation(spark, tmp_path):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_tt_join_streaming_restart_recovers_generation(spark, tmp_path, engine):
     """join_tables_streaming restart: re-invoking with the same durable
     checkpoint + state_dir after new changelog data continues from the
     committed state snapshot (the _GEN marker for the exact engine, the
-    checkpointed keyed store + emission log for the keyed one), replaying
+    checkpointed per-key store + emission log for tws), replaying
     only the new microbatch; result == batch join over the full changelogs.
     Run 1 uses an odd microbatch count so a gen-reset would read the stale
     side."""
@@ -1967,13 +1965,11 @@ def test_tt_join_streaming_restart_recovers_generation(spark, tmp_path, engine):
     assert got == {1: (30, 100), 2: (7, 200)}
 
 
-def test_tt_join_keyed_bigint_tunnel(spark, tmp_path):
-    """The keyed tt-join engine string-tunnels integral value columns for
-    the same reason as the keyed suppress engine: the OTHER side's columns
-    are null on every union row, so every integral slice would ride
-    float64 through Arrow and corrupt bigints past 2^53.  Values must
-    round-trip exactly, nulls stay null, and the unmatched-left row of a
-    left join carries typed nulls."""
+def test_tt_join_tws_bigint_exact(spark, tmp_path):
+    """The OTHER side's columns are null on every union row of the tws
+    tt-join, so any float64 hop on the way through the per-key state would
+    corrupt bigints past 2^53.  Values must round-trip exactly, nulls stay
+    null, and the unmatched-left row of a left join carries typed nulls."""
     import datetime as dt
 
     from pyspark_engine.streaming import join_tables_streaming
@@ -1999,7 +1995,7 @@ def test_tt_join_keyed_bigint_tunnel(spark, tmp_path):
         sb.file_stream(str(tmp_path / "r"), key="rk", ts="rts"),
         how="left",
         ts_alias="jts",
-        engine="keyed",
+        engine="tws",
     )
     assert dict(got.dtypes)["lv"] == "bigint" and dict(got.dtypes)["rv"] == "bigint"
     rows = {r["k"]: r for r in got.collect()}
@@ -2011,9 +2007,9 @@ def test_tt_join_keyed_bigint_tunnel(spark, tmp_path):
 def test_tt_join_engine_state_dirs_do_not_mix(spark, tmp_path):
     """A state dir written by one tt-join engine must be refused by the
     other (their layouts are incompatible: ping-pong generations + flat
-    out/ vs keyed store + sink_batch partitions), and a keyed dir whose
-    state-schema version is foreign is refused instead of hitting Spark's
-    opaque state-schema failure mid-drain."""
+    out/ vs per-key store + sink_batch partitions), and a tws dir whose
+    version stamp is foreign is refused instead of hitting Spark's opaque
+    state-schema failure mid-drain."""
     import datetime as dt
     import os
 
@@ -2040,29 +2036,29 @@ def test_tt_join_engine_state_dirs_do_not_mix(spark, tmp_path):
 
     ex_state, ex_ck = str(tmp_path / "ex-state"), str(tmp_path / "ex-ck")
     assert run("exact", ex_state, ex_ck).count() == 1
-    with pytest.raises(ValueError, match="exact tt-join engine"):
-        run("keyed", ex_state, ex_ck)
+    with pytest.raises(ValueError, match="exact ping-pong engine"):
+        run("tws", ex_state, ex_ck)
 
-    ky_state, ky_ck = str(tmp_path / "ky-state"), str(tmp_path / "ky-ck")
-    assert run("keyed", ky_state, ky_ck).count() == 1
+    tw_state, tw_ck = str(tmp_path / "tw-state"), str(tmp_path / "tw-ck")
+    assert run("tws", tw_state, tw_ck).count() == 1
     with pytest.raises(ValueError, match="no\\s+readable _GEN marker"):
-        run("exact", ky_state, ky_ck)
+        run("exact", tw_state, tw_ck)
 
-    # version gate: a populated keyed dir stamped with a foreign version
-    with open(os.path.join(ky_state, "_PSE_TTJOIN_V"), "w") as f:
+    # version gate: a populated tws dir stamped with a foreign version
+    with open(os.path.join(tw_state, "_PSE_TWS_TTJOIN_V"), "w") as f:
         f.write("0")
-    with pytest.raises(ValueError, match="state-schema version"):
-        run("keyed", ky_state, ky_ck)
+    with pytest.raises(ValueError, match="with version 0"):
+        run("tws", tw_state, tw_ck)
 
 
-def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
-    """Keyed fk-join engine specifics in one staged scenario: bigint values
+def test_fk_join_tws_bigint_restart_and_guards(spark, tmp_path):
+    """tws fk-join engine specifics in one staged scenario: bigint values
     past 2^53 round-trip the two-stage state exactly (with real nulls and
     a null fk riding the subscription log); a resumed drain continues from
     both checkpoints and applies an FK flip arriving AFTER the first drain
     (retract + re-subscribe across drains); and the state-dir guards fire —
     exact-loop dirs are refused, foreign version stamps are refused, and a
-    Column-valued fk cannot select the keyed engine."""
+    Column-valued fk cannot select the tws engine."""
     import datetime as dt
     import os
 
@@ -2096,7 +2092,7 @@ def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
             how=how,
             state_dir=state,
             checkpoint=ckpt,
-            engine="keyed",
+            engine="tws",
         )
 
     got = {r["pk"]: r for r in run("left").collect()}
@@ -2114,21 +2110,21 @@ def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
     assert len(got) == 3  # the old (1 -> 10) join row was retracted
 
     # guards: foreign version stamp refused; exact dirs refused; Column fk
-    with open(os.path.join(state, "_PSE_FKJOIN_V"), "w") as f:
+    with open(os.path.join(state, "_PSE_TWS_FKJOIN_V"), "w") as f:
         f.write("0")
-    with pytest.raises(ValueError, match="state-schema version"):
+    with pytest.raises(ValueError, match="with version 0"):
         run("left")
     ex_state = str(tmp_path / "ex-state")
     os.makedirs(ex_state)
     open(os.path.join(ex_state, "_GEN"), "w").write("1 0")
-    with pytest.raises(ValueError, match="exact fk-join engine"):
+    with pytest.raises(ValueError, match="exact ping-pong engine"):
         join_fk_streaming(
             sb.file_stream(lsrc, key="pk", ts="lts"),
             sb.file_stream(rsrc, key="rk", ts="rts"),
             fk="fk",
             how="left",
             state_dir=ex_state,
-            engine="keyed",
+            engine="tws",
         )
     with pytest.raises(ValueError, match="string fk column"):
         join_fk_streaming(
@@ -2136,13 +2132,13 @@ def test_fk_join_keyed_tunnel_restart_and_guards(spark, tmp_path):
             sb.file_stream(rsrc, key="rk", ts="rts"),
             fk=F.col("fk"),
             how="left",
-            engine="keyed",
+            engine="tws",
         )
 
 
 @pytest.mark.slow
-def test_keyed_join_crash_replay_idempotent(spark, tmp_path):
-    """Crash-replay robustness of the keyed join engines (same protocol as
+def test_tws_join_crash_replay_idempotent(spark, tmp_path):
+    """Crash-replay robustness of the tws join engines (same protocol as
     the suppress replay test: delete the newest commit marker, re-drain).
     tt join: the replayed microbatch overwrites its own sink_batch
     partition, so the final snapshot is unchanged.  fk join, BOTH stages:
@@ -2187,7 +2183,7 @@ def test_keyed_join_crash_replay_idempotent(spark, tmp_path):
             how="inner",
             state_dir=state,
             checkpoint=ckpt,
-            engine="keyed",
+            engine="tws",
         )
 
     want = {(1, 11, 100), (2, 20, 200)}
@@ -2211,7 +2207,7 @@ def test_keyed_join_crash_replay_idempotent(spark, tmp_path):
             how="inner",
             state_dir=fstate,
             checkpoint=fck,
-            engine="keyed",
+            engine="tws",
         )
 
     fwant = {(1, 20, "b"), (2, 20, "b")}
@@ -2227,9 +2223,9 @@ def test_join_engines_differential_random_changelogs(spark, tmp_path):
     """Engine-differential fuzz for the continuous joins: seeded random
     changelogs with MULTIPLE updates per key per microbatch, out-of-order
     order-values, and random fk flips, drained through BOTH engines — the
-    keyed applyInPandasWithState engines and the exact snapshot loops must
-    produce identical final snapshots (the exact loop doubles as the keyed
-    engines' differential oracle — RECIPES 'which engine')."""
+    tws per-key engines and the exact snapshot loops must produce
+    identical final snapshots (the exact loop doubles as the tws engines'
+    differential oracle — RECIPES 'which engine')."""
     import random
 
     from pyspark_engine.streaming import join_fk_streaming, join_tables_streaming
@@ -2267,11 +2263,9 @@ def test_join_engines_differential_random_changelogs(spark, tmp_path):
             engine=engine,
         )
 
-    keyed = sorted(map(tuple, tt("keyed").collect()))
     exact = sorted(map(tuple, tt("exact").collect()))
     tws = sorted(map(tuple, tt("tws").collect()))
-    assert keyed == exact and len(keyed) > 0
-    assert tws == exact
+    assert tws == exact and len(exact) > 0
 
     # --- fk join (how=left): random fk flips across 3 microbatches
     fk_rows = [
@@ -2296,11 +2290,9 @@ def test_join_engines_differential_random_changelogs(spark, tmp_path):
             engine=engine,
         )
 
-    keyed_fk = sorted(map(tuple, fkj("keyed").collect()))
     exact_fk = sorted(map(tuple, fkj("exact").collect()))
     tws_fk = sorted(map(tuple, fkj("tws").collect()))
-    assert keyed_fk == exact_fk and len(keyed_fk) > 0
-    assert tws_fk == exact_fk
+    assert tws_fk == exact_fk and len(exact_fk) > 0
 
 
 @pytest.mark.slow
@@ -2308,8 +2300,7 @@ def test_join_engines_container_values_differential(spark, tmp_path):
     """r12 verdict task 2 gate: the tws engines with ``array<double>``
     VALUE columns (binary-tunneled state, NaN/None/empty elements included)
     must match the exact snapshot loops on seeded random changelogs — tt
-    join, fk join, and suppress.  The pandas keyed engines refuse
-    containers, so exact is the differential oracle here."""
+    join, fk join, and suppress; exact is the differential oracle."""
     import math
     import random
 
@@ -2426,11 +2417,11 @@ def test_join_engines_container_values_differential(spark, tmp_path):
 
 
 def test_keyed_engines_reject_reserved_column_names(spark, tmp_path):
-    """r11 review finding: user columns colliding with a keyed engine's
-    internal schema fields (union tags, grouping columns, the sink_batch
-    partition column) used to surface as opaque Arrow/parquet errors
-    MID-DRAIN, after state was already written.  Every keyed engine must
-    refuse at construction instead."""
+    """User columns colliding with a per-key (tws) engine's internal
+    schema fields (union tags, grouping columns, the sink_batch partition
+    column) would surface as opaque Arrow/parquet errors MID-DRAIN, after
+    state was already written.  Every tws engine must refuse at
+    construction instead."""
     import datetime as dt
 
     from pyspark_engine.streaming import (
@@ -2451,17 +2442,17 @@ def test_keyed_engines_reject_reserved_column_names(spark, tmp_path):
     l1 = mk("k int, sink_batch int, lts timestamp", [(1, 1, t(0))], "k", "lts", "l1")
     r1 = mk("rk int, rv int, rts timestamp", [(1, 1, t(0))], "rk", "rts", "r1")
     with pytest.raises(ValueError, match="engine-internal"):
-        join_tables_streaming(l1, r1, engine="keyed")
+        join_tables_streaming(l1, r1, engine="tws")
 
     l2 = mk("pk int, fk int, op string, lts timestamp", [(1, 1, "x", t(0))], "pk", "lts", "l2")
     r2 = mk("rk2 int, rv2 int, rts2 timestamp", [(1, 1, t(0))], "rk2", "rts2", "r2")
     with pytest.raises(ValueError, match="engine-internal"):
-        join_fk_streaming(l2, r2, fk="fk", engine="keyed")
+        join_fk_streaming(l2, r2, fk="fk", engine="tws")
 
     l3 = mk("k int, __clk int, ts timestamp", [(1, 1, t(0))], "k", "ts", "l3")
     with pytest.raises(ValueError, match="engine-internal"):
         suppress_buffered(
-            l3.to_table().suppress(until_time_limit_ms=60_000), time_col="ts", engine="keyed"
+            l3.to_table().suppress(until_time_limit_ms=60_000), time_col="ts", engine="tws"
         )
 
     # the exact loop's union tag is reserved too
@@ -2718,7 +2709,7 @@ def test_gif_codec_streaming_parity(spark, tmp_path):
     assert got.count() == 30
 
 
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_buffered_resume_no_redelivery(spark, tmp_path, engine):
     """Review finding (r8): a drain must return only ITS OWN emissions — a
     resumed drain over the same state_dir + checkpoint must not re-deliver
@@ -2768,7 +2759,7 @@ def test_suppress_buffered_resume_no_redelivery(spark, tmp_path, engine):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_buffered_crash_replay_idempotent(spark, tmp_path, engine):
     """Advisor finding (r8, medium): emission must be idempotent under
     Spark's at-least-once foreachBatch replay.  Simulate a crash between
@@ -2777,7 +2768,7 @@ def test_suppress_buffered_crash_replay_idempotent(spark, tmp_path, engine):
     partition must leave each emission exactly ONCE in the out log, the
     replayed batch's rows ARE re-delivered (the crashed drain never
     returned them to a caller), and the buffer state is unchanged — for
-    BOTH engines (keyed: state-store version rollback recomputes the batch;
+    BOTH engines (tws: state-store version rollback recomputes the batch;
     exact: the _GEN applied-batch marker skips the already-folded state
     mutation while the emission partition stands)."""
     import datetime as dt
@@ -2968,8 +2959,7 @@ def test_suppress_buffered_differential_fuzz(spark, tmp_path, engine):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws"])
-def test_compact_emission_log_tt_join(spark, tmp_path, engine):
+def test_compact_emission_log_tt_join(spark, tmp_path):
     """r11 advice: the emission log grows without bound across resumed
     drains; compact_emission_log folds committed partitions into one base.
     Twin-run check: a compacted dir must produce the SAME resumed-drain
@@ -3003,7 +2993,7 @@ def test_compact_emission_log_tt_join(spark, tmp_path, engine):
             sb.file_stream(ld, key="k", max_files_per_trigger=1),
             sb.file_stream(rd, key="rk", max_files_per_trigger=1),
             how="full", l_order=("lo",), r_order=("ro",),
-            state_dir=st, checkpoint=ck, engine=engine,
+            state_dir=st, checkpoint=ck, engine="tws",
         )
 
     drain("a")
@@ -3063,12 +3053,11 @@ def test_compact_emission_log_tt_join(spark, tmp_path, engine):
 
 
 def test_engine_none_auto_selection_honors_dirs_and_containers(spark, tmp_path):
-    """Round-12 review finding 3 + round-13 task 2: the default flip to tws
-    must not break previously working engine=None calls — a state dir
-    stamped by the pandas keyed engine resumes under 'keyed', an exact-loop
-    dir under 'exact'.  Container-typed VALUE columns now auto-select tws
-    (binary tunnel); container columns in a hard position (order/key/fk)
-    route to 'exact'."""
+    """engine=None resumes a dir with the engine that wrote it (an
+    exact-loop dir under 'exact') and refuses a dir stamped by the removed
+    pandas keyed engine with the recovery path.  Container-typed VALUE
+    columns auto-select tws (binary tunnel); container columns in a hard
+    position (order/key/fk) route to 'exact'."""
     import os
 
     from pyspark_engine.streaming import join_tables_streaming
@@ -3097,19 +3086,129 @@ def test_engine_none_auto_selection_honors_dirs_and_containers(spark, tmp_path):
     )
     assert [tuple(r) for r in snap_h.collect()] == [(1, 5, [1], 9, 1)]
 
-    # keyed-stamped dir + engine=None: must resume, not raise the tws guard
+    # exact-stamped dir + engine=None: resumes under exact
     l1 = mk("l1", "k long, lv long, lo long", [(1, 5, 1)], "k")
     r1 = mk("r1", "rk long, rv long, ro long", [(1, 9, 1)], "rk")
     st, ck = str(tmp_path / "st"), str(tmp_path / "ck")
     join_tables_streaming(
         l1, r1, how="inner", l_order=("lo",), r_order=("ro",),
-        state_dir=st, checkpoint=ck, engine="keyed",
+        state_dir=st, checkpoint=ck, engine="exact",
     )
     snap2 = join_tables_streaming(
         l1, r1, how="inner", l_order=("lo",), r_order=("ro",),
         state_dir=st, checkpoint=ck, engine=None,
     )
     assert [tuple(r) for r in snap2.collect()] == [(1, 5, 1, 9, 1)]
+    assert not os.path.exists(os.path.join(st, "_PSE_TWS_TTJOIN_V"))
+
+    # a dir stamped by the removed pandas keyed engine + engine=None: refused,
+    # naming the recovery path (fresh state_dir/checkpoint, replay via tws/exact)
+    legacy = tmp_path / "st_legacy"
+    legacy.mkdir()
+    (legacy / "_PSE_TTJOIN_V").write_text("1")
+    with pytest.raises(ValueError, match="removed pandas keyed engine") as ei:
+        join_tables_streaming(
+            l1, r1, how="inner", l_order=("lo",), r_order=("ro",),
+            state_dir=str(legacy), engine=None,
+        )
+    assert "fresh state_dir" in str(ei.value) and "replay the source" in str(ei.value)
+
+
+def test_engine_keyed_value_raises_naming_tws_and_exact(spark, tmp_path):
+    """The pandas keyed engine was removed: engine='keyed' is refused on
+    every continuous-table entry point with a message naming the two
+    remaining engines."""
+    import datetime as dt
+
+    from pyspark_engine.streaming import (
+        join_fk_streaming,
+        join_tables_streaming,
+        suppress_buffered,
+    )
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 0, m)
+
+    sb = StreamingBuilder(spark)
+    lsrc, rsrc = str(tmp_path / "l"), str(tmp_path / "r")
+    _write_source_file(spark, [(1, 10, t(0))], "k int, fk int, lts timestamp", lsrc, 0)
+    _write_source_file(spark, [(10, "x", t(0))], "rk int, rv string, rts timestamp", rsrc, 0)
+
+    def sides():
+        return (
+            sb.file_stream(lsrc, key="k", ts="lts"),
+            sb.file_stream(rsrc, key="rk", ts="rts"),
+        )
+
+    calls = {
+        "join_tables_streaming": lambda: join_tables_streaming(*sides(), engine="keyed"),
+        "join_fk_streaming": lambda: join_fk_streaming(*sides(), fk="fk", engine="keyed"),
+        "suppress_buffered": lambda: suppress_buffered(
+            sides()[0].to_table().suppress(until_time_limit_ms=60_000),
+            time_col="lts",
+            engine="keyed",
+        ),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="removed") as ei:
+            call()
+        msg = str(ei.value)
+        assert name in msg and "'tws'" in msg and "'exact'" in msg, msg
+
+
+def test_legacy_keyed_state_dirs_refused_with_recovery_path(spark, tmp_path):
+    """A state dir stamped by the removed pandas keyed engine is refused —
+    under engine=None, under engine='tws', and by compact_emission_log —
+    with a message naming the recovery path (fresh state_dir/checkpoint,
+    replay the source through tws or exact)."""
+    import datetime as dt
+
+    from pyspark_engine.streaming import (
+        compact_emission_log,
+        join_fk_streaming,
+        join_tables_streaming,
+        suppress_buffered,
+    )
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 0, m)
+
+    sb = StreamingBuilder(spark)
+    lsrc, rsrc = str(tmp_path / "l"), str(tmp_path / "r")
+    _write_source_file(spark, [(1, 10, t(0))], "k int, fk int, lts timestamp", lsrc, 0)
+    _write_source_file(spark, [(10, "x", t(0))], "rk int, rv string, rts timestamp", rsrc, 0)
+
+    def sides():
+        return (
+            sb.file_stream(lsrc, key="k", ts="lts"),
+            sb.file_stream(rsrc, key="rk", ts="rts"),
+        )
+
+    entries = {
+        "_PSE_TTJOIN_V": lambda st, eng: join_tables_streaming(
+            *sides(), state_dir=st, engine=eng
+        ),
+        "_PSE_FKJOIN_V": lambda st, eng: join_fk_streaming(
+            *sides(), fk="fk", state_dir=st, engine=eng
+        ),
+        "_PSE_STATE_V": lambda st, eng: suppress_buffered(
+            sides()[0].to_table().suppress(until_time_limit_ms=60_000),
+            time_col="lts",
+            state_dir=st,
+            engine=eng,
+        ),
+    }
+    for marker, call in entries.items():
+        for eng in (None, "tws"):
+            st = tmp_path / f"{marker}-{eng}"
+            st.mkdir()
+            (st / marker).write_text("1")
+            with pytest.raises(ValueError, match="removed pandas keyed engine") as ei:
+                call(str(st), eng)
+            msg = str(ei.value)
+            assert marker in msg and "fresh state_dir" in msg and "replay the source" in msg
+        with pytest.raises(ValueError, match="removed pandas keyed engine"):
+            compact_emission_log(spark, str(st), str(tmp_path / f"{marker}-ck"))
 
 
 @pytest.mark.slow
@@ -3143,7 +3242,7 @@ def test_compact_emission_log_fk_and_suppress(spark, tmp_path):
             sb.file_stream(ld, key="pk", max_files_per_trigger=1),
             sb.file_stream(rd, key="rk"),
             fk="fk", how="inner", l_order=("lo",), r_order=("ro",),
-            state_dir=st, checkpoint=ck, engine="keyed",
+            state_dir=st, checkpoint=ck, engine="tws",
         )
 
     before = sorted(map(tuple, fk_drain().collect()))
@@ -3172,7 +3271,7 @@ def test_compact_emission_log_fk_and_suppress(spark, tmp_path):
             .suppress(until_time_limit_ms=5 * 60_000)
         )
         return suppress_buffered(
-            tbl, time_col="ts", state_dir=sst, checkpoint=sck, engine="keyed"
+            tbl, time_col="ts", state_dir=sst, checkpoint=sck, engine="tws"
         )
 
     first = {(r["k"], r["__emit_batch"]) for r in sup_drain().collect()}
@@ -3217,7 +3316,7 @@ def test_autocompact_bounds_partitions_across_drains(spark, tmp_path, monkeypatc
             sb.file_stream(ld, key="k", max_files_per_trigger=1),
             sb.file_stream(rd, key="rk", max_files_per_trigger=1),
             how="full", l_order=("lo",), r_order=("ro",),
-            state_dir=st, checkpoint=ck, engine="keyed",
+            state_dir=st, checkpoint=ck, engine="tws",
         )
 
     def parts(name):
@@ -3288,7 +3387,7 @@ def test_compact_emission_log_kind_from_markers_not_columns(spark, tmp_path):
         r_order=("ro",),
         state_dir=st,
         checkpoint=ck,
-        engine="keyed",
+        engine="tws",
     )
     out = os.path.join(st, "out")
     res = compact_emission_log(spark, st, ck, key=("k",))
@@ -3314,10 +3413,7 @@ def test_compact_emission_log_kind_from_markers_not_columns(spark, tmp_path):
     base_id = int(base.split("=", 1)[1])
     assert base_id > 0
     shutil.copytree(os.path.join(out, base), os.path.join(out, "sink_batch=0"))
-    for m in ("_PSE_TTJOIN_V", "_PSE_TWS_TTJOIN_V"):
-        p = os.path.join(st, m)
-        if os.path.exists(p):
-            os.remove(p)
+    os.remove(os.path.join(st, "_PSE_TWS_TTJOIN_V"))
     with pytest.raises(ValueError, match="cannot identify the engine"):
         compact_emission_log(spark, st, ck, key=("k",))
 
@@ -3446,10 +3542,10 @@ def test_state_dir_refuses_mismatched_checkpoint(spark, tmp_path):
         tbl = sb.file_stream(src, key="k", ts="ts").to_table().suppress(until_time_limit_ms=60_000)
         return suppress_buffered(
             tbl, time_col="ts", state_dir=state, checkpoint=ckpt,
-            engine="keyed" if name == "sup_keyed" else "exact",
+            engine="tws" if name == "sup_tws" else "exact",
         )
 
-    loops = ["join_tables", "eager_join", "cogroup", "asof", "sup_keyed", "sup_exact"]
+    loops = ["join_tables", "eager_join", "cogroup", "asof", "sup_tws", "sup_exact"]
     for name in loops:
         state_a, ckpt_a = paths(name, "a")
         state_b, ckpt_b = paths(name, "b")
@@ -3536,7 +3632,7 @@ def test_legacy_unbound_state_adoption_and_commit_guard(spark, tmp_path):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_buffered_resume_differential_fuzz(spark, tmp_path, engine):
     """Cross-DRAIN differential check: the same seeded workloads as the
     single-drain fuzz, but the generations are split across TWO resumed
@@ -3690,71 +3786,7 @@ def test_join_windowed_eager_spurious_outer_timing(spark, tmp_path):
     assert [(r["key"], r["v2"], r["v1"]) for r in got_i.collect()] == [("test", "coucou", "test")]
 
 
-def test_keyed_suppress_refuses_foreign_state_schema_version(spark, tmp_path):
-    """r10 review finding: the string tunnel changed the keyed engine's
-    applyInPandasWithState state schema AND the out/ sink schema (v2).  A
-    populated dir stamped with a different version — or a pre-versioning
-    (v1) dir with its stamp absent — must get a descriptive refusal, not
-    Spark's opaque state-schema error mid-drain; the bound pair itself is
-    still recognized (the refusal is about schema, not identity)."""
-    import datetime as dt
-    import os as _os
-
-    import pytest as _pytest
-
-    from pyspark_engine.streaming import suppress_buffered
-
-    def t(m):
-        return dt.datetime(2024, 1, 1, 10, m)
-
-    schema = "k string, v int, ts timestamp"
-    src = str(tmp_path / "src")
-    _write_source_file(spark, [("a", 1, t(0)), ("b", 1, t(0))], schema, src, 0)
-    _write_source_file(spark, [("c", 1, t(2))], schema, src, 1)
-
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    sb = StreamingBuilder(spark)
-
-    def mk():
-        return (
-            sb.file_stream(src, key="k", ts="ts", max_files_per_trigger=1)
-            .to_table()
-            .suppress(until_time_limit_ms=60_000)
-        )
-
-    got1 = suppress_buffered(
-        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
-    )
-    assert sorted(r["k"] for r in got1.collect()) == ["a", "b"]
-    ver = _os.path.join(state, "_PSE_STATE_V")
-    assert _os.path.exists(ver)  # stamped before the first batch ran
-
-    # simulate a pre-versioning (v1) dir: populated emissions, stamp absent
-    _os.remove(ver)
-    with _pytest.raises(ValueError, match="state-schema"):
-        suppress_buffered(
-            mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
-        )
-
-    # a mismatched future version is refused the same way
-    with open(ver, "w") as f:
-        f.write("99")
-    with _pytest.raises(ValueError, match="state-schema"):
-        suppress_buffered(
-            mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
-        )
-
-    # restoring the correct stamp resumes cleanly (nothing new to deliver)
-    with open(ver, "w") as f:
-        f.write("2")
-    got2 = suppress_buffered(
-        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed"
-    )
-    assert got2.collect() == []
-
-
-@pytest.mark.parametrize("engine", ["keyed", "tws", "exact"])
+@pytest.mark.parametrize("engine", ["tws", "exact"])
 def test_suppress_value_type_matrix(spark, tmp_path, engine):
     """r10 verdict item 5: extend the exact-value round-trip matrix beyond
     bigint — decimal(38,2) and microsecond-precision timestamp VALUE columns
@@ -3859,12 +3891,14 @@ def test_stateful_map_decimal_timestamp_state_roundtrip(spark, tmp_path):
     assert got[0]["vd"] == big_dec and got[0]["vt"] == ts_edge
 
 
-def test_keyed_suppress_version_gate_fires_on_committed_unemitted_state(spark, tmp_path):
-    """r10 advice: suppress can buffer for many batches before its FIRST
-    emission, so a v-old dir may hold committed state with an empty out/.
-    The version gate must fire on committed-state too — gating on emissions
-    alone would stamp the dir v-new and then hit Spark's opaque
-    state-schema failure mid-drain with a permanently wrong stamp."""
+def test_tws_suppress_version_gate_fires_on_committed_unemitted_state(spark, tmp_path):
+    """Suppress can buffer for many batches before its FIRST emission, so a
+    dir from another version may hold committed state with an empty out/.
+    The tws version gate must fire on committed state too — gating on
+    emissions alone would stamp the dir with the current version and then
+    hit Spark's opaque state-schema failure mid-drain with a permanently
+    wrong stamp.  A populated dir stamped with a foreign version is refused
+    the same way, and the correct stamp resumes cleanly."""
     import datetime as dt
     import os as _os
 
@@ -3890,13 +3924,27 @@ def test_keyed_suppress_version_gate_fires_on_committed_unemitted_state(spark, t
             .suppress(until_time_limit_ms=10**12)  # nothing ever due
         )
 
-    got = suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed")
+    got = suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
     assert got.collect() == []  # buffered, no emissions — out/ is empty
-    ver = _os.path.join(state, "_PSE_STATE_V")
+    ver = _os.path.join(state, "_PSE_TWS_SUPPRESS_V")
+    assert _os.path.exists(ver)  # stamped before the first batch ran
 
-    # simulate the v1 shape: stamp absent, checkpoint committed, out/ empty
+    # stamp absent, checkpoint committed, out/ empty
     _os.remove(ver)
-    with _pytest.raises(ValueError, match="state-schema"):
-        suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="keyed")
+    with _pytest.raises(ValueError, match="with version unknown"):
+        suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
     # the refusal must NOT have restamped the dir (it is not verifiably fresh)
     assert not _os.path.exists(ver)
+
+    # a mismatched future version is refused the same way
+    with open(ver, "w") as f:
+        f.write("99")
+    with _pytest.raises(ValueError, match="with version 99"):
+        suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
+
+    # restoring the correct stamp resumes cleanly (nothing new to deliver)
+    with open(ver, "w") as f:
+        f.write("1")
+    assert suppress_buffered(
+        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws"
+    ).collect() == []

@@ -1,19 +1,17 @@
 """transformWithState engine family + the vendored minimal protobuf runtime.
 
-The live engine behavior (parity with keyed/exact, crash-replay, resume,
+The live engine behavior (parity with exact, crash-replay, resume,
 type matrix) is covered by the engine-parametrized suites in
 test_streaming.py; this file pins what is UNIQUE to the tws path:
 
 * the clean-room ``vendor/google/protobuf`` runtime's wire format, against
   hand-computed byte vectors (the live peer is the JVM protobuf runtime,
   so any divergence the vectors miss would also fail the live suites);
-* engine guards: tws state dirs refuse the pandas/exact engines and vice
-  versa;
+* engine guards: tws refuses exact-loop dirs and dirs stamped by the
+  removed pandas keyed engine;
 * the container-column refusal (PySpark's value-state client scrambles
   nested containers — upstream, observed on 4.1.2);
-* NaN semantics: tws and exact PRESERVE float NaN where the pandas keyed
-  engines coerce it to null (documented at _clean_state_value; this is the
-  r11-advice pin).
+* NaN semantics: tws and exact both PRESERVE float NaN.
 """
 
 from __future__ import annotations
@@ -187,11 +185,11 @@ def _mk_stream(spark, tmp_path, name, schema, rows, key, ts=None):
     return StreamingBuilder(spark).file_stream(d, key=key, ts=ts)
 
 
-def test_tws_state_dir_refused_by_keyed_engine_and_vice_versa(spark, tmp_path):
-    """A dir stamped by one engine family must be refused descriptively by
-    the other (fabricated markers — no drain needed)."""
-    import os
-
+def test_tws_refuses_legacy_keyed_and_exact_state_dirs(spark, tmp_path):
+    """A dir stamped by another engine must be refused descriptively by tws
+    (fabricated markers — no drain needed): an exact ping-pong dir, and a
+    dir from the removed pandas keyed engine, whose refusal names the
+    recovery path."""
     from pyspark_engine.streaming import join_tables_streaming
 
     def t(m):
@@ -200,11 +198,11 @@ def test_tws_state_dir_refused_by_keyed_engine_and_vice_versa(spark, tmp_path):
     l1 = _mk_stream(spark, tmp_path, "l1", "k int, lv int, lts timestamp", [(1, 1, t(0))], "k", "lts")
     r1 = _mk_stream(spark, tmp_path, "r1", "rk int, rv int, rts timestamp", [(1, 1, t(0))], "rk", "rts")
 
-    # fabricate a pandas-keyed dir → tws must refuse
+    # fabricate a pandas-keyed dir → tws must refuse, naming the way out
     keyed_dir = tmp_path / "keyed_dir"
     keyed_dir.mkdir()
     (keyed_dir / "_PSE_TTJOIN_V").write_text("1")
-    with pytest.raises(ValueError, match="pandas keyed tt-join"):
+    with pytest.raises(ValueError, match="removed pandas keyed engine.*fresh state_dir"):
         join_tables_streaming(l1, r1, engine="tws", state_dir=str(keyed_dir))
 
     # fabricate an exact ping-pong dir → tws must refuse
@@ -213,20 +211,6 @@ def test_tws_state_dir_refused_by_keyed_engine_and_vice_versa(spark, tmp_path):
     (exact_dir / "_GEN").write_text("1")
     with pytest.raises(ValueError, match="exact ping-pong"):
         join_tables_streaming(l1, r1, engine="tws", state_dir=str(exact_dir))
-
-    # fabricate a tws dir WITH emissions → the pandas keyed engine must
-    # refuse descriptively (the bind gate fires first on a fabricated dir;
-    # on a real one whose bind matches, the version gate fires — either way
-    # the populated foreign dir never drains under the wrong engine)
-    tws_dir = tmp_path / "tws_dir"
-    (tws_dir / "out" / "sink_batch=0").mkdir(parents=True)
-    (tws_dir / "out" / "sink_batch=0" / "part-0.parquet").write_bytes(b"")
-    (tws_dir / "_PSE_TWS_TTJOIN_V").write_text("1")
-    os.makedirs(tws_dir / "ck")
-    with pytest.raises(ValueError, match="state dir"):
-        join_tables_streaming(
-            l1, r1, engine="keyed", state_dir=str(tws_dir), checkpoint=str(tws_dir / "ck")
-        )
 
 
 def test_tws_container_value_columns_ride_binary_tunnel(spark, tmp_path):
@@ -342,10 +326,9 @@ def test_tws_pins_session_timezone_utc_for_drain(spark, tmp_path):
 
 
 def test_nan_double_semantics_across_join_engines(spark, tmp_path):
-    """r11 advice pin: a genuine float NaN in a double value column is
-    PRESERVED by the exact loop and the tws engine, and coerced to null by
-    the pandas keyed engine (Arrow float64 slices cannot distinguish NaN
-    from union null-padding — documented at _clean_state_value)."""
+    """A genuine float NaN in a double value column is PRESERVED by both
+    the exact loop and the tws engine (Rows and typed value state keep NaN
+    distinct from the union's null padding)."""
     from pyspark_engine.streaming import join_tables_streaming
 
     l1 = _mk_stream(
@@ -363,8 +346,6 @@ def test_nan_double_semantics_across_join_engines(spark, tmp_path):
     assert math.isnan(exact[1]) and exact[2] == 2.5
     tws = run("tws")
     assert math.isnan(tws[1]) and tws[2] == 2.5
-    keyed = run("keyed")
-    assert keyed[1] is None and keyed[2] == 2.5
 
 
 @pytest.mark.xfail(
