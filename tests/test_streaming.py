@@ -3897,8 +3897,7 @@ def test_tws_suppress_version_gate_fires_on_committed_unemitted_state(spark, tmp
     The tws version gate must fire on committed state too — gating on
     emissions alone would stamp the dir with the current version and then
     hit Spark's opaque state-schema failure mid-drain with a permanently
-    wrong stamp.  A populated dir stamped with a foreign version is refused
-    the same way, and the correct stamp resumes cleanly."""
+    wrong stamp."""
     import datetime as dt
     import os as _os
 
@@ -3936,6 +3935,48 @@ def test_tws_suppress_version_gate_fires_on_committed_unemitted_state(spark, tmp
     # the refusal must NOT have restamped the dir (it is not verifiably fresh)
     assert not _os.path.exists(ver)
 
+
+def test_tws_suppress_refuses_foreign_state_version(spark, tmp_path):
+    """A populated tws suppress dir whose version stamp is absent or names
+    another version gets a descriptive refusal, not Spark's opaque
+    state-schema error mid-drain; restoring the correct stamp resumes
+    cleanly with nothing redelivered."""
+    import datetime as dt
+    import os as _os
+
+    import pytest as _pytest
+
+    from pyspark_engine.streaming import suppress_buffered
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 10, m)
+
+    schema = "k string, v int, ts timestamp"
+    src = str(tmp_path / "src")
+    _write_source_file(spark, [("a", 1, t(0)), ("b", 1, t(0))], schema, src, 0)
+    _write_source_file(spark, [("c", 1, t(2))], schema, src, 1)
+
+    state = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    sb = StreamingBuilder(spark)
+
+    def mk():
+        return (
+            sb.file_stream(src, key="k", ts="ts", max_files_per_trigger=1)
+            .to_table()
+            .suppress(until_time_limit_ms=60_000)
+        )
+
+    got1 = suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
+    assert sorted(r["k"] for r in got1.collect()) == ["a", "b"]
+    ver = _os.path.join(state, "_PSE_TWS_SUPPRESS_V")
+    assert _os.path.exists(ver)  # stamped before the first batch ran
+
+    # populated emissions, stamp absent
+    _os.remove(ver)
+    with _pytest.raises(ValueError, match="with version unknown"):
+        suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
+
     # a mismatched future version is refused the same way
     with open(ver, "w") as f:
         f.write("99")
@@ -3945,6 +3986,5 @@ def test_tws_suppress_version_gate_fires_on_committed_unemitted_state(spark, tmp
     # restoring the correct stamp resumes cleanly (nothing new to deliver)
     with open(ver, "w") as f:
         f.write("1")
-    assert suppress_buffered(
-        mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws"
-    ).collect() == []
+    got2 = suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine="tws")
+    assert got2.collect() == []
