@@ -1708,8 +1708,11 @@ def suppress_buffered(
 
 
 def _has_emissions(out_dir: str) -> bool:
-    """Whether the suppress out/ directory holds any sink_batch=* partition
-    (a bare or absent dir means no microbatch ever emitted)."""
+    """Whether an emission-log directory holds any ``sink_batch=*``
+    partition: every tws engine's ``out/`` (and the fk join's ``sub/``)
+    and the exact loops that log per batch.  A bare or absent dir means no
+    micro-batch ever emitted (the tws engines leave a partition only for a
+    batch that emitted rows)."""
     if not os.path.isdir(out_dir):
         return False
     return any(e.startswith("sink_batch=") for e in os.listdir(out_dir))

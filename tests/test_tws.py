@@ -11,7 +11,10 @@ test_streaming.py; this file pins what is UNIQUE to the tws path:
   removed pandas keyed engine;
 * the container-column refusal (PySpark's value-state client scrambles
   nested containers — upstream, observed on 4.1.2);
-* NaN semantics: tws and exact both PRESERVE float NaN.
+* NaN semantics: tws and exact both PRESERVE float NaN;
+* one execution of the stateful plan per micro-batch (state-operator
+  metrics, no empty emission partitions, a source scan of the sinks), and
+  processors that unpickle without importing the engine.
 """
 
 from __future__ import annotations
@@ -482,3 +485,344 @@ def test_asof_tws_engine_guards_and_resume(spark, tmp_path):
     join_table_asof_streaming(ks(), vt, how="left", out_dir=root2, checkpoint=ck2, engine="exact")
     with pytest.raises(ValueError, match="exact as-of engine"):
         join_table_asof_streaming(ks(), vt, out_dir=root2, checkpoint=ck2, engine="tws")
+
+
+# ------------------------------------------- one execution per micro-batch
+
+
+def _rows_updated(spark, drain) -> list[int]:
+    """Run one drain; per streaming query it started (in start order), the
+    state operator's ``numRowsUpdated`` summed over its micro-batches."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    started, ended, log = [], set(), {}
+
+    class Log(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            started.append(str(event.id))
+
+        def onQueryProgress(self, event):
+            log.setdefault(str(event.progress.id), []).append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            ended.add(str(event.id))
+
+    listener = Log()
+    spark.streams.addListener(listener)
+    try:
+        drain()
+        # the listener bus is asynchronous: a query's progress events are
+        # all in once its termination event is
+        deadline = time.monotonic() + 60
+        while not set(started) <= ended and time.monotonic() < deadline:
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+    assert started and set(started) <= ended, "streaming queries never reported termination"
+    return [sum(p.stateOperators[0].numRowsUpdated for p in log.get(q, [])) for q in started]
+
+
+@pytest.mark.parametrize("kind", ["tt", "fk", "suppress", "asof"])
+def test_tws_micro_batch_runs_stateful_plan_once(spark, tmp_path, kind):
+    """Each tws micro-batch runs its stateful plan ONCE.  A foreachBatch
+    DataFrame recomputes its whole lineage on every action, so a sink that
+    probes the batch (``isEmpty``) before writing runs transformWithState
+    twice and the state operator reports every state write twice.  The
+    operator's ``numRowsUpdated`` over the drain must equal the state rows
+    the drain really wrote.  For the as-of engine that is the first drain:
+    the version history lands in list state there, and later drains only
+    read it."""
+    from pyspark_engine import StreamBuilder as BatchBuilder
+    from pyspark_engine.streaming import (
+        StreamingBuilder,
+        join_fk_streaming,
+        join_table_asof_streaming,
+        join_tables_streaming,
+        suppress_buffered,
+    )
+    from pyspark_engine.testing import stage_generation_file
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 0, m)
+
+    def stage(rows, schema, name, seq):
+        stage_generation_file(spark.createDataFrame(rows, schema), str(tmp_path / name), seq)
+
+    sb = StreamingBuilder(spark)
+    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    if kind == "tt":
+        stage([(k, k, 1) for k in range(1, 5)], "k long, lv long, lo long", "l", 0)
+        stage([(k, k, 1) for k in range(1, 5)], "rk long, rv long, ro long", "r", 0)
+
+        def drain():
+            join_tables_streaming(
+                sb.file_stream(str(tmp_path / "l"), key="k"),
+                sb.file_stream(str(tmp_path / "r"), key="rk"),
+                how="inner", l_order=("lo",), r_order=("ro",),
+                engine="tws", state_dir=state, checkpoint=ck,
+            )
+
+        drain()
+        # keys 1 and 2 take newer rows; key 3's row is older and loses
+        stage([(1, 10, 2), (2, 20, 2), (3, 30, 0)], "k long, lv long, lo long", "l", 1)
+        assert _rows_updated(spark, drain) == [2]
+    elif kind == "fk":
+        lschema = "pk long, fk long, lv long, lo long"
+        stage([(k, k % 2, k, 1) for k in range(1, 5)], lschema, "l", 0)
+        stage([(0, 0, 1), (1, 1, 1)], "rk long, rv long, ro long", "r", 0)
+
+        def drain():
+            join_fk_streaming(
+                sb.file_stream(str(tmp_path / "l"), key="pk"),
+                sb.file_stream(str(tmp_path / "r"), key="rk"),
+                fk="fk", how="inner", l_order=("lo",), r_order=("ro",),
+                engine="tws", state_dir=state, checkpoint=ck,
+            )
+
+        drain()
+        # pk 1 keeps fk 1; pk 2 flips fk 0 -> 1
+        stage([(1, 1, 10, 2), (2, 1, 20, 2)], lschema, "l", 1)
+        # stage A: the two changed pks; stage B: fk groups '0' and '1',
+        # each rewriting its right-row value state and its subscriber list
+        assert _rows_updated(spark, drain) == [2, 4]
+    elif kind == "suppress":
+        schema = "k long, v long, ts timestamp"
+        stage([(1, 1, t(0)), (2, 2, t(0))], schema, "s", 0)
+
+        def drain():
+            tbl = (
+                sb.file_stream(str(tmp_path / "s"), key="k", ts="ts", max_files_per_trigger=1)
+                .to_table()
+                .suppress(until_time_limit_ms=60_000)
+            )
+            suppress_buffered(tbl, time_col="ts", engine="tws", state_dir=state, checkpoint=ck)
+
+        drain()
+        # key 3 enters the buffer (one write); its stream time makes keys 1
+        # and 2 due, and their timers fire and emit (one write each)
+        stage([(3, 3, t(2))], schema, "s", 1)
+        assert _rows_updated(spark, drain) == [3]
+    else:
+        hist = spark.createDataFrame(
+            [(1, t(0), 100), (1, t(10), 110), (2, t(5), 200)], "k long, ts timestamp, pv long"
+        )
+        vt = BatchBuilder(spark).versioned_table(hist, key="k", ts="ts", order=("pv",))
+        stage([(1, t(5), 0)], "k long, ts timestamp, sid long", "s", 0)
+
+        def drain():
+            join_table_asof_streaming(
+                sb.file_stream(str(tmp_path / "s"), key="k", ts="ts"),
+                vt, how="left", out_dir=state, checkpoint=ck, engine="tws",
+            )
+
+        # the three history versions are appended to list state once
+        assert _rows_updated(spark, drain) == [3]
+
+
+def test_tws_batch_without_emissions_leaves_no_partition(spark, tmp_path):
+    """Only a micro-batch that emits rows leaves a ``sink_batch=<id>``
+    partition: the emission-log readers, the legacy-adoption cursor
+    (``_max_sink_batch``) and the autocompaction partition count all rely
+    on it.  Case 1: a tt-join update whose order value is older than the
+    stored one.  Case 2: a suppress batch in which no key is due."""
+    from pyspark_engine.streaming import (
+        StreamingBuilder,
+        _has_emissions,
+        _max_sink_batch,
+        _sink_partitions,
+        join_tables_streaming,
+        suppress_buffered,
+    )
+    from pyspark_engine.testing import stage_generation_file
+
+    sb = StreamingBuilder(spark)
+    ld, rd = str(tmp_path / "l"), str(tmp_path / "r")
+    stage_generation_file(spark.createDataFrame([(1, 1, 5)], "k long, lv long, lo long"), ld, 0)
+    stage_generation_file(spark.createDataFrame([(1, 1, 5)], "rk long, rv long, ro long"), rd, 0)
+    state, ck = str(tmp_path / "tt"), str(tmp_path / "tt_ck")
+
+    def tt():
+        return join_tables_streaming(
+            sb.file_stream(ld, key="k"), sb.file_stream(rd, key="rk"),
+            how="inner", l_order=("lo",), r_order=("ro",),
+            engine="tws", state_dir=state, checkpoint=ck,
+        )
+
+    tt()
+    assert sorted(_sink_partitions(os.path.join(state, "out"))) == [0]
+    stage_generation_file(spark.createDataFrame([(1, 99, 4)], "k long, lv long, lo long"), ld, 1)
+    snap = tt()
+    assert sorted(_sink_partitions(os.path.join(state, "out"))) == [0]
+    assert _max_sink_batch(state) == 0
+    assert [(r["k"], r["lv"]) for r in snap.collect()] == [(1, 1)]
+
+    sd = str(tmp_path / "s")
+    stage_generation_file(
+        spark.createDataFrame([(1, 1, dt.datetime(2024, 1, 1))], "k long, v long, ts timestamp"),
+        sd,
+        0,
+    )
+    tbl = sb.file_stream(sd, key="k", ts="ts").to_table().suppress(until_time_limit_ms=3_600_000)
+    sup = str(tmp_path / "sup")
+    got = suppress_buffered(
+        tbl, time_col="ts", engine="tws", state_dir=sup, checkpoint=str(tmp_path / "sup_ck")
+    )
+    assert got.count() == 0
+    assert _sink_partitions(os.path.join(sup, "out")) == {}
+    assert not _has_emissions(os.path.join(sup, "out"))
+
+
+_UNPICKLE_AND_RUN = """
+import pickle, sys
+procs = pickle.loads(sys.stdin.buffer.read())
+
+class _State:
+    v = None
+    def get(self):
+        return self.v
+    def update(self, v):
+        self.v = v
+
+class _Handle:
+    def getValueState(self, name, schema):
+        return _State()
+
+# run the tt processor: its helpers (_norm, _enc_c, _dec_c) came by value
+from pyspark.sql import Row
+tt = procs[0]
+tt.init(_Handle())
+row = Row("__side", "lv", "lo")
+first = list(tt.handleInputRows((7,), iter([row(1, [1, 2], 5)]), None))
+stale = list(tt.handleInputRows((7,), iter([row(1, [9], 4)]), None))
+assert [tuple(r) for r in first] == [(7, [1, 2], None)], first
+assert stale == [], stale
+print(sorted(m for m in sys.modules if m.startswith("pyspark_engine") or m == "pandas"))
+"""
+
+
+def test_tws_processors_unpickle_without_engine(tmp_path):
+    """The tws processors ship BY VALUE: loading one in a fresh interpreter
+    (as the driver's pre-init worker and every executor state worker do)
+    imports neither ``pyspark_engine`` nor pandas, even with the engine on
+    the path."""
+    import subprocess
+
+    from pyspark import cloudpickle
+
+    from pyspark_engine import tws
+
+    procs = [
+        tws._make_tt_processor(
+            "__l_set boolean, __r_set boolean, lv binary, lo long, rv long",
+            ["lv", "lo"], ["rv"], ("lo",), ("rv",), {}, {}, "left",
+            ["k", "lv", "rv"], False, None, None, None, tun=frozenset({"lv"}),
+        ),
+        tws._make_suppress_processor(
+            "__entry_ms long, __hist_ms long, k long, v binary", ["k", "v"], ["k"],
+            "ts", 1000, ["k", "v", "__fired"], tun=frozenset({"v"}),
+        ),
+        tws._make_fk_stage_a(
+            "__jfk string, fk long, lo long", ["fk", "lo"], ("lo",), {},
+            ["op", "__jfk", "pk", "fk", "lo"],
+        ),
+        tws._make_fk_stage_b(
+            "__r_set boolean, rv long", "__sub int, pk long, lo long", ["pk"], ["lo"],
+            ["rv"], ("rv",), "rk", "inner", ["op", "pk", "lo", "rv"],
+        ),
+        tws._make_asof_processor(
+            "__hts timestamp, pv long", ["pv"], ["sid"], 1, "left", None,
+            ["k", "ts", "sid", "pv", "matched_ts"], frozenset(),
+        ),
+    ]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo}
+    res = subprocess.run(
+        [sys.executable, "-c", _UNPICKLE_AND_RUN],
+        input=cloudpickle.dumps(procs),
+        capture_output=True,
+        cwd=str(tmp_path),
+        env=env,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr.decode()[-2000:]
+    assert res.stdout.decode().strip() == "[]"
+
+
+_BATCH_ACTIONS = {"isEmpty", "count", "collect", "first", "head", "take"}
+
+
+def _batch_actions(source: str) -> tuple[list[str], list[str]]:
+    """Scan the foreachBatch sinks in ``source`` (the functions handed to
+    ``.foreachBatch``) and every function taking a ``batch`` parameter.
+    Returns (scanned function names, offending ``<fn>:<line> <action>``
+    entries): an offence is an action called on a DataFrame derived from
+    the batch (``batch.isEmpty()``, ``batch.select(...).count()``, ...) —
+    the write is the one action a micro-batch may take."""
+    import ast
+
+    tree = ast.parse(source)
+    sinks = {
+        c.args[0].id
+        for c in ast.walk(tree)
+        if isinstance(c, ast.Call)
+        and isinstance(c.func, ast.Attribute)
+        and c.func.attr == "foreachBatch"
+        and c.args
+        and isinstance(c.args[0], ast.Name)
+    }
+
+    def root(node):
+        while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return node
+
+    scanned, hits = [], []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef) or not fn.args.args:
+            continue
+        params = [a.arg for a in fn.args.args]
+        df = params[0] if fn.name in sinks else ("batch" if "batch" in params else None)
+        if df is None:
+            continue
+        scanned.append(fn.name)
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in _BATCH_ACTIONS
+                and isinstance(root(node), ast.Name)
+                and root(node).id == df
+            ):
+                hits.append(f"{fn.name}:{node.lineno} {node.attr}")
+    return sorted(scanned), hits
+
+
+def test_tws_sinks_take_one_action_per_batch():
+    """Guard: a second action on a foreachBatch DataFrame reruns the whole
+    stateful plan (and its RocksDB commit), so no tws sink may probe the
+    batch before or after writing it."""
+    import inspect
+
+    from pyspark_engine import tws
+
+    scanned, hits = _batch_actions(inspect.getsource(tws))
+    # the five sinks (tt, suppress and as-of _sink; fk stages A and B) and
+    # the helper they write through
+    assert scanned == ["_sink", "_sink", "_sink", "_sink_a", "_sink_b", "_write_emissions"]
+    assert hits == []
+
+    # the scan trips on the pattern it guards against
+    bad = (
+        "def _sink(b, batch_id):\n"
+        "    if b.isEmpty():\n"
+        "        return\n"
+        "    b.write.parquet('x')\n"
+        "def helper(batch, path):\n"
+        "    batch.select('a').count()\n"
+        "q = res.writeStream.foreachBatch(_sink)\n"
+    )
+    assert _batch_actions(bad) == (["_sink", "helper"], ["_sink:2 isEmpty", "helper:6 count"])
