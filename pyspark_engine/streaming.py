@@ -352,20 +352,28 @@ def _sink_partitions(out_dir: str) -> dict[int, str]:
     return parts
 
 
-# every tws engine stamps exactly one of these at the state-dir root before
-# its first batch, so the marker — not the output columns — identifies the
-# log kind (a tt-join whose USER schema carries a column named
-# '__emit_reason' would be misclassified as a suppress log by a column sniff
-# and have its committed emission history pruned outright)
-_LOG_KIND_MARKERS = (
-    ("_PSE_TWS_SUPPRESS_V", "suppress"),
-    ("_PSE_TWS_TTJOIN_V", "tt"),
-    ("_PSE_TWS_FKJOIN_V", "fk"),
-)
+# The tws engines' state-dir version markers: engine kind -> (marker file,
+# version).  Each tws engine stamps exactly one at the state-dir root before
+# its first batch (tws._open_state_dir) and refuses a populated dir stamped
+# with another version.  The marker — not the output columns — identifies
+# the log kind for compaction (a tt-join whose USER schema carries a column
+# named '__emit_reason' would be misclassified as a suppress log by a column
+# sniff and have its committed emission history pruned outright).
+_TWS_MARKERS = {
+    "tt": ("_PSE_TWS_TTJOIN_V", "1"),
+    "fk": ("_PSE_TWS_FKJOIN_V", "1"),
+    "suppress": ("_PSE_TWS_SUPPRESS_V", "1"),
+    "asof": ("_PSE_TWS_ASOF_V", "1"),
+}
 
 
 def _detect_log_kind(root: str, is_fk: bool) -> str:
-    hits = {kind for marker, kind in _LOG_KIND_MARKERS if os.path.exists(os.path.join(root, marker))}
+    # as-of output is append-only join history: compaction has no as-of kind
+    hits = {
+        kind
+        for kind, (marker, _) in _TWS_MARKERS.items()
+        if kind != "asof" and os.path.exists(os.path.join(root, marker))
+    }
     if is_fk:
         hits.add("fk")  # the sub/ dir is written only by the fk engines
     if len(hits) == 1:
@@ -578,17 +586,7 @@ def compact_emission_log(
         raise ValueError("compact_emission_log needs the fold key columns for join logs")
     base_id = max(foldable)
     kept = spark.read.parquet(out_dir).filter(F.col("sink_batch") <= F.lit(int(committed)))
-    if kind == "fk":
-        ranked = kept.withColumn("__op_rank", (F.col("op") == "U").cast("int"))
-        base = (
-            KStream(ranked, tuple(key), None)
-            .to_table(order=("sink_batch", "__op_rank"))
-            .df.drop("__op_rank", "sink_batch")
-        )
-    else:
-        base = KStream(kept, tuple(key), None).to_table(order=("sink_batch",)).df.drop(
-            "sink_batch"
-        )
+    base = _fold_emission_log(kept, key, kind).drop("sink_batch")
     tmp = os.path.join(root, _COMPACT_TMP)
     shutil.rmtree(tmp, ignore_errors=True)
     base.write.mode("overwrite").parquet(tmp)
@@ -617,6 +615,19 @@ def compact_emission_log(
     return result
 
 
+def _fold_emission_log(log: DataFrame, key: Sequence[str], kind: str) -> DataFrame:
+    """The latest row per ``key`` of a tws tt- or fk-join emission log, by
+    ``sink_batch``; inside one fk batch U wins over D, so a flip's
+    retraction can never outlive its re-subscription.  The fold behind the
+    joins' returned snapshots and the base partition compaction writes (the
+    fk fold keeps last-op-D rows; the snapshot drops them)."""
+    if kind != "fk":
+        return KStream(log, tuple(key), None).to_table(order=("sink_batch",)).df
+    ranked = log.withColumn("__op_rank", (F.col("op") == "U").cast("int"))
+    fold = KStream(ranked, tuple(key), None).to_table(order=("sink_batch", "__op_rank"))
+    return fold.df.drop("__op_rank")
+
+
 def _container_cols(schema, cols) -> set[str]:
     """The container-typed (array/map/struct) members of ``cols`` — the one
     membership predicate shared by the tws key/order refusals, tws tunnel
@@ -632,32 +643,28 @@ def _container_cols(schema, cols) -> set[str]:
     }
 
 
-_AUTOCOMPACT_DEFAULT = 32
+# committed emission-log partitions that trigger a fold at drain entry
+_AUTOCOMPACT_EVERY = 32
 
 
 def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, key=()) -> None:
-    """Compact-every-N policy: called by every tws drain at ENTRY — after
-    binding and version stamping, before the query starts.  Entry-time
-    (never post-drain) because the returned snapshot/emissions are LAZY
-    reads over ``out/sink_batch=*``; a post-drain compaction would prune
-    partitions the caller is about to scan.  When the committed partition
-    count reaches ``PSE_COMPACT_EVERY`` (default 32; <= 0 disables), the
-    log folds into one base partition, bounding snapshot reconstruction at
-    O(tail) instead of O(total emissions ever) across long-lived resumed
-    drains.  A crash mid-compaction is covered by the existing recovery:
-    _check_no_pending_compaction refuses the drain and the next
-    compact_emission_log call finishes or rolls back the pass."""
-    try:
-        every = int(os.environ.get("PSE_COMPACT_EVERY", str(_AUTOCOMPACT_DEFAULT)))
-    except ValueError:
-        every = _AUTOCOMPACT_DEFAULT
-    if every <= 0:
-        return
+    """Compact-every-N policy: called by the tt-join, fk-join and suppress
+    tws drains at ENTRY — after binding and version stamping, before the
+    query starts.  As-of logs are not compacted (append-only join history;
+    ``compact_emission_log`` has no as-of kind).  Entry-time (never
+    post-drain) because the returned snapshot/emissions are LAZY reads over
+    ``out/sink_batch=*``; a post-drain compaction would prune partitions the
+    caller is about to scan.  When the committed partition count reaches
+    ``_AUTOCOMPACT_EVERY``, the log folds into one base partition, bounding
+    snapshot reconstruction at O(tail) instead of O(total emissions ever)
+    across long-lived resumed drains.  A crash mid-compaction is covered by
+    the existing recovery: the next drain's _check_no_pending_compaction
+    finishes or rolls back the pass."""
     is_fk = os.path.isdir(os.path.join(state_dir, "sub"))
     out_dir = os.path.join(state_dir, "out")
     ck = os.path.join(checkpoint, "join") if is_fk else checkpoint
     committed = _last_committed(ck)
-    if sum(1 for k in _sink_partitions(out_dir) if k <= committed) >= every:
+    if sum(1 for k in _sink_partitions(out_dir) if k <= committed) >= _AUTOCOMPACT_EVERY:
         compact_emission_log(spark, state_dir, checkpoint, key=tuple(key))
 
 
@@ -1324,18 +1331,73 @@ def join_fk_streaming(
     )
 
 
-def _check_reserved_columns(cols, reserved: dict[str, str], what: str) -> None:
-    """Fail fast when user columns collide with an engine's internal schema
-    fields or its sink partition column — the collision otherwise surfaces
-    as an opaque Arrow/parquet error MID-DRAIN, after state and checkpoint
-    are already written.  ``reserved`` maps name → why it is reserved."""
+def _reserved_refusal(cols, reserved: dict[str, str], what: str) -> str | None:
+    """User columns colliding with an engine's internal schema fields or its
+    sink partition column, as a refusal (None when clear) — the collision
+    otherwise surfaces as an opaque Arrow/parquet error MID-DRAIN, after
+    state and checkpoint are already written.  ``reserved`` maps name → why
+    it is reserved."""
     hit = {c: reserved[c] for c in cols if c in reserved}
-    if hit:
-        msgs = "; ".join(f"{c!r} ({why})" for c, why in hit.items())
-        raise ValueError(
-            f"{what}: column names collide with engine-internal fields — {msgs}; "
-            "rename them on the input"
-        )
+    if not hit:
+        return None
+    msgs = "; ".join(f"{c!r} ({why})" for c, why in hit.items())
+    return (
+        f"{what}: column names collide with engine-internal fields — {msgs}; "
+        "rename them on the input"
+    )
+
+
+def _check_reserved_columns(cols, reserved: dict[str, str], what: str) -> None:
+    refusal = _reserved_refusal(cols, reserved, what)
+    if refusal:
+        raise ValueError(refusal)
+
+
+def _hard_container_refusal(what: str, *pairs) -> str | None:
+    """Container-typed columns in a tws key / order / fk position, as a
+    refusal (None when all are scalar): grouping and order comparisons need
+    scalar types, and the binary value tunnel covers VALUE columns only.
+    ``pairs`` = (StructType, columns)."""
+    bad = sorted(set().union(set(), *[_container_cols(s, c) for s, c in pairs]))
+    if not bad:
+        return None
+    return (
+        f"{what}: container-typed columns {bad} sit in a key/order/fk "
+        "position; grouping and order comparisons need scalar types (the "
+        "binary value tunnel only covers VALUE columns) — use engine='exact'"
+    )
+
+
+def _dtype_refusal(what: str, l_schema, r_schema, pairs) -> str | None:
+    """The first (left, right) column pair whose dtypes differ, as a refusal
+    (None when all match): the tws engines group or compare both sides'
+    values in one typed state column."""
+    l_ddl = {f.name: f.dataType.simpleString() for f in l_schema.fields}
+    r_ddl = {f.name: f.dataType.simpleString() for f in r_schema.fields}
+    for lc, rc in pairs:
+        if l_ddl.get(lc) != r_ddl.get(rc):
+            return (
+                f"the {what} requires equal join-column dtypes across sides; "
+                f"{lc}:{l_ddl.get(lc)} vs {rc}:{r_ddl.get(rc)} — cast one side or use engine='exact'"
+            )
+    return None
+
+
+def _changelog_orders(
+    left: KStream, right: KStream, l_order: Sequence[str] | None, r_order: Sequence[str] | None
+) -> tuple[tuple, tuple]:
+    """Each side's changelog order for the table⋈table joins: the declared
+    columns, else the side's ts.  Refused when a side has neither or
+    declares a column it lacks."""
+    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
+    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
+    if not lord or not rord:
+        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
+    for order, side in ((lord, left), (rord, right)):
+        missing = [c for c in order if c not in side.df.columns]
+        if missing:
+            raise ValueError(f"order columns {missing} not in the side's columns")
+    return lord, rord
 
 
 def _changelog_join_loop(
@@ -1364,10 +1426,7 @@ def _changelog_join_loop(
         "changelog-state join loop",
     )
     l_cols, r_cols = list(left.df.columns), list(right.df.columns)
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
+    lord, rord = _changelog_orders(left, right, l_order, r_order)
     root = state_dir or tempfile.mkdtemp(prefix=state_prefix)
     os.makedirs(root, exist_ok=True)
     tagged = left.df.select(
@@ -2026,6 +2085,55 @@ def join_windowed_eager(
     return got.filter(F.col("sink_batch") > F.lit(int(prior_batch))).drop("sink_batch")
 
 
+def _asof_dir_engine(out_dir: str | None) -> str | None:
+    """The as-of engine whose output ``out_dir`` holds: ``'exact'`` for
+    ``sink_batch=``/``part-`` entries at its root, ``'tws'`` for the tws
+    version marker, None for an absent or fresh dir."""
+    if out_dir is None or not os.path.isdir(out_dir):
+        return None
+    entries = os.listdir(out_dir)
+    if any(e.startswith(("sink_batch=", "part-")) for e in entries):
+        return "exact"
+    return "tws" if _TWS_MARKERS["asof"][0] in entries else None
+
+
+def _asof_tws_refusal(stream: KStream, table, matched_ts: str) -> str | None:
+    """Why the tws as-of engine cannot run this join, judged from the
+    schemas alone (None when it can): timestamp ts on both sides, equal key
+    arity and dtypes, no reserved column names, no container-typed key or
+    ts.  The one copy of the engine's schema guards — engine=None
+    auto-selection picks ``'exact'`` on a refusal, and
+    ``tws.join_table_asof_tws`` raises it."""
+    what = "tws as-of engine"
+    t_ts = getattr(table, "ts", None)
+    if stream.ts is None or t_ts is None:
+        return "as-of join requires ts on both sides"
+    if len(stream.key) != len(table.key):
+        return "join key arity mismatch"
+    s_ts, t_ts_type = dict(stream.df.dtypes).get(stream.ts), dict(table.df.dtypes).get(t_ts)
+    if s_ts != "timestamp" or t_ts_type != "timestamp":
+        return (
+            f"the {what} requires timestamp ts columns on both sides "
+            f"({stream.ts}:{s_ts}, {t_ts}:{t_ts_type}) — use engine='exact'"
+        )
+    reserved = {
+        "sink_batch": "emission-log partition column",
+        "__side": "history/stream union tag",
+        "__sts": "stream event-time projection",
+        "__hts": "version event-time projection",
+        **{f"__jk{i}": "join-key grouping column" for i in range(len(stream.key))},
+    }
+    return (
+        _reserved_refusal([*stream.df.columns, *table.df.columns, matched_ts], reserved, what)
+        or _hard_container_refusal(
+            what,
+            (stream.df.schema, [*stream.key, stream.ts]),
+            (table.df.schema, [*table.key, t_ts]),
+        )
+        or _dtype_refusal(what, stream.df.schema, table.df.schema, zip(stream.key, table.key))
+    )
+
+
 def join_table_asof_streaming(
     stream: KStream,
     table,
@@ -2059,61 +2167,26 @@ def join_table_asof_streaming(
     if not stream.df.isStreaming:
         raise ValueError("join_table_asof_streaming requires a streaming stream side")
     if engine is None:
-        # same precedence as _select_engine: resume with the engine
-        # that wrote the dir; otherwise tws when it can run (container/
-        # non-timestamp-ts calls fall back to exact, which has no such
-        # constraints)
+        # same precedence as _select_engine: resume with the engine that
+        # wrote the dir; otherwise tws when it can run (a call the tws schema
+        # guard refuses falls back to exact, which has no such constraints)
         from .protoshim import ensure_protobuf  # noqa: PLC0415
 
-        if out_dir is not None and os.path.isdir(out_dir):
-            entries = os.listdir(out_dir)
-            if any(e.startswith(("sink_batch=", "part-")) for e in entries):
-                engine = "exact"
-            elif "_PSE_TWS_ASOF_V" in entries:
-                engine = "tws"
-        if engine is None:
-            # every tws-engine construction guard must be mirrored here, or
-            # the auto-default breaks previously working exact calls:
-            # timestamp ts, key arity AND dtype equality, no hard
-            # containers, no reserved-name collisions
-            s_types = dict(stream.df.dtypes)
-            t_types = dict(table.df.dtypes)
-            reserved = {"sink_batch", "__side", "__sts", "__hts"} | {
-                f"__jk{i}" for i in range(len(stream.key))
-            }
-            tws_ok = (
-                ensure_protobuf()
-                and stream.ts is not None
-                and getattr(table, "ts", None) is not None
-                and s_types.get(stream.ts) == "timestamp"
-                and t_types.get(table.ts) == "timestamp"
-                and len(stream.key) == len(table.key)
-                and all(
-                    s_types.get(lk) == t_types.get(rk)
-                    for lk, rk in zip(stream.key, table.key)
-                )
-                and not reserved
-                & (set(stream.df.columns) | set(table.df.columns) | {matched_ts})
-                and not any(
-                    _container_cols(sch, cols)
-                    for sch, cols in (
-                        (stream.df.schema, list(stream.key) + [stream.ts]),
-                        (table.df.schema, list(table.key) + [table.ts]),
-                    )
-                )
-            )
-            engine = "tws" if tws_ok else "exact"
+        engine = _asof_dir_engine(out_dir) or (
+            "tws"
+            if ensure_protobuf() and _asof_tws_refusal(stream, table, matched_ts) is None
+            else "exact"
+        )
+    _check_engine(engine, "join_table_asof_streaming")
     if engine == "tws":
         from .tws import join_table_asof_tws  # noqa: PLC0415 - optional protobuf dep
 
         return join_table_asof_tws(
             stream, table, how, tolerance_ms, matched_ts, out_dir, checkpoint
         )
-    if engine != "exact":
-        raise ValueError(f"unknown as-of engine {engine!r}; expected 'tws' or 'exact'")
     root = out_dir or tempfile.mkdtemp(prefix="pse-asof-")
     os.makedirs(root, exist_ok=True)
-    if "_PSE_TWS_ASOF_V" in os.listdir(root):
+    if os.path.exists(os.path.join(root, _TWS_MARKERS["asof"][0])):
         raise ValueError(
             f"out dir {root!r} was written by the tws as-of engine; pass "
             "engine='tws' to resume it, or a fresh out_dir"

@@ -1,36 +1,52 @@
 """transformWithState (arbitrary-state-v2) engines for the continuous
 table operators — the per-key engines behind ``engine='tws'`` in
 ``streaming.py`` (the other engine, ``'exact'``, is the parquet snapshot
-loop that doubles as their differential oracle).
+loop that doubles as their differential oracle): the tt join
+(``join_tables_tws``), the fk join (``join_fk_tws``, two chained stages),
+suppress (``suppress_tws``) and the versioned as-of join
+(``join_table_asof_tws``).
 
-Shared architecture (tt join, fk join, suppress): the changelogs are
-tagged and unioned into one ``transformWithState`` grouped by the state
-key; per-key state lives in Spark's RocksDB store, which checkpoints
-per-batch deltas; each key whose state changed appends its emission to an
-``out/sink_batch=<id>`` partition (overwritten on crash-replay —
-exactly-once); the returned snapshot is the latest-per-key fold of that
-emission log.  Per-microbatch I/O is therefore O(changed keys), never
-O(table).  Each engine stamps a version marker at the state-dir root
-before its first batch (``_stamp_version``), which identifies the dir's
-owner for resume and for ``streaming.compact_emission_log``.
+Shared architecture: the changelogs are tagged and unioned into one
+``transformWithState`` grouped by the state key; per-key state lives in
+Spark's RocksDB store, which checkpoints per-batch deltas; each key whose
+state changed appends its emission to an ``out/sink_batch=<id>`` partition
+(overwritten on crash-replay — exactly-once); the tt and fk joins return
+the latest-per-key fold of that emission log.  Per-microbatch I/O is
+therefore O(changed keys), never O(table).  Each engine function keeps only
+its processor, its input union and its output fold; the rest is one code
+path:
+
+* ``_open_state_dir`` — create the state dir, heal an interrupted
+  compaction, bind each emission log to its checkpoint, stamp the engine's
+  version marker (``streaming._TWS_MARKERS``; it identifies the dir's owner
+  for resume and for ``streaming.compact_emission_log``) and, except for
+  the as-of join, compact the log at the autocompaction cadence;
+* ``_drain`` — one ``availableNow`` drain of the processor under the
+  RocksDB provider, with one foreachBatch sink writing each micro-batch
+  through ``_write_emissions``;
+* ``_snapshot`` — the tt/fk latest-per-key fold
+  (``streaming._fold_emission_log``, shared with compaction);
+* processor side: ``_codec`` (state-cell load/store), ``_order_of`` (the
+  changelog order tuple and its null-order refusal) and ``_norm``.
 
 Each micro-batch runs its stateful plan ONCE.  The foreachBatch DataFrame
 is a plain batch DataFrame over the stateful plan, and every action on it
 recomputes that plan — transformWithState, the Python state workers and
-the RocksDB commit.  So every sink hands its batch to ``_write_emissions``,
+the RocksDB commit.  So the sink hands its batch to ``_write_emissions``,
 which writes the partition and counts its rows in the same action (an
-observed metric) and removes the partition when the count is 0; no sink
-probes the batch with a second action (``tests/test_tws.py`` guards
+observed metric) and removes the partition when the count is 0; the sink
+never probes the batch with a second action (``tests/test_tws.py`` guards
 this).  The processors ship BY VALUE, with the module helpers they call:
 unpickling one imports only pyspark and the standard library, not this
 package or pandas, so neither the driver's pre-init worker nor the
-executor state workers import the engine.  Measured floor that remains
-(100-key update against a 20k-key tt join, 4 vCPU, ~3.3 s per call): about
-1.1 s of the driver's pre-init worker importing pyspark from Spark's
-``pyspark.zip`` (a zip import caches no bytecode: 1.06-1.25 s there
-against 0.22 s from site-packages; only a long-lived query would avoid
-it), and about 0.7 s of RocksDB commit per update, summed over the state
-tasks.
+executor state workers import the engine — which is why the
+processor-side helpers live here and not in ``streaming.py``.  Measured
+floor that remains (100-key update against a 20k-key tt join, 4 vCPU,
+~3.3 s per call): about 1.1 s of the driver's pre-init worker importing
+pyspark from Spark's ``pyspark.zip`` (a zip import caches no bytecode:
+1.06-1.25 s there against 0.22 s from site-packages; only a long-lived
+query would avoid it), and about 0.7 s of RocksDB commit per update,
+summed over the state tasks.
 
 * **Native types.**  ``transformWithState`` hands the processor
   ``pyspark.sql.Row`` objects, where a nullable int64 column stays a Python
@@ -51,10 +67,10 @@ ride the state as pickled ``binary`` (``_enc_c``/``_dec_c`` — bytes round
 -trip exactly), decoded back to native Python form before every emission,
 so input rows, the emission-log parquet, and the returned snapshots all
 keep NATIVE container types; only the opaque state cell is encoded.
-Container KEY / ORDER / FK columns stay refused (``
-_refuse_hard_containers`` — grouping and order comparisons need scalars;
-engine='exact' covers those).  The minimal upstream repro is pinned as a
-STRICT xfail in ``tests/test_tws.py::
+Container KEY / ORDER / FK columns stay refused
+(``streaming._hard_container_refusal`` — grouping and order comparisons
+need scalars; engine='exact' covers those).  The minimal upstream repro is
+pinned as a STRICT xfail in ``tests/test_tws.py::
 test_upstream_nested_container_value_state_roundtrip`` — when a Spark
 upgrade makes it XPASS, the tunnel can be retired for native state.  The
 fk-join subscriber list — the one engine-internal container — lives in
@@ -65,7 +81,8 @@ clean-room shim (``pyspark_engine.protoshim.ensure_protobuf`` wires the
 shim into driver and workers; every public entry here calls it first).
 Reference semantics: KTableKTableJoinProcessor.cs:20-48 (tt join),
 KIP-213 subscription/response architecture (fk join),
-KTableSuppressProcessor.cs / suppress-buffer due rule (suppress).
+KTableSuppressProcessor.cs / suppress-buffer due rule (suppress),
+KStreamKTableJoinProcessor.cs:38-43 with KIP-914 versioned lookups (as-of).
 """
 
 from __future__ import annotations
@@ -80,17 +97,23 @@ from typing import Sequence
 from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from .dsl import KStream, KTable
+from .dsl import KStream, KTable, _not_null
 from .protoshim import ensure_protobuf
 from .streaming import (
+    _TWS_MARKERS,
+    _asof_dir_engine,
+    _asof_tws_refusal,
     _bind_state_checkpoint,
+    _changelog_orders,
     _check_no_pending_compaction,
     _checkpoint,
     _check_reserved_columns,
     _container_cols,
+    _dtype_refusal,
     _empty_emissions,
+    _fold_emission_log,
+    _hard_container_refusal,
     _has_emissions,
     _last_committed,
     _maybe_autocompact,
@@ -101,17 +124,11 @@ from .streaming import (
 _TWS_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 # The processors below pickle BY VALUE, together with the module helpers
-# they call (_norm, _enc_c, _dec_c): by reference, unpickling one would
-# import this module, and with it the whole package plus pandas, in the
-# driver's pre-init worker and in every executor state worker.
+# they call (_norm, _codec, _order_of, _enc_c, _dec_c): by reference,
+# unpickling one would import this module, and with it the whole package
+# plus pandas, in the driver's pre-init worker and in every executor state
+# worker.
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-# version stamps (_stamp_version): a populated dir written by a different
-# engine/version is refused descriptively instead of failing Spark's
-# state-schema check mid-drain
-_TWS_TTJOIN_VERSION = "1"
-_TWS_FKJOIN_VERSION = "1"
-_TWS_SUPPRESS_VERSION = "1"
 
 
 def require_tws(spark) -> None:
@@ -166,16 +183,9 @@ def _rocksdb_provider(spark):
             spark.conf.set(tz_key, prev_tz)
 
 
-def _refuse_hard_containers(what: str, *pairs) -> None:
-    """Key / order / fk positions need scalar types (grouping keys and
-    order comparisons) — the binary value tunnel cannot cover them."""
-    bad = sorted(set().union(set(), *[_container_cols(s, c) for s, c in pairs]))
-    if bad:
-        raise ValueError(
-            f"{what}: container-typed columns {bad} sit in a key/order/fk "
-            "position; grouping and order comparisons need scalar types (the "
-            "binary value tunnel only covers VALUE columns) — use engine='exact'"
-        )
+def _refuse(refusal: str | None) -> None:
+    if refusal:
+        raise ValueError(refusal)
 
 
 def _enc_c(v):
@@ -196,6 +206,20 @@ def _dec_c(v):
     import pickle  # noqa: PLC0415
 
     return None if v is None else pickle.loads(bytes(v))
+
+
+def _codec(cols, tun):
+    """(load, store) for the state cells of ``cols``: container columns in
+    ``tun`` ride the state as pickled binary (_enc_c/_dec_c); the rest load
+    through _norm and store as they are."""
+
+    def load(vals):
+        return [_dec_c(x) if c in tun else _norm(x) for c, x in zip(cols, vals)]
+
+    def store(vals):
+        return [_enc_c(v) if c in tun else v for c, v in zip(cols, vals)]
+
+    return load, store
 
 
 def _stamp_version(root: str, marker: str, version: str, populated: bool, what: str) -> None:
@@ -235,6 +259,74 @@ def _write_emissions(batch: DataFrame, path: str) -> None:
         shutil.rmtree(path)
 
 
+def _open_state_dir(spark, kind, state_dir, checkpoint, what, logs=(("out", None),), key=()):
+    """Open a tws state dir for one drain; returns (root, one checkpoint per
+    log).  Every engine opens its dir in the same order: heal an interrupted
+    compaction, bind each emission log to its checkpoint, gate the engine
+    version (``kind`` names its marker in ``_TWS_MARKERS``), then compact at
+    the autocompaction cadence on the fold ``key`` — except for the as-of
+    join, since compaction has no as-of log kind.  ``logs`` = (log dir
+    under the root, checkpoint sub-dir); a None sub-dir binds the root
+    itself to the checkpoint (the fk join binds each of its two logs to its
+    own sub-dir)."""
+    root = state_dir or tempfile.mkdtemp(prefix=f"pse-{kind}-tws-")
+    os.makedirs(root, exist_ok=True)
+    _check_no_pending_compaction(root)
+    base = _checkpoint(checkpoint)
+    ckpts, populated = [], False
+    for log, sub in logs:
+        log_dir = os.path.join(root, log)
+        emitted = _has_emissions(log_dir)
+        bind_root, ckpt = (root, base) if sub is None else (log_dir, os.path.join(base, sub))
+        ckpts.append(_bind_state_checkpoint(bind_root, ckpt, emitted, f"{what} {log}/ log"))
+        populated = populated or emitted or _last_committed(ckpt) >= 0
+    marker, version = _TWS_MARKERS[kind]
+    _stamp_version(root, marker, version, populated, what)
+    if kind != "asof":
+        _maybe_autocompact(spark, root, base, key=key)
+    return root, ckpts
+
+
+def _drain(df, keys, proc, out_schema, time_mode, ckpt, log_dir, select=None) -> None:
+    """Run ``proc`` over ``df`` grouped by ``keys`` as one ``availableNow``
+    drain on ``ckpt``: each micro-batch's emissions — projected by
+    ``select(batch_id)`` when given — land in ``<log_dir>/sink_batch=<id>``
+    through _write_emissions, the one action a micro-batch takes."""
+
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        if select is not None:
+            batch = batch.select(*select(batch_id))
+        _write_emissions(batch, os.path.join(log_dir, f"sink_batch={batch_id}"))
+
+    with _rocksdb_provider(df.sparkSession):
+        res = df.groupBy(*keys).transformWithState(proc, out_schema, "Update", time_mode)
+        q = (
+            res.writeStream.foreachBatch(_sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+
+def _snapshot(spark, log_dir, key, kind, empty_out, store_name):
+    """The tt/fk join's returned table: the latest-per-key fold of its
+    emission log (fk keys whose last op is D are gone), cast to the batch
+    join's schema and registered under ``store_name``; ``empty_out`` when
+    no batch ever emitted."""
+    if not _has_emissions(log_dir):
+        return empty_out
+    snap = _fold_emission_log(spark.read.parquet(log_dir), key, kind)
+    if kind == "fk":
+        snap = snap.filter(F.col("op") == "U")
+    snap = snap.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in empty_out.schema.fields]
+    )
+    if store_name is not None:
+        snap.createOrReplaceTempView(store_name)
+    return snap
+
+
 def _norm(v):
     """Normalize a Row/state value to a timezone-naive, plain-Python form
     for ORDER comparisons and state tuples: tz-aware datetimes → UTC-naive
@@ -246,6 +338,22 @@ def _norm(v):
     if isinstance(v, dt.datetime) and v.tzinfo is not None:
         return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
     return v
+
+
+def _order_of(order, key, key_pos, lookup, what):
+    """The changelog order tuple of one row: each order column comes from
+    the grouping ``key`` (at ``key_pos[c]``) or from ``lookup(c)``.  A null
+    order value is refused — the latest-per-key fold needs a total order."""
+    vals = []
+    for c in order:
+        v = _norm(key[key_pos[c]]) if c in key_pos else _norm(lookup(c))
+        if v is None:
+            raise ValueError(
+                f"null order value in the tws {what} engine — the fold needs a "
+                "total order per key; use engine='exact'"
+            )
+        vals.append(v)
+    return tuple(vals)
 
 
 # ------------------------------------------------------------------ tt join
@@ -283,38 +391,22 @@ def _make_tt_processor(
     l_idx = {c: i for i, c in enumerate(l_val)}
     r_idx = {c: i for i, c in enumerate(r_val)}
     out_row = Row(*out_cols)
-
-    def _load(cols, vals):
-        return [_dec_c(x) if c in tun else _norm(x) for c, x in zip(cols, vals)]
-
-    def _store(cols, vals):
-        return [_enc_c(v) if c in tun else v for c, v in zip(cols, vals)]
+    l_load, l_store = _codec(l_val, tun)
+    r_load, r_store = _codec(r_val, tun)
 
     class TTJoin(StatefulProcessor):
         def init(self, handle):
             self.st = handle.getValueState("join", state_schema)
 
-        def close(self):
-            pass
-
         def handleInputRows(self, key, rows, timerValues):
             def make_ord(order, key_pos, lookup):
-                vals = []
-                for c in order:
-                    v = _norm(key[key_pos[c]]) if c in key_pos else _norm(lookup(c))
-                    if v is None:
-                        raise ValueError(
-                            "null order value in the tws tt-join engine — the fold "
-                            "needs a total order per key; use engine='exact'"
-                        )
-                    vals.append(v)
-                return tuple(vals)
+                return _order_of(order, key, key_pos, lookup, "tt-join")
 
             st = self.st.get()
             if st is not None:
                 l_set, r_set = bool(st[0]), bool(st[1])
-                l_vals = _load(l_val, st[2 : 2 + n_l])
-                r_vals = _load(r_val, st[2 + n_l :])
+                l_vals = l_load(st[2 : 2 + n_l])
+                r_vals = r_load(st[2 + n_l :])
             else:
                 l_set = r_set = False
                 l_vals, r_vals = [None] * n_l, [None] * n_r
@@ -324,18 +416,18 @@ def _make_tt_processor(
             changed = False
             for row in rows:
                 if row["__side"] == 1:
-                    ov = make_ord(lord, l_key_pos, lambda c: _norm(row[c]))
+                    ov = make_ord(lord, l_key_pos, lambda c: row[c])
                     if (not l_set) or ov >= l_ord:
                         l_vals = [_norm(row[c]) for c in l_val]
                         l_ord, l_set, changed = ov, True, True
                 else:
-                    ov = make_ord(rord, r_key_pos, lambda c: _norm(row[c]))
+                    ov = make_ord(rord, r_key_pos, lambda c: row[c])
                     if (not r_set) or ov >= r_ord:
                         r_vals = [_norm(row[c]) for c in r_val]
                         r_ord, r_set, changed = ov, True, True
             if not changed:
                 return
-            self.st.update((l_set, r_set, *_store(l_val, l_vals), *_store(r_val, r_vals)))
+            self.st.update((l_set, r_set, *l_store(l_vals), *r_store(r_vals)))
             emit = (l_set and r_set) if how == "inner" else (l_set if how == "left" else True)
             if not emit:
                 return
@@ -396,6 +488,7 @@ def join_tables_tws(
     the processor — loud beats a silently wrong fold) and equal key/ts
     dtypes across sides; use engine='exact' otherwise.  Parity with the
     exact loop is pinned by the engine-differential fuzz."""
+    what = "tws tt-join engine"
     spark0 = left.df.sparkSession
     require_tws(spark0)
     overlap = set(left.df.columns) & set(right.df.columns)
@@ -409,39 +502,24 @@ def join_tables_tws(
             "__side": "changelog union tag",
             **{f"__jk{i}": "join-key grouping column" for i in range(len(l_key))},
         },
-        "tws tt-join engine",
+        what,
     )
-    l_ddl = {f.name: f.dataType.simpleString() for f in left.df.schema.fields}
-    r_ddl = {f.name: f.dataType.simpleString() for f in right.df.schema.fields}
-    for lk, rk_ in zip(l_key, r_key):
-        if l_ddl[lk] != r_ddl[rk_]:
-            raise ValueError(
-                f"the tws tt-join engine requires equal key dtypes across sides; "
-                f"{lk}:{l_ddl[lk]} vs {rk_}:{r_ddl[rk_]} — cast one side or use engine='exact'"
-            )
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
-    for oc, cols in ((lord, left.df.columns), (rord, right.df.columns)):
-        missing = [c for c in oc if c not in cols]
-        if missing:
-            raise ValueError(f"order columns {missing} not in the side's columns")
+    lord, rord = _changelog_orders(left, right, l_order, r_order)
     l_val = [c for c in left.df.columns if c not in l_key]
     r_val = [c for c in right.df.columns if c not in r_key]
-    _refuse_hard_containers(
-        "tws tt-join engine",
-        (left.df.schema, list(l_key) + list(lord)),
-        (right.df.schema, list(r_key) + list(rord)),
+    _refuse(
+        _hard_container_refusal(
+            what, (left.df.schema, l_key + list(lord)), (right.df.schema, r_key + list(rord))
+        )
     )
     # container VALUE columns ride the state as pickled binary (see _enc_c)
     tun = _container_cols(left.df.schema, l_val) | _container_cols(right.df.schema, r_val)
+    # ts_alias merging compares the two sides' ts, so their dtypes must match too
     merge_ts = bool(ts_alias is not None and left.ts and right.ts)
-    if merge_ts and l_ddl[left.ts] != r_ddl[right.ts]:
-        raise ValueError(
-            "the tws tt-join engine requires equal ts dtypes for ts_alias merging; "
-            f"{left.ts}:{l_ddl[left.ts]} vs {right.ts}:{r_ddl[right.ts]} — use engine='exact'"
-        )
+    paired = list(zip(l_key, r_key)) + ([(left.ts, right.ts)] if merge_ts else [])
+    _refuse(_dtype_refusal(what, left.df.schema, right.df.schema, paired))
+    l_ddl = {f.name: f.dataType.simpleString() for f in left.df.schema.fields}
+    r_ddl = {f.name: f.dataType.simpleString() for f in right.df.schema.fields}
     out_l_val = [c for c in l_val if not (merge_ts and c == left.ts)]
     out_r_val = [c for c in r_val if not (merge_ts and c == right.ts)]
     empty_out = KTable(spark0.createDataFrame([], left.df.schema), left.key, left.ts).join(
@@ -451,11 +529,8 @@ def join_tables_tws(
     ).df
 
     jk = [f"__jk{i}" for i in range(len(l_key))]
-    l_src, r_src = left.df, right.df
-    for k in l_key:
-        l_src = l_src.filter(F.col(k).isNotNull())  # to_table drops null keys
-    for k in r_key:
-        r_src = r_src.filter(F.col(k).isNotNull())
+    # to_table drops null keys
+    l_src, r_src = _not_null(left.df, l_key), _not_null(right.df, r_key)
 
     def _ddl(c):
         return l_ddl.get(c) or r_ddl[c]
@@ -493,22 +568,8 @@ def join_tables_tws(
     l_key_pos = {c: i for i, c in enumerate(l_key)}
     r_key_pos = {c: i for i, c in enumerate(r_key)}
 
-    root = state_dir or tempfile.mkdtemp(prefix="pse-ttjoin-tws-")
-    os.makedirs(root, exist_ok=True)
-    _check_no_pending_compaction(root)
+    root, (ckpt,) = _open_state_dir(spark0, "tt", state_dir, checkpoint, what, key=l_key)
     out_dir = os.path.join(root, "out")
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(out_dir), "prior tt-join emissions"
-    )
-    _stamp_version(
-        root,
-        "_PSE_TWS_TTJOIN_V",
-        _TWS_TTJOIN_VERSION,
-        _has_emissions(out_dir) or _last_committed(ckpt) >= 0,
-        "tws tt-join",
-    )
-    _maybe_autocompact(spark0, root, ckpt, key=l_key)
-
     proc = _make_tt_processor(
         state_schema,
         l_val,
@@ -525,30 +586,8 @@ def join_tables_tws(
         ts_alias,
         tun=frozenset(tun),
     )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        _write_emissions(batch, os.path.join(out_dir, f"sink_batch={batch_id}"))
-
-    with _rocksdb_provider(spark0):
-        res = tagged.groupBy(*jk).transformWithState(proc, out_schema, "Update", "None")
-        q = (
-            res.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    if not _has_emissions(out_dir):
-        return empty_out
-    emitted = spark0.read.parquet(out_dir)
-    snap = KStream(emitted, tuple(l_key), None).to_table(order=("sink_batch",)).df
-    snap = snap.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in empty_out.schema.fields]
-    )
-    if store_name is not None:
-        snap.createOrReplaceTempView(store_name)
-    return snap
+    _drain(tagged, jk, proc, out_schema, "None", ckpt, out_dir)
+    return _snapshot(spark0, out_dir, l_key, "tt", empty_out, store_name)
 
 
 # ----------------------------------------------------------------- suppress
@@ -558,20 +597,12 @@ def _make_suppress_processor(state_schema, cols, key, tcol, limit_ms, out_cols, 
     StatefulProcessor = _import_stateful_processor()
     out_row = Row(*out_cols)
     NEG = -(1 << 62)
-
-    def _load(vals):
-        return [_dec_c(x) if c in tun else _norm(x) for c, x in zip(cols, vals)]
-
-    def _store(vals):
-        return [_enc_c(v) if c in tun else v for c, v in zip(cols, vals)]
+    _load, _store = _codec(cols, tun)
 
     class SuppressBuffer(StatefulProcessor):
         def init(self, handle):
             self.h = handle
             self.st = handle.getValueState("buf", state_schema)
-
-        def close(self):
-            pass
 
         def _rearm(self, entry):
             # TWS timers PERSIST across invocations (unlike GroupState
@@ -684,6 +715,7 @@ def suppress_tws(
     the state source (``stateVarName``)."""
     from .runtime import epoch_ms
 
+    what = "tws suppress engine"
     spark0 = src.df.sparkSession
     require_tws(spark0)
     key = list(table.key)
@@ -701,33 +733,19 @@ def suppress_tws(
             "__emit_batch": "emission metadata column",
             "sink_batch": "emission-log partition column",
         },
-        "tws suppress engine",
+        what,
     )
     value_cols = [c for c in cols if c not in key]
-    _refuse_hard_containers("tws suppress engine", (table.df.schema, key))
+    _refuse(_hard_container_refusal(what, (table.df.schema, key)))
     # container VALUE columns ride the state as pickled binary (see _enc_c)
     tun = _container_cols(table.df.schema, value_cols)
     ddl = {f.name: f.dataType.simpleString() for f in table.df.schema.fields}
 
-    root = state_dir or tempfile.mkdtemp(prefix="pse-suppress-tws-")
-    os.makedirs(root, exist_ok=True)
+    root, (ckpt,) = _open_state_dir(spark0, "suppress", state_dir, checkpoint, what)
     out_dir = os.path.join(root, "out")
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(out_dir), "prior suppress emissions"
-    )
     prior_batch = _last_committed(ckpt)
-    _stamp_version(
-        root,
-        "_PSE_TWS_SUPPRESS_V",
-        _TWS_SUPPRESS_VERSION,
-        _has_emissions(out_dir) or prior_batch >= 0,
-        "tws suppress",
-    )
-    _maybe_autocompact(spark0, root, ckpt)
 
-    sdf = src.df
-    for k in key:
-        sdf = sdf.filter(F.col(k).isNotNull())  # to_table drops null keys
+    sdf = _not_null(src.df, key)  # to_table drops null keys
     # Decoupled watermark: Spark's stateful operators filter input rows
     # older than the late-events watermark, but KS admits arbitrarily late
     # updates into the suppress buffer.  So every row ships twice — a DATA
@@ -760,27 +778,16 @@ def suppress_tws(
         state_schema, cols, key, tcol, limit_ms, cols + ["__fired"], tun=frozenset(tun)
     )
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        _write_emissions(
-            batch.select(
-                *cols,
-                F.lit("time").alias("__emit_reason"),
-                # timer-fired rows belong to the batch whose stream time
-                # passed the deadline — one earlier than the firing batch
-                (F.lit(int(batch_id)) - F.col("__fired").cast("long")).alias("__emit_batch"),
-            ),
-            os.path.join(out_dir, f"sink_batch={batch_id}"),
-        )
+    def _emission_cols(batch_id):
+        return [
+            *cols,
+            F.lit("time").alias("__emit_reason"),
+            # timer-fired rows belong to the batch whose stream time passed
+            # the deadline — one earlier than the firing batch
+            (F.lit(int(batch_id)) - F.col("__fired").cast("long")).alias("__emit_batch"),
+        ]
 
-    with _rocksdb_provider(spark0):
-        res = sdf.groupBy(*key).transformWithState(proc, out_schema, "Update", "EventTime")
-        q = (
-            res.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(sdf, key, proc, out_schema, "EventTime", ckpt, out_dir, select=_emission_cols)
 
     if store_name is not None:
         if _last_committed(ckpt) < 0:
@@ -826,31 +833,15 @@ def _make_fk_stage_a(state_schema, l_val, lord, l_key_pos, sub_cols, tun_l=froze
     n_lv = len(l_val)
     l_idx = {c: i for i, c in enumerate(l_val)}
     out_row = Row(*sub_cols)
-
-    def _load(vals):
-        return [_dec_c(x) if c in tun_l else _norm(x) for c, x in zip(l_val, vals)]
-
-    def _store(vals):
-        return [_enc_c(v) if c in tun_l else v for c, v in zip(l_val, vals)]
+    _load, _store = _codec(l_val, tun_l)
 
     class FKResolver(StatefulProcessor):
         def init(self, handle):
             self.st = handle.getValueState("sub", state_schema)
 
-        def close(self):
-            pass
-
         def handleInputRows(self, key, rows, timerValues):
             def make_ord(lookup):
-                vals = []
-                for c in lord:
-                    v = _norm(key[l_key_pos[c]]) if c in l_key_pos else _norm(lookup(c))
-                    if v is None:
-                        raise ValueError(
-                            "null order value in the tws fk-join engine — use engine='exact'"
-                        )
-                    vals.append(v)
-                return tuple(vals)
+                return _order_of(lord, key, l_key_pos, lookup, "fk-join")
 
             st = self.st.get()
             if st is not None:
@@ -862,7 +853,7 @@ def _make_fk_stage_a(state_schema, l_val, lord, l_key_pos, sub_cols, tun_l=froze
             cur_ord = make_ord(lambda c: vals[l_idx[c]]) if was_set else None
             changed = False
             for row in rows:
-                ov = make_ord(lambda c: _norm(row[c]))
+                ov = make_ord(lambda c: row[c])
                 if (cur_ord is None) or ov >= cur_ord:
                     vals = [_norm(row[c]) for c in l_val]
                     jfk = row["__jfk_in"]
@@ -896,39 +887,19 @@ def _make_fk_stage_b(
     n_lk, n_lv, n_rv = len(l_key), len(l_val), len(r_val)
     r_idx = {c: i for i, c in enumerate(r_val)}
     out_row = Row(*out_cols)
-    lkv = list(l_key) + list(l_val)
-
-    def _load_r(vals):
-        return [_dec_c(x) if c in tun_r else _norm(x) for c, x in zip(r_val, vals)]
-
-    def _store_r(vals):
-        return [_enc_c(v) if c in tun_r else v for c, v in zip(r_val, vals)]
-
-    def _load_sub(vals):
-        return [_dec_c(x) if c in tun_l else _norm(x) for c, x in zip(lkv, vals)]
-
-    def _store_sub(vals):
-        return [_enc_c(v) if c in tun_l else v for c, v in zip(lkv, vals)]
+    _load_r, _store_r = _codec(r_val, tun_r)
+    _load_sub, _store_sub = _codec(list(l_key) + list(l_val), tun_l)
+    # the right key is the grouping key (its SQL-canonical string)
+    rk_pos = {rk: 0}
 
     class FKJoin(StatefulProcessor):
         def init(self, handle):
             self.rstate = handle.getValueState("right", r_state_schema)
             self.subs = handle.getListState("subs", subs_schema)
 
-        def close(self):
-            pass
-
         def handleInputRows(self, key, rows, timerValues):
             def r_ord_of(lookup):
-                vals = []
-                for c in rord:
-                    v = key[0] if c == rk else _norm(lookup(c))
-                    if v is None:
-                        raise ValueError(
-                            "null order value in the tws fk-join engine — use engine='exact'"
-                        )
-                    vals.append(v)
-                return tuple(vals)
+                return _order_of(rord, key, rk_pos, lookup, "fk-join")
 
             st = self.rstate.get()
             if st is not None:
@@ -947,7 +918,7 @@ def _make_fk_stage_b(
             for row in rows:
                 op = row["op"]
                 if op == "R":
-                    ov = r_ord_of(lambda c: _norm(row[c]))
+                    ov = r_ord_of(lambda c: row[c])
                     if (cur_rord is None) or ov >= cur_rord:
                         r_vals = [_norm(row[c]) for c in r_val]
                         cur_rord, r_set, right_changed = ov, True, True
@@ -1040,6 +1011,7 @@ def join_fk_tws(
     round-trip nested containers).  Requires a string fk column name, equal
     fk/right-key dtypes, and non-null order values; ``engine='exact'``
     otherwise."""
+    what = "tws fk-join engine"
     spark0 = left.df.sparkSession
     require_tws(spark0)
     l_key = list(left.key)
@@ -1061,31 +1033,20 @@ def join_fk_tws(
             "__op_rank": "final-fold tie-breaker",
             "sink_batch": "emission-log partition column",
         },
-        "tws fk-join engine",
+        what,
+    )
+    if fk not in l_cols:
+        raise ValueError(f"fk column {fk!r} not in left columns")
+    _refuse(_dtype_refusal(what, left.df.schema, right.df.schema, [(fk, rk)]))
+    lord, rord = _changelog_orders(left, right, l_order, r_order)
+    l_val = [c for c in l_cols if c not in l_key]
+    _refuse(
+        _hard_container_refusal(
+            what, (left.df.schema, l_key + [fk] + list(lord)), (right.df.schema, list(rord))
+        )
     )
     l_ddl = {f.name: f.dataType.simpleString() for f in left.df.schema.fields}
     r_ddl = {f.name: f.dataType.simpleString() for f in right.df.schema.fields}
-    if fk not in l_ddl:
-        raise ValueError(f"fk column {fk!r} not in left columns")
-    if l_ddl[fk] != r_ddl[rk]:
-        raise ValueError(
-            f"the tws fk-join engine requires equal fk/right-key dtypes; "
-            f"{fk}:{l_ddl[fk]} vs {rk}:{r_ddl[rk]} — cast one side or use engine='exact'"
-        )
-    lord = tuple(l_order) if l_order else ((left.ts,) if left.ts else ())
-    rord = tuple(r_order) if r_order else ((right.ts,) if right.ts else ())
-    if not lord or not rord:
-        raise ValueError("changelog order required per side (ts or explicit l_order/r_order)")
-    for oc, cols in ((lord, l_cols), (rord, right.df.columns)):
-        missing = [c for c in oc if c not in cols]
-        if missing:
-            raise ValueError(f"order columns {missing} not in the side's columns")
-    l_val = [c for c in l_cols if c not in l_key]
-    _refuse_hard_containers(
-        "tws fk-join engine",
-        (left.df.schema, list(l_key) + [fk] + list(lord)),
-        (right.df.schema, list(rord)),
-    )
     # container VALUE columns ride the state as pickled binary (see _enc_c);
     # the sub-log parquet keeps them NATIVE (stage A emits decoded values)
     tun_l = _container_cols(left.df.schema, l_val)
@@ -1094,45 +1055,17 @@ def join_fk_tws(
         KTable(spark0.createDataFrame([], right.df.schema), right.key, right.ts), fk, how=how
     ).df
 
-    # ---------------- state dirs, binding, versioning ----------------
-    root = state_dir or tempfile.mkdtemp(prefix="pse-fkjoin-tws-")
-    os.makedirs(root, exist_ok=True)
-    _check_no_pending_compaction(root)
+    # the subscription log sub/ (stage A) and the emission log out/ (stage
+    # B), each bound to its own checkpoint sub-dir
+    root, (ckpt_a, ckpt_b) = _open_state_dir(
+        spark0, "fk", state_dir, checkpoint, what, logs=(("sub", "sub"), ("out", "join")), key=l_key
+    )
     subdir = os.path.join(root, "sub")
     outdir = os.path.join(root, "out")
-    os.makedirs(subdir, exist_ok=True)
-    ckpt_base = _checkpoint(checkpoint)
-    ckpt_a = _bind_state_checkpoint(
-        subdir,
-        os.path.join(ckpt_base, "sub"),
-        _has_emissions(subdir),
-        "prior fk-join subscription log",
-    )
-    ckpt_b = _bind_state_checkpoint(
-        outdir,
-        os.path.join(ckpt_base, "join"),
-        _has_emissions(outdir),
-        "prior fk-join emissions",
-    )
-    _stamp_version(
-        root,
-        "_PSE_TWS_FKJOIN_V",
-        _TWS_FKJOIN_VERSION,
-        (
-            _has_emissions(subdir)
-            or _has_emissions(outdir)
-            or _last_committed(ckpt_a) >= 0
-            or _last_committed(ckpt_b) >= 0
-        ),
-        "tws fk-join",
-    )
-    _maybe_autocompact(spark0, root, ckpt_base, key=l_key)
 
     # ---------------- stage A: subscription resolver (keyed by left PK) ----------------
-    a_src = left.df
-    for k in l_key:
-        a_src = a_src.filter(F.col(k).isNotNull())  # to_table drops null keys
-    a_in = a_src.select(
+    # to_table drops null keys
+    a_in = _not_null(left.df, l_key).select(
         *l_cols,
         F.col(fk).cast("string").alias("__jfk_in"),  # SQL-canonical join string
     )
@@ -1146,95 +1079,57 @@ def join_fk_tws(
     )
 
     proc_a = _make_fk_stage_a(state_a, l_val, lord, l_key_pos, sub_cols, tun_l=frozenset(tun_l))
+    _drain(a_in, l_key, proc_a, sub_schema, "None", ckpt_a, subdir)
 
-    def _sink_a(batch: DataFrame, batch_id: int) -> None:
-        _write_emissions(batch, os.path.join(subdir, f"sink_batch={batch_id}"))
-
-    with _rocksdb_provider(spark0):
-        res_a = a_in.groupBy(*l_key).transformWithState(proc_a, sub_schema, "Update", "None")
-        qa = (
-            res_a.writeStream.foreachBatch(_sink_a)
-            .option("checkpointLocation", ckpt_a)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qa.awaitTermination()
-
-        # ---------------- stage B: per-fk join state over sub-log ∪ right ----------------
-        sub_stream = spark0.readStream.schema(sub_schema + ", sink_batch int").parquet(subdir)
-        b_l = sub_stream.select(
-            "op",
-            "__jfk",
-            F.col("sink_batch").alias("__sub"),
-            *l_key,
-            *l_val,
-            *[F.lit(None).cast(r_ddl[c]).alias(c) for c in r_val],
-        )
-        r_src = right.df.filter(F.col(rk).isNotNull())
-        b_r = r_src.select(
-            F.lit("R").alias("op"),
-            F.col(rk).cast("string").alias("__jfk"),
-            F.lit(None).cast("int").alias("__sub"),
-            *[F.lit(None).cast(l_ddl[c]).alias(c) for c in l_key + l_val],
-            *[F.col(c) for c in r_val],
-        )
-        b_in = b_l.unionByName(b_r)
-        state_b = "__r_set boolean" + "".join(
-            f", `{c}` {'binary' if c in tun_r else r_ddl[c]}" for c in r_val
-        )
-        subs_schema = "__sub int" + "".join(
-            f", `{c}` {'binary' if c in tun_l else l_ddl[c]}" for c in l_key + l_val
-        )
-        out_cols = ["op", *l_key, *l_val, *r_val]
-        out_schema = (
-            "op string"
-            + "".join(f", `{c}` {l_ddl[c]}" for c in l_key + l_val)
-            + "".join(f", `{c}` {r_ddl[c]}" for c in r_val)
-        )
-        proc_b = _make_fk_stage_b(
-            state_b,
-            subs_schema,
-            l_key,
-            l_val,
-            r_val,
-            rord,
-            rk,
-            how,
-            out_cols,
-            tun_l=frozenset(tun_l),
-            tun_r=frozenset(tun_r),
-        )
-
-        def _sink_b(batch: DataFrame, batch_id: int) -> None:
-            _write_emissions(batch, os.path.join(outdir, f"sink_batch={batch_id}"))
-
-        res_b = b_in.groupBy("__jfk").transformWithState(proc_b, out_schema, "Update", "None")
-        qb = (
-            res_b.writeStream.foreachBatch(_sink_b)
-            .option("checkpointLocation", ckpt_b)
-            .trigger(availableNow=True)
-            .start()
-        )
-        qb.awaitTermination()
-
-    if not _has_emissions(outdir):
-        return empty_out
-    ranked = spark0.read.parquet(outdir).withColumn(
-        "__op_rank", (F.col("op") == "U").cast("int")
+    # ---------------- stage B: per-fk join state over sub-log ∪ right ----------------
+    sub_stream = spark0.readStream.schema(sub_schema + ", sink_batch int").parquet(subdir)
+    b_l = sub_stream.select(
+        "op",
+        "__jfk",
+        F.col("sink_batch").alias("__sub"),
+        *l_key,
+        *l_val,
+        *[F.lit(None).cast(r_ddl[c]).alias(c) for c in r_val],
     )
-    snap = KStream(ranked, tuple(l_key), None).to_table(order=("sink_batch", "__op_rank")).df
-    snap = snap.filter(F.col("op") == "U").select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in empty_out.schema.fields]
+    r_src = right.df.filter(F.col(rk).isNotNull())
+    b_r = r_src.select(
+        F.lit("R").alias("op"),
+        F.col(rk).cast("string").alias("__jfk"),
+        F.lit(None).cast("int").alias("__sub"),
+        *[F.lit(None).cast(l_ddl[c]).alias(c) for c in l_key + l_val],
+        *[F.col(c) for c in r_val],
     )
-    if store_name is not None:
-        snap.createOrReplaceTempView(store_name)
-    return snap
+    b_in = b_l.unionByName(b_r)
+    state_b = "__r_set boolean" + "".join(
+        f", `{c}` {'binary' if c in tun_r else r_ddl[c]}" for c in r_val
+    )
+    subs_schema = "__sub int" + "".join(
+        f", `{c}` {'binary' if c in tun_l else l_ddl[c]}" for c in l_key + l_val
+    )
+    out_cols = ["op", *l_key, *l_val, *r_val]
+    out_schema = (
+        "op string"
+        + "".join(f", `{c}` {l_ddl[c]}" for c in l_key + l_val)
+        + "".join(f", `{c}` {r_ddl[c]}" for c in r_val)
+    )
+    proc_b = _make_fk_stage_b(
+        state_b,
+        subs_schema,
+        l_key,
+        l_val,
+        r_val,
+        rord,
+        rk,
+        how,
+        out_cols,
+        tun_l=frozenset(tun_l),
+        tun_r=frozenset(tun_r),
+    )
+    _drain(b_in, ["__jfk"], proc_b, out_schema, "None", ckpt_b, outdir)
+    return _snapshot(spark0, outdir, l_key, "fk", empty_out, store_name)
 
 
 # ------------------------------------------------------------------ as-of join
-
-_TWS_ASOF_VERSION = "1"
-
 
 def _make_asof_processor(hist_schema, r_vals, l_vals, n_key, how, tol_ms, out_cols, tun_r):
     """Per-key as-of lookup: the key's version history
@@ -1255,19 +1150,11 @@ def _make_asof_processor(hist_schema, r_vals, l_vals, n_key, how, tol_ms, out_co
     out_row = Row(*out_cols)
     n_rv = len(r_vals)
     tol = _dt.timedelta(milliseconds=tol_ms) if tol_ms is not None else None
-
-    def _load_r(vals):
-        return [_dec_c(x) if c in tun_r else _norm(x) for c, x in zip(r_vals, vals)]
-
-    def _store_r(vals):
-        return [_enc_c(v) if c in tun_r else v for c, v in zip(r_vals, vals)]
+    _load_r, _store_r = _codec(r_vals, tun_r)
 
     class AsofLookup(StatefulProcessor):
         def init(self, handle):
             self.hist = handle.getListState("hist", hist_schema)
-
-        def close(self):
-            pass
 
         def handleInputRows(self, key, rows, timerValues):
             new_h, pending = [], []
@@ -1343,74 +1230,31 @@ def join_table_asof_tws(
     drain instead).  Emissions append to ``<out_dir>/out/sink_batch=<id>``
     partitions (overwritten on crash-replay — exactly-once) and the return
     is the accumulated result across all drains, like the exact engine."""
+    what = "tws as-of engine"
     spark0 = stream.df.sparkSession
     require_tws(spark0)
     if not stream.df.isStreaming:
         raise ValueError("join_table_asof_streaming requires a streaming stream side")
-    if stream.ts is None or table.ts is None:
-        raise ValueError("as-of join requires ts on both sides")
-    if len(stream.key) != len(table.key):
-        raise ValueError("join key arity mismatch")
+    _refuse(_asof_tws_refusal(stream, table, matched_ts))
     if how not in ("inner", "left"):
         raise ValueError("as-of join supports inner|left")
     s_ddl = {f.name: f.dataType.simpleString() for f in stream.df.schema.fields}
     t_ddl = {f.name: f.dataType.simpleString() for f in table.df.schema.fields}
-    if s_ddl[stream.ts] != "timestamp" or t_ddl[table.ts] != "timestamp":
-        raise ValueError(
-            "the tws as-of engine requires timestamp ts columns on both sides "
-            f"({stream.ts}:{s_ddl[stream.ts]}, {table.ts}:{t_ddl[table.ts]}) — "
-            "use engine='exact'"
-        )
     l_key = list(stream.key)
     l_vals = [c for c in stream.df.columns if c not in l_key and c != stream.ts]
     r_vals = [c for c in table.df.columns if c not in table.key and c != table.ts]
     overlap = (set(l_vals) | {stream.ts}) & set(r_vals)
     if overlap:
         raise ValueError(f"sides must have disjoint value column names; overlap: {sorted(overlap)}")
-    _check_reserved_columns(
-        list(stream.df.columns) + list(table.df.columns) + [matched_ts],
-        {
-            "sink_batch": "emission-log partition column",
-            "__side": "history/stream union tag",
-            "__sts": "stream event-time projection",
-            "__hts": "version event-time projection",
-            **{f"__jk{i}": "join-key grouping column" for i in range(len(l_key))},
-        },
-        "tws as-of engine",
-    )
-    _refuse_hard_containers(
-        "tws as-of engine",
-        (stream.df.schema, list(l_key) + [stream.ts]),
-        (table.df.schema, list(table.key) + [table.ts]),
-    )
     tun_r = _container_cols(table.df.schema, r_vals)
-
-    for lk, rk_ in zip(l_key, table.key):
-        if s_ddl[lk] != t_ddl[rk_]:
-            raise ValueError(
-                f"the tws as-of engine requires equal key dtypes across sides; "
-                f"{lk}:{s_ddl[lk]} vs {rk_}:{t_ddl[rk_]} — cast one side or use engine='exact'"
-            )
-
-    root = out_dir or tempfile.mkdtemp(prefix="pse-asof-tws-")
-    os.makedirs(root, exist_ok=True)
-    if any(e.startswith("sink_batch=") or e.startswith("part-") for e in os.listdir(root)):
+    if _asof_dir_engine(out_dir) == "exact":
         raise ValueError(
-            f"out dir {root!r} holds the exact as-of engine's output layout; "
+            f"out dir {out_dir!r} holds the exact as-of engine's output layout; "
             "pass engine='exact' to resume it, or a fresh out_dir"
         )
+    root, (ckpt,) = _open_state_dir(spark0, "asof", out_dir, checkpoint, what)
     emit_dir = os.path.join(root, "out")
     hist_dir = os.path.join(root, "hist")
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(emit_dir), "prior as-of join output"
-    )
-    _stamp_version(
-        root,
-        "_PSE_TWS_ASOF_V",
-        _TWS_ASOF_VERSION,
-        _has_emissions(emit_dir) or _last_committed(ckpt) >= 0,
-        "tws as-of join",
-    )
     if os.path.isdir(hist_dir) and not os.path.exists(os.path.join(hist_dir, "_SUCCESS")):
         # torn staging (crash mid-write before this code staged atomically):
         # the drain never started, so nothing consumed it — restage
@@ -1423,10 +1267,7 @@ def join_table_asof_tws(
         # against
         tmp_hist = hist_dir + "-tmp"
         shutil.rmtree(tmp_hist, ignore_errors=True)
-        h = table.df
-        for k in table.key:
-            h = h.filter(F.col(k).isNotNull())
-        h.write.parquet(tmp_hist)
+        _not_null(table.df, table.key).write.parquet(tmp_hist)
         os.rename(tmp_hist, hist_dir)
 
     jk = [f"__jk{i}" for i in range(len(l_key))]
@@ -1440,10 +1281,7 @@ def join_table_asof_tws(
         *[F.lit(None).cast(s_ddl[c]).alias(c) for c in l_vals],
         *[F.col(c) for c in r_vals],
     )
-    s_src = stream.df
-    for k in l_key:
-        s_src = s_src.filter(F.col(k).isNotNull())
-    s_tagged = s_src.select(
+    s_tagged = _not_null(stream.df, l_key).select(
         F.lit(1).alias("__side"),
         *[F.col(k).alias(j) for k, j in zip(l_key, jk)],
         F.col(stream.ts).alias("__sts"),
@@ -1467,19 +1305,7 @@ def join_table_asof_tws(
     proc = _make_asof_processor(
         hist_state, r_vals, l_vals, len(l_key), how, tolerance_ms, out_cols, frozenset(tun_r)
     )
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        _write_emissions(batch, os.path.join(emit_dir, f"sink_batch={batch_id}"))
-
-    with _rocksdb_provider(spark0):
-        res = tagged.groupBy(*jk).transformWithState(proc, out_schema, "Update", "None")
-        q = (
-            res.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(tagged, jk, proc, out_schema, "None", ckpt, emit_dir)
 
     if not _has_emissions(emit_dir):
         empty = KStream(

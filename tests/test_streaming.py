@@ -3116,12 +3116,13 @@ def test_engine_none_auto_selection_honors_dirs_and_containers(spark, tmp_path):
 
 def test_engine_keyed_value_raises_naming_tws_and_exact(spark, tmp_path):
     """The pandas keyed engine was removed: engine='keyed' is refused on
-    every continuous-table entry point with a message naming the two
-    remaining engines."""
+    every continuous-table entry point, and on the as-of join, with a
+    message naming the two remaining engines."""
     import datetime as dt
 
     from pyspark_engine.streaming import (
         join_fk_streaming,
+        join_table_asof_streaming,
         join_tables_streaming,
         suppress_buffered,
     )
@@ -3146,6 +3147,15 @@ def test_engine_keyed_value_raises_naming_tws_and_exact(spark, tmp_path):
         "suppress_buffered": lambda: suppress_buffered(
             sides()[0].to_table().suppress(until_time_limit_ms=60_000),
             time_col="lts",
+            engine="keyed",
+        ),
+        "join_table_asof_streaming": lambda: join_table_asof_streaming(
+            sides()[0],
+            StreamBuilder(spark).versioned_table(
+                spark.createDataFrame([(1, "x", t(0))], "k int, rv string, rts timestamp"),
+                key="k",
+                ts="rts",
+            ),
             engine="keyed",
         ),
     }
@@ -3292,12 +3302,13 @@ def test_compact_emission_log_fk_and_suppress(spark, tmp_path):
 @pytest.mark.slow
 def test_autocompact_bounds_partitions_across_drains(spark, tmp_path, monkeypatch):
     """r12 verdict task 5: the compact-every-N policy runs automatically at
-    drain entry (PSE_COMPACT_EVERY), so a long-lived resumed state dir keeps
+    drain entry (_AUTOCOMPACT_EVERY), so a long-lived resumed state dir keeps
     a bounded ``out/`` partition count — and the folded snapshot stays
     identical to an untouched twin fed the same batches with auto-compaction
     disabled."""
     import os
 
+    from pyspark_engine import streaming
     from pyspark_engine.streaming import join_tables_streaming
 
     n_drains = 8
@@ -3324,8 +3335,9 @@ def test_autocompact_bounds_partitions_across_drains(spark, tmp_path, monkeypatc
         return [e for e in os.listdir(out) if e.startswith("sink_batch=")]
 
     for i in range(1, n_drains + 1):
-        for name, every in (("auto", "3"), ("plain", "0")):
-            monkeypatch.setenv("PSE_COMPACT_EVERY", every)
+        # the plain twin's cadence lies beyond every partition it gathers
+        for name, every in (("auto", 3), ("plain", 100 * n_drains)):
+            monkeypatch.setattr(streaming, "_AUTOCOMPACT_EVERY", every)
             ld = dirs[name][0]
             _write_source_file(
                 spark, [(k, i * 10 + k, i) for k in range(4)], "k long, lv long, lo long", ld, i

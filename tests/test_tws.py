@@ -392,9 +392,6 @@ def test_upstream_nested_container_value_state_roundtrip(spark, tmp_path):
         def init(self, handle):
             self.st = handle.getValueState("v", state_schema)
 
-        def close(self):
-            pass
-
         def handleInputRows(self, key, rows, timerValues):
             list(rows)  # drain the iterator
             prev = self.st.get()
@@ -485,6 +482,52 @@ def test_asof_tws_engine_guards_and_resume(spark, tmp_path):
     join_table_asof_streaming(ks(), vt, how="left", out_dir=root2, checkpoint=ck2, engine="exact")
     with pytest.raises(ValueError, match="exact as-of engine"):
         join_table_asof_streaming(ks(), vt, out_dir=root2, checkpoint=ck2, engine="tws")
+
+
+def test_asof_tws_schema_guard_refuses_and_engine_raises(spark, tmp_path):
+    """The tws as-of engine's schema guard is one function: engine=None
+    auto-selection picks 'exact' on its refusal, and engine='tws' raises
+    that same refusal — before it opens its out dir or starts a query."""
+    import re
+
+    from pyspark_engine import StreamBuilder as BatchBuilder
+    from pyspark_engine.streaming import _asof_tws_refusal, join_table_asof_streaming
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    def stream(name, schema, row):
+        return _mk_stream(spark, tmp_path, name, schema, [row], "k", "ts")
+
+    hist = spark.createDataFrame([(1, t0, 100)], "k long, hts timestamp, pv long")
+    table = BatchBuilder(spark).versioned_table(hist, key="k", ts="hts")
+    arr_hist = spark.createDataFrame([([1], t0, 100)], "k array<int>, hts timestamp, pv long")
+    arr_table = BatchBuilder(spark).versioned_table(arr_hist, key="k", ts="hts")
+
+    refused = {
+        "timestamp ts": (stream("long_ts", "k long, ts long, sid long", (1, 5, 0)), table),
+        "equal join-column dtypes": (
+            stream("int_key", "k int, ts timestamp, sid long", (1, t0, 0)),
+            table,
+        ),
+        "__sts": (
+            stream("reserved", "k long, ts timestamp, __sts long", (1, t0, 0)),
+            table,
+        ),
+        "container-typed columns ['k']": (
+            stream("arr_key", "k array<int>, ts timestamp, sid long", ([1], t0, 0)),
+            arr_table,
+        ),
+    }
+    for i, (needle, (ks, vt)) in enumerate(refused.items()):
+        refusal = _asof_tws_refusal(ks, vt, "matched_ts")
+        assert refusal is not None and needle in refusal, (needle, refusal)
+        out = str(tmp_path / f"out{i}")
+        with pytest.raises(ValueError, match=re.escape(refusal)):
+            join_table_asof_streaming(ks, vt, how="left", out_dir=out, engine="tws")
+        assert not os.path.exists(out)
+
+    ok = stream("ok", "k long, ts timestamp, sid long", (1, t0, 0))
+    assert _asof_tws_refusal(ok, table, "matched_ts") is None
 
 
 # ------------------------------------------- one execution per micro-batch
@@ -810,9 +853,9 @@ def test_tws_sinks_take_one_action_per_batch():
     from pyspark_engine import tws
 
     scanned, hits = _batch_actions(inspect.getsource(tws))
-    # the five sinks (tt, suppress and as-of _sink; fk stages A and B) and
-    # the helper they write through
-    assert scanned == ["_sink", "_sink", "_sink", "_sink_a", "_sink_b", "_write_emissions"]
+    # the one foreachBatch sink (_drain's, shared by every tws drain) and
+    # the helper it writes through
+    assert scanned == ["_sink", "_write_emissions"]
     assert hits == []
 
     # the scan trips on the pattern it guards against
