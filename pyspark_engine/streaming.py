@@ -496,14 +496,18 @@ def compact_emission_log(
     the displaced base goes to ``compact-trash-<id>`` until the swap
     completes, and a re-run (or this function at next call) finishes or
     rolls back an interrupted pass; the engines refuse to drain over a
-    half-swapped log until then.  Run it from the SAME single-writer
-    context as the drains — it must not race a live query on the dir.
+    half-swapped log until then.  It first stops the dir's resident tws
+    queries (``tws.stop_resident``); run it from the SAME single-writer
+    context as the drains.
 
     Returns a summary dict (kind, folded/pruned partition counts, rows)."""
     import shutil  # noqa: PLC0415
 
+    from .tws import stop_resident  # noqa: PLC0415 - tws imports this module
+
     root = state_dir
     _refuse_legacy_keyed_dir(root)
+    stop_resident(root)  # a resident query must not write the log being rewritten
     is_fk = os.path.isdir(os.path.join(root, "sub"))
     out_dir = os.path.join(root, "out")
     _recover_compaction(out_dir, root)
@@ -1199,9 +1203,10 @@ def join_tables_streaming(
 
     Emission cadence is per-microbatch instead of per-record (§7.3.3:
     coarser cadence, same final state — which is what the parity tests
-    compare).  Both engines drain with an availableNow trigger and return
-    the final joined snapshot (also registered under ``store_name`` for the
-    interactive-query surface).
+    compare).  The exact engine drains with an availableNow trigger, the tws
+    engine through its resident query (README "tws call contract"); both
+    return the final joined snapshot (also registered under ``store_name``
+    for the interactive-query surface).
     """
     if not (left.df.isStreaming and right.df.isStreaming):
         raise ValueError("join_tables_streaming requires streaming inputs; use KTable.join in batch")
@@ -1554,11 +1559,15 @@ def suppress_buffered(
     ``out/sink_batch=<id>`` partition with OVERWRITE, so a crash-replayed
     batch rewrites its own partition instead of appending duplicates
     (exactly-once emission), and both return only emissions newer than the
-    checkpoint's last COMMITTED batch at drain start (a resumed drain never
-    re-delivers, and a batch that crashed pre-commit is re-delivered —
-    it was never returned to any caller).
+    checkpoint's last COMMITTED batch at drain start — for tws, newer than
+    the batch its previous call in this process returned, so batches its
+    resident query committed in the background in between are delivered
+    too (a resumed drain never re-delivers, and a batch that crashed
+    pre-commit is re-delivered — it was never returned to any caller).
 
-    Drains availableNow and returns the emitted records — columns = the
+    Drains the available input (exact: availableNow; tws: its resident
+    query, which also returns the batches it committed in the background
+    since the previous call) and returns the emitted records — columns = the
     table's columns plus ``__emit_reason`` ('time' | 'early') and
     ``__emit_batch`` — in emission order; entries still inside their time
     limit at drain end stay buffered (readable via ``store_name``), exactly

@@ -239,16 +239,27 @@ def stage_generation_file(
     listing ignores) then renames, so a streaming file source never sees a
     partial file; stamps a deterministic mtime because the file source
     batches oldest-first (one file per microbatch under
-    maxFilesPerTrigger=1)."""
+    maxFilesPerTrigger=1).  The mtime is set before the rename, so a
+    running query never lists the file with another one."""
     os.makedirs(dest_dir, exist_ok=True)
     stage = os.path.join(dest_dir, f"_stage-{seq}")
     df.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(f for f in os.listdir(stage) if f.startswith("part-"))
+    part = os.path.join(stage, next(f for f in os.listdir(stage) if f.startswith("part-")))
+    os.utime(part, (mtime_base + seq, mtime_base + seq))
     dst = os.path.join(dest_dir, f"gen-{seq:06d}.parquet")
-    os.rename(os.path.join(stage, part), dst)
+    os.rename(part, dst)
     shutil.rmtree(stage)
-    os.utime(dst, (mtime_base + seq, mtime_base + seq))
     return dst
+
+
+def publish_generation_files(staged_dir: str, dest_dir: str) -> None:
+    """Move every generation file staged (``stage_generation_file``) in
+    ``staged_dir`` into ``dest_dir`` by rename, so a streaming source —
+    including a resident query already polling ``dest_dir`` — sees the
+    whole backlog at once."""
+    for name in sorted(os.listdir(staged_dir)):
+        if name.startswith("gen-"):
+            os.rename(os.path.join(staged_dir, name), os.path.join(dest_dir, name))
 
 
 def _sort_key(v):

@@ -21,11 +21,13 @@ path:
   version marker (``streaming._TWS_MARKERS``; it identifies the dir's owner
   for resume and for ``streaming.compact_emission_log``) and, except for
   the as-of join, compact the log at the autocompaction cadence;
-* ``_drain`` — one ``availableNow`` drain of the processor under the
-  RocksDB provider, with one foreachBatch sink writing each micro-batch
-  through ``_write_emissions``;
-* ``_snapshot`` — the tt/fk latest-per-key fold
-  (``streaming._fold_emission_log``, shared with compaction);
+* ``_drain`` — drive the processor's RESIDENT query (below) until the
+  input available at the call is committed, with one foreachBatch sink
+  publishing each micro-batch through ``_write_emissions``;
+* ``_read_log`` / ``_snapshot`` — the emission log read with its known
+  schema up to the call's last committed batch, and the tt/fk
+  latest-per-key fold (``streaming._fold_emission_log``, shared with
+  compaction);
 * processor side: ``_codec`` (state-cell load/store), ``_order_of`` (the
   changelog order tuple and its null-order refusal) and ``_norm``.
 
@@ -34,19 +36,34 @@ is a plain batch DataFrame over the stateful plan, and every action on it
 recomputes that plan — transformWithState, the Python state workers and
 the RocksDB commit.  So the sink hands its batch to ``_write_emissions``,
 which writes the partition and counts its rows in the same action (an
-observed metric) and removes the partition when the count is 0; the sink
-never probes the batch with a second action (``tests/test_tws.py`` guards
-this).  The processors ship BY VALUE, with the module helpers they call:
-unpickling one imports only pyspark and the standard library, not this
-package or pandas, so neither the driver's pre-init worker nor the
-executor state workers import the engine — which is why the
-processor-side helpers live here and not in ``streaming.py``.  Measured
-floor that remains (100-key update against a 20k-key tt join, 4 vCPU,
-~3.3 s per call): about 1.1 s of the driver's pre-init worker importing
-pyspark from Spark's ``pyspark.zip`` (a zip import caches no bytecode:
-1.06-1.25 s there against 0.22 s from site-packages; only a long-lived
-query would avoid it), and about 0.7 s of RocksDB commit per update,
-summed over the state tasks.
+observed metric) and publishes the partition only when the count is not
+0; the sink never probes the batch with a second action
+(``tests/test_tws.py`` guards this).  The processors ship BY VALUE, with
+the module helpers they call: unpickling one imports only pyspark and
+the standard library, not this package or pandas, so neither the
+query's pre-init worker nor the executor state workers import the
+engine — which is why the processor-side helpers live here and not in
+``streaming.py``.
+
+Resident queries.  Starting a transformWithState query costs about a
+second before its first batch: the query's pre-init Python worker imports
+pyspark from Spark's ``pyspark.zip`` (a zip import caches no bytecode),
+and each run reloads its RocksDB stores.  So a drain's query outlives the
+call (``_drain``): one query per session and checkpoint, started with the
+default trigger on the first call; a later call with the same plan only
+waits in ``processAllAvailable`` until every input available at the call
+is committed, and a changed plan stops it and starts a new run on the
+same checkpoint.  Between calls the query processes new input in the
+background and polls its sources every 100 ms while idle (Spark's 10 ms
+default kept about half a JVM core busy).  It stops when a drain opens
+another state dir (at most one dir's queries run; the fk join's two stages
+share theirs), before compaction rewrites the dir's log, when it fails
+(the next call starts a new run) and with the session; ``stop_resident``
+stops a dir's queries on demand.  Every result a call returns is pinned
+to the batches committed when it returned (``sink_batch <= upto``), so a
+background batch cannot change it, and the suppress emissions a call
+returns are the batches since the previous call returned — including
+those committed in the background in between.
 
 * **Native types.**  ``transformWithState`` hands the processor
   ``pyspark.sql.Row`` objects, where a nullable int64 column stays a Python
@@ -92,6 +109,7 @@ import shutil
 import sys
 import tempfile
 from contextlib import contextmanager
+from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark import cloudpickle
@@ -141,46 +159,48 @@ def require_tws(spark) -> None:
         )
 
 
-@contextmanager
-def _rocksdb_provider(spark):
-    """transformWithState requires the RocksDB state-store provider (it is
-    the only one with multi-column-family support).  Scope the conf to the
-    drain so concurrent/later queries in the same session — e.g. a
-    ``stateful_map`` or ``sessionize_streaming`` checkpoint on the default
-    HDFS provider — keep their own provider.
+# The session confs a tws query starts under.  A streaming query keeps the
+# confs it started with, so they are scoped to the start (``_drain_confs``)
+# and concurrent or later queries in the session — e.g. a ``stateful_map``
+# checkpoint on the default HDFS provider — keep their own.
+_DRAIN_CONFS = {
+    # transformWithState requires the RocksDB state-store provider (the only
+    # one with multi-column-family support)
+    "spark.sql.streaming.stateStore.providerClass": _TWS_PROVIDER,
+    # ``_norm``'s contract: tz-aware input rows normalize to UTC-naive and
+    # the value-state round-trip reinterprets naive datetimes in the SESSION
+    # tz, so on a non-UTC session order comparisons and emitted timestamps
+    # would skew by the zone offset
+    "spark.sql.session.timeZone": "UTC",
+    # how often a resident query polls its sources while idle between
+    # calls; Spark's 10 ms default keeps an idle query on about half a JVM
+    # core
+    "spark.sql.streaming.pollingDelay": "100ms",
+}
 
-    Also pins ``spark.sql.session.timeZone=UTC`` for the drain: ``_norm``'s
-    contract is that tz-aware input rows normalize to UTC-naive and the
-    value-state round-trip reinterprets naive datetimes in the SESSION tz —
-    on an externally created non-UTC session order
-    comparisons and emitted timestamps would otherwise skew by the zone
-    offset.  Scoping (rather than raising) keeps foreign sessions working;
-    restored on exit."""
-    tz_key = "spark.sql.session.timeZone"
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev_tz = spark.conf.get(tz_key)
-    except Exception:
-        prev_tz = None
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    # both sets INSIDE the protected region: an exception between them must
+
+@contextmanager
+def _drain_confs(spark):
+    """Set ``_DRAIN_CONFS`` on the session for the block and restore the
+    caller's values on exit (scoping rather than raising keeps foreign
+    sessions working)."""
+    prev = {}
+    # every set INSIDE the protected region: an exception between them must
     # still restore whatever was already flipped
     try:
-        spark.conf.set(tz_key, "UTC")
-        spark.conf.set(key, _TWS_PROVIDER)
+        for key, value in _DRAIN_CONFS.items():
+            try:
+                prev[key] = spark.conf.get(key)
+            except Exception:
+                prev[key] = None
+            spark.conf.set(key, value)
         yield
     finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-        if prev_tz is None:
-            spark.conf.unset(tz_key)
-        else:
-            spark.conf.set(tz_key, prev_tz)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def _refuse(refusal: str | None) -> None:
@@ -246,30 +266,89 @@ def _stamp_version(root: str, marker: str, version: str, populated: bool, what: 
         os.replace(ver_path + ".tmp", ver_path)
 
 
-def _write_emissions(batch: DataFrame, path: str) -> None:
-    """Write one micro-batch's emissions to its ``sink_batch=<id>``
-    partition in ONE action.  The foreachBatch DataFrame recomputes its
-    lineage — the whole stateful plan — on every action, so the row count
-    rides the write as an observed metric instead of a second action; a
-    batch that emitted nothing then removes its (empty) partition, so only
-    emitting batches leave one."""
+def _write_emissions(batch: DataFrame, log_dir: str, batch_id: int) -> None:
+    """Publish one micro-batch's emissions as the ``sink_batch=<id>``
+    partition of ``log_dir`` in ONE action.  The foreachBatch DataFrame
+    recomputes its lineage — the whole stateful plan — on every action, so
+    the row count rides the write as an observed metric instead of a second
+    action.  The write goes to a hidden ``.sink_batch=<id>`` staging dir
+    (file listings skip a leading ``.``) that is renamed into place only when
+    the batch emitted rows, so a reader polling the log — the fk join's stage
+    B reads stage A's ``sub/`` — never lists a partly written partition or an
+    empty one about to go.  A crash-replayed batch replaces its own
+    partition."""
+    part = os.path.join(log_dir, f"sink_batch={batch_id}")
+    stage = os.path.join(log_dir, f".sink_batch={batch_id}")
     obs = Observation()
-    batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
-    if not obs.get["n"]:
-        shutil.rmtree(path)
+    batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
+    if os.path.isdir(part):
+        shutil.rmtree(part)
+    if obs.get["n"]:
+        os.rename(stage, part)
+    else:
+        shutil.rmtree(stage)
+
+
+@dataclass
+class _Resident:
+    """The resident query of one checkpoint: the session and plan it runs
+    (``sig`` plus the input DataFrame), the state dir it writes, and
+    ``upto``, the last committed batch a call returned — kept after the
+    query stops, so the next run's first call also returns what the
+    stopped query committed after it."""
+
+    spark: object
+    root: str
+    sig: tuple
+    df: DataFrame | None
+    query: object | None
+    upto: int
+
+
+# checkpoint path -> its resident query
+_RESIDENT: dict[str, _Resident] = {}
+
+
+def _stop_where(pred) -> None:
+    """Stop every running resident query whose entry matches ``pred``; the
+    entries, with their delivery cursors, stay.  A query first finishes
+    the input it has: a new run would not run the no-data batch (due
+    suppress timers) that a committed batch still owes.  A query that
+    failed is left to the next call on its dir, which raises the error."""
+    from pyspark.errors import StreamingQueryException  # noqa: PLC0415
+
+    for res in _RESIDENT.values():
+        if res.query is not None and pred(res):
+            q, res.query, res.df = res.query, None, None
+            try:
+                q.processAllAvailable()
+            except StreamingQueryException:
+                pass
+            q.stop()
+
+
+def stop_resident(state_dir: str) -> None:
+    """Stop the resident tws queries of ``state_dir``.  The next call on
+    the dir starts a new run on the same checkpoint.  The drains stop
+    queries themselves (see ``_drain``); a caller needs this only to
+    release a dir's queries early."""
+    root = os.path.abspath(state_dir)
+    _stop_where(lambda res: res.root == root)
 
 
 def _open_state_dir(spark, kind, state_dir, checkpoint, what, logs=(("out", None),), key=()):
     """Open a tws state dir for one drain; returns (root, one checkpoint per
-    log).  Every engine opens its dir in the same order: heal an interrupted
-    compaction, bind each emission log to its checkpoint, gate the engine
-    version (``kind`` names its marker in ``_TWS_MARKERS``), then compact at
-    the autocompaction cadence on the fold ``key`` — except for the as-of
-    join, since compaction has no as-of log kind.  ``logs`` = (log dir
-    under the root, checkpoint sub-dir); a None sub-dir binds the root
-    itself to the checkpoint (the fk join binds each of its two logs to its
-    own sub-dir)."""
-    root = state_dir or tempfile.mkdtemp(prefix=f"pse-{kind}-tws-")
+    log).  Opening a dir stops the resident queries of every other dir, so
+    at most one dir's queries run.  Then every engine opens its dir in the
+    same order: heal an interrupted compaction, bind each emission log to
+    its checkpoint, gate the engine version (``kind`` names its marker in
+    ``_TWS_MARKERS``), then compact at the autocompaction cadence on the
+    fold ``key`` — except for the as-of join, since compaction has no as-of
+    log kind.  ``logs`` = (log dir under the root, checkpoint sub-dir); a
+    None sub-dir binds the root itself to the checkpoint (the fk join binds
+    each of its two logs to its own sub-dir)."""
+    root = os.path.abspath(state_dir or tempfile.mkdtemp(prefix=f"pse-{kind}-tws-"))
+    _stop_where(lambda res: res.root != root)
     os.makedirs(root, exist_ok=True)
     _check_no_pending_compaction(root)
     base = _checkpoint(checkpoint)
@@ -287,36 +366,88 @@ def _open_state_dir(spark, kind, state_dir, checkpoint, what, logs=(("out", None
     return root, ckpts
 
 
-def _drain(df, keys, proc, out_schema, time_mode, ckpt, log_dir, select=None) -> None:
-    """Run ``proc`` over ``df`` grouped by ``keys`` as one ``availableNow``
-    drain on ``ckpt``: each micro-batch's emissions — projected by
+def _drain(df, keys, make, args, out_schema, time_mode, ckpt, log_dir, select=None, watermark=None):
+    """Drive the processor ``make(*args)`` over ``df`` grouped by ``keys``
+    on ``ckpt`` until every input available at the call is processed and
+    committed; each micro-batch's emissions — projected by
     ``select(batch_id)`` when given — land in ``<log_dir>/sink_batch=<id>``
-    through _write_emissions, the one action a micro-batch takes."""
+    through _write_emissions, the one action a micro-batch takes.
+    ``watermark`` = (column, delay) is applied here, after the plan
+    comparison below: each ``withWatermark`` node carries a fresh id, so two
+    equal plans with watermarks never compare equal.
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        if select is not None:
-            batch = batch.select(*select(batch_id))
-        _write_emissions(batch, os.path.join(log_dir, f"sink_batch={batch_id}"))
+    The query is RESIDENT: one per session and checkpoint.  The first call
+    starts it with the default trigger and waits in
+    ``processAllAvailable``; a later call with the same input plan
+    (``sameSemantics``), grouping keys, output schema, time mode, processor
+    parameters and checkpoint bind token (a checkpoint deleted and bound
+    again is a new one) only waits on the running query, which keeps its
+    pre-initialized state workers and loaded RocksDB stores.  Any other
+    call stops it and starts a new run on the same checkpoint.  Between
+    calls the query polls its sources every 100 ms and processes new input
+    in the background.  The queries of a dir stop when a drain opens
+    another dir (``_open_state_dir``), before a compaction rewrites the log
+    (``compact_emission_log``), when the query fails (the next call starts
+    a new run) and with the session.
 
-    with _rocksdb_provider(df.sparkSession):
-        res = df.groupBy(*keys).transformWithState(proc, out_schema, "Update", time_mode)
-        q = (
-            res.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    Returns ``(since, upto)``: this call delivers the batches ``since < id
+    <= upto``, where ``upto`` is the last batch committed when the call
+    returns and ``since`` what the previous call on the checkpoint returned
+    (on a first call, or after the checkpoint's commits went back, the
+    checkpoint's commit cursor at entry).  Readers that filter on ``upto``
+    are pinned to this call: batches that later input triggers cannot
+    change them."""
+    spark = df.sparkSession
+    key = os.path.abspath(ckpt)
+    bind = _read_bind(os.path.join(ckpt, "_PSE_BIND"))
+    sig = (tuple(keys), out_schema, time_mode, log_dir, make.__name__, repr(args), watermark, bind)
+    res = _RESIDENT.get(key)
+    committed = _last_committed(ckpt)
+    since = committed if res is None else min(res.upto, committed)
+    if res is not None and res.query is not None and not (
+        res.spark is spark
+        and res.sig == sig
+        and res.query.isActive
+        and df.sameSemantics(res.df)
+    ):
+        _stop_where(lambda r: r is res)
+    if res is None or res.query is None:
+
+        def _sink(batch: DataFrame, batch_id: int) -> None:
+            if select is not None:
+                batch = batch.select(*select(batch_id))
+            _write_emissions(batch, log_dir, batch_id)
+
+        src = df if watermark is None else df.withWatermark(*watermark)
+        proc = make(*args)
+        with _drain_confs(spark):
+            out = src.groupBy(*keys).transformWithState(proc, out_schema, "Update", time_mode)
+            q = out.writeStream.foreachBatch(_sink).option("checkpointLocation", ckpt).start()
+        res = _RESIDENT[key] = _Resident(spark, os.path.dirname(log_dir), sig, df, q, since)
+    try:
+        res.query.processAllAvailable()
+    except Exception:
+        _stop_where(lambda r: r is res)
+        raise
+    res.upto = _last_committed(ckpt)
+    return since, res.upto
 
 
-def _snapshot(spark, log_dir, key, kind, empty_out, store_name):
+def _read_log(spark, log_dir, schema, upto, since=-1) -> DataFrame:
+    """The batches ``since < sink_batch <= upto`` of an emission log, read
+    with the log's known column ``schema`` (no schema-inference job)."""
+    log = spark.read.schema(f"{schema}, sink_batch int").parquet(log_dir)
+    return log.filter((F.col("sink_batch") > F.lit(since)) & (F.col("sink_batch") <= F.lit(upto)))
+
+
+def _snapshot(spark, log_dir, schema, upto, key, kind, empty_out, store_name):
     """The tt/fk join's returned table: the latest-per-key fold of its
-    emission log (fk keys whose last op is D are gone), cast to the batch
-    join's schema and registered under ``store_name``; ``empty_out`` when
-    no batch ever emitted."""
+    emission log up to batch ``upto`` (fk keys whose last op is D are gone),
+    cast to the batch join's schema and registered under ``store_name``;
+    ``empty_out`` when no batch ever emitted."""
     if not _has_emissions(log_dir):
         return empty_out
-    snap = _fold_emission_log(spark.read.parquet(log_dir), key, kind)
+    snap = _fold_emission_log(_read_log(spark, log_dir, schema, upto), key, kind)
     if kind == "fk":
         snap = snap.filter(F.col("op") == "U")
     snap = snap.select(
@@ -570,7 +701,7 @@ def join_tables_tws(
 
     root, (ckpt,) = _open_state_dir(spark0, "tt", state_dir, checkpoint, what, key=l_key)
     out_dir = os.path.join(root, "out")
-    proc = _make_tt_processor(
+    args = (
         state_schema,
         l_val,
         r_val,
@@ -584,10 +715,10 @@ def join_tables_tws(
         left.ts if merge_ts else None,
         right.ts if merge_ts else None,
         ts_alias,
-        tun=frozenset(tun),
+        frozenset(tun),
     )
-    _drain(tagged, jk, proc, out_schema, "None", ckpt, out_dir)
-    return _snapshot(spark0, out_dir, l_key, "tt", empty_out, store_name)
+    _, upto = _drain(tagged, jk, _make_tt_processor, args, out_schema, "None", ckpt, out_dir)
+    return _snapshot(spark0, out_dir, out_schema, upto, l_key, "tt", empty_out, store_name)
 
 
 # ----------------------------------------------------------------- suppress
@@ -743,7 +874,6 @@ def suppress_tws(
 
     root, (ckpt,) = _open_state_dir(spark0, "suppress", state_dir, checkpoint, what)
     out_dir = os.path.join(root, "out")
-    prior_batch = _last_committed(ckpt)
 
     sdf = _not_null(src.df, key)  # to_table drops null keys
     # Decoupled watermark: Spark's stateful operators filter input rows
@@ -768,15 +898,13 @@ def suppress_tws(
         F.when(F.col("__clk") == 0, F.col("__ev_ms")).otherwise(F.lit(0)).alias("__ev_ms"),
         "__clk",
         F.when(F.col("__clk") == 1, F.col(tcol)).alias("__wm_ts"),
-    ).withWatermark("__wm_ts", "0 milliseconds")
+    )
 
     state_schema = "__entry_ms long, __hist_ms long, " + ", ".join(
         f"`{c}` {'binary' if c in tun else ddl[c]}" for c in cols
     )
     out_schema = ", ".join(f"`{c}` {ddl[c]}" for c in cols) + ", __fired boolean"
-    proc = _make_suppress_processor(
-        state_schema, cols, key, tcol, limit_ms, cols + ["__fired"], tun=frozenset(tun)
-    )
+    args = (state_schema, cols, key, tcol, limit_ms, cols + ["__fired"], frozenset(tun))
 
     def _emission_cols(batch_id):
         return [
@@ -787,10 +915,13 @@ def suppress_tws(
             (F.lit(int(batch_id)) - F.col("__fired").cast("long")).alias("__emit_batch"),
         ]
 
-    _drain(sdf, key, proc, out_schema, "EventTime", ckpt, out_dir, select=_emission_cols)
+    since, upto = _drain(
+        sdf, key, _make_suppress_processor, args, out_schema, "EventTime", ckpt, out_dir,
+        select=_emission_cols, watermark=("__wm_ts", "0 milliseconds"),
+    )
 
     if store_name is not None:
-        if _last_committed(ckpt) < 0:
+        if upto < 0:
             # no batch ever committed ⇒ no state to read; anything else that
             # makes the statestore source fail (bad option, provider
             # mismatch, corrupted checkpoint) must surface, not be swallowed
@@ -800,6 +931,7 @@ def suppress_tws(
             state_df = (
                 spark0.read.format("statestore")
                 .option("path", ckpt)
+                .option("batchId", upto)
                 .option("stateVarName", "buf")
                 .load()
             )
@@ -818,10 +950,10 @@ def suppress_tws(
         buf.createOrReplaceTempView(store_name)
     if not _has_emissions(out_dir):
         return _empty_emissions(spark0, table.df.schema, cols)
-    return (
-        spark0.read.parquet(out_dir)
-        .filter(F.col("sink_batch") > F.lit(int(prior_batch)))
-        .select(*cols, "__emit_reason", "__emit_batch")
+    log_schema = ", ".join(f"`{c}` {ddl[c]}" for c in cols)
+    log_schema += ", __emit_reason string, __emit_batch bigint"
+    return _read_log(spark0, out_dir, log_schema, upto, since).select(
+        *cols, "__emit_reason", "__emit_batch"
     )
 
 
@@ -977,7 +1109,7 @@ def join_fk_tws(
     the FK join as a subscription topic keyed by FK plus a response path
     keyed back by the left PK, so an FK *change* unsubscribes from the old
     key and subscribes to the new one.  Here the same two stages run as two
-    chained availableNow queries over per-key state (the subscription
+    chained resident queries over per-key state (the subscription
     changelog between them is a durable parquet log — the
     subscription-topic analog):
 
@@ -1078,8 +1210,8 @@ def join_fk_tws(
         f", `{c}` {l_ddl[c]}" for c in l_key + l_val
     )
 
-    proc_a = _make_fk_stage_a(state_a, l_val, lord, l_key_pos, sub_cols, tun_l=frozenset(tun_l))
-    _drain(a_in, l_key, proc_a, sub_schema, "None", ckpt_a, subdir)
+    args_a = (state_a, l_val, lord, l_key_pos, sub_cols, frozenset(tun_l))
+    _drain(a_in, l_key, _make_fk_stage_a, args_a, sub_schema, "None", ckpt_a, subdir)
 
     # ---------------- stage B: per-fk join state over sub-log ∪ right ----------------
     sub_stream = spark0.readStream.schema(sub_schema + ", sink_batch int").parquet(subdir)
@@ -1112,7 +1244,7 @@ def join_fk_tws(
         + "".join(f", `{c}` {l_ddl[c]}" for c in l_key + l_val)
         + "".join(f", `{c}` {r_ddl[c]}" for c in r_val)
     )
-    proc_b = _make_fk_stage_b(
+    args_b = (
         state_b,
         subs_schema,
         l_key,
@@ -1122,11 +1254,11 @@ def join_fk_tws(
         rk,
         how,
         out_cols,
-        tun_l=frozenset(tun_l),
-        tun_r=frozenset(tun_r),
+        frozenset(tun_l),
+        frozenset(tun_r),
     )
-    _drain(b_in, ["__jfk"], proc_b, out_schema, "None", ckpt_b, outdir)
-    return _snapshot(spark0, outdir, l_key, "fk", empty_out, store_name)
+    _, upto = _drain(b_in, ["__jfk"], _make_fk_stage_b, args_b, out_schema, "None", ckpt_b, outdir)
+    return _snapshot(spark0, outdir, out_schema, upto, l_key, "fk", empty_out, store_name)
 
 
 # ------------------------------------------------------------------ as-of join
@@ -1302,10 +1434,8 @@ def join_table_asof_tws(
         + "".join(f", `{c}` {t_ddl[c]}" for c in r_vals)
         + f", `{matched_ts}` timestamp"
     )
-    proc = _make_asof_processor(
-        hist_state, r_vals, l_vals, len(l_key), how, tolerance_ms, out_cols, frozenset(tun_r)
-    )
-    _drain(tagged, jk, proc, out_schema, "None", ckpt, emit_dir)
+    args = (hist_state, r_vals, l_vals, len(l_key), how, tolerance_ms, out_cols, frozenset(tun_r))
+    _, upto = _drain(tagged, jk, _make_asof_processor, args, out_schema, "None", ckpt, emit_dir)
 
     if not _has_emissions(emit_dir):
         empty = KStream(
@@ -1314,4 +1444,4 @@ def join_table_asof_tws(
         return empty.join_table_asof(
             table, how=how, tolerance_ms=tolerance_ms, matched_ts=matched_ts
         ).df
-    return spark0.read.parquet(emit_dir).drop("sink_batch")
+    return _read_log(spark0, emit_dir, out_schema, upto).drop("sink_batch")

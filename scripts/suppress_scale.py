@@ -8,9 +8,10 @@ engine (the parquet ping-pong rewrites the whole buffer and full-outer-joins
 it against every batch).
 
 Protocol: per (engine, N) — build the buffer with one N-key drain (untimed
-warmup that also warms the JVM paths), then write B single-row generations and
-time the RESUMED drain (same checkpoint + state_dir), i.e. the steady
-per-microbatch regime.  One session, idle box.
+warmup that also warms the JVM paths), then write B single-row generations
+aside, publish them into the source at once and time the RESUMED drain from
+the publish (same checkpoint + state_dir; the tws query stays resident after
+the warmup), i.e. the steady per-microbatch regime.  One session, idle box.
 
 Usage: python scripts/suppress_scale.py            # N = 20k, 100k; B = 10
        SUPPRESS_NS=1000,10000 SUPPRESS_B=5 python scripts/suppress_scale.py
@@ -33,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 from pyspark_engine.runtime import build_session
 from pyspark_engine.streaming import StreamingBuilder, suppress_buffered
-from pyspark_engine.testing import stage_generation_file
+from pyspark_engine.testing import publish_generation_files, stage_generation_file
 
 ROOT = "/tmp/pse-suppress-scale"
 BASE_TS = dt.datetime(2024, 1, 1)
@@ -70,14 +71,18 @@ def measure(spark, engine: str, n_keys: int, n_batches: int) -> dict:
     # warmup drain: builds the N-key buffer, warms code paths
     suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine=engine)
 
-    # B single-key microbatches; time the resumed incremental drain
+    # B single-key microbatches; time the resumed incremental drain.  They
+    # are staged aside and published when the clock starts: a resident tws
+    # query would otherwise process them while they are staged.
+    pending = src + "-pending"
     for i in range(1, n_batches + 1):
         stage_generation_file(
             spark.createDataFrame([(f"extra{i}", i, BASE_TS + dt.timedelta(seconds=i))], schema),
-            src,
+            pending,
             i,
         )
     t0 = time.time()
+    publish_generation_files(pending, src)
     suppress_buffered(mk(), time_col="ts", state_dir=state, checkpoint=ckpt, engine=engine)
     wall = time.time() - t0
 

@@ -2156,8 +2156,12 @@ def test_tws_join_crash_replay_idempotent(spark, tmp_path):
         join_fk_streaming,
         join_tables_streaming,
     )
+    from pyspark_engine.tws import stop_resident
 
-    def crash(ckpt):
+    def crash(ckpt, state):
+        # a real crash ends the process and with it the dir's resident
+        # queries; a running query would never re-read its commit log
+        stop_resident(state)
         last = _last_committed(ckpt)
         os.remove(os.path.join(ckpt, "commits", str(last)))
         crc = os.path.join(ckpt, "commits", f".{last}.crc")
@@ -2188,7 +2192,7 @@ def test_tws_join_crash_replay_idempotent(spark, tmp_path):
 
     want = {(1, 11, 100), (2, 20, 200)}
     assert {(r["k"], r["lv"], r["rv"]) for r in tt().collect()} == want
-    crash(ckpt)
+    crash(ckpt, state)
     assert {(r["k"], r["lv"], r["rv"]) for r in tt().collect()} == want
 
     # --- fk join: batch 1 contains an FK FLIP, the interesting replay case
@@ -2212,9 +2216,9 @@ def test_tws_join_crash_replay_idempotent(spark, tmp_path):
 
     fwant = {(1, 20, "b"), (2, 20, "b")}
     assert {(r["pk"], r["fk"], r["rv"]) for r in fkj().collect()} == fwant
-    crash(os.path.join(fck, "join"))  # stage-B rollback
+    crash(os.path.join(fck, "join"), fstate)  # stage-B rollback
     assert {(r["pk"], r["fk"], r["rv"]) for r in fkj().collect()} == fwant
-    crash(os.path.join(fck, "sub"))  # stage-A rollback: sub log rewritten + re-consumed
+    crash(os.path.join(fck, "sub"), fstate)  # stage-A rollback: sub log rewritten + re-consumed
     assert {(r["pk"], r["fk"], r["rv"]) for r in fkj().collect()} == fwant
 
 
@@ -2775,6 +2779,7 @@ def test_suppress_buffered_crash_replay_idempotent(spark, tmp_path, engine):
     import os
 
     from pyspark_engine.streaming import _last_committed, suppress_buffered
+    from pyspark_engine.tws import stop_resident
 
     def t(m):
         return dt.datetime(2024, 1, 1, 10, m)
@@ -2799,6 +2804,9 @@ def test_suppress_buffered_crash_replay_idempotent(spark, tmp_path, engine):
     first = sorted((r["k"], r["__emit_batch"]) for r in got1.collect())
     assert [k for k, _ in first] == ["a", "b"]
 
+    # a real crash ends the process and with it the dir's resident tws
+    # query; a running query would never re-read its commit log
+    stop_resident(state)
     last = _last_committed(ckpt)
     os.remove(os.path.join(ckpt, "commits", str(last)))  # "crash" pre-commit
     crc = os.path.join(ckpt, "commits", f".{last}.crc")

@@ -14,7 +14,10 @@ test_streaming.py; this file pins what is UNIQUE to the tws path:
 * NaN semantics: tws and exact both PRESERVE float NaN;
 * one execution of the stateful plan per micro-batch (state-operator
   metrics, no empty emission partitions, a source scan of the sinks), and
-  processors that unpickle without importing the engine.
+  processors that unpickle without importing the engine;
+* resident queries: one run serves repeated calls, a changed plan
+  restarts it, a drain on another dir stops it, and a returned result is
+  pinned to its call.
 """
 
 from __future__ import annotations
@@ -272,7 +275,7 @@ def test_tws_container_value_columns_ride_binary_tunnel(spark, tmp_path):
 def test_tws_pins_session_timezone_utc_for_drain(spark, tmp_path):
     """r12 advice: ``_norm``'s UTC contract is enforced by scoping
     ``spark.sql.session.timeZone=UTC`` around every tws drain
-    (_rocksdb_provider).  On a non-UTC session, value-state timestamps
+    (_drain_confs).  On a non-UTC session, value-state timestamps
     round-trip as session-tz-naive while fresh input rows normalize to
     UTC-naive — the order comparison between them skews by the zone offset
     and a strictly OLDER update arriving in a later batch wrongly replaces
@@ -378,7 +381,7 @@ def test_upstream_nested_container_value_state_roundtrip(spark, tmp_path):
     from pyspark_engine.testing import stage_generation_file
     from pyspark_engine.tws import (
         _import_stateful_processor,
-        _rocksdb_provider,
+        _drain_confs,
         require_tws,
     )
 
@@ -410,7 +413,7 @@ def test_upstream_nested_container_value_state_roundtrip(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with _rocksdb_provider(spark):
+    with _drain_confs(spark):
         res = sdf.groupBy("k").transformWithState(Echo(), "k int, prev string", "Update", "None")
         q = (
             res.writeStream.format("memory")
@@ -534,40 +537,55 @@ def test_asof_tws_schema_guard_refuses_and_engine_raises(spark, tmp_path):
 
 
 def _rows_updated(spark, drain) -> list[int]:
-    """Run one drain; per streaming query it started (in start order), the
-    state operator's ``numRowsUpdated`` summed over its micro-batches."""
+    """Run one drain; per streaming query that committed micro-batches
+    during it (in the order of their first progress event), the state
+    operator's ``numRowsUpdated`` summed over those micro-batches."""
     import time
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    started, ended, log = [], set(), {}
+    def batch_ids():
+        return {
+            str(q.id): q.lastProgress["batchId"] if q.lastProgress else -1
+            for q in spark.streams.active
+        }
+
+    before, log = batch_ids(), {}
 
     class Log(StreamingQueryListener):
         def onQueryStarted(self, event):
-            started.append(str(event.id))
+            pass
 
         def onQueryProgress(self, event):
-            log.setdefault(str(event.progress.id), []).append(event.progress)
+            p = event.progress
+            if p.batchId > before.get(str(p.id), -1):
+                log.setdefault(str(p.id), []).append(p)
 
         def onQueryIdle(self, event):
             pass
 
         def onQueryTerminated(self, event):
-            ended.add(str(event.id))
+            pass
 
     listener = Log()
     spark.streams.addListener(listener)
     try:
         drain()
-        # the listener bus is asynchronous: a query's progress events are
-        # all in once its termination event is
+        # the drain's queries stay resident; the listener bus is
+        # asynchronous, so wait for the progress event of each query's last
+        # committed batch
+        last = {q: b for q, b in batch_ids().items() if b > before.get(q, -1)}
+
+        def delivered():
+            return all(any(p.batchId == b for p in log.get(q, [])) for q, b in last.items())
+
         deadline = time.monotonic() + 60
-        while not set(started) <= ended and time.monotonic() < deadline:
+        while not delivered() and time.monotonic() < deadline:
             time.sleep(0.2)
     finally:
         spark.streams.removeListener(listener)
-    assert started and set(started) <= ended, "streaming queries never reported termination"
-    return [sum(p.stateOperators[0].numRowsUpdated for p in log.get(q, [])) for q in started]
+    assert last and delivered(), "progress events of the committed batches never arrived"
+    return [sum(p.stateOperators[0].numRowsUpdated for p in ps) for ps in log.values()]
 
 
 @pytest.mark.parametrize("kind", ["tt", "fk", "suppress", "asof"])
@@ -611,9 +629,13 @@ def test_tws_micro_batch_runs_stateful_plan_once(spark, tmp_path, kind):
             )
 
         drain()
-        # keys 1 and 2 take newer rows; key 3's row is older and loses
-        stage([(1, 10, 2), (2, 20, 2), (3, 30, 0)], "k long, lv long, lo long", "l", 1)
-        assert _rows_updated(spark, drain) == [2]
+
+        def update():
+            # keys 1 and 2 take newer rows; key 3's row is older and loses
+            stage([(1, 10, 2), (2, 20, 2), (3, 30, 0)], "k long, lv long, lo long", "l", 1)
+            drain()
+
+        assert _rows_updated(spark, update) == [2]
     elif kind == "fk":
         lschema = "pk long, fk long, lv long, lo long"
         stage([(k, k % 2, k, 1) for k in range(1, 5)], lschema, "l", 0)
@@ -628,11 +650,15 @@ def test_tws_micro_batch_runs_stateful_plan_once(spark, tmp_path, kind):
             )
 
         drain()
-        # pk 1 keeps fk 1; pk 2 flips fk 0 -> 1
-        stage([(1, 1, 10, 2), (2, 1, 20, 2)], lschema, "l", 1)
+
+        def update():
+            # pk 1 keeps fk 1; pk 2 flips fk 0 -> 1
+            stage([(1, 1, 10, 2), (2, 1, 20, 2)], lschema, "l", 1)
+            drain()
+
         # stage A: the two changed pks; stage B: fk groups '0' and '1',
         # each rewriting its right-row value state and its subscriber list
-        assert _rows_updated(spark, drain) == [2, 4]
+        assert _rows_updated(spark, update) == [2, 4]
     elif kind == "suppress":
         schema = "k long, v long, ts timestamp"
         stage([(1, 1, t(0)), (2, 2, t(0))], schema, "s", 0)
@@ -646,10 +672,15 @@ def test_tws_micro_batch_runs_stateful_plan_once(spark, tmp_path, kind):
             suppress_buffered(tbl, time_col="ts", engine="tws", state_dir=state, checkpoint=ck)
 
         drain()
-        # key 3 enters the buffer (one write); its stream time makes keys 1
-        # and 2 due, and their timers fire and emit (one write each)
-        stage([(3, 3, t(2))], schema, "s", 1)
-        assert _rows_updated(spark, drain) == [3]
+
+        def update():
+            # key 3 enters the buffer (one write); its stream time makes
+            # keys 1 and 2 due, and their timers fire and emit (one write
+            # each)
+            stage([(3, 3, t(2))], schema, "s", 1)
+            drain()
+
+        assert _rows_updated(spark, update) == [3]
     else:
         hist = spark.createDataFrame(
             [(1, t(0), 100), (1, t(10), 110), (2, t(5), 200)], "k long, ts timestamp, pv long"
@@ -667,12 +698,272 @@ def test_tws_micro_batch_runs_stateful_plan_once(spark, tmp_path, kind):
         assert _rows_updated(spark, drain) == [3]
 
 
+# ------------------------------------------------------- resident queries
+
+
+def _query_starts(spark):
+    """A listener recording (query id, run id) per started run; the start
+    event is delivered before ``start()`` returns."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    runs = []
+
+    class Starts(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            runs.append((str(event.id), str(event.runId)))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    return Starts(), runs
+
+
+def _tt_dirs(spark, tmp_path, n=5):
+    from pyspark_engine.testing import stage_generation_file
+
+    ld, rd = str(tmp_path / "l"), str(tmp_path / "r")
+    stage_generation_file(
+        spark.createDataFrame([(k, k, 1) for k in range(1, n + 1)], "k long, lv long, lo long"),
+        ld,
+        0,
+    )
+    stage_generation_file(
+        spark.createDataFrame([(k, -k, 1) for k in range(1, n + 1)], "rk long, rv long, ro long"),
+        rd,
+        0,
+    )
+    return ld, rd
+
+
+def _tt_join(spark, tmp_path, ld, rd, engine="tws", name="state", max_files=None):
+    from pyspark_engine.streaming import StreamingBuilder, join_tables_streaming
+
+    sb = StreamingBuilder(spark)
+    return join_tables_streaming(
+        sb.file_stream(ld, key="k", max_files_per_trigger=max_files),
+        sb.file_stream(rd, key="rk"),
+        how="inner", l_order=("lo",), r_order=("ro",), engine=engine,
+        state_dir=str(tmp_path / f"{name}_{engine}"),
+        checkpoint=str(tmp_path / f"{name}_{engine}_ck"),
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _resident_case(spark, tmp_path, kind):
+    """(stage(gen), call(engine) -> sorted result rows) for one engine kind:
+    ``stage`` lands generation ``gen`` of new input (0 = the initial load)
+    and ``call`` drains it through the engine on its own state dir."""
+    from pyspark_engine import StreamBuilder as BatchBuilder
+    from pyspark_engine.streaming import (
+        StreamingBuilder,
+        join_fk_streaming,
+        join_table_asof_streaming,
+        join_tables_streaming,
+        suppress_buffered,
+    )
+    from pyspark_engine.testing import stage_generation_file
+
+    sb = StreamingBuilder(spark)
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 0, m)
+
+    def put(name, rows, schema, gen):
+        stage_generation_file(spark.createDataFrame(rows, schema), str(tmp_path / name), gen)
+
+    def src(name, **kw):
+        return sb.file_stream(str(tmp_path / name), **kw)
+
+    def dirs(engine):
+        return {"checkpoint": str(tmp_path / f"{engine}_ck"), "engine": engine}
+
+    def stage(gen):
+        if kind == "tt":
+            if gen == 0:
+                put("r", [(k, -k, 1) for k in range(1, 6)], "rk long, rv long, ro long", 0)
+            rows = [(k, k, 1) for k in range(1, 6)]
+            if gen:
+                # key gen takes a newer row; key gen+1's row is older and loses
+                rows = [(gen, 10 * gen, 1 + gen), (gen + 1, 0, 0)]
+            put("l", rows, "k long, lv long, lo long", gen)
+        elif kind == "fk":
+            if gen == 0:
+                put("r", [(0, 5, 1), (1, 6, 1)], "rk long, rv long, ro long", 0)
+            rows = [(1, 0, 1), (2, 1, 1)] if gen == 0 else [(gen % 2 + 1, gen % 2, 1 + gen)]
+            put("l", rows, "pk long, fk long, lo long", gen)
+        elif kind == "suppress":
+            put("l", [(gen % 3, gen, t(2 * gen))], "k long, v long, ts timestamp", gen)
+        else:
+            put("l", [(gen % 3, t(3 * gen), gen)], "k long, ts timestamp, sid long", gen)
+
+    def call(engine):
+        if kind == "tt":
+            out = join_tables_streaming(
+                src("l", key="k"), src("r", key="rk"), how="inner",
+                l_order=("lo",), r_order=("ro",), state_dir=str(tmp_path / engine), **dirs(engine),
+            )
+        elif kind == "fk":
+            out = join_fk_streaming(
+                src("l", key="pk"), src("r", key="rk"), fk="fk", how="left",
+                l_order=("lo",), r_order=("ro",), state_dir=str(tmp_path / engine), **dirs(engine),
+            )
+        elif kind == "suppress":
+            tbl = src("l", key="k", ts="ts", max_files_per_trigger=1).to_table()
+            out = suppress_buffered(
+                tbl.suppress(until_time_limit_ms=60_000), time_col="ts",
+                state_dir=str(tmp_path / engine), **dirs(engine),
+            ).select("k", "v")
+        else:
+            hist = spark.createDataFrame(
+                [(0, t(0), 100), (1, t(4), 110), (2, t(5), 200)], "k long, ts timestamp, pv long"
+            )
+            vt = BatchBuilder(spark).versioned_table(hist, key="k", ts="ts")
+            out = join_table_asof_streaming(
+                src("l", key="k", ts="ts"), vt, how="left", out_dir=str(tmp_path / engine),
+                **dirs(engine),
+            ).select("k", "sid", "pv")
+        return _rows(out)
+
+    return stage, call
+
+
+@pytest.mark.parametrize("kind", ["tt", "fk", "suppress", "asof"])
+def test_tws_resident_query_serves_repeated_calls(spark, tmp_path, kind):
+    """Repeated calls on one state dir and checkpoint run ONE query per
+    stage: the first call starts it, and each later call with the same plan
+    only waits on it.  Every call's result equals the exact engine's over
+    the same input."""
+    stage, call = _resident_case(spark, tmp_path, kind)
+    listener, runs = _query_starts(spark)
+    spark.streams.addListener(listener)
+    try:
+        for gen in range(4):
+            stage(gen)
+            got = call("tws")
+            assert got == call("exact"), gen
+    finally:
+        spark.streams.removeListener(listener)
+    active = {str(q.id) for q in spark.streams.active}
+    tws_ids = {i for i, _ in runs} & active
+    # the exact engine's availableNow runs all ended
+    assert len(tws_ids) == (2 if kind == "fk" else 1)
+    # one run per query served every call
+    assert sum(i in tws_ids for i, _ in runs) == len(tws_ids)
+
+
+def test_tws_changed_plan_restarts_resident_query(spark, tmp_path):
+    """A call whose input plan differs from the running query's (the left
+    source gains maxFilesPerTrigger) stops the query and starts a new run on
+    the same checkpoint; a later call with that plan reuses the new run.
+    Results stay equal to the exact engine's."""
+    from pyspark_engine.testing import stage_generation_file
+
+    ld, rd = _tt_dirs(spark, tmp_path)
+    listener, runs = _query_starts(spark)
+    spark.streams.addListener(listener)
+    try:
+        _rows(_tt_join(spark, tmp_path, ld, rd))
+        for gen in (1, 2):
+            stage_generation_file(
+                spark.createDataFrame([(gen, 100 * gen, 1 + gen)], "k long, lv long, lo long"),
+                ld,
+                gen,
+            )
+            got = _rows(_tt_join(spark, tmp_path, ld, rd, max_files=1))
+            assert got == _rows(_tt_join(spark, tmp_path, ld, rd, engine="exact"))
+        assert [r[:2] for r in got][:2] == [(1, 100), (2, 200)]
+    finally:
+        spark.streams.removeListener(listener)
+    tws_ids = {i for i, _ in runs} & {str(q.id) for q in spark.streams.active}
+    assert len(tws_ids) == 1
+    tws_runs = [run for i, run in runs if i in tws_ids]
+    assert len(tws_runs) == len(set(tws_runs)) == 2  # the first run, then one restart
+
+
+def test_tws_drain_on_another_dir_stops_resident_queries(spark, tmp_path):
+    """At most one state dir's resident queries run: a drain on a second
+    dir (an fk join, two stages) stops the first dir's query and leaves only
+    its own two; going back to the first dir resumes its query and stops
+    the fk stages."""
+    from pyspark_engine.streaming import StreamingBuilder, join_fk_streaming
+    from pyspark_engine.testing import stage_generation_file
+
+    def active():
+        return {str(q.id) for q in spark.streams.active}
+
+    before = active()
+    ld, rd = _tt_dirs(spark, tmp_path)
+    _rows(_tt_join(spark, tmp_path, ld, rd))
+    tt_ids = active() - before
+    assert len(tt_ids) == 1
+
+    fl, fr = str(tmp_path / "fl"), str(tmp_path / "fr")
+    stage_generation_file(
+        spark.createDataFrame([(1, 0, 1), (2, 1, 1)], "pk long, fk long, lo long"), fl, 0
+    )
+    stage_generation_file(
+        spark.createDataFrame([(0, 5, 1), (1, 6, 1)], "rk long, rv long, ro long"), fr, 0
+    )
+    sb = StreamingBuilder(spark)
+    fk = join_fk_streaming(
+        sb.file_stream(fl, key="pk"), sb.file_stream(fr, key="rk"), fk="fk", how="inner",
+        l_order=("lo",), r_order=("ro",), engine="tws",
+        state_dir=str(tmp_path / "fk"), checkpoint=str(tmp_path / "fk_ck"),
+    )
+    assert sorted((r["pk"], r["rv"]) for r in fk.collect()) == [(1, 5), (2, 6)]
+    fk_ids = active() - before
+    assert len(fk_ids) == 2 and not fk_ids & tt_ids
+
+    _rows(_tt_join(spark, tmp_path, ld, rd))
+    assert active() - before == tt_ids  # the same query id, resumed
+
+
+def test_tws_results_pinned_to_their_call(spark, tmp_path):
+    """A returned snapshot reads only the emission partitions committed
+    when its call returned.  Input staged after the call is processed by
+    the resident query in the background, and the earlier snapshot still
+    collects its original rows; so it does after the next call, whose
+    snapshot shows the update."""
+    import time
+
+    from pyspark_engine.streaming import _last_committed, _sink_partitions
+    from pyspark_engine.testing import stage_generation_file
+
+    ld, rd = _tt_dirs(spark, tmp_path)
+    snap1 = _tt_join(spark, tmp_path, ld, rd)
+    want1 = [(k, k, 1, -k, 1) for k in range(1, 6)]
+    ck = str(tmp_path / "state_tws_ck")
+    upto = _last_committed(ck)
+    stage_generation_file(
+        spark.createDataFrame([(1, 99, 2)], "k long, lv long, lo long"), ld, 1
+    )
+    deadline = time.monotonic() + 120
+    while _last_committed(ck) == upto and time.monotonic() < deadline:
+        time.sleep(0.2)
+    # the resident query committed a later batch in the background
+    assert max(_sink_partitions(str(tmp_path / "state_tws" / "out"))) > upto
+    assert _rows(snap1) == want1
+    snap2 = _tt_join(spark, tmp_path, ld, rd)
+    assert _rows(snap1) == want1
+    assert _rows(snap2) == [(1, 99, 2, -1, 1)] + want1[1:]
+
+
 def test_tws_batch_without_emissions_leaves_no_partition(spark, tmp_path):
     """Only a micro-batch that emits rows leaves a ``sink_batch=<id>``
     partition: the emission-log readers, the legacy-adoption cursor
     (``_max_sink_batch``) and the autocompaction partition count all rely
     on it.  Case 1: a tt-join update whose order value is older than the
-    stored one.  Case 2: a suppress batch in which no key is due."""
+    stored one.  Case 2: a suppress batch in which no key is due.  No
+    hidden ``.sink_batch=<id>`` staging dir outlives its batch."""
     from pyspark_engine.streaming import (
         StreamingBuilder,
         _has_emissions,
@@ -718,6 +1009,8 @@ def test_tws_batch_without_emissions_leaves_no_partition(spark, tmp_path):
     assert got.count() == 0
     assert _sink_partitions(os.path.join(sup, "out")) == {}
     assert not _has_emissions(os.path.join(sup, "out"))
+    for log in (os.path.join(state, "out"), os.path.join(sup, "out")):
+        assert not [e for e in os.listdir(log) if e.startswith(".")], log
 
 
 _UNPICKLE_AND_RUN = """
