@@ -171,6 +171,31 @@ def _read_bind(path: str) -> str | None:
         return None
 
 
+# the tws suppress engine's delivery cursor, in its state dir
+_DELIVERED = "_PSE_DELIVERED"
+
+
+def _delivered_cursor(root: str, ckpt: str) -> int:
+    """The last batch whose emissions a tws suppress call returned from the
+    state dir ``root``: its ``_PSE_DELIVERED`` record, written for the
+    checkpoint's current bind token, and never above the checkpoint's commit
+    cursor (commits that went back are re-delivered).  Without a record for
+    this bind — a dir written before the cursor existed, where every
+    committed batch was returned — it is the commit cursor."""
+    committed = _last_committed(ckpt)
+    rec = (_read_bind(os.path.join(root, _DELIVERED)) or "").split()
+    if len(rec) == 2 and rec[0] == _read_bind(os.path.join(ckpt, "_PSE_BIND")):
+        return min(int(rec[1]), committed)
+    return committed
+
+
+def _store_delivered(root: str, ckpt: str, batch_id: int) -> None:
+    path = os.path.join(root, _DELIVERED)
+    with open(path + ".tmp", "w") as f:
+        f.write(f"{_read_bind(os.path.join(ckpt, '_PSE_BIND'))} {batch_id}")
+    os.replace(path + ".tmp", path)
+
+
 def _max_sink_batch(root: str) -> int:
     """Highest ``sink_batch=<id>`` partition under root or root/out (or -1)
     — the delivered-batch cursor of the sink-partitioned loops (tws
@@ -487,9 +512,11 @@ def compact_emission_log(
         key if a crash leaves older U partitions behind); also prunes
         subscription-log files stage B's file-source checkpoint has
         provably consumed.  ``key`` = the left PK columns.
-      * suppress: emissions are history, never re-read past the delivery
-        cursor — partitions strictly below the newest committed partition
-        are pruned outright (the newest is kept as the cursor trail).
+      * suppress: emissions are history, never re-read once a call has
+        returned them — committed partitions up to the delivery cursor
+        (``_delivered_cursor``) are pruned outright, except the newest
+        committed partition, kept as the cursor trail.  Batches a resident
+        query committed that no call has returned yet stay.
 
     Crash-safe and idempotent: the fold is written to ``compact-tmp``
     (completed by a ``_TARGET`` marker) before any partition is touched,
@@ -579,11 +606,11 @@ def compact_emission_log(
     result: dict = {"kind": kind, "folded": len(foldable), "committed": committed}
 
     if kind == "suppress":
-        keep = max(foldable)
-        for k in foldable:
-            if k != keep:
-                shutil.rmtree(parts[k], ignore_errors=True)
-        result["pruned"] = len(foldable) - 1
+        delivered = _delivered_cursor(root, ck)
+        gone = [k for k in foldable[:-1] if k <= delivered]
+        for k in gone:
+            shutil.rmtree(parts[k], ignore_errors=True)
+        result["pruned"] = len(gone)
         return result
 
     if not key:
@@ -1560,10 +1587,12 @@ def suppress_buffered(
     batch rewrites its own partition instead of appending duplicates
     (exactly-once emission), and both return only emissions newer than the
     checkpoint's last COMMITTED batch at drain start — for tws, newer than
-    the batch its previous call in this process returned, so batches its
-    resident query committed in the background in between are delivered
-    too (a resumed drain never re-delivers, and a batch that crashed
-    pre-commit is re-delivered — it was never returned to any caller).
+    the batch its previous call on the dir returned (its delivery cursor,
+    ``_PSE_DELIVERED`` in the state dir), so batches its resident query
+    committed in the background in between are delivered too, also to the
+    first call of a new process (a resumed drain never re-delivers, and a
+    batch that crashed pre-commit is re-delivered — it was never returned
+    to any caller).
 
     Drains the available input (exact: availableNow; tws: its resident
     query, which also returns the batches it committed in the background

@@ -58,12 +58,17 @@ background and polls its sources every 100 ms while idle (Spark's 10 ms
 default kept about half a JVM core busy).  It stops when a drain opens
 another state dir (at most one dir's queries run; the fk join's two stages
 share theirs), before compaction rewrites the dir's log, when it fails
-(the next call starts a new run) and with the session; ``stop_resident``
-stops a dir's queries on demand.  Every result a call returns is pinned
-to the batches committed when it returned (``sink_batch <= upto``), so a
-background batch cannot change it, and the suppress emissions a call
-returns are the batches since the previous call returned — including
-those committed in the background in between.
+(a failure between calls is raised by the next call on its dir; the call
+after starts a new run) and with the session; ``stop_resident`` stops a
+dir's queries on demand.  Every result a call returns is pinned to the
+batches committed when it returned (``sink_batch <= upto``), so a
+background batch cannot change it.  The suppress emissions a call returns
+are the batches after the dir's durable delivery cursor
+(``streaming._delivered_cursor``) — including those committed in the
+background since the previous call, in this process or an earlier one —
+and suppress compaction prunes no batch past that cursor.  The fk join's
+stage A publishes its ``sub/`` partitions only when its drain returns, so
+the resident stage B takes a call's subscription delta in one batch.
 
 * **Native types.**  ``transformWithState`` hands the processor
   ``pyspark.sql.Row`` objects, where a nullable int64 column stays a Python
@@ -128,6 +133,7 @@ from .streaming import (
     _checkpoint,
     _check_reserved_columns,
     _container_cols,
+    _delivered_cursor,
     _dtype_refusal,
     _empty_emissions,
     _fold_emission_log,
@@ -137,6 +143,7 @@ from .streaming import (
     _maybe_autocompact,
     _read_bind,
     _refuse_legacy_keyed_dir,
+    _store_delivered,
 )
 
 _TWS_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -266,43 +273,57 @@ def _stamp_version(root: str, marker: str, version: str, populated: bool, what: 
         os.replace(ver_path + ".tmp", ver_path)
 
 
-def _write_emissions(batch: DataFrame, log_dir: str, batch_id: int) -> None:
-    """Publish one micro-batch's emissions as the ``sink_batch=<id>``
+def _write_emissions(batch: DataFrame, log_dir: str, batch_id: int, publish: bool = True) -> None:
+    """Write one micro-batch's emissions as the ``sink_batch=<id>``
     partition of ``log_dir`` in ONE action.  The foreachBatch DataFrame
     recomputes its lineage — the whole stateful plan — on every action, so
     the row count rides the write as an observed metric instead of a second
     action.  The write goes to a hidden ``.sink_batch=<id>`` staging dir
-    (file listings skip a leading ``.``) that is renamed into place only when
-    the batch emitted rows, so a reader polling the log — the fk join's stage
-    B reads stage A's ``sub/`` — never lists a partly written partition or an
-    empty one about to go.  A crash-replayed batch replaces its own
-    partition."""
+    (file listings skip a leading ``.``), removed when the batch emitted
+    nothing and otherwise renamed into place: at once, or with
+    ``publish=False`` by a later ``_publish_staged``.  So a reader polling
+    the log — the fk join's stage B reads stage A's ``sub/`` — never lists a
+    partly written partition or an empty one about to go.  A crash-replayed
+    batch replaces its own partition."""
     part = os.path.join(log_dir, f"sink_batch={batch_id}")
     stage = os.path.join(log_dir, f".sink_batch={batch_id}")
     obs = Observation()
     batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
     if os.path.isdir(part):
         shutil.rmtree(part)
-    if obs.get["n"]:
-        os.rename(stage, part)
-    else:
+    if not obs.get["n"]:
         shutil.rmtree(stage)
+    elif publish:
+        os.rename(stage, part)
+
+
+def _publish_staged(log_dir: str, upto: int) -> None:
+    """Rename the partitions that ``_write_emissions(publish=False)`` staged
+    for the batches up to ``upto`` into place, oldest first."""
+    staged = {}
+    for e in os.listdir(log_dir) if os.path.isdir(log_dir) else ():
+        if e.startswith(".sink_batch="):
+            staged[int(e.split("=", 1)[1])] = e
+    for k in sorted(k for k in staged if k <= upto):
+        part = os.path.join(log_dir, staged[k][1:])
+        if os.path.isdir(part):
+            shutil.rmtree(part)
+        os.rename(os.path.join(log_dir, staged[k]), part)
 
 
 @dataclass
 class _Resident:
     """The resident query of one checkpoint: the session and plan it runs
-    (``sig`` plus the input DataFrame), the state dir it writes, and
-    ``upto``, the last committed batch a call returned — kept after the
-    query stops, so the next run's first call also returns what the
-    stopped query committed after it."""
+    (``sig`` plus the input DataFrame) and the state dir it writes; or, once
+    it failed outside a call, the ``error`` the next call on the checkpoint
+    raises."""
 
     spark: object
     root: str
     sig: tuple
     df: DataFrame | None
     query: object | None
-    upto: int
+    error: Exception | None = None
 
 
 # checkpoint path -> its resident query
@@ -310,21 +331,25 @@ _RESIDENT: dict[str, _Resident] = {}
 
 
 def _stop_where(pred) -> None:
-    """Stop every running resident query whose entry matches ``pred``; the
-    entries, with their delivery cursors, stay.  A query first finishes
-    the input it has: a new run would not run the no-data batch (due
-    suppress timers) that a committed batch still owes.  A query that
-    failed is left to the next call on its dir, which raises the error."""
+    """Stop every running resident query whose entry matches ``pred`` and
+    drop its entry.  A query first finishes the input it has: a new run
+    would not run the no-data batch (due suppress timers) that a committed
+    batch still owes.  A query that failed — in the background, or while
+    finishing — keeps its entry with the error, which the next call on its
+    checkpoint raises; the call after that starts a new run."""
     from pyspark.errors import StreamingQueryException  # noqa: PLC0415
 
-    for res in _RESIDENT.values():
-        if res.query is not None and pred(res):
-            q, res.query, res.df = res.query, None, None
+    for key, res in list(_RESIDENT.items()):
+        if res.error is None and pred(res):
             try:
-                q.processAllAvailable()
-            except StreamingQueryException:
-                pass
-            q.stop()
+                res.query.processAllAvailable()
+            except StreamingQueryException as e:
+                res.error = e
+            res.query.stop()
+            if res.error is None:
+                del _RESIDENT[key]
+            else:
+                res.query = res.df = None
 
 
 def stop_resident(state_dir: str) -> None:
@@ -366,71 +391,78 @@ def _open_state_dir(spark, kind, state_dir, checkpoint, what, logs=(("out", None
     return root, ckpts
 
 
-def _drain(df, keys, make, args, out_schema, time_mode, ckpt, log_dir, select=None, watermark=None):
+def _drain(
+    df, keys, make, args, out_schema, time_mode, ckpt, log_dir,
+    select=None, watermark=None, publish=True,
+):
     """Drive the processor ``make(*args)`` over ``df`` grouped by ``keys``
     on ``ckpt`` until every input available at the call is processed and
     committed; each micro-batch's emissions — projected by
     ``select(batch_id)`` when given — land in ``<log_dir>/sink_batch=<id>``
-    through _write_emissions, the one action a micro-batch takes.
-    ``watermark`` = (column, delay) is applied here, after the plan
-    comparison below: each ``withWatermark`` node carries a fresh id, so two
-    equal plans with watermarks never compare equal.
+    through _write_emissions (with its ``publish``), the one action a
+    micro-batch takes.  ``watermark`` = (column, delay) is applied here,
+    after the plan comparison below: each ``withWatermark`` node carries a
+    fresh id, so two equal plans with watermarks never compare equal.
 
     The query is RESIDENT: one per session and checkpoint.  The first call
-    starts it with the default trigger and waits in
-    ``processAllAvailable``; a later call with the same input plan
-    (``sameSemantics``), grouping keys, output schema, time mode, processor
-    parameters and checkpoint bind token (a checkpoint deleted and bound
-    again is a new one) only waits on the running query, which keeps its
+    starts it with the default trigger; a later call with the same input
+    plan (``sameSemantics``), grouping keys, output schema, time mode,
+    processor parameters and checkpoint bind token (a checkpoint deleted
+    and bound again is a new one) reuses the running query, which keeps its
     pre-initialized state workers and loaded RocksDB stores.  Any other
-    call stops it and starts a new run on the same checkpoint.  Between
-    calls the query polls its sources every 100 ms and processes new input
-    in the background.  The queries of a dir stop when a drain opens
-    another dir (``_open_state_dir``), before a compaction rewrites the log
-    (``compact_emission_log``), when the query fails (the next call starts
-    a new run) and with the session.
+    call stops it and starts a new run on the same checkpoint.  Either way
+    the call waits in ``processAllAvailable`` twice: a wait ends at the
+    first trigger that finds no new input, and the trigger running when the
+    call begins may have listed the sources before the call's input landed;
+    the trigger that ends the second wait started after the first ended.
+    Between calls the query polls its sources every 100 ms and processes
+    new input in the background.  The queries of a dir stop when a drain
+    opens another dir (``_open_state_dir``), before a compaction rewrites
+    the log (``compact_emission_log``) and with the session.  A query that
+    fails during a call is stopped and the call raises; one that failed
+    between calls makes the next call on the checkpoint raise its error.
+    Either way the call after starts a new run.
 
-    Returns ``(since, upto)``: this call delivers the batches ``since < id
-    <= upto``, where ``upto`` is the last batch committed when the call
-    returns and ``since`` what the previous call on the checkpoint returned
-    (on a first call, or after the checkpoint's commits went back, the
-    checkpoint's commit cursor at entry).  Readers that filter on ``upto``
-    are pinned to this call: batches that later input triggers cannot
-    change them."""
+    Returns ``upto``, the last batch committed when the call returns.
+    Readers that filter on it are pinned to this call: batches that later
+    input triggers cannot change them."""
     spark = df.sparkSession
     key = os.path.abspath(ckpt)
     bind = _read_bind(os.path.join(ckpt, "_PSE_BIND"))
     sig = (tuple(keys), out_schema, time_mode, log_dir, make.__name__, repr(args), watermark, bind)
     res = _RESIDENT.get(key)
-    committed = _last_committed(ckpt)
-    since = committed if res is None else min(res.upto, committed)
-    if res is not None and res.query is not None and not (
+    if res is not None and res.error is None and not (
         res.spark is spark
         and res.sig == sig
         and res.query.isActive
         and df.sameSemantics(res.df)
     ):
         _stop_where(lambda r: r is res)
-    if res is None or res.query is None:
+    res = _RESIDENT.get(key)
+    if res is not None and res.error is not None:
+        del _RESIDENT[key]
+        raise res.error
+    if res is None:
 
         def _sink(batch: DataFrame, batch_id: int) -> None:
             if select is not None:
                 batch = batch.select(*select(batch_id))
-            _write_emissions(batch, log_dir, batch_id)
+            _write_emissions(batch, log_dir, batch_id, publish)
 
         src = df if watermark is None else df.withWatermark(*watermark)
         proc = make(*args)
         with _drain_confs(spark):
             out = src.groupBy(*keys).transformWithState(proc, out_schema, "Update", time_mode)
             q = out.writeStream.foreachBatch(_sink).option("checkpointLocation", ckpt).start()
-        res = _RESIDENT[key] = _Resident(spark, os.path.dirname(log_dir), sig, df, q, since)
+        res = _RESIDENT[key] = _Resident(spark, os.path.dirname(log_dir), sig, df, q)
     try:
         res.query.processAllAvailable()
+        res.query.processAllAvailable()
     except Exception:
-        _stop_where(lambda r: r is res)
+        del _RESIDENT[key]
+        res.query.stop()
         raise
-    res.upto = _last_committed(ckpt)
-    return since, res.upto
+    return _last_committed(ckpt)
 
 
 def _read_log(spark, log_dir, schema, upto, since=-1) -> DataFrame:
@@ -717,7 +749,7 @@ def join_tables_tws(
         ts_alias,
         frozenset(tun),
     )
-    _, upto = _drain(tagged, jk, _make_tt_processor, args, out_schema, "None", ckpt, out_dir)
+    upto = _drain(tagged, jk, _make_tt_processor, args, out_schema, "None", ckpt, out_dir)
     return _snapshot(spark0, out_dir, out_schema, upto, l_key, "tt", empty_out, store_name)
 
 
@@ -915,7 +947,12 @@ def suppress_tws(
             (F.lit(int(batch_id)) - F.col("__fired").cast("long")).alias("__emit_batch"),
         ]
 
-    since, upto = _drain(
+    # the call returns the batches after the dir's delivery cursor, stored
+    # before the query starts (a first call that dies mid-drain leaves its
+    # batches to the next call) and again once the result is built
+    since = _delivered_cursor(root, ckpt)
+    _store_delivered(root, ckpt, since)
+    upto = _drain(
         sdf, key, _make_suppress_processor, args, out_schema, "EventTime", ckpt, out_dir,
         select=_emission_cols, watermark=("__wm_ts", "0 milliseconds"),
     )
@@ -949,12 +986,15 @@ def suppress_tws(
             )
         buf.createOrReplaceTempView(store_name)
     if not _has_emissions(out_dir):
-        return _empty_emissions(spark0, table.df.schema, cols)
-    log_schema = ", ".join(f"`{c}` {ddl[c]}" for c in cols)
-    log_schema += ", __emit_reason string, __emit_batch bigint"
-    return _read_log(spark0, out_dir, log_schema, upto, since).select(
-        *cols, "__emit_reason", "__emit_batch"
-    )
+        out = _empty_emissions(spark0, table.df.schema, cols)
+    else:
+        log_schema = ", ".join(f"`{c}` {ddl[c]}" for c in cols)
+        log_schema += ", __emit_reason string, __emit_batch bigint"
+        out = _read_log(spark0, out_dir, log_schema, upto, since).select(
+            *cols, "__emit_reason", "__emit_batch"
+        )
+    _store_delivered(root, ckpt, upto)
+    return out
 
 
 # ------------------------------------------------------------------ fk join
@@ -1211,7 +1251,12 @@ def join_fk_tws(
     )
 
     args_a = (state_a, l_val, lord, l_key_pos, sub_cols, frozenset(tun_l))
-    _drain(a_in, l_key, _make_fk_stage_a, args_a, sub_schema, "None", ckpt_a, subdir)
+    # stage A's partitions are published only once its drain returns, so
+    # stage B takes the call's whole subscription delta in one batch
+    upto_a = _drain(
+        a_in, l_key, _make_fk_stage_a, args_a, sub_schema, "None", ckpt_a, subdir, publish=False
+    )
+    _publish_staged(subdir, upto_a)
 
     # ---------------- stage B: per-fk join state over sub-log ∪ right ----------------
     sub_stream = spark0.readStream.schema(sub_schema + ", sink_batch int").parquet(subdir)
@@ -1257,7 +1302,7 @@ def join_fk_tws(
         frozenset(tun_l),
         frozenset(tun_r),
     )
-    _, upto = _drain(b_in, ["__jfk"], _make_fk_stage_b, args_b, out_schema, "None", ckpt_b, outdir)
+    upto = _drain(b_in, ["__jfk"], _make_fk_stage_b, args_b, out_schema, "None", ckpt_b, outdir)
     return _snapshot(spark0, outdir, out_schema, upto, l_key, "fk", empty_out, store_name)
 
 
@@ -1435,7 +1480,7 @@ def join_table_asof_tws(
         + f", `{matched_ts}` timestamp"
     )
     args = (hist_state, r_vals, l_vals, len(l_key), how, tolerance_ms, out_cols, frozenset(tun_r))
-    _, upto = _drain(tagged, jk, _make_asof_processor, args, out_schema, "None", ckpt, emit_dir)
+    upto = _drain(tagged, jk, _make_asof_processor, args, out_schema, "None", ckpt, emit_dir)
 
     if not _has_emissions(emit_dir):
         empty = KStream(

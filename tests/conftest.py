@@ -31,3 +31,14 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _stop_resident_tws_queries():
+    """A tws drain leaves its streaming query running (``tws.py``,
+    "Resident queries"); stop them after each test module, so they do not
+    poll their sources through the later modules' tests."""
+    yield
+    tws = sys.modules.get("pyspark_engine.tws")
+    if tws is not None:
+        tws._stop_where(lambda res: True)

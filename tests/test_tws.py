@@ -16,8 +16,10 @@ test_streaming.py; this file pins what is UNIQUE to the tws path:
   metrics, no empty emission partitions, a source scan of the sinks), and
   processors that unpickle without importing the engine;
 * resident queries: one run serves repeated calls, a changed plan
-  restarts it, a drain on another dir stops it, and a returned result is
-  pinned to its call.
+  restarts it, a drain on another dir stops it, a returned result is
+  pinned to its call, suppress delivers background batches past
+  compaction and to a new process, a background failure is raised at the
+  next call, and the fk stage B takes a call's delta in one batch.
 """
 
 from __future__ import annotations
@@ -955,6 +957,162 @@ def test_tws_results_pinned_to_their_call(spark, tmp_path):
     snap2 = _tt_join(spark, tmp_path, ld, rd)
     assert _rows(snap1) == want1
     assert _rows(snap2) == [(1, 99, 2, -1, 1)] + want1[1:]
+
+
+def _wait_for(cond, what, timeout=120):
+    import time
+
+    deadline = time.monotonic() + timeout
+    while not cond():
+        assert time.monotonic() < deadline, what
+        time.sleep(0.2)
+
+
+def _suppress_case(spark, tmp_path):
+    """(stage(gen, key, minute), call() -> emitted keys, state dir,
+    checkpoint) for a tws suppress table with a 60 s time limit."""
+    from pyspark_engine.streaming import StreamingBuilder, suppress_buffered
+    from pyspark_engine.testing import stage_generation_file
+
+    sd, state, ck = str(tmp_path / "s"), str(tmp_path / "sup"), str(tmp_path / "sup_ck")
+
+    def stage(gen, key, minute):
+        row = (key, gen, dt.datetime(2024, 1, 1, 0, minute))
+        stage_generation_file(spark.createDataFrame([row], "k long, v long, ts timestamp"), sd, gen)
+
+    def call():
+        tbl = StreamingBuilder(spark).file_stream(sd, key="k", ts="ts", max_files_per_trigger=1)
+        out = suppress_buffered(
+            tbl.to_table().suppress(until_time_limit_ms=60_000), time_col="ts",
+            engine="tws", state_dir=state, checkpoint=ck,
+        )
+        return sorted(r["k"] for r in out.collect())
+
+    return stage, call, state, ck
+
+
+def _emitted_past(out_dir, ck, batch):
+    """Whether a committed emission partition past ``batch`` exists."""
+    from pyspark_engine.streaming import _last_committed, _sink_partitions
+
+    committed = _last_committed(ck)
+    return any(batch < k <= committed for k in _sink_partitions(out_dir))
+
+
+def test_tws_suppress_compaction_keeps_undelivered_emissions(spark, tmp_path, monkeypatch):
+    """Suppress compaction prunes only emissions a call has returned.  The
+    resident query commits two emitting batches in the background; the next
+    call autocompacts first, and still returns both.  Once they are
+    delivered, a compaction prunes the older one."""
+    from pyspark_engine import streaming
+    from pyspark_engine.streaming import _last_committed, _sink_partitions, compact_emission_log
+
+    monkeypatch.setattr(streaming, "_AUTOCOMPACT_EVERY", 2)
+    stage, call, state, ck = _suppress_case(spark, tmp_path)
+    out_dir = os.path.join(state, "out")
+    stage(0, 1, 0)
+    stage(1, 2, 0)
+    assert call() == []  # both keys buffered
+    upto = _last_committed(ck)
+    stage(2, 3, 2)  # keys 1 and 2 fall due
+    _wait_for(lambda: _emitted_past(out_dir, ck, upto), "first background emission")
+    first = max(_sink_partitions(out_dir))
+    stage(3, 4, 4)  # key 3 falls due
+    _wait_for(lambda: _emitted_past(out_dir, ck, first), "second background emission")
+    assert len([k for k in _sink_partitions(out_dir) if k > upto]) == 2
+    assert call() == [1, 2, 3]
+    res = compact_emission_log(spark, state, ck)
+    assert res["kind"] == "suppress" and res["pruned"] == 1
+    assert call() == []  # nothing re-delivered
+
+
+def test_tws_suppress_new_process_delivers_background_batches(spark, tmp_path):
+    """A batch the resident query committed in the background and no call
+    returned is delivered by the first call of a new process: the delivery
+    cursor is on disk.  The process end is modelled by stopping the query
+    and dropping the in-memory registry."""
+    from pyspark_engine import tws
+    from pyspark_engine.streaming import _last_committed
+
+    stage, call, state, ck = _suppress_case(spark, tmp_path)
+    stage(0, 1, 0)
+    assert call() == []
+    upto = _last_committed(ck)
+    stage(1, 2, 2)  # key 1 falls due
+    _wait_for(lambda: _emitted_past(os.path.join(state, "out"), ck, upto), "background emission")
+    for res in tws._RESIDENT.values():
+        if res.query is not None:
+            res.query.stop()
+    tws._RESIDENT.clear()
+    assert call() == [1]
+    assert call() == []
+
+
+def test_tws_background_failure_raises_at_next_call(spark, tmp_path):
+    """A resident query that fails between calls makes the next call on its
+    dir raise the failure, even when a drain on another dir stopped the
+    failed query in between; the call after that starts a new run.  The bad
+    input file is replaced before the next call, so a silent restart would
+    replay it without error."""
+    from pyspark.errors import StreamingQueryException
+
+    from pyspark_engine import tws
+    from pyspark_engine.testing import stage_generation_file
+
+    ld, rd = _tt_dirs(spark, tmp_path)
+    _rows(_tt_join(spark, tmp_path, ld, rd))
+    (res,) = [r for r in tws._RESIDENT.values() if r.query is not None]
+    schema = "k long, lv long, lo long"
+    # a null order value fails the tt processor
+    stage_generation_file(spark.createDataFrame([(1, 7, None)], schema), ld, 1)
+    _wait_for(lambda: not res.query.isActive, "background failure")
+
+    other = tmp_path / "other"
+    other.mkdir()
+    _rows(_tt_join(spark, other, *_tt_dirs(spark, other)))
+    stage_generation_file(spark.createDataFrame([(1, 7, 2)], schema), ld, 1)
+    with pytest.raises(StreamingQueryException, match="null order value"):
+        _tt_join(spark, tmp_path, ld, rd)
+    got = _rows(_tt_join(spark, tmp_path, ld, rd))
+    assert got == [(1, 7, 2, -1, 1)] + [(k, k, 1, -k, 1) for k in range(2, 6)]
+
+
+def test_tws_fk_stage_b_takes_each_call_in_one_batch(spark, tmp_path):
+    """The fk join's stage A stages its subscription partitions while it
+    runs in the background, and publishes them when its drain returns, so
+    the resident stage B consumes a call's whole delta in one batch.
+    Results stay equal to the exact engine's."""
+    from pyspark_engine.streaming import StreamingBuilder, _last_committed, join_fk_streaming
+    from pyspark_engine.testing import stage_generation_file
+
+    sb = StreamingBuilder(spark)
+    fl, fr = str(tmp_path / "fl"), str(tmp_path / "fr")
+    lschema = "pk long, fk long, lo long"
+    stage_generation_file(spark.createDataFrame([(1, 0, 1), (2, 1, 1)], lschema), fl, 0)
+    stage_generation_file(
+        spark.createDataFrame([(0, 5, 1), (1, 6, 1)], "rk long, rv long, ro long"), fr, 0
+    )
+
+    def fk(engine):
+        out = join_fk_streaming(
+            sb.file_stream(fl, key="pk", max_files_per_trigger=1), sb.file_stream(fr, key="rk"),
+            fk="fk", how="inner", l_order=("lo",), r_order=("ro",), engine=engine,
+            state_dir=str(tmp_path / engine), checkpoint=str(tmp_path / f"{engine}_ck"),
+        )
+        return sorted((r["pk"], r["fk"], r["rv"]) for r in out.collect())
+
+    assert fk("tws") == [(1, 0, 5), (2, 1, 6)]
+    ck_a, ck_b = str(tmp_path / "tws_ck" / "sub"), str(tmp_path / "tws_ck" / "join")
+    a0, b0 = _last_committed(ck_a), _last_committed(ck_b)
+    for gen in (1, 2, 3):
+        # pk 1 flips its fk on every generation
+        row = (1, gen % 2, 1 + gen)
+        stage_generation_file(spark.createDataFrame([row], lschema), fl, gen)
+    _wait_for(lambda: _last_committed(ck_a) == a0 + 3, "stage A background batches")
+    assert _last_committed(ck_b) == b0  # nothing published to stage B yet
+    got = fk("tws")
+    assert _last_committed(ck_b) == b0 + 1
+    assert got == fk("exact") == [(1, 1, 6), (2, 1, 6)]
 
 
 def test_tws_batch_without_emissions_leaves_no_partition(spark, tmp_path):
