@@ -84,13 +84,30 @@ def release_cache() -> None:
 _HOT_KEY_ROWS = 1_000_000
 
 # Cap for probe-gated broadcasts of per-doc payload tables (gram-hash /
-# gram-string / vector arrays) onto candidate-pair frames.  64 MB of raw
-# payload stays far under the 8 GB broadcast hard cap even after the 2-4x
-# hash-relation build overhead, and is a trivial slice of executor memory
-# at any deployment size; the gate reads MEASURED byte totals from the
-# pipeline's existing probe pass, so an over-cap corpus keeps the r13
-# merge-join shape (arrays shuffled once by id, never broadcast).
+# gram-string / vector arrays) onto candidate-pair frames (_attach_arrays).
+# It counts RAW payload bytes: the broadcast hash-relation build costs 2-4x
+# that, so 64 MB stays far under the 8 GB broadcast hard cap and is a
+# trivial slice of executor memory at any deployment size.
 _BCAST_ARRAYS_BYTES = 64 << 20
+
+
+def _attach_arrays(small: DataFrame, tbl: DataFrame, key, est_bytes: int) -> DataFrame:
+    """Join the per-doc payload table ``tbl`` (gram or vector arrays) onto
+    the candidate-pair frame ``small`` on ``key`` — the one verify-join
+    broadcast gate of minhash_lsh_pairs, jaccard_pairs_exact and
+    embedding_neardup.  ``est_bytes`` is the table's raw size MEASURED by the
+    caller's probe pass (planning-time estimates are badly wrong after
+    explodes and UDFs).  Within ``_BCAST_ARRAYS_BYTES`` the table
+    broadcasts, so the candidate pairs never re-shuffle dragging payload
+    arrays through a pair-keyed Exchange.  Over the cap the payload side is
+    merge-hinted: its arrays shuffle once by id and are never broadcast —
+    Catalyst's estimate can otherwise elect a BroadcastHashJoin of a
+    corpus-sized payload, which OOMs the broadcast build at a 2 GiB driver
+    on the x30 corpus (SCALE_STRESS.json low_memory) where sort-merge
+    spills."""
+    if est_bytes <= _BCAST_ARRAYS_BYTES:
+        return small.join(F.broadcast(tbl), key)
+    return small.join(tbl.hint("merge"), key)
 
 
 def _attach_key_stats(
@@ -441,17 +458,8 @@ def minhash_lsh_pairs(
     )
     ga = base.select(F.col("__id").alias("id_a"), F.col("__grams").alias("__ga"))
     gb = base.select(F.col("__id").alias("id_b"), F.col("__grams").alias("__gb"))
-    # r14 (same gate as jaccard_pairs_exact): a one-row probe over the
-    # persisted shingle table measures its real byte volume; under the cap
-    # the gram tables broadcast, so candidate pairs never re-shuffle while
-    # dragging gram arrays (the two id-keyed exchanges were q43's whole
-    # 7.9 shuffle-MB at sf0.1), and the salt is unnecessary (no exchange
-    # left to skew).  Over the cap the r13 shape stands unchanged:
-    # merge-hint the payload sides — Catalyst's planning-time estimate of
-    # the persisted shingle table can elect a BroadcastHashJoin of the GRAM
-    # ARRAYS, corpus-sized payloads that must never transit the driver
-    # (measured: broadcast-build OOM at 2 GiB driver on the x30 corpus,
-    # SCALE_STRESS.json low_memory; sort-merge spills gracefully instead).
+    # a one-row probe over the persisted shingle table measures the gram
+    # tables' raw bytes for the verify-join gate (_attach_arrays)
     gprobe = base.agg(
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.size("__grams")), F.lit(0)).alias("g_tot"),
@@ -461,25 +469,23 @@ def minhash_lsh_pairs(
         ).alias("chars_tot"),
     ).collect()[0]
     gram_bytes = 40 * gprobe["n"] + 16 * gprobe["g_tot"] + gprobe["chars_tot"]
-    if gram_bytes <= _BCAST_ARRAYS_BYTES:
-        verified_base = cand.join(F.broadcast(ga), "id_a").join(F.broadcast(gb), "id_b")
-    else:
-        ja, jb = ["id_a"], ["id_b"]
-        if verify_salt is not None and int(verify_salt) > 1:
-            s = int(verify_salt)
-            cand = cand.withColumns(
-                {
-                    "__sa": F.pmod(F.xxhash64("id_a", "id_b"), F.lit(s)).cast("int"),
-                    "__sb": F.pmod(F.xxhash64("id_b", "id_a", F.lit(1)), F.lit(s)).cast("int"),
-                }
-            )
-            salt_seq = F.sequence(F.lit(0).cast("int"), F.lit(s - 1).cast("int"))
-            ga = ga.withColumn("__sa", F.explode(salt_seq))
-            gb = gb.withColumn("__sb", F.explode(salt_seq))
-            ja, jb = ["id_a", "__sa"], ["id_b", "__sb"]
-        verified_base = cand.join(ga.hint("merge"), ja).join(gb.hint("merge"), jb)
+    ja, jb = "id_a", "id_b"
+    if gram_bytes > _BCAST_ARRAYS_BYTES and verify_salt is not None and int(verify_salt) > 1:
+        # only the over-cap (shuffled) verify join has an exchange to skew
+        s = int(verify_salt)
+        cand = cand.withColumns(
+            {
+                "__sa": F.pmod(F.xxhash64("id_a", "id_b"), F.lit(s)).cast("int"),
+                "__sb": F.pmod(F.xxhash64("id_b", "id_a", F.lit(1)), F.lit(s)).cast("int"),
+            }
+        )
+        salt_seq = F.sequence(F.lit(0).cast("int"), F.lit(s - 1).cast("int"))
+        ga = ga.withColumn("__sa", F.explode(salt_seq))
+        gb = gb.withColumn("__sb", F.explode(salt_seq))
+        ja, jb = ["id_a", "__sa"], ["id_b", "__sb"]
     verified = (
-        verified_base
+        _attach_arrays(cand, ga, ja, gram_bytes)
+        .transform(lambda d: _attach_arrays(d, gb, jb, gram_bytes))
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("__ga", "__gb")) / F.size(F.array_union("__ga", "__gb")),
@@ -544,7 +550,8 @@ def jaccard_pairs_exact(
     tokens are by construction the RAREST in each doc, so the quadratic
     risk concentrates exactly where partner counts are smallest (the
     classic AllPairs argument; no recall-losing cap needed), (5) the
-    merge-hinted verify joins (gram payloads never broadcast), and (6) the
+    verify joins (gram payloads broadcast only within the measured-bytes
+    cap, see ``_attach_arrays``), and (6) the
     digest-keyed expansion joins (pair-stat rows only, no gram payloads).
     Stages (2)-(5) run on 8-byte xxhash64 gram keys instead of shingle
     strings, and the candidate dedup doubles as the PPJoin POSITIONAL
@@ -555,15 +562,12 @@ def jaccard_pairs_exact(
     docs — the prefix filter's worst case) the positional filter is what
     keeps the verify join linear in TRUE pairs rather than in candidates.
 
-    r14: (a) df==1 prefix tokens are pruned before the self-join — they
-    cannot generate candidates, and the rarity order makes them a slice
-    offset (``__n1``), so the prefix exchange only carries shareable
-    tokens; (b) the verify joins broadcast the per-doc array tables when
-    the probe's MEASURED byte totals fit ``_BCAST_ARRAYS_BYTES`` — below
-    the cap the candidate pairs never re-shuffle (the id_b exchange used
-    to drag every candidate's gram-hash array: 46.5 of q151's 56.8
-    shuffle-MB at sf0.1), above it the merge-join shape stands
-    unchanged."""
+    df==1 prefix tokens are pruned before the self-join — they cannot
+    generate candidates, and the rarity order makes them a slice offset
+    (``__n1``), so the prefix exchange only carries shareable tokens.  The
+    verify joins attach the per-doc array tables through ``_attach_arrays``
+    (broadcast when the probe's measured bytes fit the cap, merge join
+    above it)."""
     grams = F.array_sort(word_ngrams(tokens(F.col(text_col)), shingle))
     every = (
         _spread(df.select(F.col(id_col), F.col(text_col)))
@@ -576,12 +580,10 @@ def jaccard_pairs_exact(
     )
     every = _persist(every)
     memb = every.select("__id", "__d", F.size("__grams").alias("__sn"))
-    # ONE probe action (doubles as the persist build, as before) now also
-    # measures the corpus's gram-array byte volume, so the verify joins
-    # below can be broadcast-gated on MEASURED sizes rather than planner
-    # estimates (guide §3.1: estimates are badly wrong after explodes/UDFs;
-    # r14, VERDICT r13 item 5).  Totals are pre-collapse, so they upper-
-    # bound the representative table whichever path is taken.
+    # ONE probe action (doubles as the persist build) also measures the
+    # corpus's gram-array byte volume for the verify-join gate
+    # (_attach_arrays).  Totals are pre-collapse, so they upper-bound the
+    # representative table whichever path is taken.
     probe = every.agg(
         F.count(F.lit(1)).alias("n"),
         F.approx_count_distinct("__d", 0.02).alias("nd"),
@@ -603,18 +605,6 @@ def jaccard_pairs_exact(
     hash_side_bytes = 24 * probe["n"] + 8 * probe["g_tot"]
     str_side_bytes = 96 * probe["n"] + 16 * probe["g_tot"] + probe["chars_tot"]
 
-    def _attach_arrays(small: DataFrame, tbl: DataFrame, key: str, est_bytes: int) -> DataFrame:
-        """Join a per-doc array table onto the (small) candidate-pair frame.
-        Measured bytes under the cap → broadcast the array table: the pairs
-        never re-shuffle, so candidate rows stop dragging gram arrays
-        through a pair-keyed Exchange (measured 46.5 MiB of q151's 56.8 MB
-        at sf0.1 — the id_b exchange carried every candidate's __ha array).
-        Over the cap → the r13 shape: merge-hinted SMJ, arrays shuffled
-        once by id, never broadcast (the documented OOM guard for an
-        unbounded corpus)."""
-        if est_bytes <= _BCAST_ARRAYS_BYTES:
-            return small.join(F.broadcast(tbl), key)
-        return small.join(tbl.hint("merge"), key)
     if do_collapse:
         # representative = min-id member per digest, selected with ONE
         # map-side-combinable min_by aggregate (duplicates collapse before
@@ -1175,8 +1165,7 @@ def embedding_neardup(
     ``n_planes="auto"`` to size the plane count to the corpus
     (_resolve_planes — recall tradeoff documented there).
 
-    r14 (VERDICT r13 item 8): (a) every row also carries a 63-bit
-    hyperplane SIGNATURE (an independent plane family); candidate pairs
+    Every row also carries a 63-bit hyperplane SIGNATURE (an independent plane family); candidate pairs
     whose signature Hamming distance exceeds a 6-sigma cutoff for the
     threshold angle are dropped before the distinct/verify stages.  For
     exact duplicates the signatures are identical (never dropped); for a
@@ -1185,12 +1174,9 @@ def embedding_neardup(
     magnitude below the bucket stage's own miss rate for the same pair
     (~0.34 at t=0.9 with 8 planes + multiprobe 1), so the operator's
     probabilistic-recall contract is unchanged in any practical sense,
-    and the exact-cosine verify still decides every SURVIVING pair.
-    (b) the verify join broadcasts the vector table when its MEASURED
-    bytes (count probe x row width) fit ``_BCAST_ARRAYS_BYTES`` — below
-    the cap candidate pairs never re-shuffle (the id_b exchange used to
-    drag every candidate's vector: 14 of q60's 17.9 shuffle-MB at sf0.1);
-    above it the r13 merge-join shape stands (vectors never broadcast)."""
+    and the exact-cosine verify still decides every SURVIVING pair.  The
+    verify join attaches the vector table through ``_attach_arrays``, gated
+    on its measured bytes (count probe x row width)."""
     n_planes = _resolve_planes(emb, n_planes)
     sig_bits = 63  # 64 would need bit 63 = Long.MIN; 63 keeps positive longs
     base = _spread(emb).select(
@@ -1234,19 +1220,13 @@ def embedding_neardup(
     )
     vecs = _persist(vecs)
     # probe = count of the persisted vector table (builds the cache, like
-    # jaccard's collapse probe); gates the broadcast on measured bytes
+    # jaccard's collapse probe); gates the verify join on measured bytes
     vec_bytes = vecs.count() * (8 * dim + 32)
     va = vecs.select(F.col("__vid").alias("id_a"), F.col("__vec").alias("__va"), F.col("__vn").alias("__na"))
     vb = vecs.select(F.col("__vid").alias("id_b"), F.col("__vec").alias("__vb"), F.col("__vn").alias("__nb"))
-    if vec_bytes <= _BCAST_ARRAYS_BYTES:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    else:
-        # merge hints: never let the planner broadcast unbounded vector
-        # payloads (same broadcast-OOM hazard as minhash_lsh_pairs' grams)
-        va, vb = va.hint("merge"), vb.hint("merge")
     return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
+        _attach_arrays(pairs, va, "id_a", vec_bytes)
+        .transform(lambda d: _attach_arrays(d, vb, "id_b", vec_bytes))
         .withColumn("__sim", _dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")))
         .filter(F.col("__sim") >= threshold)
         .select("id_a", "id_b")

@@ -21,6 +21,27 @@ Mappings:
   * custom stateful processor  → applyInPandasWithState (stateful_map)
   * Kafka serdes               → serdes.decode_kafka / encode_kafka
 
+The exact engines — ``engine='exact'`` of the continuous table joins,
+suppress and the as-of join, plus the eager windowed join and cogroup — are
+foreachBatch snapshot loops (the per-key ``engine='tws'`` engines live in
+``tws.py``).  Each keeps only its per-batch fold and its result read; the
+rest is one code path:
+
+* ``_exact_drain`` — open the state dir, read its ping-pong generation
+  (``_read_gen``), bind the dir to its checkpoint
+  (``_bind_state_checkpoint``), run a crash-replayed batch whose fold
+  already committed (``_read_applied``) through a noop sink, fold every
+  other batch from generation slot ``cur`` into ``nxt`` and record it
+  (``_write_gen``); it returns the checkpoint's last commit before the
+  drain and the final generation;
+* ``_drive`` — the availableNow foreachBatch start and wait; the as-of
+  loop, which keeps no generation, uses it alone;
+* ``_write_emissions`` / ``_read_log`` — the ``sink_batch=<id>`` emission
+  log writer (one action per batch; no partition for a batch that emitted
+  nothing) and its reader with the log's known schema, shared with the tws
+  engines.  Exact suppress and the eager join log per batch, and
+  ``_read_emissions`` is the result read of both suppress engines.
+
 Kafka connectivity needs the external spark-sql-kafka package (same situation
 as the reference needing librdkafka at runtime); the builders construct the
 real plan and raise a clear error when the connector is absent.
@@ -30,11 +51,12 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import uuid
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dsl import KStream, KTable, _as_tuple
@@ -331,6 +353,61 @@ def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> 
     return ckpt
 
 
+def _drive(df: DataFrame, ckpt: str, sink, output_mode: str = "append") -> None:
+    """Run ``sink(batch, batch_id)`` as the foreachBatch sink of ``df`` on
+    checkpoint ``ckpt`` with an availableNow trigger, and wait until the
+    input available at the call is committed and the query stops — the
+    drive half of ``_exact_drain``.  The as-of loop, which keeps no
+    generation, uses it alone."""
+    (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _exact_drain(df: DataFrame, root: str, checkpoint, what: str, fold, output_mode="append"):
+    """The one drain path of the exact loops' ping-pong parquet state in
+    ``root``: read its generation (``_read_gen``), bind the dir to its
+    checkpoint (``_bind_state_checkpoint``; ``what`` names the state in
+    refusals) and drive ``df`` (``_drive``).  Each micro-batch calls
+    ``fold(batch, batch_id, cur, nxt)`` — read generation slot ``cur``,
+    write slot ``nxt`` — and then records the new generation together with
+    the batch id (``_write_gen``).  A crash-replayed batch whose fold
+    already committed (``_read_applied``) is not folded again; it runs
+    through a noop sink, so the upstream stateful operator's stores still
+    commit for it.
+
+    Returns ``(prior_batch, gen)``: the checkpoint's last committed batch
+    before the drive (a loop that returns per-batch emissions returns the
+    batches after it) and the generation the drive ended on (its state is
+    slot ``gen % 2``)."""
+    os.makedirs(root, exist_ok=True)
+    gen = [_read_gen(root)]  # survives a restart on the same checkpoint
+    # a fresh OR foreign checkpoint renumbers/skips batch ids, so the replay
+    # skip below would silently drop or double-fold data — the state dir is
+    # bound to its original checkpoint and every other pair refused
+    ckpt = _bind_state_checkpoint(
+        root, _checkpoint(checkpoint), gen[0] > 0, f"{what} generation {gen[0]}"
+    )
+    prior_batch = _last_committed(ckpt)
+
+    def _sink(batch: DataFrame, batch_id: int) -> None:
+        if batch_id <= _read_applied(root):
+            batch.write.format("noop").mode("overwrite").save()
+            return
+        n = gen[0]
+        fold(batch, batch_id, n % 2, (n + 1) % 2)
+        gen[0] = n + 1
+        _write_gen(root, n + 1, batch_id)
+
+    _drive(df, ckpt, _sink, output_mode)
+    return prior_batch, gen[0]
+
+
 _COMPACT_TMP = "compact-tmp"
 _COMPACT_TRASH_PREFIX = "compact-trash-"
 
@@ -424,8 +501,6 @@ def _recover_compaction(out_dir: str, root: str) -> None:
     the fold) — a rolled-back compaction costs a re-run, a wrong
     forward-finish costs committed emission history (misreading a
     pre-swap state as post-install would prune live partitions)."""
-    import shutil  # noqa: PLC0415
-
     tmp = os.path.join(root, _COMPACT_TMP)
     target_path = os.path.join(tmp, "_TARGET")
     trash_ids = {}
@@ -528,8 +603,6 @@ def compact_emission_log(
     context as the drains.
 
     Returns a summary dict (kind, folded/pruned partition counts, rows)."""
-    import shutil  # noqa: PLC0415
-
     from .tws import stop_resident  # noqa: PLC0415 - tws imports this module
 
     root = state_dir
@@ -1460,7 +1533,6 @@ def _changelog_join_loop(
     l_cols, r_cols = list(left.df.columns), list(right.df.columns)
     lord, rord = _changelog_orders(left, right, l_order, r_order)
     root = state_dir or tempfile.mkdtemp(prefix=state_prefix)
-    os.makedirs(root, exist_ok=True)
     tagged = left.df.select(
         F.lit(1).alias("__side"),
         *l_cols,
@@ -1472,27 +1544,13 @@ def _changelog_join_loop(
             *r_cols,
         )
     )
-    gen = {"n": _read_gen(root)}  # survives a restart on the same checkpoint
-    # a fresh OR foreign checkpoint renumbers/skips batch ids, so the
-    # replay-skip below would silently drop or double-fold data — the state
-    # dir is bound to its original checkpoint and every other pair refused
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), gen["n"] > 0, f"join-state generation {gen['n']}"
+    sides = (
+        ("l", F.col("__side") == 1, l_cols, left.key, lord),
+        ("r", F.col("__side") == 0, r_cols, right.key, rord),
     )
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= _read_applied(root):
-            # crash-replay of a batch whose fold already committed: skip the
-            # fold, but still run the batch's tasks (noop sink) so the
-            # upstream stateful operator's stores commit for this batch
-            batch.write.format("noop").mode("overwrite").save()
-            return
+    def _fold(batch: DataFrame, batch_id: int, cur: int, nxt: int) -> None:
         spark = batch.sparkSession
-        cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
-        sides = (
-            ("l", F.col("__side") == 1, l_cols, left.key, lord),
-            ("r", F.col("__side") == 0, r_cols, right.key, rord),
-        )
         for tag, pred, cols, key, order in sides:
             rows = batch.filter(pred).select(*cols)
             prev_path = os.path.join(root, f"{tag}-{cur}")
@@ -1502,18 +1560,9 @@ def _changelog_join_loop(
             latest.write.mode("overwrite").parquet(os.path.join(root, f"{tag}-{nxt}"))
         l_t = KTable(spark.read.parquet(os.path.join(root, f"l-{nxt}")), left.key, left.ts)
         r_t = KTable(spark.read.parquet(os.path.join(root, f"r-{nxt}")), right.key, right.ts)
-        out = combine(l_t, r_t)
-        out.df.write.mode("overwrite").parquet(os.path.join(root, "out"))
-        gen["n"] += 1
-        _write_gen(root, gen["n"], batch_id)
+        combine(l_t, r_t).df.write.mode("overwrite").parquet(os.path.join(root, "out"))
 
-    q = (
-        tagged.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _exact_drain(tagged, root, checkpoint, "join-state", _fold)
     spark = left.df.sparkSession
     out_path = os.path.join(root, "out")
     if not os.path.exists(out_path):
@@ -1662,40 +1711,20 @@ def suppress_buffered(
 
     cols = list(df.columns)
     root = state_dir or tempfile.mkdtemp(prefix="pse-suppress-")
-    os.makedirs(root, exist_ok=True)
-    gen = {"n": _read_gen(root)}
-    spark0 = df.sparkSession
     out_dir = os.path.join(root, "out")
-    # resuming the buffer with a fresh OR foreign checkpoint would replay
-    # the whole source and re-merge already-emitted keys (double emission),
-    # or skip foreign batch ids — only the bound original pair is accepted
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), gen["n"] > 0, f"suppress-buffer generation {gen['n']}"
-    )
-    # this CALL returns only ITS OWN emissions: a resumed drain must not
-    # re-deliver records from batches the checkpoint already COMMITTED
-    # (an emitted-but-uncommitted batch replays and IS delivered — the
-    # previous drain crashed before returning it)
-    prior_batch = _last_committed(ckpt)
+    st_path = os.path.join(root, "_STREAM_TIME")
 
     def _stream_time() -> int:
         try:
-            with open(os.path.join(root, "_STREAM_TIME")) as f:
+            with open(st_path) as f:
                 return int(f.read().strip())
         except (OSError, ValueError):
             return -(1 << 62)
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
+    def _fold(batch: DataFrame, batch_id: int, cur: int, nxt: int) -> None:
         from pyspark.sql.window import Window
 
-        if batch_id <= _read_applied(root):
-            # crash-replay of a batch whose fold already committed: skip the
-            # fold (the emission partition is already on disk), but still
-            # run the batch's tasks so the upstream aggregate's stores commit
-            batch.write.format("noop").mode("overwrite").save()
-            return
         spark = batch.sparkSession
-        cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
         new = batch.withColumn("__ev_ms", epoch_ms(tcol))
         batch_max = new.agg(F.max("__ev_ms")).collect()[0][0]
         st = max(_stream_time(), batch_max if batch_max is not None else -(1 << 62))
@@ -1718,11 +1747,17 @@ def suppress_buffered(
         else:
             merged = new.select(*cols, F.col("__ev_ms").alias("__entry_ms"))
         merged = merged.localCheckpoint()  # cut lineage; buffer is bounded
-        emissions = []  # [(rows_df, reason)] — written ONCE per batch below
-        due = merged.filter(F.col("__entry_ms") + F.lit(limit_ms) <= F.lit(st))
-        if due.limit(1).count():
-            emissions.append((due, "time"))
-        remaining = merged.filter(~(F.col("__entry_ms") + F.lit(limit_ms) <= F.lit(st)))
+
+        def _emit(rows: DataFrame, reason: str) -> DataFrame:
+            return rows.select(
+                *cols,
+                F.lit(reason).alias("__emit_reason"),
+                F.lit(batch_id).cast("long").alias("__emit_batch"),
+            )
+
+        is_due = F.col("__entry_ms") + F.lit(limit_ms) <= F.lit(st)
+        emitted = _emit(merged.filter(is_due), "time")
+        remaining = merged.filter(~is_due)
         # capacity bounds (the buffer is <= max_records rows by invariant, so
         # the single-partition rank window below is bounded, not a skew risk)
         if max_records is not None or max_bytes is not None:
@@ -1754,54 +1789,30 @@ def suppress_buffered(
                         "emit_early_when_full=True for BufferConfig.emitEarlyWhenFull"
                     )
                 early = sized.filter(F.col("__rank") <= keep_rank)
-                emissions.append((early, "early"))
+                emitted = emitted.unionByName(_emit(early, "early"))
                 remaining = sized.filter(F.col("__rank") > keep_rank).select(*cols, "__entry_ms")
-        if emissions:
-            out = None
-            for rows, reason in emissions:
-                part = rows.select(
-                    *cols,
-                    F.lit(reason).alias("__emit_reason"),
-                    F.lit(int(batch_id)).alias("__emit_batch"),
-                )
-                out = part if out is None else out.unionByName(part)
-            # one OVERWRITE per batch partition: a crash-replayed batch
-            # rewrites its own emissions instead of appending duplicates
-            out.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"sink_batch={batch_id}")
-            )
+        # one OVERWRITE per batch partition, none for a batch that emitted
+        # nothing: a crash-replayed batch rewrites its own emissions
+        _write_emissions(emitted, out_dir, batch_id)
         remaining.write.mode("overwrite").parquet(os.path.join(root, f"buf-{nxt}"))
-        tmp = os.path.join(root, "_STREAM_TIME.tmp")
-        with open(tmp, "w") as f:
+        with open(st_path + ".tmp", "w") as f:
             f.write(str(int(st)))
-        os.replace(tmp, os.path.join(root, "_STREAM_TIME"))
-        gen["n"] += 1
-        _write_gen(root, gen["n"], batch_id)
+        os.replace(st_path + ".tmp", st_path)
 
-    q = (
-        df.writeStream.outputMode("update")
-        .foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark = df.sparkSession
+    # this CALL returns only ITS OWN emissions: a resumed drain must not
+    # re-deliver records from batches the checkpoint already COMMITTED (an
+    # emitted-but-uncommitted batch replays and IS delivered — the previous
+    # drain crashed before returning it)
+    prior_batch, gen = _exact_drain(df, root, checkpoint, "suppress-buffer", _fold, "update")
     if store_name is not None:
-        buf_path = os.path.join(root, f"buf-{gen['n'] % 2}")
+        buf_path = os.path.join(root, f"buf-{gen % 2}")
         buf = (
-            spark.read.parquet(buf_path)
+            df.sparkSession.read.parquet(buf_path)
             if os.path.exists(buf_path)
-            else spark.createDataFrame([], df.schema)
+            else df.sparkSession.createDataFrame([], df.schema)
         )
         buf.createOrReplaceTempView(store_name)
-    if not _has_emissions(out_dir):
-        return _empty_emissions(spark, df.schema, cols)
-    return (
-        spark.read.parquet(out_dir)
-        .filter(F.col("sink_batch") > F.lit(int(prior_batch)))
-        .select(*cols, "__emit_reason", "__emit_batch")
-    )
+    return _read_emissions(df, out_dir, since=prior_batch)
 
 
 def _has_emissions(out_dir: str) -> bool:
@@ -1815,13 +1826,61 @@ def _has_emissions(out_dir: str) -> bool:
     return any(e.startswith("sink_batch=") for e in os.listdir(out_dir))
 
 
-def _empty_emissions(spark, schema, cols):
-    empty = spark.createDataFrame([], schema)
-    return empty.select(
-        *cols,
-        F.lit(None).cast("string").alias("__emit_reason"),
-        F.lit(None).cast("long").alias("__emit_batch"),
-    )
+def _write_emissions(batch: DataFrame, log_dir: str, batch_id: int, publish: bool = True) -> None:
+    """Write one micro-batch's emissions as the ``sink_batch=<id>``
+    partition of ``log_dir`` in ONE action.  The foreachBatch DataFrame
+    recomputes its lineage — the whole stateful plan — on every action, so
+    the row count rides the write as an observed metric instead of a second
+    action.  The write goes to a hidden ``.sink_batch=<id>`` staging dir
+    (file listings skip a leading ``.``), removed when the batch emitted
+    nothing and otherwise renamed into place: at once, or with
+    ``publish=False`` by a later ``tws._publish_staged``.  So a reader
+    polling the log — the fk join's stage B reads stage A's ``sub/`` — never
+    lists a partly written partition or an empty one about to go.  A
+    crash-replayed batch replaces its own partition."""
+    part = os.path.join(log_dir, f"sink_batch={batch_id}")
+    stage = os.path.join(log_dir, f".sink_batch={batch_id}")
+    obs = Observation()
+    batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
+    if os.path.isdir(part):
+        shutil.rmtree(part)
+    if not obs.get["n"]:
+        shutil.rmtree(stage)
+    elif publish:
+        os.rename(stage, part)
+
+
+def _ddl(df: DataFrame) -> str:
+    """``df``'s columns as a DDL list, names quoted (``_read_log`` form)."""
+    return df._jdf.schema().toDDL()
+
+
+def _read_log(spark, log_dir, schema, upto=None, since=-1) -> DataFrame:
+    """The batches ``since < sink_batch <= upto`` (no upper bound when
+    ``upto`` is None) of an emission log, read with the log's known DDL
+    column ``schema`` (no schema-inference job)."""
+    log = spark.read.schema(f"{schema}, sink_batch int").parquet(log_dir)
+    keep = F.col("sink_batch") > F.lit(since)
+    if upto is not None:
+        keep &= F.col("sink_batch") <= F.lit(upto)
+    return log.filter(keep)
+
+
+def _read_emissions(df: DataFrame, out_dir: str, upto=None, since=-1) -> DataFrame:
+    """A suppress engine's result: the emissions of the batches ``since <
+    sink_batch <= upto`` in ``out_dir``, as the suppressed table ``df``'s
+    columns plus ``__emit_reason`` (string) and ``__emit_batch`` (bigint);
+    empty with that schema when no batch ever emitted."""
+    cols = list(df.columns)
+    if not _has_emissions(out_dir):
+        return df.sparkSession.createDataFrame([], df.schema).select(
+            *cols,
+            F.lit(None).cast("string").alias("__emit_reason"),
+            F.lit(None).cast("long").alias("__emit_batch"),
+        )
+    schema = f"{_ddl(df)}, __emit_reason string, __emit_batch bigint"
+    log = _read_log(df.sparkSession, out_dir, schema, upto, since)
+    return log.select(*cols, "__emit_reason", "__emit_batch")
 
 
 # ---------------- custom stateful operator escape hatch ----------------
@@ -2051,13 +2110,7 @@ def join_windowed_eager(
         raise ValueError("eager windowed join supports inner|left|full")
     l_cols, r_cols = list(left.df.columns), list(right.df.columns)
     root = state_dir or tempfile.mkdtemp(prefix="pse-ssjoin-")
-    os.makedirs(root, exist_ok=True)
     out_dir = os.path.join(root, "out")
-    gen = {"n": _read_gen(root)}
-    ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), gen["n"] > 0, f"eager-join generation {gen['n']}"
-    )
-    prior_batch = _last_committed(ckpt)
     tagged = left.df.select(
         F.lit(1).alias("__side"),
         *l_cols,
@@ -2075,12 +2128,8 @@ def join_windowed_eager(
             KStream(rdf, right.key, right.ts), window, how=how, ts_alias=ts_alias
         ).df
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch_id <= _read_applied(root):
-            batch.write.format("noop").mode("overwrite").save()
-            return
+    def _fold(batch: DataFrame, batch_id: int, cur: int, nxt: int) -> None:
         spark = batch.sparkSession
-        cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
         sides = {}
         for tag, pred, cols in (
             ("l", F.col("__side") == 1, l_cols),
@@ -2102,25 +2151,16 @@ def join_windowed_eager(
         old_r, all_r = sides["r"]
         # eager emission set = what the full eager history would have added
         # this batch: new matches + new unmatched-side paddings, no retraction
-        delta = _join(all_l, all_r).exceptAll(_join(old_l, old_r))
-        delta.write.mode("overwrite").parquet(os.path.join(out_dir, f"sink_batch={batch_id}"))
-        gen["n"] += 1
-        _write_gen(root, gen["n"], batch_id)
+        _write_emissions(_join(all_l, all_r).exceptAll(_join(old_l, old_r)), out_dir, batch_id)
 
-    q = (
-        tagged.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    prior_batch, _ = _exact_drain(tagged, root, checkpoint, "eager-join", _fold)
     spark = left.df.sparkSession
+    empty = _join(
+        spark.createDataFrame([], left.df.schema), spark.createDataFrame([], right.df.schema)
+    )
     if not _has_emissions(out_dir):
-        empty_l = spark.createDataFrame([], left.df.schema)
-        empty_r = spark.createDataFrame([], right.df.schema)
-        return _join(empty_l, empty_r)
-    got = spark.read.parquet(out_dir)
-    return got.filter(F.col("sink_batch") > F.lit(int(prior_batch))).drop("sink_batch")
+        return empty
+    return _read_log(spark, out_dir, _ddl(empty), since=prior_batch).drop("sink_batch")
 
 
 def _asof_dir_engine(out_dir: str | None) -> str | None:
@@ -2249,13 +2289,7 @@ def join_table_asof_streaming(
         )
         out.df.write.mode("overwrite").parquet(os.path.join(root, f"sink_batch={batch_id}"))
 
-    q = (
-        stream.df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drive(stream.df, ckpt, _apply)
     spark = stream.df.sparkSession
     if not _has_emissions(root):
         # no microbatch fired (empty stream): schema-correct empty result
@@ -2322,46 +2356,27 @@ def cogroup_streaming(
                 "cogroup_streaming requires streaming inputs; use CogroupedKStream.aggregate in batch"
             )
         agg_df = df.groupBy(*grouped.key).agg(*[v.alias(k) for k, v in aggs.items()])
-        side_root = os.path.join(root, f"side-{i}")
-        os.makedirs(side_root, exist_ok=True)
-        gen = {"n": _read_gen(side_root)}  # survives a restart on the same checkpoint
-        side_ckpt = _bind_state_checkpoint(
-            side_root,
-            _checkpoint(None if checkpoint is None else os.path.join(checkpoint, f"side-{i}")),
-            gen["n"] > 0,
-            f"cogroup-state generation {gen['n']}",
-        )
+        side_root, kcols = os.path.join(root, f"side-{i}"), tuple(grouped.key)
 
-        def _apply(batch: DataFrame, batch_id: int, side_root=side_root, gen=gen, kcols=tuple(grouped.key)):
-            if batch_id <= _read_applied(side_root):
-                batch.write.format("noop").mode("overwrite").save()
-                return  # crash-replay of a batch whose fold already committed
+        def _fold(batch: DataFrame, batch_id: int, cur: int, nxt: int) -> None:
             spark = batch.sparkSession
-            cur, nxt = gen["n"] % 2, (gen["n"] + 1) % 2
-            rows = batch.withColumn("__gen", F.lit(gen["n"] + 1).cast("long"))
+            # batch_id + 1 outranks every __gen already in the snapshot: the
+            # earlier batches' ids and the generation counts older runs wrote
+            rows = batch.withColumn("__gen", F.lit(batch_id + 1).cast("long"))
             prev = os.path.join(side_root, f"g-{cur}")
             if os.path.exists(prev):
                 rows = spark.read.parquet(prev).unionByName(rows)
             latest = KStream(rows, kcols, None).to_table(order=("__gen",)).df
             latest.write.mode("overwrite").parquet(os.path.join(side_root, f"g-{nxt}"))
-            gen["n"] += 1
-            _write_gen(side_root, gen["n"], batch_id)
 
-        q = (
-            agg_df.writeStream.outputMode("update")
-            .foreachBatch(_apply)
-            .option("checkpointLocation", side_ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        spark = df.sparkSession
-        final = os.path.join(side_root, f"g-{gen['n'] % 2}")
-        if gen["n"] > 0 and os.path.exists(final):
-            t = spark.read.parquet(final).drop("__gen")
+        side_ckpt = None if checkpoint is None else os.path.join(checkpoint, f"side-{i}")
+        _, gen = _exact_drain(agg_df, side_root, side_ckpt, "cogroup-state", _fold, "update")
+        final = os.path.join(side_root, f"g-{gen % 2}")
+        if gen > 0 and os.path.exists(final):
+            t = df.sparkSession.read.parquet(final).drop("__gen")
         else:  # side never fired: schema-correct empty aggregate table
-            t = spark.createDataFrame([], agg_df.schema)
-        tables.append((t, tuple(grouped.key)))
+            t = df.sparkSession.createDataFrame([], agg_df.schema)
+        tables.append((t, kcols))
     from .dsl import stitch_cogrouped
 
     return stitch_cogrouped(tables, key, fill)

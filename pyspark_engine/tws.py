@@ -23,21 +23,22 @@ path:
   the as-of join, compact the log at the autocompaction cadence;
 * ``_drain`` — drive the processor's RESIDENT query (below) until the
   input available at the call is committed, with one foreachBatch sink
-  publishing each micro-batch through ``_write_emissions``;
-* ``_read_log`` / ``_snapshot`` — the emission log read with its known
-  schema up to the call's last committed batch, and the tt/fk
+  publishing each micro-batch through ``streaming._write_emissions``;
+* ``streaming._read_log`` / ``_snapshot`` — the emission log read with its
+  known schema up to the call's last committed batch, and the tt/fk
   latest-per-key fold (``streaming._fold_emission_log``, shared with
-  compaction);
+  compaction).  The emission-log writer and reader are shared with the
+  exact loops that log per batch (suppress, the eager windowed join);
 * processor side: ``_codec`` (state-cell load/store), ``_order_of`` (the
   changelog order tuple and its null-order refusal) and ``_norm``.
 
 Each micro-batch runs its stateful plan ONCE.  The foreachBatch DataFrame
 is a plain batch DataFrame over the stateful plan, and every action on it
 recomputes that plan — transformWithState, the Python state workers and
-the RocksDB commit.  So the sink hands its batch to ``_write_emissions``,
-which writes the partition and counts its rows in the same action (an
-observed metric) and publishes the partition only when the count is not
-0; the sink never probes the batch with a second action
+the RocksDB commit.  So the sink hands its batch to ``_write_emissions``
+(``streaming.py``), which writes the partition and counts its rows in the
+same action (an observed metric) and publishes the partition only when the
+count is not 0; the sink never probes the batch with a second action
 (``tests/test_tws.py`` guards this).  The processors ship BY VALUE, with
 the module helpers they call: unpickling one imports only pyspark and
 the standard library, not this package or pandas, so neither the
@@ -118,7 +119,7 @@ from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark import cloudpickle
-from pyspark.sql import DataFrame, Observation, Row
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from .dsl import KStream, KTable, _not_null
@@ -135,15 +136,17 @@ from .streaming import (
     _container_cols,
     _delivered_cursor,
     _dtype_refusal,
-    _empty_emissions,
     _fold_emission_log,
     _hard_container_refusal,
     _has_emissions,
     _last_committed,
     _maybe_autocompact,
     _read_bind,
+    _read_emissions,
+    _read_log,
     _refuse_legacy_keyed_dir,
     _store_delivered,
+    _write_emissions,
 )
 
 _TWS_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -271,30 +274,6 @@ def _stamp_version(root: str, marker: str, version: str, populated: bool, what: 
         with open(ver_path + ".tmp", "w") as f:
             f.write(version)
         os.replace(ver_path + ".tmp", ver_path)
-
-
-def _write_emissions(batch: DataFrame, log_dir: str, batch_id: int, publish: bool = True) -> None:
-    """Write one micro-batch's emissions as the ``sink_batch=<id>``
-    partition of ``log_dir`` in ONE action.  The foreachBatch DataFrame
-    recomputes its lineage — the whole stateful plan — on every action, so
-    the row count rides the write as an observed metric instead of a second
-    action.  The write goes to a hidden ``.sink_batch=<id>`` staging dir
-    (file listings skip a leading ``.``), removed when the batch emitted
-    nothing and otherwise renamed into place: at once, or with
-    ``publish=False`` by a later ``_publish_staged``.  So a reader polling
-    the log — the fk join's stage B reads stage A's ``sub/`` — never lists a
-    partly written partition or an empty one about to go.  A crash-replayed
-    batch replaces its own partition."""
-    part = os.path.join(log_dir, f"sink_batch={batch_id}")
-    stage = os.path.join(log_dir, f".sink_batch={batch_id}")
-    obs = Observation()
-    batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
-    if os.path.isdir(part):
-        shutil.rmtree(part)
-    if not obs.get["n"]:
-        shutil.rmtree(stage)
-    elif publish:
-        os.rename(stage, part)
 
 
 def _publish_staged(log_dir: str, upto: int) -> None:
@@ -463,13 +442,6 @@ def _drain(
         res.query.stop()
         raise
     return _last_committed(ckpt)
-
-
-def _read_log(spark, log_dir, schema, upto, since=-1) -> DataFrame:
-    """The batches ``since < sink_batch <= upto`` of an emission log, read
-    with the log's known column ``schema`` (no schema-inference job)."""
-    log = spark.read.schema(f"{schema}, sink_batch int").parquet(log_dir)
-    return log.filter((F.col("sink_batch") > F.lit(since)) & (F.col("sink_batch") <= F.lit(upto)))
 
 
 def _snapshot(spark, log_dir, schema, upto, key, kind, empty_out, store_name):
@@ -985,14 +957,7 @@ def suppress_tws(
                 *[_view_col(c) for c in cols]
             )
         buf.createOrReplaceTempView(store_name)
-    if not _has_emissions(out_dir):
-        out = _empty_emissions(spark0, table.df.schema, cols)
-    else:
-        log_schema = ", ".join(f"`{c}` {ddl[c]}" for c in cols)
-        log_schema += ", __emit_reason string, __emit_batch bigint"
-        out = _read_log(spark0, out_dir, log_schema, upto, since).select(
-            *cols, "__emit_reason", "__emit_batch"
-        )
+    out = _read_emissions(table.df, out_dir, upto, since)
     _store_delivered(root, ckpt, upto)
     return out
 

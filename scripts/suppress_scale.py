@@ -16,8 +16,12 @@ the warmup), i.e. the steady per-microbatch regime.  One session, idle box.
 Usage: python scripts/suppress_scale.py            # N = 20k, 100k; B = 10
        SUPPRESS_NS=1000,10000 SUPPRESS_B=5 python scripts/suppress_scale.py
        SUPPRESS_ENGINES=tws python scripts/suppress_scale.py  # default: tws,exact
-Prints one JSON line; merge the result into SCALE_STRESS.json (its
-historical ``keyed`` blocks measured the removed pandas engine).
+Set ``SPARK_GRAFT_CPUS`` to the host's core count: ``build_session``
+otherwise runs ``local[32]`` with 32 state partitions, which on a 4 vCPU
+host inflates the per-batch cost several-fold.  Prints one JSON line, with
+the session's effective core count (``cpus``, its ``defaultParallelism``);
+merge the result into SCALE_STRESS.json (its historical ``keyed`` blocks
+measured the removed pandas engine).
 """
 
 from __future__ import annotations
@@ -128,7 +132,12 @@ def main() -> None:
     b = int(os.environ.get("SUPPRESS_B", "10"))
     spark = build_session("suppress_scale", ui=False)
     spark.sparkContext.setLogLevel("ERROR")
-    out: dict = {"metric": "suppress_engine_scaling", "batches": b, "buffered_keys": ns}
+    out: dict = {
+        "metric": "suppress_engine_scaling",
+        "cpus": spark.sparkContext.defaultParallelism,
+        "batches": b,
+        "buffered_keys": ns,
+    }
     engines = tuple(
         e.strip() for e in os.environ.get("SUPPRESS_ENGINES", "tws,exact").split(",") if e.strip()
     )

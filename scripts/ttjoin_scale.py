@@ -29,8 +29,12 @@ Usage: python scripts/ttjoin_scale.py             # N = 100k, 1M; B = 10
        TTJOIN_NS=1000,10000 TTJOIN_B=5 python scripts/ttjoin_scale.py
        TTJOIN_ENGINES=tws python scripts/ttjoin_scale.py   # default: tws,exact
        TTJOIN_KIND=fk / TTJOIN_KIND=asof measure the fk / as-of joins instead
-Prints one JSON line; merge the result into SCALE_STRESS.json (its
-historical ``keyed`` blocks measured the removed pandas engine).
+Set ``SPARK_GRAFT_CPUS`` to the host's core count: ``build_session``
+otherwise runs ``local[32]`` with 32 state partitions, which on a 4 vCPU
+host inflates the per-batch cost several-fold.  Prints one JSON line, with
+the session's effective core count (``cpus``, its ``defaultParallelism``);
+merge the result into SCALE_STRESS.json (its historical ``keyed`` blocks
+measured the removed pandas engine).
 """
 
 from __future__ import annotations
@@ -315,16 +319,17 @@ def main() -> None:
     engines = tuple(
         e.strip() for e in os.environ.get("TTJOIN_ENGINES", "tws,exact").split(",") if e.strip()
     )
+    cpus = spark.sparkContext.defaultParallelism
     if which == "fk":
-        out = {"metric": "fkjoin_engine_scaling", "batches": b, "state_keys": ns}
+        out = {"metric": "fkjoin_engine_scaling", "cpus": cpus, "batches": b, "state_keys": ns}
         for engine in engines:
             out[engine] = {f"n{n}": measure_fk(spark, engine, n, b) for n in ns}
     elif which == "asof":
-        out = {"metric": "asofjoin_engine_scaling", "batches": b, "state_keys": ns}
+        out = {"metric": "asofjoin_engine_scaling", "cpus": cpus, "batches": b, "state_keys": ns}
         for engine in engines:
             out[engine] = {f"n{n}": measure_asof(spark, engine, n, b) for n in ns}
     else:
-        out = {"metric": "ttjoin_engine_scaling", "batches": b, "state_keys": ns}
+        out = {"metric": "ttjoin_engine_scaling", "cpus": cpus, "batches": b, "state_keys": ns}
         for engine in engines:
             out[engine] = {f"n{n}": measure(spark, engine, n, b) for n in ns}
     print(json.dumps(out))

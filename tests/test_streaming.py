@@ -2137,26 +2137,35 @@ def test_fk_join_tws_bigint_restart_and_guards(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_tws_join_crash_replay_idempotent(spark, tmp_path):
-    """Crash-replay robustness of the tws join engines (same protocol as
-    the suppress replay test: delete the newest commit marker, re-drain).
-    tt join: the replayed microbatch overwrites its own sink_batch
-    partition, so the final snapshot is unchanged.  fk join, BOTH stages:
-    a stage-B rollback recomputes from the pre-batch state version; a
-    stage-A rollback rewrites its subscription partition with new file
+@pytest.mark.parametrize("engine", ["tws", "exact"])
+def test_join_crash_replay_idempotent(spark, tmp_path, engine):
+    """Crash-replay robustness of the tt and fk join engines (same protocol
+    as the suppress replay test: delete the newest commit marker, re-drain).
+    tws tt join: the replayed microbatch overwrites its own sink_batch
+    partition, so the final snapshot is unchanged.  tws fk join, BOTH
+    stages: a stage-B rollback recomputes from the pre-batch state version;
+    a stage-A rollback rewrites its subscription partition with new file
     names, which stage B (file source) re-consumes — the re-applied U/D ops
     are idempotent against per-pk sub cursors and same-batch U-over-D ties,
     so re-emissions fold to the identical snapshot instead of resurrecting
-    a retracted row."""
+    a retracted row.  exact: the _GEN applied-batch marker skips the
+    replayed batch's fold, so the snapshot AND the generation count are
+    unchanged (a second upsert of the same batch would leave the snapshot
+    equal but advance the generation)."""
     import datetime as dt
     import os
 
     from pyspark_engine.streaming import (
         _last_committed,
+        _read_gen,
         join_fk_streaming,
         join_tables_streaming,
     )
     from pyspark_engine.tws import stop_resident
+
+    def folds(state):
+        # the exact loop's generation count; tws keeps no generation
+        return _read_gen(state) if engine == "exact" else None
 
     def crash(ckpt, state):
         # a real crash ends the process and with it the dir's resident
@@ -2187,13 +2196,15 @@ def test_tws_join_crash_replay_idempotent(spark, tmp_path):
             how="inner",
             state_dir=state,
             checkpoint=ckpt,
-            engine="tws",
+            engine=engine,
         )
 
     want = {(1, 11, 100), (2, 20, 200)}
     assert {(r["k"], r["lv"], r["rv"]) for r in tt().collect()} == want
+    gen = folds(state)
     crash(ckpt, state)
     assert {(r["k"], r["lv"], r["rv"]) for r in tt().collect()} == want
+    assert folds(state) == gen
 
     # --- fk join: batch 1 contains an FK FLIP, the interesting replay case
     flsrc, frsrc = str(tmp_path / "fk-l"), str(tmp_path / "fk-r")
@@ -2211,15 +2222,106 @@ def test_tws_join_crash_replay_idempotent(spark, tmp_path):
             how="inner",
             state_dir=fstate,
             checkpoint=fck,
-            engine="tws",
+            engine=engine,
         )
 
     fwant = {(1, 20, "b"), (2, 20, "b")}
     assert {(r["pk"], r["fk"], r["rv"]) for r in fkj().collect()} == fwant
+    if engine == "exact":
+        gen = folds(fstate)
+        crash(fck, fstate)
+        assert {(r["pk"], r["fk"], r["rv"]) for r in fkj().collect()} == fwant
+        assert folds(fstate) == gen
+        return
     crash(os.path.join(fck, "join"), fstate)  # stage-B rollback
     assert {(r["pk"], r["fk"], r["rv"]) for r in fkj().collect()} == fwant
     crash(os.path.join(fck, "sub"), fstate)  # stage-A rollback: sub log rewritten + re-consumed
     assert {(r["pk"], r["fk"], r["rv"]) for r in fkj().collect()} == fwant
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("loop", ["eager_join", "cogroup"])
+def test_exact_loop_crash_replay_idempotent(spark, tmp_path, loop):
+    """Crash-replay of the other two _GEN loops (same protocol as the join
+    and suppress replay tests: delete the newest commit marker, re-drain).
+    The replayed batch's fold already committed, so the _GEN applied-batch
+    marker skips it: the generation count is unchanged (no batch is folded
+    twice) and so is the result.  Eager join: its emission log still holds
+    each emission once, and the re-drain returns exactly the replayed
+    batch's emissions (the crashed drain never returned them).  Cogroup:
+    the stitched snapshot is equal (an upsert folded twice would leave it
+    equal too, which is why the generation is checked)."""
+    import datetime as dt
+    import os
+
+    from pyspark_engine import JoinWindowOptions
+    from pyspark_engine.streaming import (
+        _last_committed,
+        _read_gen,
+        cogroup_streaming,
+        join_windowed_eager,
+    )
+
+    def t(s):
+        return dt.datetime(2024, 1, 1, 10, 0, s)
+
+    sb = StreamingBuilder(spark)
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ck")
+    if loop == "eager_join":
+        lsrc, rsrc = str(tmp_path / "l"), str(tmp_path / "r")
+        schema_r = "key string, v1 string, rts timestamp"
+        _write_source_file(
+            spark, [("a", "l0", t(0)), ("b", "l1", t(0))], "key string, v2 string, lts timestamp",
+            lsrc, 0,
+        )
+        _write_source_file(spark, [("x", "r0", t(1))], schema_r, rsrc, 0)
+        _write_source_file(spark, [("a", "r1", t(2)), ("b", "r2", t(3))], schema_r, rsrc, 1)
+        gen_root, gen_ckpt = state, ckpt
+
+        def drain():
+            got = join_windowed_eager(
+                sb.file_stream(lsrc, key="key", ts="lts", max_files_per_trigger=1),
+                sb.file_stream(rsrc, key="key", ts="rts", max_files_per_trigger=1),
+                JoinWindowOptions.of(10_000),
+                how="left",
+                state_dir=state,
+                checkpoint=ckpt,
+            )
+            return sorted(((r["key"], r["v2"], r["v1"]) for r in got.collect()), key=str)
+
+        first_want = sorted(
+            [("a", "l0", None), ("a", "l0", "r1"), ("b", "l1", None), ("b", "l1", "r2")], key=str
+        )
+        replay_want = [("a", "l0", "r1"), ("b", "l1", "r2")]
+    else:
+        src = str(tmp_path / "src")
+        _write_source_file(spark, [("a", 1), ("b", 2)], "k string, v int", src, 0)
+        _write_source_file(spark, [("a", 3)], "k string, v int", src, 1)
+        gen_root, gen_ckpt = os.path.join(state, "side-0"), os.path.join(ckpt, "side-0")
+
+        def drain():
+            ks = sb.file_stream(src, key="k", max_files_per_trigger=1)
+            got = cogroup_streaming(
+                ks.group_by_key().cogroup(total=F.sum("v")), state_dir=state, checkpoint=ckpt
+            )
+            return sorted((r["k"], r["total"]) for r in got.collect())
+
+        first_want = replay_want = [("a", 4), ("b", 2)]
+
+    assert drain() == first_want
+    gen = _read_gen(gen_root)
+    last = _last_committed(gen_ckpt)
+    assert last == 1 and gen == 2  # two batches, each folded once
+    os.remove(os.path.join(gen_ckpt, "commits", str(last)))  # "crash" pre-commit
+    crc = os.path.join(gen_ckpt, "commits", f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    assert drain() == replay_want
+    assert _read_gen(gen_root) == gen
+    assert _last_committed(gen_ckpt) == last
+    if loop == "eager_join":
+        log = spark.read.parquet(os.path.join(state, "out"))
+        assert sorted(((r["key"], r["v2"], r["v1"]) for r in log.collect()), key=str) == first_want
 
 
 @pytest.mark.slow
@@ -3853,6 +3955,8 @@ def test_suppress_value_type_matrix(spark, tmp_path, engine):
     got = suppress_buffered(tbl, time_col="ts", engine=engine)
     d = dict(got.dtypes)
     assert (d["vb"], d["vd"], d["vt"]) == ("bigint", "decimal(38,2)", "timestamp")
+    # the emission metadata types match the empty result's and the engines'
+    assert (d["__emit_reason"], d["__emit_batch"]) == ("string", "bigint")
     rows = {r["k"]: r for r in got.collect()}
     assert set(rows) == {"a", "b", "e"}
     assert (rows["a"]["vb"], rows["a"]["vd"], rows["a"]["vt"]) == (big, big_dec, pre_epoch)

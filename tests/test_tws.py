@@ -1301,11 +1301,13 @@ def test_tws_sinks_take_one_action_per_batch():
     batch before or after writing it."""
     import inspect
 
-    from pyspark_engine import tws
+    from pyspark_engine import streaming, tws
 
-    scanned, hits = _batch_actions(inspect.getsource(tws))
+    source = inspect.getsource(tws) + inspect.getsource(streaming._write_emissions)
+    scanned, hits = _batch_actions(source)
     # the one foreachBatch sink (_drain's, shared by every tws drain) and
-    # the helper it writes through
+    # the emission-log writer it calls (``streaming.py``, shared with the
+    # exact loops)
     assert scanned == ["_sink", "_write_emissions"]
     assert hits == []
 
