@@ -60,12 +60,11 @@ def release_cache() -> None:
 #
 # The text-analytics family repeatedly needs "attach a per-key aggregate
 # (document frequency, vocabulary count) back onto the frame it was computed
-# from".  r13 used `agg OVER (PARTITION BY key)` windows, which avoid the
-# join but put EVERY row of a key on ONE task (WindowExec cannot be split):
-# a stopword term or a corpus-wide boilerplate digest becomes a single-task
-# sort of ~n_docs rows at 100 TB, and parallelism is capped at key
-# cardinality (r13 verdict item 2).  This helper restores a join-based
-# attach that is safe at BOTH ends of the key-frequency spectrum
+# from".  An `agg OVER (PARTITION BY key)` window avoids the join but puts
+# EVERY row of a key on ONE task (WindowExec cannot be split): a stopword
+# term or a corpus-wide boilerplate digest becomes a single-task sort of
+# ~n_docs rows at 100 TB, and parallelism is capped at key cardinality.
+# This helper is a join-based attach that is safe at BOTH ends of the key-frequency spectrum
 # (guide §2.5 "broadcast-join just the hot keys and shuffle-join the rest"):
 #
 #   * keys with >= hot_rows source rows attach via a BROADCAST hash join —
@@ -78,8 +77,7 @@ def release_cache() -> None:
 #     Locally the cold table is vocabulary-sized and AQE broadcasts it, so
 #     the big side does not shuffle there either.
 #
-# The big frame is consumed by both branches — callers _persist it (the
-# same frames r13 already shuffled wholesale into WindowExec sorts).
+# The big frame is consumed by both branches — callers _persist it.
 
 _HOT_KEY_ROWS = 1_000_000
 
@@ -151,7 +149,7 @@ def _attach_key_stats(
     return hit.unionByName(miss)
 
 
-# ------------------------------------------------- Arrow-stage fusion (r13)
+# ------------------------------------------------------ Arrow-stage fusion
 #
 # Every multimodal operator is an Arrow-batched iterator transform
 # (Iterator[pd.DataFrame] -> Iterator[pd.DataFrame]) run through mapInPandas.
@@ -211,7 +209,7 @@ def _arrow_stage(
     above).  ``spread=False`` preserves operators that historically did not
     repartition their input.
 
-    Fused-chain invariant (r14, ADVICE item): the fused path elides the
+    Fused-chain invariant: the fused path elides the
     intermediate Arrow round-trip, so a downstream worker sees the upstream
     worker's raw pandas output rather than schema-cast values — every
     fusable worker must therefore emit exactly its declared columns with
@@ -535,8 +533,8 @@ def jaccard_pairs_exact(
     ``collapse="auto"`` (default) gates the collapse on a one-row
     ``approx_count_distinct(digest)/count`` probe over the already-persisted
     gram frame: a dup-light corpus (distinct ratio ≥ 0.98) skips the
-    collapse groupBy and the digest re-expansion joins entirely — the r7
-    direct plan, recovering their ~2 s fixed cost (SCALE_STRESS
+    collapse groupBy and the digest re-expansion joins entirely — the
+    direct plan, saving their ~2 s fixed cost (SCALE_STRESS
     exact_join_scaling dup_light row) — while a duplicate-heavy corpus
     keeps the linear-in-distinct-docs path.  A misclassified probe is a
     PERFORMANCE wobble only (both paths are oracle-identical), so the
@@ -661,7 +659,7 @@ def jaccard_pairs_exact(
         )
     )
     ordered = _persist(ordered)
-    # r14: prefix tokens with df == 1 can never generate a candidate (a
+    # prefix tokens with df == 1 can never generate a candidate (a
     # token shared by two docs has df >= 2 by definition), and the rarity
     # order puts all of them at positions < __n1 — so the explode starts at
     # the first shared gram.  EXACTNESS is untouched: every candidate pair
@@ -831,7 +829,7 @@ def lsh_recall_audit(
     bands (fewer rows per band) or lower threshold margin; wasteful
     candidate volume → fewer bands.
 
-    ``audit=False`` (r11 verdict task 6) skips the brute-force ground
+    ``audit=False`` skips the brute-force ground
     truth entirely and fills the truth-dependent summary fields with NULL:
     the same one-row shape at the PRODUCTION cost of banded pair
     generation + verify alone — what a steady-state pipeline pays, and
@@ -1121,7 +1119,7 @@ def _resolve_planes(emb: DataFrame, n_planes, target_bucket: int = 16) -> int:
     """Resolve ``n_planes="auto"`` to a corpus-sized plane count: k =
     ceil(log2(n / target_bucket)), floor 8 — so expected bucket occupancy
     stays ~``target_bucket`` and the per-bucket pair stage stays
-    ~O(n·target·k) instead of O(n²/2^k) with a FIXED k (the r11 rate-planted
+    ~O(n·target·k) instead of O(n²/2^k) with a FIXED k (a rate-planted
     scale stress measured exponent 1.4 for semantic_dedup at fixed k=8 —
     bucket occupancy, and so candidate pairs per bucket, grew with the
     corpus).  The tradeoff is explicit: hyperplane-LSH pair recall at
@@ -1133,7 +1131,7 @@ def _resolve_planes(emb: DataFrame, n_planes, target_bucket: int = 16) -> int:
     ``multiprobe`` instead.  Costs one count() of the corpus — the corpus is
     persisted first (registered with ``release_cache``) so the caller's
     bucketing stage reuses the materialized blocks instead of re-evaluating
-    the (possibly expensive) upstream lineage a second time (r11 advice)."""
+    the (possibly expensive) upstream lineage a second time."""
     if n_planes != "auto":
         return int(n_planes)
     import math as _math  # noqa: PLC0415
@@ -1695,10 +1693,10 @@ def synth_wav_batches(batches: Iterator) -> Iterator:
         if not len(pdf):
             yield pd.DataFrame({"doc_id": [], "payload": []})
             continue
-        # r13: one vectorized ramp evaluation across the WHOLE batch (guide
-        # §4.2 — the per-doc loop paid ~6 numpy-dispatch overheads per
-        # ~125-element array; now ~10 ops over one concatenated array, and
-        # per-doc payloads are byte slices of the single PCM buffer).
+        # one vectorized ramp evaluation across the WHOLE batch (guide
+        # §4.2 — a per-doc loop pays ~6 numpy-dispatch overheads per
+        # ~125-element array; this is ~10 ops over one concatenated array,
+        # and per-doc payloads are byte slices of the single PCM buffer).
         # Arithmetic is unchanged: sample = ((a·i + b) mod 65536) − 32768
         # inside the ramp, 0 in the pre/post silence.
         n_v = pdf["n"].to_numpy(dtype=np.int64)
@@ -2067,10 +2065,10 @@ def wav_transcode_ulaw(df: DataFrame, id_col: str, payload_col: str) -> DataFram
         import pandas as pd
 
         for pdf in batches:
-            # r13: container parse stays per doc (stdlib ``wave`` is the
+            # container parse stays per doc (stdlib ``wave`` is the
             # independent decode side), but the µ-law compression runs ONCE
             # over the batch's concatenated samples (guide §4.2 — the
-            # encoder is ~15 numpy ops, formerly paid per ~125-sample doc);
+            # encoder is ~15 numpy ops, not worth paying per ~125-sample doc);
             # per-doc code words are byte slices of the one output array
             metas = []
             sample_arrs = []
@@ -2118,7 +2116,7 @@ def decode_wav_ulaw_features(df: DataFrame, id_col: str, payload_col: str) -> Da
             "sum_decoded", "sum_abs_decoded", "max_abs_decoded",
         ]
         for pdf in batches:
-            # r13: per-doc chunk walk, ONE µ-law expansion over the batch's
+            # per-doc chunk walk, ONE µ-law expansion over the batch's
             # concatenated code words, per-doc stats via reduceat segments
             # on the shared decoded array (guide §4.2); identical integers
             metas = []
@@ -2553,7 +2551,7 @@ def _png_encode(img, filters=None) -> bytes:
     h, w, _ = img.shape
     bpp = 3
     stride = w * bpp
-    # r13: whole-image vectorized filter pass (guide §4.2) — left/up/
+    # whole-image vectorized filter pass (guide §4.2) — left/up/
     # upper-left neighbor planes are matrix shifts, all five filter
     # variants evaluate as matrix expressions, and each row picks its
     # variant by index.  Encoding filters see RAW neighbors per the spec,
@@ -2663,7 +2661,7 @@ def _png_decode(raw: bytes):
         elif f == 2:
             cur[:] = (np.asarray(row) + prev) % 256
         elif f == 1:
-            # r13: the sub filter's recurrence cur[i] = (row[i] +
+            # the sub filter's recurrence cur[i] = (row[i] +
             # cur[i−bpp]) % 256 is a per-channel-lane running sum — one
             # vectorized cumsum replaces the per-byte loop (same integers)
             cur[:] = (
@@ -2671,8 +2669,8 @@ def _png_decode(raw: bytes):
             ).reshape(-1)
         else:
             # average/paeth predictors need RECONSTRUCTED left neighbors —
-            # sequential by spec.  r13: run the recurrence on plain Python
-            # lists (numpy scalar indexing in the hot loop was ~4× slower)
+            # sequential by spec.  The recurrence runs on plain Python
+            # lists (numpy scalar indexing in the hot loop is ~4× slower)
             prev_l = prev.tolist()
             out_l = [0] * stride
             for i in range(stride):
@@ -3583,11 +3581,11 @@ def synth_image_mixed(
     per-row dispatch on ``fmt_col`` (0 → PPM, 1 → PNG, 2 → GIF) to the SAME
     per-payload encoders the per-format synth operators use, so each row's
     bytes are identical to the corresponding synth_ppm/synth_png/synth_gif
-    output.  r13 optimization: replaces three filtered synth branches + a
-    union — one corpus scan and ONE Python stage instead of three scans,
-    three Python stages and a union (guide §1.2 algorithm passes, §4.1
-    boundary crossings); decode_any_image_features then fuses on top for a
-    single JVM↔Python crossing end to end."""
+    output.  One corpus scan and ONE Python stage, where three filtered
+    synth branches + a union would take three scans, three Python stages
+    and a union (guide §1.2 algorithm passes, §4.1 boundary crossings);
+    decode_any_image_features then fuses on top for a single JVM↔Python
+    crossing end to end."""
 
     def worker(batches: Iterator) -> Iterator:
         import numpy as np
@@ -3653,7 +3651,7 @@ def synth_jpeg(df: DataFrame, id_col: str, w_col: str, h_col: str, ay_col: str, 
         import pandas as pd
 
         for pdf in batches:
-            # r13: whole-batch vectorized encode (guide §4.2) — per-image
+            # whole-batch vectorized encode (guide §4.2) — per-image
             # fixed cost is what dominates at these block counts
             imgs = [
                 _jpeg_ramp(int(w), int(h), int(ay), int(ax), int(b))
@@ -3689,7 +3687,7 @@ def decode_jpeg_features(df: DataFrame, id_col: str, payload_col: str) -> DataFr
         cols = ["doc_id", "width", "height", "n_components", "n_blocks",
                 "sum_r", "sum_g", "sum_b"]
         for pdf in batches:
-            # r13: whole-batch vectorized decode (guide §4.2)
+            # whole-batch vectorized decode (guide §4.2)
             decoded = _jpeg.jpeg_decode_batch([bytes(p) for p in pdf["payload"]])
             rows = []
             for doc_id, (w, h, nc, img) in zip(pdf["doc_id"], decoded):
@@ -3719,7 +3717,7 @@ def jpeg_fidelity(df: DataFrame, id_col: str, w_col: str, h_col: str, ay_col: st
         cols = ["doc_id", "width", "height", "n_components", "n_blocks",
                 "max_err", "sum_abs_err"]
         for pdf in batches:
-            # r13: whole-batch vectorized encode → decode (guide §4.2)
+            # whole-batch vectorized encode → decode (guide §4.2)
             imgs = [
                 _jpeg_ramp(int(w), int(h), int(ay), int(ax), int(b))
                 for w, h, ay, ax, b in zip(
@@ -3758,7 +3756,7 @@ def transcode_png_jpeg(df: DataFrame, id_col: str, payload_col: str, subsample=T
         import pandas as pd
 
         for pdf in batches:
-            # r13: PNG decode per image (zlib-bound), JPEG encode whole-batch
+            # PNG decode per image (zlib-bound), JPEG encode whole-batch
             # vectorized (guide §4.2)
             imgs = [_png_decode(bytes(p))[5] for p in pdf["payload"]]
             yield pd.DataFrame(
@@ -4380,13 +4378,13 @@ def tfidf_topk(
 
     Scale: term-frequency agg (map-side partial count; the (doc, term) space
     hits the shuffle once, and the persisted result is what both consumers
-    below read — the corpus is tokenized ONCE, r13's win kept), document
-    frequency via a map-side-combinable groupBy(term) count over the
-    persisted tf frame attached back skew-safely (_attach_key_stats — r14:
-    the r13 `count(*) over (partition by term)` window put every tf row of
-    a term on ONE task, capping parallelism at vocabulary size and making a
-    stopword a single-task sort of ~n_docs rows at 100 TB; the hot/cold
-    attach bounds per-task rows by construction, guide §2.5), corpus size
+    below read — the corpus is tokenized ONCE), document frequency via a
+    map-side-combinable groupBy(term) count over the persisted tf frame
+    attached back skew-safely (_attach_key_stats — a `count(*) over
+    (partition by term)` window would put every tf row of a term on ONE
+    task, capping parallelism at vocabulary size and making a stopword a
+    single-task sort of ~n_docs rows at 100 TB; the hot/cold attach bounds
+    per-task rows by construction, guide §2.5), corpus size
     joined as a broadcast 1-row aggregate (no driver action), then per-doc
     top-k via one ranked window (doc-keyed — per-doc row counts are
     vocabulary-bounded, no hot key possible).  Nothing rescans the raw text
@@ -4477,14 +4475,13 @@ def unigram_logprob(
     ``carry_cols``: per-document columns (functionally dependent on
     ``id_col``, e.g. a language tag) ridden through the tf aggregation and
     surfaced on the output — callers that would otherwise re-join them onto
-    the scored frame (perplexity_buckets) skip a doc-sized join (r14, r13
-    "not yet optimized" #1).
+    the scored frame (perplexity_buckets) skip a doc-sized join.
 
     Scale: one (doc, term) tf aggregate (persisted — both consumers below
     read it, so the corpus is tokenized ONCE), vocabulary counts via a
     map-side-combinable groupBy(term) sum attached back skew-safely
-    (_attach_key_stats — r14: the r13 window sum put every tf row of a term
-    on one task, the stopword/parallelism hazard of verdict item 2), a
+    (_attach_key_stats — a window sum would put every tf row of a term on
+    one task: a stopword caps parallelism), a
     per-doc sum.  The corpus token total is Σ_doc n_tokens, so it folds out
     of the PERSISTED per-doc frame (one row per doc, three numbers — cache
     cost negligible) instead of a second tokenize scan of the corpus; the
@@ -4846,15 +4843,15 @@ def ngram_novelty(
     Determinism: novelty is integers (novel count, distinct count) with the
     ratio floor-quantized in one expression.
 
-    Scale (r14 rewrite, guide §8 "decide with small rows"): a gram with
+    Scale (guide §8 "decide with small rows"): a gram with
     df == 1 belongs to exactly ONE document, so the per-doc novel count is
     derivable WITHOUT attaching df back onto the pair frame at all — the
     skew-safe groupBy(gram) aggregate carries min(doc id) alongside the
     count, its df==1 rows group by that owner id, and the per-doc distinct
     gram count is a pure per-row expression on the corpus scan (size of the
-    distinct-shingle array — no explode, no shuffle).  r13's window version
-    put every pair row of a gram on one task (stopword-bigram hazard,
-    verdict item 2); this shape's only wide operation is the
+    distinct-shingle array — no explode, no shuffle).  A window version
+    would put every pair row of a gram on one task (stopword-bigram
+    hazard); this shape's only wide operation is the
     map-side-combinable gram count, and the final join is doc-keyed between
     two doc-sized frames.  The corpus is scanned twice, both map-only — no
     cache, no payload re-shuffle."""
@@ -4934,7 +4931,7 @@ def profile_columns(
             F.min(F.col(c)).cast("string").alias(f"__min_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__max_{c}"),
         ]
-    # r13 (second pass): NO _spread before these aggregates.  Partial (map-
+    # NO _spread before these aggregates.  Partial (map-
     # side) aggregation collapses each scan task's rows to bytes of agg state
     # before any exchange, so the pre-agg round-robin repartition shuffled the
     # full 5-column table (24 MB at sf0.1) only to parallelize work the scan
@@ -4950,7 +4947,7 @@ def profile_columns(
             *aggs, *[ndv(c).cast("long").alias(f"__ndv_{c}") for c in cols]
         )
     else:
-        # r13: the exact path computes the multi-distinct aggregate SEPARATELY
+        # the exact path computes the multi-distinct aggregate SEPARATELY
         # from the plain stats and crossJoins the two 1-row frames.  A single
         # combined agg evaluates count/null/min/max on the Expand-multiplied
         # rows (×(len(cols)+1)) and keeps their buffer slots in every
@@ -4979,19 +4976,19 @@ def profile_ndv_audit(
     and the exact count_distinct, folded to ``ndv_ok`` = |hll − exact| ≤
     max(3·rsd·exact, 1).
 
-    Optimization-round (r13) restructure of the original q149 composition
+    Restructures the q149 composition
     ``profile_columns(approx=True) ⋈ profile_columns(approx=False)``: the
     plain stats ride the Expand-free sketch aggregate instead of being
     recomputed on the exact side's Expand-multiplied rows, and the key
     join of two 5-row frames becomes a crossJoin of two 1-row aggregates
-    BEFORE the unpivot.  (First attempt folded everything into one agg —
+    BEFORE the unpivot.  (Folding everything into one agg is
     catastrophic: each per-distinct-value partial-agg group then carries
     its own HLL buffer, 19 s vs 2.3 s at sf0.1.  Split shape measured
     ~1.5 s.)  Values are bit-identical to the two-pass composition — the
     audit arithmetic is the same expression over the same two numbers."""
-    # r13 (second pass): no _spread — partial aggregation shrinks the
-    # exchange to agg-state bytes, so the pre-agg repartition only added a
-    # full-table shuffle (see profile_columns for the measured numbers)
+    # no _spread — partial aggregation shrinks the exchange to agg-state
+    # bytes, so a pre-agg repartition would only add a full-table shuffle
+    # (see profile_columns for the measured numbers)
     stats = df.agg(
         *[
             a
@@ -5105,10 +5102,11 @@ def pmi_collocations(
     vocabulary-sized equi-joins for the marginals, 1-row totals broadcast,
     global top-k via TakeOrderedAndProject."""
     base = _spread(df.select(F.col(text_col))).select(tokens(F.col(text_col)).alias("__t"))
-    # r13: persist both vocabulary-sized count frames — uni feeds the t1
+    # persist both vocabulary-sized count frames — uni feeds the t1
     # total AND both marginal join sides, bi_all feeds the t2 total AND the
-    # collocation rows; unpersisted, each consumer re-tokenized the corpus
-    # (five passes total → two; caches are n-gram-type-bounded, guide §5)
+    # collocation rows; unpersisted, each consumer re-tokenizes the corpus
+    # (five passes total instead of two; caches are n-gram-type-bounded,
+    # guide §5)
     uni = _persist(
         base.select(F.explode("__t").alias("w"))
         .filter(F.col("w") != "")
@@ -5205,9 +5203,9 @@ def repeated_spans(
     documented) without touching the plan shape."""
     toks = tokens(F.col(text_col))
     spans = word_ngrams_multiset(toks, span_tokens)
-    # r14 de-skew (verdict item 2): the r13 per-digest window count put every
-    # occurrence of a span digest on ONE task — a corpus-wide boilerplate
-    # span is exactly the hot key that breaks that at 100 TB.  The per-doc
+    # de-skew: a per-digest window count would put every occurrence of a
+    # span digest on ONE task — a corpus-wide boilerplate span is exactly
+    # the hot key that breaks that at 100 TB.  The per-doc
     # window total needs no shuffle at all (size of the span array, a
     # per-row expression on the scan), and the dup count derives from ONE
     # skew-safe digest aggregation:
@@ -5226,7 +5224,7 @@ def repeated_spans(
     ex = _spread(df).select(F.col(id_col), F.explode(spans).alias("__span")).select(
         F.col(id_col), F.md5(F.col("__span")).alias("__h")
     )
-    # r14: size(word_ngrams_multiset(toks, n)) == greatest(size(toks)-n+1, 0)
+    # size(word_ngrams_multiset(toks, n)) == greatest(size(toks)-n+1, 0)
     # by construction (the transform's index sequence IS that length, incl.
     # the short-doc and null-text guards), so the per-doc window total needs
     # one split() — not a second build of the full ngram-string array
@@ -5303,7 +5301,7 @@ def semantic_dedup(
     (embedding_neardup — never all-pairs) → alternating large-star/small-star
     components (dedup_clusters — O(log²) rounds), then a left-anti join on
     the non-representative ids.  ``n_planes`` defaults to ``"auto"``
-    (corpus-sized bucket count, _resolve_planes): the r11 rate-planted scale
+    (corpus-sized bucket count, _resolve_planes): a rate-planted scale
     stress measured exponent 1.4 at a FIXED k=8 — bucket occupancy grew with
     the corpus and the verify stage went quadratic — and dedup is exactly
     the workload where auto's borderline-recall tradeoff is safe (true
@@ -5353,17 +5351,17 @@ def dsir_logweights(
     sample_per_group_quota ranked by logw_q.
 
     Scale: the RAW corpus is tokenized ONCE into a persisted per-(doc,
-    bucket) count frame (r13: the original shape tokenized raw twice —
-    once for its histogram, once for per-doc scoring — and the unpersisted
-    duplication made it six scan subtrees in the physical plan; the raw
-    histogram now folds out of the per-doc counts, guide §2.4/§5); the
+    bucket) count frame (tokenizing raw twice — once for its histogram,
+    once for per-doc scoring — would, unpersisted, make six scan subtrees
+    in the physical plan; the raw histogram folds out of the per-doc
+    counts, guide §2.4/§5); the
     target subset is one further histogram pass; the score table is
     broadcast; per-doc scoring is a broadcast-join + integer weighted sum
     over the persisted counts — no pairwise stage.  The md5 bucket hash
     keeps the oracle portable (portable_hash32); swap xxhash64 at
     production scale.
 
-    ``target_filter`` (r13): when the target domain is a row-filter of
+    ``target_filter``: when the target domain is a row-filter of
     ``raw`` itself (the common DSIR setup — e.g. lang == 'en'), pass the
     predicate instead of a separate ``target`` frame.  The per-doc count
     frame then carries the (per-doc constant) flag and the target histogram
@@ -5737,10 +5735,9 @@ def perplexity_buckets(
     is total-order exact in any engine.
 
     Scale: scoring is unigram_logprob's vocabulary-bounded aggregation with
-    ``group_col`` carried through the tf keys (r14: it is functionally
-    dependent on the doc id, so the grouping is unchanged and the doc-sized
-    join of the group tag onto the scored frame disappears — r13 "not yet
-    optimized" #1); the tiling is one shuffle by group + per-group sort.
+    ``group_col`` carried through the tf keys (it is functionally
+    dependent on the doc id, so the grouping is unchanged and no doc-sized
+    join of the group tag onto the scored frame is needed); the tiling is one shuffle by group + per-group sort.
     At corpus scale with few huge groups, replace ntile with precomputed
     per-group score thresholds (exact percentiles on the integer scores)
     and a broadcast threshold join — same buckets, no full sort."""
@@ -5782,17 +5779,17 @@ def bm25_topk(
     O(all tokens).  N/avgdl is a broadcast 1-row frame.  Top-k is a
     TakeOrderedAndProject, no global sort materialized.
 
-    r13 optimization (guide §2.4): the original shape tokenized the corpus
-    FOUR times — once for N/avgdl, once for the per-doc-length join, and
-    twice more because the tf subtree fed both the df broadcast and the
-    probe side (Spark duplicates unpersisted subtrees).  Now (1) ``dl``
+    Passes (guide §2.4): a direct shape tokenizes the corpus FOUR times —
+    once for N/avgdl, once for the per-doc-length join, and twice more
+    because the tf subtree feeds both the df broadcast and the probe side
+    (Spark duplicates unpersisted subtrees).  Here (1) ``dl``
     rides the explode row and joins the tf group key (it is functionally
     dependent on the doc id), killing the length join, and (2) df comes
     from a groupBy(term) count over the PERSISTED tf frame broadcast back
-    (r14: the r13 window count partitioned the matching-doc frame by term —
-    at most len(query_terms) distinct values, so parallelism was capped at
-    the query length and a common query term put every matching doc on one
-    task; the df table is provably ≤ len(query_terms) rows, the one case
+    (a window count would partition the matching-doc frame by term — at
+    most len(query_terms) distinct values, so parallelism would be capped
+    at the query length and a common query term would put every matching
+    doc on one task; the df table is provably ≤ len(query_terms) rows, the one case
     where an unconditional broadcast is safe at any corpus size).  Two
     scans total, identical arithmetic."""
     terms_lit = F.array(*[F.lit(t) for t in query_terms])
@@ -5932,14 +5929,14 @@ def strip_boilerplate(
     n_kept, n_removed — documents that were pure boilerplate stay present
     with empty text, so downstream joins never lose rows.
 
-    Scale (r14 rewrite, guide §8 "decide with small rows, move big rows
+    Scale (guide §8 "decide with small rows, move big rows
     once"): every decision here is a function of (doc id, position,
     paragraph DIGEST) — ~50 bytes/paragraph — so the paragraph TEXT never
     enters any shuffle or cache.  Doc-frequency is a count_distinct(id)
     groupBy over the digest (planned as a (pfp, id)-keyed partial dedup —
     no hot key, the key includes the doc id — then map-side-combined
-    counts; the r13 lag-window it replaces put EVERY occurrence of a
-    corpus-wide boilerplate digest on a single task, verdict item 2),
+    counts; a lag-window would put EVERY occurrence of a corpus-wide
+    boilerplate digest on a single task),
     attached back onto the persisted narrow metadata with the hot/cold
     skew-safe join; keep-flags fold to one boolean array per document, and
     the reassembly RE-SPLITS the original text per row (a map-side
@@ -6342,7 +6339,7 @@ def vocab_drift(
             .agg(F.count(F.lit(1)).alias(name))
         )
 
-    # r13: persist the vocabulary-sized joined count frame — it feeds both
+    # persist the vocabulary-sized joined count frame — it feeds both
     # the totals aggregate and the scored projection, and unpersisted it
     # would be recomputed per consumer (four corpus tokenize passes instead
     # of two; the cache is vocabulary-bounded, guide §5 caching rule)

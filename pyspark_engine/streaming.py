@@ -42,6 +42,10 @@ rest is one code path:
   engines.  Exact suppress and the eager join log per batch, and
   ``_read_emissions`` is the result read of both suppress engines.
 
+Every state dir has one owner: ``_dir_owner`` reads which engine wrote a
+dir from the markers it carries, and engine auto-selection, every engine's
+open (``_claim_dir``) and ``compact_emission_log`` ask it.
+
 Kafka connectivity needs the external spark-sql-kafka package (same situation
 as the reference needing librdkafka at runtime); the builders construct the
 real plan and raise a clear error when the connector is absent.
@@ -144,7 +148,7 @@ def _read_gen(root: str) -> int:
         return 0
 
 
-def _write_gen(root: str, n: int, applied_batch: int | None = None) -> None:
+def _write_gen(root: str, n: int, applied_batch: int) -> None:
     """Atomically persist the generation counter next to the state dirs
     (write-then-rename, so a crash mid-write leaves the previous value).
 
@@ -156,7 +160,7 @@ def _write_gen(root: str, n: int, applied_batch: int | None = None) -> None:
     suppress buffer: re-buffer and later re-emit already-emitted keys)."""
     tmp = os.path.join(root, "_GEN.tmp")
     with open(tmp, "w") as f:
-        f.write(str(int(n)) if applied_batch is None else f"{int(n)} {int(applied_batch)}")
+        f.write(f"{int(n)} {int(applied_batch)}")
     os.replace(tmp, os.path.join(root, "_GEN"))
 
 
@@ -218,33 +222,12 @@ def _store_delivered(root: str, ckpt: str, batch_id: int) -> None:
     os.replace(path + ".tmp", path)
 
 
-def _max_sink_batch(root: str) -> int:
-    """Highest ``sink_batch=<id>`` partition under root or root/out (or -1)
-    — the delivered-batch cursor of the sink-partitioned loops (tws
-    suppress, as-of join), which keep no _GEN.  Used to cross-check legacy
-    adoption: an emission cannot postdate its own checkpoint's commits by
-    more than the one crash-replayed batch."""
-    best = -1
-    for d in (root, os.path.join(root, "out")):
-        try:
-            entries = os.listdir(d)
-        except OSError:
-            continue
-        for e in entries:
-            if e.startswith("sink_batch="):
-                try:
-                    best = max(best, int(e.split("=", 1)[1]))
-                except ValueError:
-                    pass
-    return best
-
-
 def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> str:
     """Pair a parquet state dir with the ONE streaming checkpoint allowed to
     drive it, and refuse every other combination.
 
-    The foreachBatch state loops derive their replay-skip / delivery cursors
-    from the checkpoint's batch ids, so a populated state dir paired with a
+    The state loops derive their replay-skip / delivery cursors from the
+    checkpoint's batch ids, so a populated state dir paired with a
     WRONG-but-existing checkpoint (from a different query or topology) would
     silently skip foreign batch ids or re-deliver old emissions — the
     reference cannot make this mistake because its changelog topics are keyed
@@ -257,22 +240,10 @@ def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> 
       * state dir populated + bound, checkpoint missing/mismatched — refused
         (covers both the old checkpoint=None hole and the wrong-checkpoint
         hole);
-      * state dir populated but UNBOUND (created before the marker protocol)
-        — adopted iff the offered checkpoint is also unbound and its commit
-        cursor is consistent with the state dir's delivery cursor: committed
-        ∈ {applied, applied−1} for _GEN loops, committed ∈ {max(sink_batch),
-        max(sink_batch)−1} for the sink-partitioned loops (tws suppress /
-        as-of keep no _GEN but their emissions name the batches that
-        produced them); a fresh or inconsistent checkpoint is refused.  Two
-        UNAUTHENTICATABLE legacy shapes — a dir with NEITHER cursor nor
-        emissions (nothing to cross-check), and a checkpoint whose commits
-        run AHEAD of the emissions by more than the clean-stop window
-        (legal when trailing batches emitted nothing, indistinguishable
-        from a foreign run) — are REFUSED by default and adopt only under
-        the documented opt-in ``PSE_ADOPT_LEGACY=1`` (silent adoption of
-        an arbitrarily-ahead checkpoint would skip replays).
-        Adoption is one-time: the pair is bound on success, so only legacy
-        dirs ever take this path;
+      * state dir populated but UNBOUND — refused whatever the checkpoint:
+        every drain binds before its first batch, so nothing pairs it with
+        the checkpoint that wrote it; recover with a fresh state dir and
+        checkpoint and replay the source;
       * checkpoint bound elsewhere, or unbound but already holding committed
         batches, offered against a fresh/unpopulated state dir — refused
         (its committed batches would be skipped against empty state);
@@ -280,59 +251,29 @@ def _bind_state_checkpoint(root: str, ckpt: str, populated: bool, what: str) -> 
         re-bound to the offered checkpoint (unless that checkpoint already
         has foreign commits, refused above).
 
-    Returns ``ckpt`` so call sites can bind and resolve in one expression."""
+    A refusal writes no marker.  Returns ``ckpt`` so call sites can bind and
+    resolve in one expression."""
     s_path = os.path.join(root, "_PSE_BIND")
     c_path = os.path.join(ckpt, "_PSE_BIND")
     sbind, cbind = _read_bind(s_path), _read_bind(c_path)
     if sbind is not None and sbind == cbind:
         return ckpt
-    committed = _last_committed(ckpt)
+    if populated and sbind is None:
+        raise ValueError(
+            f"state dir {root!r} holds {what} but no _PSE_BIND marker, so it is "
+            "not recognizably paired with any checkpoint — refusing; start a fresh "
+            "state_dir and checkpoint and replay the source"
+        )
     if populated:
-        if sbind is None:
-            # legacy (pre-marker) state dir: adopt its original checkpoint —
-            # recognizable as unbound-with-commits whose commit cursor lines
-            # up with the state dir's applied cursor (equal after a clean
-            # stop; committed = applied-1 when the last fold committed its
-            # state but crashed before the checkpoint commit)
-            applied = _read_applied(root)
-            if applied != -1:
-                consistent = committed in (applied, applied - 1)
-            else:
-                # cursor-free loops (tws suppress / as-of) still leave a
-                # delivered-batch trail in their sink_batch partitions: the
-                # original checkpoint's commits must line up with the
-                # highest emitted batch (equal after a clean stop, one less
-                # when the last fold committed state but crashed before the
-                # checkpoint commit).  A checkpoint further AHEAD is legal
-                # (trailing batches may emit nothing) but unverifiable, and
-                # a dir with neither cursor nor emissions has nothing to
-                # check at all — both adopt only under the explicit
-                # PSE_ADOPT_LEGACY=1 opt-in.
-                sink = _max_sink_batch(root)
-                adopt_legacy = os.environ.get("PSE_ADOPT_LEGACY") == "1"
-                consistent = (sink != -1 and committed in (sink, sink - 1)) or (
-                    adopt_legacy and (sink == -1 or committed >= sink - 1)
-                )
-            if cbind is None and committed >= 0 and consistent:
-                pass  # fall through to bind the adopted pair
-            else:
-                raise ValueError(
-                    f"state dir {root!r} holds {what} but no _PSE_BIND marker, and "
-                    f"the offered checkpoint (committed batch {committed}, "
-                    f"{'un' if cbind is None else ''}bound) is not recognizably its "
-                    "original — refusing to pair; pass the original checkpoint or a "
-                    "fresh state_dir (a legacy pair that cannot be cross-checked "
-                    "adopts only under PSE_ADOPT_LEGACY=1)"
-                )
-        else:
-            raise ValueError(
-                f"state dir {root!r} holds {what} bound to a different checkpoint "
-                f"(state bind {sbind[:8]}, offered checkpoint bind "
-                f"{cbind[:8] if cbind else 'none'}): its batch ids would renumber or "
-                "skip and silently drop or re-deliver data; resuming requires the "
-                "query's original checkpointLocation (or a fresh state_dir)"
-            )
-    elif cbind is not None or committed >= 0:
+        raise ValueError(
+            f"state dir {root!r} holds {what} bound to a different checkpoint "
+            f"(state bind {sbind[:8]}, offered checkpoint bind "
+            f"{cbind[:8] if cbind else 'none'}): its batch ids would renumber or "
+            "skip and silently drop or re-deliver data; resuming requires the "
+            "query's original checkpointLocation (or a fresh state_dir)"
+        )
+    committed = _last_committed(ckpt)
+    if cbind is not None or committed >= 0:
         raise ValueError(
             f"checkpoint {ckpt!r} already belongs to a different {what} run "
             f"({'bind ' + cbind[:8] if cbind else f'committed batch {committed}, unbound'}); "
@@ -440,18 +381,21 @@ def _check_no_pending_compaction(root: str) -> None:
             )
 
 
-def _sink_partitions(out_dir: str) -> dict[int, str]:
-    parts = {}
+def _sink_partitions(log_dir: str, staged: bool = False) -> dict[int, str]:
+    """The ``sink_batch=<id>`` partitions of an emission log as {id: path}
+    — or, with ``staged``, the hidden ``.sink_batch=<id>`` dirs that
+    ``_write_emissions(publish=False)`` left; {} for an absent dir.  The one
+    parser of the log's dir names."""
+    prefix = ".sink_batch=" if staged else "sink_batch="
     try:
-        for e in os.listdir(out_dir):
-            if e.startswith("sink_batch="):
-                try:
-                    parts[int(e.split("=", 1)[1])] = os.path.join(out_dir, e)
-                except ValueError:
-                    pass
+        entries = os.listdir(log_dir)
     except OSError:
-        pass
-    return parts
+        return {}
+    return {
+        int(e[len(prefix) :]): os.path.join(log_dir, e)
+        for e in entries
+        if e.startswith(prefix) and e[len(prefix) :].isdigit()
+    }
 
 
 # The tws engines' state-dir version markers: engine kind -> (marker file,
@@ -468,26 +412,84 @@ _TWS_MARKERS = {
     "asof": ("_PSE_TWS_ASOF_V", "1"),
 }
 
+# markers stamped by the removed pandas keyed engines (formerly
+# ``engine='keyed'``); their state schemas are not readable by either
+# remaining engine
+_LEGACY_KEYED_MARKERS = (
+    ("_PSE_TTJOIN_V", "tt-join"),
+    ("_PSE_FKJOIN_V", "fk-join"),
+    ("_PSE_STATE_V", "suppress"),
+)
 
-def _detect_log_kind(root: str, is_fk: bool) -> str:
-    # as-of output is append-only join history: compaction has no as-of kind
-    hits = {
-        kind
-        for kind, (marker, _) in _TWS_MARKERS.items()
-        if kind != "asof" and os.path.exists(os.path.join(root, marker))
-    }
-    if is_fk:
-        hits.add("fk")  # the sub/ dir is written only by the fk engines
-    if len(hits) == 1:
-        return next(iter(hits))
-    raise ValueError(
-        f"compact_emission_log: cannot identify the engine that wrote {root!r} "
-        f"({'no engine version marker found' if not hits else f'conflicting markers for {sorted(hits)}'}) "
-        "— compaction folds differently per engine kind and guessing from the "
-        "output columns can destroy committed emission history, so refusing; "
-        "run at least one drain with the owning engine (which stamps the "
-        "marker) before compacting"
-    )
+# _dir_owner's answers, as refusals name them
+_OWNER_NAMES = {
+    "tt": "tws tt-join",
+    "fk": "tws fk-join",
+    "suppress": "tws suppress",
+    "asof": "tws as-of",
+    "exact": "exact ping-pong",
+    "exact-asof": "exact as-of",
+}
+
+
+def _dir_owner(root: str | None) -> str | None:
+    """The engine that wrote state dir ``root``, read from the markers the
+    dir carries at its root: a ``_TWS_MARKERS`` kind (``'tt'``, ``'fk'``,
+    ``'suppress'``, ``'asof'``) for its version marker, ``'exact'`` for the
+    exact loops' ``_GEN``, ``'exact-asof'`` for ``sink_batch=<id>``
+    partitions (the exact as-of join's output layout); None for an absent
+    or unmarked dir.  The one owner check: engine auto-selection, every
+    engine's open and ``compact_emission_log`` ask it.  Dirs no engine can
+    read are refused here with their recovery path — the removed pandas
+    keyed engine's markers, the flat ``part-`` output of the
+    pre-exactly-once as-of join, and the markers of two engines at once."""
+    if root is None or not os.path.isdir(root):
+        return None
+    entries = set(os.listdir(root))
+    for marker, what in _LEGACY_KEYED_MARKERS:
+        if marker in entries:
+            raise ValueError(
+                f"state dir {root!r} holds {what} state written by the removed "
+                f"pandas keyed engine ({marker}); neither engine='tws' nor "
+                "engine='exact' can read it — start a fresh state_dir and "
+                "checkpoint and replay the source through engine='tws' or "
+                "engine='exact'"
+            )
+    if any(e.startswith("part-") or e == "_SUCCESS" for e in entries):
+        # new sink_batch=<id> partitions next to flat appended part files
+        # would make the final read see conflicting directory structures,
+        # and the flat rows carry no batch identity to replay-protect
+        raise ValueError(
+            f"out dir {root!r} holds flat append-mode output from the "
+            "pre-exactly-once as-of join; pass a fresh out_dir"
+        )
+    owners = [kind for kind, (marker, _) in _TWS_MARKERS.items() if marker in entries]
+    if "_GEN" in entries:
+        owners.append("exact")
+    if _sink_partitions(root):
+        owners.append("exact-asof")
+    if len(owners) > 1:
+        raise ValueError(
+            f"state dir {root!r} carries the markers of several engines "
+            f"({', '.join(_OWNER_NAMES[o] for o in owners)}); no engine can tell "
+            "whose state it holds — start a fresh state_dir and checkpoint"
+        )
+    return owners[0] if owners else None
+
+
+def _claim_dir(root: str | None, what: str, *mine: str) -> str | None:
+    """``_dir_owner(root)``, refused unless the dir is unmarked or owned by
+    one of ``mine`` — the owner rule every engine's open applies; ``what``
+    names the opener in the refusal."""
+    owner = _dir_owner(root)
+    if owner is not None and owner not in mine:
+        engine = "exact" if owner.startswith("exact") else "tws"
+        raise ValueError(
+            f"{what}: state dir {root!r} was written by the {_OWNER_NAMES[owner]} "
+            f"engine; resume it with engine='{engine}' on the operator that wrote "
+            "it, or start a fresh state_dir"
+        )
+    return owner
 
 
 def _recover_compaction(out_dir: str, root: str) -> None:
@@ -606,9 +608,17 @@ def compact_emission_log(
     from .tws import stop_resident  # noqa: PLC0415 - tws imports this module
 
     root = state_dir
-    _refuse_legacy_keyed_dir(root)
+    # the version marker, not the output columns, names the log kind: the
+    # fold differs per kind, and a guess can destroy committed history
+    kind = _claim_dir(root, "compact_emission_log", "tt", "fk", "suppress")
+    if kind is None:
+        raise ValueError(
+            f"compact_emission_log: cannot identify the engine that wrote {root!r} "
+            "(no engine version marker found) — run at least one drain with the "
+            "owning engine (which stamps the marker) before compacting"
+        )
     stop_resident(root)  # a resident query must not write the log being rewritten
-    is_fk = os.path.isdir(os.path.join(root, "sub"))
+    is_fk = kind == "fk"
     out_dir = os.path.join(root, "out")
     _recover_compaction(out_dir, root)
     ck = os.path.join(checkpoint, "join") if is_fk else checkpoint
@@ -670,12 +680,11 @@ def compact_emission_log(
         return removed
 
     if len(foldable) <= 1:
-        out = {"kind": "fk" if is_fk else "log", "folded": 0, "pruned": 0}
+        out = {"kind": kind, "folded": 0, "pruned": 0}
         if is_fk:
             out["sub_pruned"] = _prune_consumed_sub()  # still worth doing
         return out
 
-    kind = _detect_log_kind(root, is_fk)
     result: dict = {"kind": kind, "folded": len(foldable), "committed": committed}
 
     if kind == "suppress":
@@ -751,7 +760,7 @@ def _container_cols(schema, cols) -> set[str]:
 _AUTOCOMPACT_EVERY = 32
 
 
-def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, key=()) -> None:
+def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, kind, key=()) -> None:
     """Compact-every-N policy: called by the tt-join, fk-join and suppress
     tws drains at ENTRY — after binding and version stamping, before the
     query starts.  As-of logs are not compacted (append-only join history;
@@ -763,38 +772,13 @@ def _maybe_autocompact(spark: SparkSession, state_dir: str, checkpoint: str, key
     snapshot reconstruction at O(tail) instead of O(total emissions ever)
     across long-lived resumed drains.  A crash mid-compaction is covered by
     the existing recovery: the next drain's _check_no_pending_compaction
-    finishes or rolls back the pass."""
-    is_fk = os.path.isdir(os.path.join(state_dir, "sub"))
+    finishes or rolls back the pass.  ``kind`` is the dir's
+    ``_TWS_MARKERS`` kind; the fk join's log commits on
+    ``<checkpoint>/join``."""
+    committed = _last_committed(os.path.join(checkpoint, "join") if kind == "fk" else checkpoint)
     out_dir = os.path.join(state_dir, "out")
-    ck = os.path.join(checkpoint, "join") if is_fk else checkpoint
-    committed = _last_committed(ck)
     if sum(1 for k in _sink_partitions(out_dir) if k <= committed) >= _AUTOCOMPACT_EVERY:
         compact_emission_log(spark, state_dir, checkpoint, key=tuple(key))
-
-
-# markers stamped by the removed pandas keyed engines (formerly
-# ``engine='keyed'``); their state schemas are not readable by either
-# remaining engine
-_LEGACY_KEYED_MARKERS = (
-    ("_PSE_TTJOIN_V", "tt-join"),
-    ("_PSE_FKJOIN_V", "fk-join"),
-    ("_PSE_STATE_V", "suppress"),
-)
-
-
-def _refuse_legacy_keyed_dir(root: str) -> None:
-    """Refuse a state dir written by the removed pandas keyed engines.  The
-    one check for those markers: engine auto-selection, the tws version
-    stamp and ``compact_emission_log`` all call it."""
-    for marker, what in _LEGACY_KEYED_MARKERS:
-        if os.path.exists(os.path.join(root, marker)):
-            raise ValueError(
-                f"state dir {root!r} holds {what} state written by the removed "
-                f"pandas keyed engine ({marker}); neither engine='tws' nor "
-                "engine='exact' can read it — start a fresh state_dir and "
-                "checkpoint and replay the source through engine='tws' or "
-                "engine='exact'"
-            )
 
 
 def _check_engine(engine: str, what: str) -> None:
@@ -809,11 +793,10 @@ def _check_engine(engine: str, what: str) -> None:
 def _select_engine(state_dir: str | None, hard) -> str:
     """engine=None auto-selection.  Order of precedence:
 
-      * a ``state_dir`` stamped by the removed pandas keyed engine is
-        refused (_refuse_legacy_keyed_dir);
+      * a ``state_dir`` no engine can read is refused (``_dir_owner``);
       * no ``google.protobuf`` (tws cannot run) → ``exact``;
-      * ``state_dir`` stamped by the exact loop (``_GEN``) → ``exact``, so
-        a dir resumes with the engine that wrote it;
+      * ``state_dir`` written by the exact loop → ``exact``, so a dir
+        resumes with the engine that wrote it;
       * container-typed columns in a position the tws binary tunnel cannot
         cover — keys, order columns, the fk column (``hard`` =
         [(StructType, cols)]) → ``exact``;
@@ -821,15 +804,8 @@ def _select_engine(state_dir: str | None, hard) -> str:
         -binary value-state tunnel)."""
     from .protoshim import ensure_protobuf  # noqa: PLC0415
 
-    if state_dir is not None:
-        _refuse_legacy_keyed_dir(state_dir)
-    if not ensure_protobuf():
-        return "exact"
-    if state_dir is not None and os.path.exists(os.path.join(state_dir, "_GEN")):
-        return "exact"
-    if any(_container_cols(schema, cols) for schema, cols in hard):
-        return "exact"
-    return "tws"
+    exact = _dir_owner(state_dir) == "exact" or not ensure_protobuf()
+    return "exact" if exact or any(_container_cols(s, c) for s, c in hard) else "tws"
 
 
 def _check_emit_final(obj, df: DataFrame, output_mode: str) -> None:
@@ -1821,9 +1797,7 @@ def _has_emissions(out_dir: str) -> bool:
     and the exact loops that log per batch.  A bare or absent dir means no
     micro-batch ever emitted (the tws engines leave a partition only for a
     batch that emitted rows)."""
-    if not os.path.isdir(out_dir):
-        return False
-    return any(e.startswith("sink_batch=") for e in os.listdir(out_dir))
+    return bool(_sink_partitions(out_dir))
 
 
 def _write_emissions(batch: DataFrame, log_dir: str, batch_id: int, publish: bool = True) -> None:
@@ -2163,18 +2137,6 @@ def join_windowed_eager(
     return _read_log(spark, out_dir, _ddl(empty), since=prior_batch).drop("sink_batch")
 
 
-def _asof_dir_engine(out_dir: str | None) -> str | None:
-    """The as-of engine whose output ``out_dir`` holds: ``'exact'`` for
-    ``sink_batch=``/``part-`` entries at its root, ``'tws'`` for the tws
-    version marker, None for an absent or fresh dir."""
-    if out_dir is None or not os.path.isdir(out_dir):
-        return None
-    entries = os.listdir(out_dir)
-    if any(e.startswith(("sink_batch=", "part-")) for e in entries):
-        return "exact"
-    return "tws" if _TWS_MARKERS["asof"][0] in entries else None
-
-
 def _asof_tws_refusal(stream: KStream, table, matched_ts: str) -> str | None:
     """Why the tws as-of engine cannot run this join, judged from the
     schemas alone (None when it can): timestamp ts on both sides, equal key
@@ -2250,7 +2212,7 @@ def join_table_asof_streaming(
         # guard refuses falls back to exact, which has no such constraints)
         from .protoshim import ensure_protobuf  # noqa: PLC0415
 
-        engine = _asof_dir_engine(out_dir) or (
+        engine = {"asof": "tws", "exact-asof": "exact"}.get(_dir_owner(out_dir)) or (
             "tws"
             if ensure_protobuf() and _asof_tws_refusal(stream, table, matched_ts) is None
             else "exact"
@@ -2263,23 +2225,9 @@ def join_table_asof_streaming(
             stream, table, how, tolerance_ms, matched_ts, out_dir, checkpoint
         )
     root = out_dir or tempfile.mkdtemp(prefix="pse-asof-")
-    os.makedirs(root, exist_ok=True)
-    if os.path.exists(os.path.join(root, _TWS_MARKERS["asof"][0])):
-        raise ValueError(
-            f"out dir {root!r} was written by the tws as-of engine; pass "
-            "engine='tws' to resume it, or a fresh out_dir"
-        )
-    if any(e.startswith("part-") or e == "_SUCCESS" for e in os.listdir(root)):
-        # pre-exactly-once layout (flat appended part files): new
-        # sink_batch=<id> partitions next to them would make the final read
-        # see conflicting directory structures — and the flat rows carry no
-        # batch identity to replay-protect
-        raise ValueError(
-            f"out dir {root!r} holds flat append-mode output from the "
-            "pre-exactly-once as-of join; pass a fresh out_dir"
-        )
+    populated = _claim_dir(root, "join_table_asof_streaming", "exact-asof") is not None
     ckpt = _bind_state_checkpoint(
-        root, _checkpoint(checkpoint), _has_emissions(root), "prior as-of join output"
+        root, _checkpoint(checkpoint), populated, "prior as-of join output"
     )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:

@@ -727,11 +727,11 @@ class TopologyTestDriver:
 
     @contextmanager
     def _progress_cap(self):
-        """Raise the progress-event retention around a DRAIN (not the
-        topology build — the r9 advisor found the build-scoped override was
-        restored before any drain started, so the default cap of 100 still
-        applied and a long drain tripped _harvest_observations' loud
-        undercount guard).  recentProgress retention is fixed at query
+        """Raise the progress-event retention around a DRAIN, not the
+        topology build: a build-scoped override is restored before any
+        drain starts, so the default cap of 100 would still apply and a long
+        drain would trip _harvest_observations' loud undercount guard.
+        recentProgress retention is fixed at query
         start, so the conf must hold across .start(); it is restored as
         soon as the drain terminates — the session is caller-owned."""
         if not getattr(self, "_observations", None):
@@ -858,7 +858,7 @@ class TopologyTestDriver:
         arrival-order independent, so the result equals the one-shot batch
         join — the same parity test_versioned_asof_join_streaming_parity
         pins for the public API)."""
-        from .streaming import _checkpoint
+        from .streaming import _checkpoint, _drive
 
         self._hook_fired = True
         if right.df.isStreaming:
@@ -875,13 +875,7 @@ class TopologyTestDriver:
             )
             got.df.write.mode("append").parquet(out_dir)
 
-        q = (
-            left.df.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", _checkpoint(None))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drive(left.df, _checkpoint(None), _apply)
         if not any(f.endswith(".parquet") for f in os.listdir(out_dir)):
             empty = KStream(self.spark.createDataFrame([], left.df.schema), left.key, left.ts)
             return empty.join_asof(right, tolerance_ms=tolerance_ms, how=how, matched_ts=matched_ts)
@@ -897,7 +891,7 @@ class TopologyTestDriver:
 
             # ContextVar tokens scope the install to THIS execution context:
             # concurrently-building drivers (threads / interleaved builds)
-            # never observe each other's hooks (advisor finding, r8)
+            # never observe each other's hooks
             install = self.mode == "async"
             tok = tok_asof = tok_obs = tok_ss = None
             if install:

@@ -16,11 +16,12 @@ therefore O(changed keys), never O(table).  Each engine function keeps only
 its processor, its input union and its output fold; the rest is one code
 path:
 
-* ``_open_state_dir`` — create the state dir, heal an interrupted
+* ``_open_state_dir`` — refuse a dir another engine wrote
+  (``streaming._claim_dir``), create the state dir, heal an interrupted
   compaction, bind each emission log to its checkpoint, stamp the engine's
-  version marker (``streaming._TWS_MARKERS``; it identifies the dir's owner
-  for resume and for ``streaming.compact_emission_log``) and, except for
-  the as-of join, compact the log at the autocompaction cadence;
+  version marker (``streaming._TWS_MARKERS``; ``streaming._dir_owner``
+  reads it for resume and for ``streaming.compact_emission_log``) and,
+  except for the as-of join, compact the log at the autocompaction cadence;
 * ``_drain`` — drive the processor's RESIDENT query (below) until the
   input available at the call is committed, with one foreachBatch sink
   publishing each micro-batch through ``streaming._write_emissions``;
@@ -126,13 +127,13 @@ from .dsl import KStream, KTable, _not_null
 from .protoshim import ensure_protobuf
 from .streaming import (
     _TWS_MARKERS,
-    _asof_dir_engine,
     _asof_tws_refusal,
     _bind_state_checkpoint,
     _changelog_orders,
     _check_no_pending_compaction,
     _checkpoint,
     _check_reserved_columns,
+    _claim_dir,
     _container_cols,
     _delivered_cursor,
     _dtype_refusal,
@@ -144,7 +145,7 @@ from .streaming import (
     _read_bind,
     _read_emissions,
     _read_log,
-    _refuse_legacy_keyed_dir,
+    _sink_partitions,
     _store_delivered,
     _write_emissions,
 )
@@ -253,15 +254,9 @@ def _codec(cols, tun):
 
 
 def _stamp_version(root: str, marker: str, version: str, populated: bool, what: str) -> None:
-    """Engine/version gate for a tws state dir: refuse dirs owned by another
-    engine, refuse a populated dir stamped with a different version, and
-    stamp a fresh one."""
-    _refuse_legacy_keyed_dir(root)
-    if os.path.exists(os.path.join(root, "_GEN")):
-        raise ValueError(
-            f"state dir {root!r} was written by the exact ping-pong engine; resume it "
-            "with engine='exact', or start a fresh state_dir for engine='tws'"
-        )
+    """Version gate for a tws state dir the engine owns (``_open_state_dir``
+    refused other owners): refuse a populated dir stamped with a different
+    version, and stamp a fresh one."""
     ver_path = os.path.join(root, marker)
     ver = _read_bind(ver_path)
     if populated and ver != version:
@@ -279,15 +274,12 @@ def _stamp_version(root: str, marker: str, version: str, populated: bool, what: 
 def _publish_staged(log_dir: str, upto: int) -> None:
     """Rename the partitions that ``_write_emissions(publish=False)`` staged
     for the batches up to ``upto`` into place, oldest first."""
-    staged = {}
-    for e in os.listdir(log_dir) if os.path.isdir(log_dir) else ():
-        if e.startswith(".sink_batch="):
-            staged[int(e.split("=", 1)[1])] = e
-    for k in sorted(k for k in staged if k <= upto):
-        part = os.path.join(log_dir, staged[k][1:])
-        if os.path.isdir(part):
-            shutil.rmtree(part)
-        os.rename(os.path.join(log_dir, staged[k]), part)
+    for k, stage in sorted(_sink_partitions(log_dir, staged=True).items()):
+        if k <= upto:
+            part = os.path.join(log_dir, f"sink_batch={k}")
+            if os.path.isdir(part):
+                shutil.rmtree(part)
+            os.rename(stage, part)
 
 
 @dataclass
@@ -342,16 +334,19 @@ def stop_resident(state_dir: str) -> None:
 
 def _open_state_dir(spark, kind, state_dir, checkpoint, what, logs=(("out", None),), key=()):
     """Open a tws state dir for one drain; returns (root, one checkpoint per
-    log).  Opening a dir stops the resident queries of every other dir, so
-    at most one dir's queries run.  Then every engine opens its dir in the
-    same order: heal an interrupted compaction, bind each emission log to
-    its checkpoint, gate the engine version (``kind`` names its marker in
-    ``_TWS_MARKERS``), then compact at the autocompaction cadence on the
-    fold ``key`` — except for the as-of join, since compaction has no as-of
-    log kind.  ``logs`` = (log dir under the root, checkpoint sub-dir); a
-    None sub-dir binds the root itself to the checkpoint (the fk join binds
-    each of its two logs to its own sub-dir)."""
+    log).  A dir that another engine (or another tws kind) wrote is refused
+    first (``_claim_dir``).  Opening a dir stops the resident queries of
+    every other dir, so at most one dir's queries run.  Then every engine
+    opens its dir in the same order: heal an interrupted compaction, bind
+    each emission log to its checkpoint, gate the engine version (``kind``
+    names its marker in ``_TWS_MARKERS``), then compact at the
+    autocompaction cadence on the fold ``key`` — except for the as-of join,
+    since compaction has no as-of log kind.  ``logs`` = (log dir under the
+    root, checkpoint sub-dir); a None sub-dir binds the root itself to the
+    checkpoint (the fk join binds each of its two logs to its own
+    sub-dir)."""
     root = os.path.abspath(state_dir or tempfile.mkdtemp(prefix=f"pse-{kind}-tws-"))
+    _claim_dir(root, what, kind)
     _stop_where(lambda res: res.root != root)
     os.makedirs(root, exist_ok=True)
     _check_no_pending_compaction(root)
@@ -366,7 +361,7 @@ def _open_state_dir(spark, kind, state_dir, checkpoint, what, logs=(("out", None
     marker, version = _TWS_MARKERS[kind]
     _stamp_version(root, marker, version, populated, what)
     if kind != "asof":
-        _maybe_autocompact(spark, root, base, key=key)
+        _maybe_autocompact(spark, root, base, kind, key=key)
     return root, ckpts
 
 
@@ -1389,11 +1384,6 @@ def join_table_asof_tws(
     if overlap:
         raise ValueError(f"sides must have disjoint value column names; overlap: {sorted(overlap)}")
     tun_r = _container_cols(table.df.schema, r_vals)
-    if _asof_dir_engine(out_dir) == "exact":
-        raise ValueError(
-            f"out dir {out_dir!r} holds the exact as-of engine's output layout; "
-            "pass engine='exact' to resume it, or a fresh out_dir"
-        )
     root, (ckpt,) = _open_state_dir(spark0, "asof", out_dir, checkpoint, what)
     emit_dir = os.path.join(root, "out")
     hist_dir = os.path.join(root, "hist")

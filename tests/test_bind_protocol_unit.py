@@ -1,8 +1,8 @@
 """Decision-table unit test for streaming._bind_state_checkpoint — the
 state-dir ↔ checkpoint pairing rule every parquet-state loop runs before
-starting a drain (r9 verdict item 3).  Pure filesystem, no SparkSession:
-the matrix below IS the contract, so a refactor that changes any cell
-fails here before it can silently mispair state in an integration path.
+starting a drain.  Pure filesystem, no SparkSession: the matrix below IS
+the contract, so a refactor that changes any cell fails here before it can
+silently mispair state in an integration path.
 
 Cell legend: state marker (s), checkpoint marker (c), populated flag,
 checkpoint commits log, state _GEN applied cursor → expected outcome.
@@ -61,20 +61,19 @@ CASES = [
     # crash-before-first-fold: bound but unpopulated state + fresh
     # checkpoint re-binds
     ("A", None, False, (), None, "bind"),
-    # legacy adoption: unbound populated state + unbound checkpoint whose
-    # commit cursor matches the applied cursor (clean stop)...
-    (None, None, True, (0, 1, 2), 2, "bind"),
-    # ...or lags it by one (crash between fold and checkpoint commit)
-    (None, None, True, (0, 1), 2, "bind"),
-    # a populated dir with NEITHER cursor nor emissions has nothing to
-    # cross-check: refused by default (r10 review — the old
-    # "adopts freely" residual window), opt-in via PSE_ADOPT_LEGACY=1
+    # a populated state dir without _PSE_BIND (every drain binds before its
+    # first batch) pairs with no checkpoint: refused whether the offered
+    # checkpoint's commit cursor matches its applied cursor (clean stop)...
+    (None, None, True, (0, 1, 2), 2, "not recognizably"),
+    # ...or lags it by one (crash between fold and checkpoint commit)...
+    (None, None, True, (0, 1), 2, "not recognizably"),
+    # ...or the dir has neither cursor nor emissions...
     (None, None, True, (0,), None, "not recognizably"),
-    # legacy populated state + FRESH checkpoint: nothing recognizable
+    # ...or the checkpoint is fresh...
     (None, None, True, (), 2, "not recognizably"),
-    # legacy populated state + inconsistent used checkpoint (foreign run)
+    # ...or its commits belong to a foreign run...
     (None, None, True, (0, 1, 2, 3, 4), 2, "not recognizably"),
-    # legacy populated state + BOUND checkpoint: belongs to someone else
+    # ...or it is bound to someone else
     (None, "B", True, (0,), 2, "not recognizably"),
 ]
 
@@ -82,47 +81,26 @@ CASES = [
 @pytest.mark.parametrize(
     "commits,sink,sink_in_out,expect",
     [
-        # cursor-free loops (tws suppress / tt-join / as-of) leave
-        # sink_batch=<id> partitions: the original checkpoint's commits must
-        # LINE UP with the highest emitted batch — equal (clean stop) or one
-        # less (crash between fold and checkpoint commit).  A checkpoint
-        # behind that is a foreign run; one AHEAD is legal (trailing batches
-        # may emit nothing) but unverifiable, so it needs the explicit
-        # PSE_ADOPT_LEGACY=1 opt-in (r10 review finding)
-        ((0, 1, 2, 3, 4), 5, True, "bind"),   # committed=4 == 5-1: adopt
-        ((0, 1, 2, 3, 4, 5), 5, True, "bind"),  # clean stop
-        ((0, 1, 2), 5, True, "not recognizably"),  # 2 < 4: foreign
+        # the loops without _GEN (tws suppress / tt-join / as-of) leave
+        # sink_batch=<id> partitions; without _PSE_BIND none of them pairs
+        # with a checkpoint, whatever its commits say about the emissions
+        ((0, 1, 2, 3, 4), 5, True, "not recognizably"),  # committed == 5-1
+        ((0, 1, 2, 3, 4, 5), 5, True, "not recognizably"),  # clean stop
+        ((0, 1, 2), 5, True, "not recognizably"),  # 2 < 4
         ((0, 1, 2), 5, False, "not recognizably"),  # flat as-of layout too
-        ((0,), 0, True, "bind"),  # single-batch legacy run
-        ((0, 1, 2, 3, 4, 5, 6, 7), 5, True, "not recognizably"),  # ahead: opt-in only
+        ((0,), 0, True, "not recognizably"),  # single-batch run
+        ((0, 1, 2, 3, 4, 5, 6, 7), 5, True, "not recognizably"),  # ahead
     ],
 )
 def test_bind_legacy_adoption_sink_batch_cursor(tmp_path, commits, sink, sink_in_out, expect):
     root = _mk(tmp_path, "state", sink=sink, sink_in_out=sink_in_out)
     ckpt = _mk_ckpt(tmp_path, "ckpt", commits=commits)
-    if expect == "bind":
-        assert _bind_state_checkpoint(root, ckpt, True, "unit-test state") == ckpt
-    else:
-        with pytest.raises(ValueError, match=expect):
-            _bind_state_checkpoint(root, ckpt, True, "unit-test state")
-
-
-@pytest.mark.parametrize(
-    "commits,sink,expect_default",
-    [
-        # unauthenticatable legacy shapes: refused by default, adopted
-        # under the documented PSE_ADOPT_LEGACY=1 opt-in
-        ((0,), -1, "not recognizably"),  # emissions-free, cursor-free
-        ((0, 1, 2, 3, 4, 5, 6, 7), 5, "not recognizably"),  # commits ahead
-    ],
-)
-def test_bind_legacy_opt_in_adopts_unverifiable(tmp_path, monkeypatch, commits, sink, expect_default):
-    root = _mk(tmp_path, "state", sink=None if sink == -1 else sink, sink_in_out=True)
-    ckpt = _mk_ckpt(tmp_path, "ckpt", commits=commits)
-    with pytest.raises(ValueError, match=expect_default):
+    with pytest.raises(ValueError, match=expect) as ei:
         _bind_state_checkpoint(root, ckpt, True, "unit-test state")
-    monkeypatch.setenv("PSE_ADOPT_LEGACY", "1")
-    assert _bind_state_checkpoint(root, ckpt, True, "unit-test state") == ckpt
+    # the refusal names the recovery path, and writes no marker
+    assert "fresh state_dir and checkpoint and replay the source" in str(ei.value)
+    assert _read_bind(os.path.join(root, "_PSE_BIND")) is None
+    assert _read_bind(os.path.join(ckpt, "_PSE_BIND")) is None
 
 
 @pytest.mark.parametrize("s_marker,c_marker,populated,commits,applied,expect", CASES)
@@ -145,16 +123,3 @@ def test_bind_decision_table(tmp_path, s_marker, c_marker, populated, commits, a
         # a refusal must never half-write markers
         assert _read_bind(os.path.join(root, "_PSE_BIND")) == s_marker
         assert _read_bind(os.path.join(ckpt, "_PSE_BIND")) == c_marker
-
-
-def test_bind_idempotent_after_adoption(tmp_path):
-    """Adoption is one-time: the adopted pair is bound, so a second call is
-    the plain matched-pair fast path and a foreign checkpoint is refused
-    with the BOUND error from then on."""
-    root = _mk(tmp_path, "state", applied=2)
-    ckpt = _mk_ckpt(tmp_path, "ckpt", commits=(0, 1, 2))
-    _bind_state_checkpoint(root, ckpt, True, "unit-test state")  # adopts
-    _bind_state_checkpoint(root, ckpt, True, "unit-test state")  # fast path
-    foreign = _mk_ckpt(tmp_path, "foreign", commits=(0, 1, 2))
-    with pytest.raises(ValueError, match="different checkpoint"):
-        _bind_state_checkpoint(root, foreign, True, "unit-test state")

@@ -535,7 +535,7 @@ def test_read_gen_refuses_stale_state_without_marker(tmp_path):
     os.makedirs(root / "g-0")
     with pytest.raises(ValueError, match="_GEN"):
         _read_gen(str(root))
-    _write_gen(str(root), 3)
+    _write_gen(str(root), 3, 0)
     assert _read_gen(str(root)) == 3
     # empty dir (fresh start) is fine
     fresh = tmp_path / "fresh"
@@ -3686,15 +3686,15 @@ def test_state_dir_refuses_mismatched_checkpoint(spark, tmp_path):
         run_loop("join_tables", str(tmp_path / "fresh-state"), ckpt_a)
 
 
-def test_legacy_unbound_state_adoption_and_commit_guard(spark, tmp_path):
-    """Review findings (r10) on the bind protocol's edges: (a) a populated
-    state dir that predates the _PSE_BIND markers (simulated by deleting
-    them) must ADOPT its original checkpoint — recognized by commit/applied
-    cursor consistency — and refuse a fresh one; (b) an UNBOUND checkpoint
-    that already holds committed batches is refused against a fresh state
-    dir (previously it silently re-bound and Spark skipped its committed
-    batches over empty state); (c) a pre-exactly-once flat as-of out dir is
-    refused outright (mixing layouts would break the final read)."""
+def test_unbound_state_refused_and_commit_guard(spark, tmp_path):
+    """The bind protocol's edges: (a) a populated state dir without its
+    _PSE_BIND marker (simulated by deleting the markers) is refused with
+    its original checkpoint and with a fresh one, naming the recovery path;
+    (b) an UNBOUND checkpoint that already holds committed batches is
+    refused against a fresh state dir (re-binding it would make Spark skip
+    its committed batches over empty state); (c) a pre-exactly-once flat
+    as-of out dir is refused outright (mixing layouts would break the final
+    read)."""
     import datetime as dt
     import os
 
@@ -3727,14 +3727,13 @@ def test_legacy_unbound_state_adoption_and_commit_guard(spark, tmp_path):
         for d in dirs:
             os.remove(os.path.join(d, "_PSE_BIND"))
 
-    # (a) legacy pair: adoption succeeds with the ORIGINAL checkpoint...
+    # (a) unbound populated state: refused with the ORIGINAL checkpoint and
+    # with a FRESH one, and the refusal binds nothing
     unbind(state, ckpt)
-    assert run(state, ckpt).count() == 1
-    assert os.path.exists(os.path.join(state, "_PSE_BIND"))  # re-bound
-    # ...and a FRESH checkpoint is refused (commit cursor -1, inconsistent)
-    unbind(state, ckpt)
-    with _pytest.raises(ValueError, match="not recognizably"):
-        run(state, str(tmp_path / "fresh-ck"))
+    for ck in (ckpt, str(tmp_path / "fresh-ck")):
+        with _pytest.raises(ValueError, match="replay the source"):
+            run(state, ck)
+        assert not os.path.exists(os.path.join(state, "_PSE_BIND"))
 
     # (b) unbound checkpoint WITH commits against a fresh state dir
     with _pytest.raises(ValueError, match="already belongs"):

@@ -221,6 +221,76 @@ def test_tws_refuses_legacy_keyed_and_exact_state_dirs(spark, tmp_path):
         join_tables_streaming(l1, r1, engine="tws", state_dir=str(exact_dir))
 
 
+# owner name (as refusals print it) -> the marker that fabricates its dir
+_OWNER_MARKERS = {
+    "tws tt-join": "_PSE_TWS_TTJOIN_V",
+    "tws fk-join": "_PSE_TWS_FKJOIN_V",
+    "tws suppress": "_PSE_TWS_SUPPRESS_V",
+    "tws as-of": "_PSE_TWS_ASOF_V",
+    "exact ping-pong": "_GEN",
+    "exact as-of": "sink_batch=0",
+    "removed pandas keyed": "_PSE_TTJOIN_V",
+}
+# opener -> the owners whose dirs it resumes
+_OPENERS = {
+    "tws-tt": ("tws tt-join",),
+    "tws-asof": ("tws as-of",),
+    "exact-asof": ("exact as-of",),
+    "compact": ("tws tt-join", "tws fk-join", "tws suppress"),
+}
+
+
+@pytest.mark.parametrize(
+    "opener,owner",
+    [(o, w) for o, mine in _OPENERS.items() for w in _OWNER_MARKERS if w not in mine],
+)
+def test_foreign_owner_dir_refused_naming_owner(spark, tmp_path, opener, owner):
+    """Every opener asks the one owner check (``streaming._dir_owner``):
+    a dir fabricated with another engine's marker is refused before any
+    query starts, and the refusal names the engine that wrote it."""
+    from pyspark_engine import StreamBuilder as BatchBuilder
+    from pyspark_engine.streaming import (
+        compact_emission_log,
+        join_table_asof_streaming,
+        join_tables_streaming,
+    )
+
+    def t(m):
+        return dt.datetime(2024, 1, 1, 0, m)
+
+    d = tmp_path / "owned"
+    d.mkdir()
+    marker = _OWNER_MARKERS[owner]
+    if marker.startswith("sink_batch="):
+        (d / marker).mkdir()
+    else:
+        (d / marker).write_text("1 0" if marker == "_GEN" else "1")
+    if opener == "tws-tt":
+        l1 = _mk_stream(spark, tmp_path, "l1", "k int, lv int, lts timestamp", [(1, 1, t(0))], "k", "lts")
+        r1 = _mk_stream(spark, tmp_path, "r1", "rk int, rv int, rts timestamp", [(1, 1, t(0))], "rk", "rts")
+
+        def call():
+            join_tables_streaming(l1, r1, engine="tws", state_dir=str(d))
+
+    elif opener == "compact":
+
+        def call():
+            compact_emission_log(spark, str(d), str(tmp_path / "ck"))
+
+    else:
+        ks = _mk_stream(spark, tmp_path, "s", "k long, ts timestamp, sid long", [(1, t(5), 0)], "k", "ts")
+        hist = spark.createDataFrame([(1, t(0), 100)], "k long, ts timestamp, pv long")
+        vt = BatchBuilder(spark).versioned_table(hist, key="k", ts="ts")
+
+        def call():
+            engine = opener.split("-")[0]
+            join_table_asof_streaming(ks, vt, out_dir=str(d), engine=engine)
+
+    with pytest.raises(ValueError, match=f"written by the {owner} engine"):
+        call()
+    assert not (d / "_PSE_BIND").exists()  # refused before the dir is bound
+
+
 def test_tws_container_value_columns_ride_binary_tunnel(spark, tmp_path):
     """r12 verdict task 2: container-typed VALUE columns work on the tws
     engines — they ride the value state as pickled binary (_enc_c) and are
@@ -1117,15 +1187,13 @@ def test_tws_fk_stage_b_takes_each_call_in_one_batch(spark, tmp_path):
 
 def test_tws_batch_without_emissions_leaves_no_partition(spark, tmp_path):
     """Only a micro-batch that emits rows leaves a ``sink_batch=<id>``
-    partition: the emission-log readers, the legacy-adoption cursor
-    (``_max_sink_batch``) and the autocompaction partition count all rely
-    on it.  Case 1: a tt-join update whose order value is older than the
-    stored one.  Case 2: a suppress batch in which no key is due.  No
-    hidden ``.sink_batch=<id>`` staging dir outlives its batch."""
+    partition: the emission-log readers and the autocompaction partition
+    count rely on it.  Case 1: a tt-join update whose order value is older
+    than the stored one.  Case 2: a suppress batch in which no key is due.
+    No hidden ``.sink_batch=<id>`` staging dir outlives its batch."""
     from pyspark_engine.streaming import (
         StreamingBuilder,
         _has_emissions,
-        _max_sink_batch,
         _sink_partitions,
         join_tables_streaming,
         suppress_buffered,
@@ -1150,7 +1218,6 @@ def test_tws_batch_without_emissions_leaves_no_partition(spark, tmp_path):
     stage_generation_file(spark.createDataFrame([(1, 99, 4)], "k long, lv long, lo long"), ld, 1)
     snap = tt()
     assert sorted(_sink_partitions(os.path.join(state, "out"))) == [0]
-    assert _max_sink_batch(state) == 0
     assert [(r["k"], r["lv"]) for r in snap.collect()] == [(1, 1)]
 
     sd = str(tmp_path / "s")
